@@ -69,9 +69,9 @@ object Main {
   def read(path: String): Map[String, Any] =
     Json.readValue(new String(Files.readAllBytes(new File(path).toPath), UTF_8), classOf[Map[String, Any]])
 
-  /** A metric as printed: value, unit and the number of samples behind it. */
-  def metric(value: Double, unit: String, n: Int): Map[String, Any] =
-    Map("value" -> value, "unit" -> unit, "n" -> n)
+  /** A metric as recorded: its value and the number of samples behind it.
+    * `run.py` gives it its unit from BENCHMARK.json. */
+  def metric(value: Double, n: Int): Map[String, Any] = Map("value" -> value, "n" -> n)
 
   /** Order-insensitive hash of every row: the count, and the sum and xor of
     * xxhash64 over each row rendered as JSON. */
@@ -121,6 +121,9 @@ final class JvmProbe {
 
   def resetPeak(): Unit = peak = used
   def peakMb: Double = peak / Main.Mb
+  /** Seconds the JIT compilers have worked since JVM start, summed over
+    * their threads. */
+  def jitSeconds: Double = ManagementFactory.getCompilationMXBean.getTotalCompilationTime / 1e3
   def gcSeconds: Double =
     ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime.max(0L)).sum / 1e3
   /** Heap in use after a full collection: the least of three readings,
@@ -133,6 +136,8 @@ final class JvmProbe {
     Thread.sleep(100)
     mb
   }.min
+  /** Heap in use right after a full collection. */
+  def liveMb: Double = { System.gc(); used / Main.Mb }
   def stop(): Unit = { running = false; sampler.join() }
 
   /** Milliseconds from JVM start to now: the set-up clock. */

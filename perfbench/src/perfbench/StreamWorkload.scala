@@ -30,21 +30,25 @@ import graft.streaming.StreamingJobs
 object StreamWorkload {
   val RowsPerFile = 1000
   val IntervalMs = 200L
-  /** Untimed scheduled landing before the window: trigger time falls from
-    * about 1.1 s to about 550 ms over the first 25 triggers, and by about 8%
-    * more over the window. */
-  val WarmS = 12.0
+  /** Warm-up, part one: a backlog of this many files of
+    * [[DrainRowsPerFile]] rows, landed at once when the query starts and
+    * drained before the schedule begins (about 4 s). With scheduled 3-file
+    * triggers alone, trigger time fell from about 650 to 450 ms over a
+    * minute; after the backlog's 100,000-row trigger it starts the window
+    * near 450-550 ms and falls by about a tenth across it. */
+  val WarmBacklogFiles = 20
+  /** Warm-up, part two: untimed scheduled landing before the window. */
+  val WarmS = 5.0
   /** Files a trigger takes at most: the open loop stays below it, a drain
     * runs as back-to-back triggers of this many files. */
   val MaxFilesPerTrigger = 20
   /** Backlogs a traced run lands at once after the window, one after
-    * another, in files, to measure capacity: the first warms the
-    * large-batch path and is not counted; the second and fourth are
-    * untraced, the third traced, and the tracing overhead is its time over
+    * another, in files, to measure capacity: the first and third are
+    * untraced, the second traced, and the tracing overhead is its time over
     * the mean of the two around it. Capacity is too sensitive to other load
     * on the machine to be a bounded end-to-end metric, so untraced runs
     * skip the drains. */
-  def drainSizes(trace: Boolean): Seq[Int] = if (trace) Seq(40, 100, 100, 100) else Nil
+  def drainSizes(trace: Boolean): Seq[Int] = if (trace) Seq(100, 100, 100) else Nil
   val DrainRowsPerFile = 5000
   val EventTypes = Seq("click", "signup", "error", "view", "purchase")
   private val MinuteUs = 60000000L
@@ -91,10 +95,12 @@ object StreamWorkload {
     tracer.foreach(_.attach(true))
     val rootSpan = tracer.map(_.open(0, "run", c.workload, "run")).getOrElse(0)
 
-    val nWarm = (WarmS * 1000 / IntervalMs).toInt
+    val nBacklog = WarmBacklogFiles
+    val nWarm = nBacklog + (WarmS * 1000 / IntervalMs).toInt
     val nSteady = nWarm + math.max(1, (c.seconds * 1000 / IntervalMs).toInt)
     val sizes = drainSizes(c.trace)
-    val rowsOf = Seq.fill(nSteady)(RowsPerFile) ++ Seq.fill(sizes.sum)(DrainRowsPerFile)
+    val rowsOf = Seq.fill(nBacklog)(DrainRowsPerFile) ++ Seq.fill(nSteady - nBacklog)(RowsPerFile) ++
+      Seq.fill(sizes.sum)(DrainRowsPerFile)
     val cumRows = rowsOf.map(_.toLong).scanLeft(0L)(_ + _).tail
     val staging = new File(work, "staging")
     staging.mkdirs()
@@ -134,26 +140,35 @@ object StreamWorkload {
       .foreachBatch(keep)
       .start())
     tracer.foreach(_.close(setupParent))
+    Main.log("stream started")
 
-    // open loop: file k is due at t0 + (k - 1) * interval whatever the
-    // stream is doing; its latency runs from that due time
+    // warm-up: the backlog's large triggers run the per-row paths hot
+    // before the schedule starts
+    val b0 = System.currentTimeMillis()
+    (1 until nBacklog).foreach { k => due(k) = b0; land(k) }
+    awaitQuiet(q, cumRows(nBacklog - 1))
+    Main.log("warm-up backlog drained")
+
+    // open loop: file k is due at t0 + (k - nBacklog) * interval whatever
+    // the stream is doing; its latency runs from that due time
     val t0 = System.currentTimeMillis() + 200
-    (1 until nSteady).foreach(k => due(k) = t0 + (k - 1) * IntervalMs)
-    val generator = new Thread(() => (1 until nSteady).foreach { k =>
+    (nBacklog until nSteady).foreach(k => due(k) = t0 + (k - nBacklog) * IntervalMs)
+    val generator = new Thread(() => (nBacklog until nSteady).foreach { k =>
       val wait = due(k) - System.currentTimeMillis()
       if (wait > 0) Thread.sleep(wait)
       land(k)
     }, "perfbench-generator")
     generator.start()
-    Main.log("stream started")
     val windowStartMs = due(nWarm)
     val setupS = (windowStartMs - java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3
     Thread.sleep(math.max(0L, windowStartMs - System.currentTimeMillis()))
     val gc0 = jvm.gcSeconds
+    val jit0 = jvm.jitSeconds
     jvm.resetPeak()
     generator.join()
     Main.log("scheduled files landed")
     awaitQuiet(q, cumRows(nSteady - 1))
+    val windowJitS = jvm.jitSeconds - jit0
     val windowEndMs = System.currentTimeMillis()
     val windowGcS = jvm.gcSeconds - gc0
     val windowHeapPeak = jvm.peakMb
@@ -162,14 +177,14 @@ object StreamWorkload {
     // drains: land a backlog at once and time it until the trigger that
     // commits its last file ends
     val drains = sizes.indices.map { d =>
-      val traced = c.trace && d == 2
+      val traced = c.trace && d == 1
       tracer.foreach(_.attach(traced))
       val ks = nSteady + sizes.take(d).sum until nSteady + sizes.take(d + 1).sum
       val start = System.currentTimeMillis()
       ks.foreach { k => due(k) = start; land(k) }
       awaitQuiet(q, cumRows(ks.last))
       (start, ks, traced)
-    }.drop(1)
+    }
     if (drains.nonEmpty) retained += jvm.retainedMb
     Main.log("drains done")
     tracer.foreach(_.attach(true))
@@ -222,9 +237,9 @@ object StreamWorkload {
     val failures = wrong.map(k => s"window $k") ++ (if (dropped > 0) Seq("rows dropped late") else Nil)
 
     val e2e = Map(
-      "setup_s" -> Main.metric(setupS, "s", 1),
-      "latency_p50_s" -> Main.metric(Stats.median(latencyS), "s", latencyS.size),
-      "heap_peak_mb" -> Main.metric(retained.max, "MB", retained.size))
+      "setup_s" -> Main.metric(setupS, 1),
+      "latency_p50_s" -> Main.metric(Stats.median(latencyS), latencyS.size),
+      "heap_peak_mb" -> Main.metric(retained.max, retained.size))
 
     val layers = tracer.map { t =>
       t.drain()
@@ -294,10 +309,9 @@ object StreamWorkload {
         "jvm.heap_peak_mb" -> windowHeapPeak,
         "throughput.drain_rows_per_s" -> Stats.median(untracedRates),
         "trace.overhead_ratio" -> Stats.median(drainRate.filter(_._2).map(1 / _._1)) /
-          Stats.mean(drainRate.filterNot(_._2).map(1 / _._1))) ++
-        Units.batchOnly.map(_ -> 0.0)
+          Stats.mean(drainRate.filterNot(_._2).map(1 / _._1)))
       val file = TraceFile.write(c, t.snapshot, rootSpan)
-      Map("metrics" -> m.map { case (n, v) => n -> Main.metric(v, Units.of(n), data.size) },
+      Map("metrics" -> m.map { case (n, v) => n -> Main.metric(v, data.size) },
         "trace_file" -> file)
     }.getOrElse(Map.empty)
 
@@ -311,9 +325,11 @@ object StreamWorkload {
       "window_s" -> (windowEndMs - windowStartMs) / 1e3,
       "series" -> Map(
         "trigger_ms" -> inWindow.map(p => Map("batch" -> p.batchId, "rows" -> p.numInputRows,
-          "ms" -> dur(p, "triggerExecution"))),
+          "ms" -> dur(p, "triggerExecution"), "start" -> startMs(p),
+          "phases" -> p.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap)),
         "latency_s" -> latencyS,
         "drain_rows_per_s" -> drainRate.map(_._1),
+        "window_jit_s" -> windowJitS,
         "trend" -> Stats.trend(data.map(dur(_, "triggerExecution").toDouble))),
       "trace_file" -> layers.getOrElse("trace_file", ""))
   }

@@ -24,43 +24,6 @@ object Golden {
         n -> Map("rows" -> r, "hash" -> h) }))
 }
 
-/** Units of the per-layer metrics. Both workloads print every one; a layer
-  * a workload does not exercise reads 0 there. */
-object Units {
-  val of: Map[String, String] = Map(
-    "operators.build_s" -> "s", "operators.build_jobs" -> "count",
-    "action.s" -> "s", "action.jobs" -> "count",
-    "entry.lookup_ms" -> "ms",
-    "materialize.rdds" -> "count", "materialize.leaked_rdds" -> "count",
-    "catalyst.analysis_ms" -> "ms", "catalyst.optimizer_ms" -> "ms", "catalyst.planning_ms" -> "ms",
-    "codegen.compile_ms" -> "ms", "codegen.classes" -> "count",
-    "scheduler.jobs" -> "count", "scheduler.stages" -> "count", "scheduler.tasks" -> "count",
-    "scheduler.tasks_per_stage" -> "count", "scheduler.core_busy" -> "1",
-    "scheduler.driver_gap_ms" -> "ms",
-    "executor.run_s" -> "s", "executor.cpu_s" -> "s", "executor.gc_s" -> "s",
-    "shuffle.write_mb" -> "MB", "shuffle.read_mb" -> "MB", "shuffle.spill_mb" -> "MB",
-    "scan.input_mb" -> "MB", "scan.records" -> "count",
-    "stream.trigger_ms" -> "ms", "stream.latestOffset_ms" -> "ms", "stream.getBatch_ms" -> "ms",
-    "stream.queryPlanning_ms" -> "ms", "stream.addBatch_ms" -> "ms", "stream.walCommit_ms" -> "ms",
-    "stream.commitOffsets_ms" -> "ms", "stream.empty_batches" -> "count",
-    "stream.empty_batch_ms" -> "ms", "stream.files_per_trigger" -> "count",
-    "stream.latency_p95_s" -> "s", "stream.backlog_files_max" -> "count",
-    "state.commit_ms" -> "ms", "state.rows_total" -> "count", "state.memory_mb" -> "MB",
-    "state.rows_dropped_late" -> "count",
-    "gen.late_ms_p99" -> "ms",
-    "jvm.gc_s" -> "s", "jvm.heap_peak_mb" -> "MB",
-    "trace.overhead_ratio" -> "1",
-    "throughput.queries_per_s" -> "1/s", "throughput.drain_rows_per_s" -> "1/s")
-
-  /** Layers only the stream workload exercises. */
-  val streamOnly: Seq[String] = "throughput.drain_rows_per_s" +:
-    of.keys.filter(k => k.startsWith("stream.") || k.startsWith("state.") || k.startsWith("gen.")).toSeq
-
-  /** Layers only the batch workload exercises: the query-registry calls. */
-  val batchOnly: Seq[String] = Seq("operators.build_s", "operators.build_jobs", "action.s",
-    "action.jobs", "entry.lookup_ms", "materialize.leaked_rdds", "throughput.queries_per_s")
-}
-
 /** Writes a run's spans, and each layer's self time under the run span, to
   * `trace-<workload>-s<seed>.json` beside the run record. */
 object TraceFile {
