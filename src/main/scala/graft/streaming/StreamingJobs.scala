@@ -46,6 +46,7 @@ object StreamingJobs {
     */
   def fileSource(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 1): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    useForkFreeCheckpoints(spark)
     val dirPath = new org.apache.hadoop.fs.Path(dir)
     val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // RECURSIVE listing: a partitioned landing zone (day=…/part-*.parquet)
@@ -156,6 +157,32 @@ object StreamingJobs {
         "leftOuter")
       .select(col("c.event_id").as("click_id"), col("p.event_id").as("purchase_id"),
         col("c.user_id").as("user_id"))
+
+  /** Registers [[ForkFreeCheckpointFileManager]] as the session's
+    * checkpoint file manager; ONE definition, called by [[fileSource]] and
+    * by every sink builder below, so no graft stream can miss it.
+    *
+    * Why (NOTES fact #26): Hadoop 3.4's `RawLocalFileSystem` without
+    * `libhadoop` launches a shell process for two calls on the checkpoint
+    * path. `setPermission` runs `chmod` for every file it creates (data
+    * file and `.crc`, from `LocalFSFileOutputStream.<init>`) and after
+    * every `mkdirs`; `FileUtil.readLink` runs `readlink` for every rename
+    * through Spark's default manager (`FileContext.rename` ->
+    * `getFileLinkStatus`). The offset, commit and source logs and every
+    * state partition's delta file and checksum file pay this on each
+    * trigger: jstack samples of the benchmark's stream window sat in
+    * `Shell.runCommand` under `HDFSMetadataLog.add` and under
+    * `ChecksumCheckpointFileManager` in `HDFSBackedStateStore.commit`,
+    * whose commit summed to 360-420 ms over 4 partitions for a 10-row
+    * state. It is also why the HDFS-backed and RocksDB providers measured
+    * the same and why more state partitions (more cores) made triggers
+    * slower. Spark's stock `FileSystemBasedCheckpointFileManager` alone
+    * removes only the `readlink` launches; the `chmod` per created file
+    * stays.
+    */
+  private[graft] def useForkFreeCheckpoints(spark: SparkSession): Unit =
+    spark.conf.set(ForkFreeCheckpointFileManager.ConfKey,
+      classOf[ForkFreeCheckpointFileManager].getName)
 
   /** transformWithState requires the RocksDB state-store provider
     * (NOTES fact #12); ONE definition so a provider/conf change cannot
@@ -1287,7 +1314,8 @@ object StreamingJobs {
     * rewritten (or a lakehouse MERGE INTO).
     */
   def upsertSink(updates: DataFrame, path: String, checkpoint: String,
-      key: String, versionCol: String) =
+      key: String, versionCol: String) = {
+    useForkFreeCheckpoints(updates.sparkSession)
     updates.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
@@ -1331,6 +1359,7 @@ object StreamingJobs {
         }
         ()
       }
+  }
 
   /** H4: late-data observability — rows the watermark dropped before the
     * stateful operator, summed over a query's recent progress. Late data is
@@ -1473,6 +1502,7 @@ object StreamingJobs {
     */
   def fanOutSink(agg: DataFrame, countersOut: String, archiveOut: String,
       checkpoint: String, trigger: Trigger = Trigger.AvailableNow()) = {
+    useForkFreeCheckpoints(agg.sparkSession)
     agg.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -1818,6 +1848,7 @@ object StreamingJobs {
       trigger: Trigger = Trigger.AvailableNow(),
       nearDup: String = "prefix") = {
     require(nearDup == "prefix" || nearDup == "lsh", s"unknown nearDup mode: $nearDup")
+    useForkFreeCheckpoints(docs.sparkSession)
     docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -1935,6 +1966,7 @@ object StreamingJobs {
       nearDup: String = "prefix") = {
     require(nearDup == "prefix" || nearDup == "lsh", s"unknown nearDup mode: $nearDup")
     requireRocksDb(docs.sparkSession)
+    useForkFreeCheckpoints(docs.sparkSession)
     gatedHashDeduped(docs).toDF().writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
@@ -2038,6 +2070,7 @@ object StreamingJobs {
             org.apache.spark.sql.streaming.OutputMode.Update())
           .toDF()
     }
+    useForkFreeCheckpoints(spark)
     s3.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
@@ -2066,6 +2099,7 @@ object StreamingJobs {
 
   def scrubRoute(docs: DataFrame, acceptDir: String, dlqDir: String,
       checkpoint: String, trigger: Trigger = Trigger.AvailableNow()) = {
+    useForkFreeCheckpoints(docs.sparkSession)
     docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)

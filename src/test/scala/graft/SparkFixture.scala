@@ -16,5 +16,10 @@ trait SparkFixture {
     // exercise the production configuration, not the default in-memory one
     .config("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // the checkpoint file manager every graft stream registers, so specs
+    // that build their own streams (the A6/A8 crash and replay cases
+    // edit the commit log directly) run on it too
+    .config(streaming.ForkFreeCheckpointFileManager.ConfKey,
+      classOf[streaming.ForkFreeCheckpointFileManager].getName)
     .getOrCreate()
 }
