@@ -31,6 +31,13 @@ object Bench {
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // warm-ups and noise probes are untimed, but a failure there is still a
+    // failure: print it and count it into the result line's warm_failures
+    var warmFailures = 0
+    def warmFailed(what: String, e: Throwable): Unit = {
+      warmFailures += 1
+      System.err.println(s"[bench] $what failed: $e")
+    }
     // Warm the session once (Hadoop FS init, parquet footer reads, codegen/
     // janino warmup) so fixed JVM startup cost isn't attributed to whichever
     // query happens to run first.
@@ -39,7 +46,7 @@ object Bench {
       try {
         if (t == "events") Tables.events(spark, sfDir).count()
         else Tables.table(spark, sfDir, t).count()
-      } catch { case _: Throwable => () }
+      } catch { case e: Throwable => warmFailed(s"table warm-up $t", e) }
     }
     // Codegen/executor warmup: one representative query per major operator
     // family, untimed, at the smallest SF (generated code depends on the
@@ -146,7 +153,7 @@ object Bench {
       .filter(SparkEntry.queries.contains)
       .foreach { n =>
         try SparkEntry.queries(n)(spark, warmSf).count()
-        catch { case _: Throwable => () }
+        catch { case e: Throwable => warmFailed(s"warm-up $n at $warmSf", e) }
       }
     spark.catalog.clearCache()
     // One untimed steady-state pass of the heavy family AT BENCH SCALE:
@@ -161,7 +168,7 @@ object Bench {
     if (warmSf != sfDir)
       heavyWarm.filter(SparkEntry.queries.contains).foreach { n =>
         try SparkEntry.queries(n)(spark, sfDir).count()
-        catch { case _: Throwable => () }
+        catch { case e: Throwable => warmFailed(s"warm-up $n at $sfDir", e) }
       }
     spark.catalog.clearCache()
     System.gc() // settle warmup debris before anything is timed
@@ -396,7 +403,7 @@ object Bench {
           try {
             SparkEntry.queries(name)(spark, warmSf).count()
             Some((System.nanoTime() - t0) / 1e9)
-          } catch { case _: Throwable => None }
+          } catch { case e: Throwable => warmFailed(s"noise probe $name", e); None }
         }.sorted
         if (xs.isEmpty) 0.0 else xs(xs.size / 2)
       }
@@ -490,7 +497,11 @@ object Bench {
             (times, probe, probeSh)
           }
         }
-      } catch { case _: Throwable => (Map.empty, None, None) }
+      } catch { case e: Throwable =>
+        // not a warm-up: the run goes on without a prior, so report only
+        System.err.println(s"[bench] BENCH_LOCAL.json prior unreadable: $e")
+        (Map.empty, None, None)
+      }
     val suspects = results.collect {
       // the 0.5 s floor keeps sub-second scheduling jitter (0.1 → 0.25 s)
       // from triggering pointless reruns
@@ -614,7 +625,7 @@ object Bench {
       val om = if (omitted > 0) s""","queries_omitted":$omitted,"queries_full":"BENCH_LOCAL.json"""" else ""
       val grouped = groupedTotal
         .map(g => s""","grouped_total":${ms3(g)},"group_n":$groupN""").getOrElse("")
-      s"""{"metric":"total","value":${ms3(total)},"unit":"sec","queries":$qjson,"queries_basis":"best_of_2_for_${rerunN}_slowest_plus_${suspects.size}_adaptive_first_run_rest"$om,"failures":$failures,"gc_in_queries_sec":${ms3(gcInQueries / 1e3)},"stream_rows":$streamRows,"stream_rows_per_sec":${streamEps.round},"median_batch_rows_per_sec":${streamMedianEps.round}$procJson$slowestJson,"steady_state_total":${ms3(steadyTotal)},"noise_probe_sec":${ms3(noiseProbeSec)},"noise_index":${ms3(noiseIndex)},"noise_probe_shuffle_sec":${ms3(noiseProbeShuffleSec)},"noise_index_shuffle":${ms3(noiseIndexShuffle)},"steady_state_total_noise_adj":${ms3(steadyNoiseAdj)}$grouped,"sf":"$sfDir","total_sec":${ms3(total)}}"""
+      s"""{"metric":"total","value":${ms3(total)},"unit":"sec","queries":$qjson,"queries_basis":"best_of_2_for_${rerunN}_slowest_plus_${suspects.size}_adaptive_first_run_rest"$om,"failures":$failures,"gc_in_queries_sec":${ms3(gcInQueries / 1e3)},"stream_rows":$streamRows,"stream_rows_per_sec":${streamEps.round},"median_batch_rows_per_sec":${streamMedianEps.round}$procJson$slowestJson,"steady_state_total":${ms3(steadyTotal)},"noise_probe_sec":${ms3(noiseProbeSec)},"noise_index":${ms3(noiseIndex)},"noise_probe_shuffle_sec":${ms3(noiseProbeShuffleSec)},"noise_index_shuffle":${ms3(noiseIndexShuffle)},"steady_state_total_noise_adj":${ms3(steadyNoiseAdj)}$grouped,"sf":"$sfDir","total_sec":${ms3(total)},"warm_failures":$warmFailures}"""
     }
     // canonical per-query values: best-of-2 where a rerun exists
     val bySlowest = results.map { case (k, v) =>

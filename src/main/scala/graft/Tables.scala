@@ -16,8 +16,47 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  /** Session confs that change what parquet schema inference returns for
+    * the same file (`nanosAsLong` is what [[events]] flips). */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  /** The file as inference saw it: path, length, modification time, and
+    * the inference confs' values. A rewritten file or a flipped conf is a
+    * new key. */
+  private final case class SchemaKey(path: String, length: Long, modified: Long,
+      confs: Seq[Option[String]])
+
+  /** Inferred schemas per session. Inferring a parquet schema reads the
+    * footer in a Spark job (about 100 ms and one job per read on a 4-core
+    * box); a read with a given schema starts none. Every query reads its
+    * tables afresh, so each table is inferred once per session and file
+    * version and then read with `.schema(...)`. Weak on the session, so its
+    * entries go when the session is collected. */
+  private val schemas = new java.util.WeakHashMap[SparkSession,
+    java.util.concurrent.ConcurrentHashMap[SchemaKey, org.apache.spark.sql.types.StructType]]
+
+  private[graft] def schemaOf(spark: SparkSession, path: String)
+      : org.apache.spark.sql.types.StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p)
+    // a directory-shaped table changes when any file under it does
+    val files = if (st.isDirectory) fs.listStatus(p).toSeq else Seq(st)
+    val key = SchemaKey(st.getPath.toString, files.map(_.getLen).sum,
+      files.map(_.getModificationTime).foldLeft(0L)(math.max),
+      inferenceConfs.map(k => spark.conf.getOption(k)))
+    val perSession = schemas.synchronized {
+      schemas.computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentHashMap())
+    }
+    perSession.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

@@ -46,6 +46,63 @@ object GraphQueries extends QueryModule {
          ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey
        GROUP BY 1, 2"""
 
+  /** What every PageRank round reads, built once per call: the edge
+    * table and the out-degree table as declared src-partitioned
+    * checkpoints, the node count, and the uniform starting ranks. One
+    * definition for [[pageRank]] and [[pageRankConverged]], so the two
+    * cannot drift apart (PropertySpec asserts they agree byte for byte).
+    *
+    * The edge table is checkpointed pre-partitioned by src with the
+    * partitioning declared on the flat leaf (CheckpointBridge): a plain
+    * localCheckpoint under AQE reports unknown partitioning and every
+    * round re-shuffles the full edge table, while a `.cache()` keeps the
+    * partitioning but not the lineage truncation (the per-round Catalyst
+    * re-analysis over the un-truncated subtree tripled the loop, measured
+    * 5.5 → 15.4 s, NOTES #13). With the declared leaf every round's
+    * src-keyed join streams the edges in place and only the small weight
+    * side moves (guide §2.4; at 100 TB: rounds × |nodes| instead of
+    * rounds × |edges| shuffled bytes). deg feeds every round, so it is
+    * materialized once; its aggregation inherits the declared src
+    * partitioning (no exchange) and is re-declared on its own checkpoint.
+    *
+    * The node count is one driver-side `count()` of the degree table (one
+    * row per src, so it equals countDistinct(src) over the edges), used
+    * as a literal: no round joins a broadcast of it. The starting ranks
+    * stay lazy: a projection of the declared deg leaf, they keep deg's src
+    * partitioning, so round 1's rank-to-degree join needs no exchange on
+    * either side.
+    */
+  private def pageRankInputs(edgesIn: org.apache.spark.sql.DataFrame): (
+      org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, Double,
+      org.apache.spark.sql.DataFrame) = {
+    val edges = org.apache.spark.sql.graftbridge.CheckpointBridge
+      .localCheckpointPartitionedBy(edgesIn, Seq("src"))
+    val deg = org.apache.spark.sql.graftbridge.CheckpointBridge
+      .localCheckpointPartitionedBy(
+        edges.groupBy("src").agg(count(lit(1)).as("d")), Seq("src"))
+    val n = deg.count().toDouble
+    (edges, deg, n, deg.select(col("src").as("node"), lit(1.0 / n).as("pr")))
+  }
+
+  /** One PageRank round: weight each node's outgoing contribution once,
+    * then fan out along edges and sum per destination. There is no
+    * dangling-node redistribution term because every src is also a dst.
+    * SHUFFLE_HASH hints keep the joins sort-free: SMJ would re-sort the
+    * checkpointed edges every round, and a broadcast would rebuild and
+    * ship the weight table per round.
+    */
+  private def pageRankStep(edges: org.apache.spark.sql.DataFrame,
+      deg: org.apache.spark.sql.DataFrame, n: Double,
+      ranks: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val wt = ranks.join(deg.hint("shuffle_hash"), ranks("node") === deg("src"))
+      .select(col("src"), (col("pr") / col("d")).as("w"))
+    edges.join(wt.hint("shuffle_hash"), "src")
+      .groupBy(col("dst"))
+      .agg(sum(col("w")).as("s"))
+      .select(col("dst").as("node"),
+        Ql.r(lit(1 - damping) / lit(n) + lit(damping) * col("s"), 7).as("pr"))
+  }
+
   /** The PageRank loop over a directed edge list `edges(src, dst)` (may
     * be a multigraph — parallel edge rows weight the flow; every node
     * must appear as both src and dst, which symmetric graphs guarantee).
@@ -80,54 +137,10 @@ object GraphQueries extends QueryModule {
     // time in verify/bench/specs, so everything persisted between here
     // and the post-loop snapshot is ours to release
     val before = sc.getPersistentRDDs.keySet
-    // checkpoint the edge table PRE-PARTITIONED by src with the
-    // partitioning DECLARED on the flat leaf (CheckpointBridge): a plain
-    // localCheckpoint under AQE reports unknown partitioning and every
-    // round re-shuffles the full edge table (verified via Scratch
-    // copart_check), while a .cache() keeps the partitioning but not the
-    // lineage truncation — the per-round Catalyst re-analysis over the
-    // un-truncated subtree tripled the loop (measured 5.5 → 15.4 s,
-    // NOTES #13). With the declared leaf, every round's src-keyed join
-    // STREAMS the edges in place and only the small weight side moves
-    // (guide §2.4; at 100 TB: rounds × |nodes| instead of
-    // rounds × |edges| shuffled bytes). SHUFFLE_HASH hints keep the
-    // joins sort-free — SMJ would re-sort the checkpointed edges every
-    // round, and the broadcast alternative rebuilds + ships the weight
-    // table per round.
-    val edges = org.apache.spark.sql.graftbridge.CheckpointBridge
-      .localCheckpointPartitionedBy(edgesIn, Seq("src"))
-    // deg and the node count feed EVERY round — materialize once, or
-    // each iteration re-runs their aggregations over the edge table
-    // (measured: 9.5 s → ~5.5 s at sf0.1 for the whole query); deg's
-    // aggregation inherits the declared src partitioning (no exchange)
-    // and is re-declared on its own checkpoint for the per-round join
-    val deg = org.apache.spark.sql.graftbridge.CheckpointBridge
-      .localCheckpointPartitionedBy(
-        edges.groupBy("src").agg(count(lit(1)).as("d")), Seq("src"))
-    // node count as a 1-row broadcast, not a driver-side collect —
-    // derived from the checkpointed DEGREE table (one row per src, so
-    // count(*) == countDistinct(src) over edges exactly) instead of a
-    // second distinct-aggregate pass over the edge table (r17 session 2;
-    // leaving the initial rank frame lazy instead was measured and
-    // REGRESSED 8.0 → 11.4 s — the un-truncated crossJoin subtree rides
-    // into all four fused rounds of the first cadence window)
-    val nRow = deg.agg(count(lit(1)).cast("double").as("n"))
-      .localCheckpoint(true)
-    var ranks = deg.crossJoin(broadcast(nRow))
-      .select(col("src").as("node"), (lit(1.0) / col("n")).as("pr"))
-      .localCheckpoint(true)
+    val (edges, deg, n, ranks0) = pageRankInputs(edgesIn)
+    var ranks = ranks0
     for (i <- 1 to rounds) {
-      // weight each node's outgoing contribution once, then fan out
-      // along edges and sum per destination — no dangling-node
-      // redistribution term because every src is also a dst
-      val wt = ranks.join(deg.hint("shuffle_hash"), ranks("node") === deg("src"))
-        .select(col("src"), (col("pr") / col("d")).as("w"))
-      ranks = edges.join(wt.hint("shuffle_hash"), "src")
-        .groupBy(col("dst"))
-        .agg(sum(col("w")).as("s"))
-        .crossJoin(broadcast(nRow))
-        .select(col("dst").as("node"),
-          Ql.r(lit(1 - damping) / col("n") + lit(damping) * col("s"), 7).as("pr"))
+      ranks = pageRankStep(edges, deg, n, ranks)
       if (i % cadence == 0 && i < rounds) ranks = ranks.localCheckpoint(true)
     }
     // materialize the final frame so it no longer depends on the loop's
@@ -159,30 +172,12 @@ object GraphQueries extends QueryModule {
       maxRounds: Int = 100): (org.apache.spark.sql.DataFrame, Int) = {
     val sc = edgesIn.sparkSession.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    // src-partitioned declared checkpoints + sort-free hash joins: same
-    // rationale and measurements as [[pageRank]]
-    val edges = org.apache.spark.sql.graftbridge.CheckpointBridge
-      .localCheckpointPartitionedBy(edgesIn, Seq("src"))
-    val deg = org.apache.spark.sql.graftbridge.CheckpointBridge
-      .localCheckpointPartitionedBy(
-        edges.groupBy("src").agg(count(lit(1)).as("d")), Seq("src"))
-    val nRow = edges.agg(countDistinct(col("src")).cast("double").as("n"))
-      .localCheckpoint(true)
-    var ranks = deg.crossJoin(broadcast(nRow))
-      .select(col("src").as("node"), (lit(1.0) / col("n")).as("pr"))
-      .localCheckpoint(true)
+    val (edges, deg, n, ranks0) = pageRankInputs(edgesIn)
+    var ranks = ranks0
     var rounds = 0
     var delta = Double.MaxValue
     while (delta >= tol && rounds < maxRounds) {
-      val wt = ranks.join(deg.hint("shuffle_hash"), ranks("node") === deg("src"))
-        .select(col("src"), (col("pr") / col("d")).as("w"))
-      val next = edges.join(wt.hint("shuffle_hash"), "src")
-        .groupBy(col("dst"))
-        .agg(sum(col("w")).as("s"))
-        .crossJoin(broadcast(nRow))
-        .select(col("dst").as("node"),
-          Ql.r(lit(1 - damping) / col("n") + lit(damping) * col("s"), 7).as("pr"))
-        .localCheckpoint(true)
+      val next = pageRankStep(edges, deg, n, ranks).localCheckpoint(true)
       delta = next.join(ranks.select(col("node"), col("pr").as("pr0")), "node")
         .agg(sum(abs(col("pr") - col("pr0"))).as("d")).head().getDouble(0)
       ranks = next

@@ -12,20 +12,14 @@ import org.apache.spark.sql.graftbridge.{ColumnBridge => CB}
   * downstream operator keyed the same way re-shuffles data that is
   * ALREADY laid out correctly — for an iterative job that joins a large
   * checkpointed table per round, that is one full-table exchange per
-  * round for nothing (guide §2.4). The caller repartitions by `keys`
-  * immediately before calling, and this bridge re-declares exactly that
-  * partitioning on the flat LogicalRDD leaf (lineage stays truncated, so
-  * the per-round Catalyst re-analysis cost stays flat — the NOTES #13
-  * constraint that rules out plain `.cache()` for loop-invariant tables).
+  * round for nothing (guide §2.4). The bridge repartitions by the keys
+  * itself and re-declares exactly that partitioning on the flat
+  * LogicalRDD leaf (lineage stays truncated, so the per-round Catalyst
+  * re-analysis cost stays flat — the NOTES #13 constraint that rules out
+  * plain `.cache()` for loop-invariant tables).
   */
 object CheckpointBridge {
 
-  /** Eagerly localCheckpoints `df.repartition(keys)` and returns a frame
-    * whose leaf declares HashPartitioning(keys, n): downstream joins and
-    * aggregations clustered by `keys` (or a superset) skip their
-    * exchange. The claim is true by construction — the repartition runs
-    * INSIDE this call, immediately before the checkpoint.
-    */
   /** Plan-level lineage truncation with LAZY, deadlock-free
     * materialization (r18): returns a LogicalRDD leaf over the frame's
     * RDD, `persist`ed so every consumer computes each partition once —
@@ -57,16 +51,37 @@ object CheckpointBridge {
       LogicalRDD.fromDataset(rdd, cdf, isStreaming = false))
   }
 
+  /** Eagerly localCheckpoints `df` hash-repartitioned by `keys` and
+    * returns a frame whose leaf declares HashPartitioning(keys, n): a
+    * downstream join or aggregation clustered by `keys` (or a superset)
+    * adds no exchange on this side. The claim is true by construction:
+    * the repartition runs inside this call, immediately before the
+    * checkpoint.
+    *
+    * n is the session's `numShufflePartitions` (under AQE the
+    * `coalescePartitions.initialPartitionNum` when that is set), passed
+    * explicitly. It is the count every exchange EnsureRequirements adds
+    * starts from, so the other side of a join is shuffled to exactly n
+    * and the declared side stays in place. A repartition by keys alone
+    * lets AQE coalesce it (to 1 partition on small inputs); a declared
+    * count below the other side's exchange count makes EnsureRequirements
+    * re-shuffle the declared leaf to match (NOTES fact #27), the very
+    * exchange this bridge exists to remove. AQE never coalesces a
+    * repartition by number, so the count declared is the count written.
+    */
   def localCheckpointPartitionedBy(df: org.apache.spark.sql.DataFrame,
       keys: Seq[String]): org.apache.spark.sql.DataFrame = {
     val session = df.sparkSession.asInstanceOf[classic.SparkSession]
-    val ck = df.repartition(keys.map(df.col): _*).localCheckpoint(true)
+    val n = session.sessionState.conf.numShufflePartitions
+    val ck = df.repartition(n, keys.map(df.col): _*).localCheckpoint(true)
       .asInstanceOf[classic.DataFrame]
     val attrs = ck.queryExecution.analyzed.output
     val keyAttrs = keys.map(k => attrs.find(_.name == k).getOrElse(
       throw new IllegalArgumentException(s"no column $k in ${attrs.map(_.name)}")))
     val rdd = ck.queryExecution.toRdd
-    val part = HashPartitioning(keyAttrs, rdd.getNumPartitions)
+    require(rdd.getNumPartitions == n,
+      s"checkpoint has ${rdd.getNumPartitions} partitions, declared $n")
+    val part = HashPartitioning(keyAttrs, n)
     classic.Dataset.ofRows(session,
       LogicalRDD(attrs, rdd, part, Nil, isStreaming = false, None)(
         session, None, None))
