@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.CheckpointBridge.scope
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -152,10 +153,9 @@ object Bench {
     (lightWarm ++ heavyWarm)
       .filter(SparkEntry.queries.contains)
       .foreach { n =>
-        try SparkEntry.queries(n)(spark, warmSf).count()
+        try scope(SparkEntry.queries(n)(spark, warmSf).count())
         catch { case e: Throwable => warmFailed(s"warm-up $n at $warmSf", e) }
       }
-    spark.catalog.clearCache()
     // One untimed steady-state pass of the heavy family AT BENCH SCALE:
     // AQE picks different physical plans at sf0.1 than at the tiny warm
     // SF (broadcast vs shuffle joins), so the sf0.001 pass compiles the
@@ -167,10 +167,9 @@ object Bench {
     // timed loop measures steady-state latency for every query uniformly.
     if (warmSf != sfDir)
       heavyWarm.filter(SparkEntry.queries.contains).foreach { n =>
-        try SparkEntry.queries(n)(spark, sfDir).count()
+        try scope(SparkEntry.queries(n)(spark, sfDir).count())
         catch { case e: Throwable => warmFailed(s"warm-up $n at $sfDir", e) }
       }
-    spark.catalog.clearCache()
     System.gc() // settle warmup debris before anything is timed
     // optional comma-separated subset for local profiling, e.g.
     // SPARK_GRAFT_BENCH_ONLY=q_dedup_embed,q_fingerprint
@@ -185,8 +184,10 @@ object Bench {
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
     def heapUsedMb: Long =
       (Runtime.getRuntime.totalMemory - Runtime.getRuntime.freeMemory) >> 20
-    // Between queries: drop caches AND force a full GC. The GC matters
-    // beyond hygiene — ContextCleaner reclaims dead broadcast blocks and
+    // Each query runs in its own materialization scope, which releases
+    // every block it pinned once it returns (outside the timed window).
+    // Between queries a full GC runs too. The GC matters beyond that —
+    // ContextCleaner reclaims dead broadcast blocks and
     // shuffle state only when their weak refs are collected, so without it
     // ~90 queries' broadcasts pile up in the 8g heap and mid-run queries
     // pay 10-20× their isolated time in GC stalls (the r2 q_dead_letter
@@ -196,16 +197,17 @@ object Bench {
     def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         recordFailure: Boolean): Double = {
       val gc0 = gcMillis
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch {
-        case e: Throwable =>
-          if (recordFailure) failed += name
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+      val dt = scope {
+        val t0 = System.nanoTime()
+        try { fn(spark, sfDir).count() } catch {
+          case e: Throwable =>
+            if (recordFailure) failed += name
+            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+        }
+        (System.nanoTime() - t0) / 1e9
       }
-      val dt = (System.nanoTime() - t0) / 1e9
       val gcDt = gcMillis - gc0
       gcInQueries += gcDt
-      spark.catalog.clearCache()
       if (interGc) System.gc()
       System.err.println(
         f"[bench] $name%-28s $dt%7.2f s  gc=$gcDt%4d ms  heap=${heapUsedMb}%5d MB")
@@ -401,7 +403,7 @@ object Bench {
         val xs = (0 until 3).flatMap { _ =>
           val t0 = System.nanoTime()
           try {
-            SparkEntry.queries(name)(spark, warmSf).count()
+            scope(SparkEntry.queries(name)(spark, warmSf).count())
             Some((System.nanoTime() - t0) / 1e9)
           } catch { case e: Throwable => warmFailed(s"noise probe $name", e); None }
         }.sorted
@@ -548,20 +550,21 @@ object Bench {
         var tot = 0.0
         results.collect { case (k, _) if !failedSetG(k) => k }
           .toSeq.sorted.grouped(groupN).foreach { wave =>
-            val t0 = System.nanoTime()
-            try {
-              wave.map { n =>
-                val q = SparkEntry.queries(n)(spark, sfDir)
-                q.agg(gsum(gxx(gstruct(q.columns.map(gcol): _*))))
-              }.reduce(_.unionAll(_)).count()
-            } catch { case e: Throwable =>
-              System.err.println(s"[bench] grouped wave ${wave.head}.. FAILED: ${e.getMessage}")
+            val dt = scope {
+              val t0 = System.nanoTime()
+              try {
+                wave.map { n =>
+                  val q = SparkEntry.queries(n)(spark, sfDir)
+                  q.agg(gsum(gxx(gstruct(q.columns.map(gcol): _*))))
+                }.reduce(_.unionAll(_)).count()
+              } catch { case e: Throwable =>
+                System.err.println(s"[bench] grouped wave ${wave.head}.. FAILED: ${e.getMessage}")
+              }
+              (System.nanoTime() - t0) / 1e9
             }
-            val dt = (System.nanoTime() - t0) / 1e9
             tot += dt
             System.err.println(
               f"[bench] grouped wave ${wave.head}%-24s +${wave.size - 1} others $dt%7.2f s")
-            spark.catalog.clearCache()
             if (interGc) System.gc()
           }
         Some(tot)

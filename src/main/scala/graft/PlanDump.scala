@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.CheckpointBridge.scope
 
 /** Dev-only: write `explain("formatted")` for a comma-separated list of
   * queries to `<outDir>/<query>_<tag>.txt` — the before/after plan
@@ -25,7 +26,7 @@ object PlanDump {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     names.foreach { n =>
-      try {
+      try scope {
         val df = SparkEntry.queries(n)(spark, sfDir)
         // a tag starting with "exec" executes THIS frame's own
         // QueryExecution (a noop write or count() would plan a fresh one
@@ -43,7 +44,6 @@ object PlanDump {
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $n FAILED: ${e.getMessage}")
       }
-      spark.catalog.clearCache()
     }
     spark.stop()
   }

@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.CheckpointBridge.scope
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -19,14 +20,14 @@ object Verify {
     // local-iteration subset (driver sets no env → full run)
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(",").toSet).getOrElse(SparkEntry.queries.keySet)
+    // one materialization scope per query: every block it pinned is
+    // released once its output is written, so none taxes the rest
     SparkEntry.queries.filter(q => only(q._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try scope(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // queries that cache (dedup/cluster pipelines) must not tax the rest
-      spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge._
 
 /** Near-dup clustering (the step after candidate detection): connected
   * components over the candidate-pair graph, so each duplicate group gets
@@ -127,8 +128,8 @@ object ClusterQueries extends QueryModule {
     */
   /** One full label round relative to `prev`: neighbor-min + 3 pointer
     * jumps through prev, returning (id, old, lbl) with old = prev's
-    * label. Factored out of [[connectedComponents]] so the round-body
-    * plan can be dumped as evidence (Scratch round_plans, plans/r18).
+    * label. Factored out of [[connectedComponents]], which runs it twice
+    * per eager job (the committed round plans are under plans/r18).
     */
   private[graft] def ccRound(adj: DataFrame, prev: DataFrame): DataFrame = {
     val nbrMin = adj.join(prev, adj("b") === prev("id"))
@@ -147,10 +148,10 @@ object ClusterQueries extends QueryModule {
     cur
   }
 
-  def connectedComponents(adj: DataFrame, maxRounds: Int = 50): (DataFrame, Int) = {
+  def connectedComponents(adj: DataFrame, maxRounds: Int = 50): (DataFrame, Int) = scope {
     var labels = adj.select(col("a").as("id")).distinct()
       .withColumn("lbl", col("id"))
-      .localCheckpoint(true)
+      .checkpointed
     var changed = 1L
     var rounds = 0
     def step(prev: DataFrame): DataFrame = ccRound(adj, prev)
@@ -167,7 +168,7 @@ object ClusterQueries extends QueryModule {
       // Label values are identical to the one-round-per-job loop: the
       // round operator is deterministic and each sub-round chases through
       // the immediately preceding label table, exactly as before.
-      val mid = org.apache.spark.sql.graftbridge.CheckpointBridge.lazyTruncate(step(labels).select("id", "lbl"))
+      val mid = truncate(step(labels).select("id", "lbl"))
       // convergence = sub-round 2 changed nothing (old = mid's label).
       // A single no-change round pins the fixpoint: labels only decrease,
       // so an unchanged full round is stable forever after.
@@ -175,7 +176,7 @@ object ClusterQueries extends QueryModule {
       val next = step(mid)
         .observe(obs, sum(when(col("lbl") =!= col("old"), 1L)
           .otherwise(0L)).as("changed"))
-        .localCheckpoint(true)
+        .checkpointed
       changed = obs.get("changed") match {
         case null => 0L
         case n: Number => n.longValue()
@@ -197,10 +198,11 @@ object ClusterQueries extends QueryModule {
     * blocking is orders of magnitude smaller than the documents table,
     * so corpus-sized partition counts just multiply per-round scheduler
     * overhead (one partition per ~500k edges; the count is a cheap
-    * action on the cached frame). The loop's inputs are dead once the
-    * labels are checkpointed (lineage truncated), so their blocks are
-    * released here instead of taxing every later query in a
-    * bench/verify session.
+    * action on the cached frame). The body is one materialization
+    * scope: the final labels are a checkpoint (lineage cut), so the
+    * cached inputs and every round's blocks are unreachable from them
+    * and are released when this returns, instead of taxing every later
+    * query in a bench/verify session.
     */
   private def clusterLabels(spark: SparkSession, sfDir: String): DataFrame =
     clusterLabelsOf(edges(spark, sfDir))
@@ -210,17 +212,14 @@ object ClusterQueries extends QueryModule {
     * cluster through this one definition instead of re-implementing the
     * sizing/hygiene sequence.
     */
-  private[operators] def clusterLabelsOf(e0: DataFrame): DataFrame = {
-    val e = e0.cache()
+  private[operators] def clusterLabelsOf(e0: DataFrame): DataFrame = scope {
+    val e = e0.cached
     val parts = math.max(1, (e.count() / 500000L).toInt)
     val adj = e.select(col("d1").as("a"), col("d2").as("b"))
       .unionByName(e.select(col("d2").as("a"), col("d1").as("b")))
       .repartition(parts)
-      .cache()
-    val (labels, _) = connectedComponents(adj)
-    e.unpersist(false)
-    adj.unpersist(false)
-    labels
+      .cached
+    connectedComponents(adj)._1
   }
 
   /** Oracle twin of [[clusterLabels]]: recursive-CTE transitive closure
@@ -323,7 +322,7 @@ object ClusterQueries extends QueryModule {
     (spark, sfDir) => {
       val sizes = clusterLabels(spark, sfDir)
         .groupBy("lbl").agg(count(lit(1)).as("cluster_size"))
-        .localCheckpoint(true) // cluster-count-sized; CC inputs released
+        .checkpointed // cluster-count-sized; CC inputs released
       val tot = sizes.agg(sum(col("cluster_size")).as("n_docs_total"))
       sizes.groupBy("cluster_size")
         .agg(count(lit(1)).as("n_clusters"))
@@ -382,7 +381,7 @@ object ClusterQueries extends QueryModule {
       val corpus = DedupQueries.withPlants(spark, sfDir)
         .unionByName(chainB).unionByName(chainC)
         // feeds the edge scaffold AND the member/canonical text joins
-        .localCheckpoint(true)
+        .checkpointed
       val labels = clusterLabelsOf(edgesOf(corpus))
       val docs = corpus.select(col("doc_id").as("id"), col("text"),
         length(col("text")).cast("long").as("len"))
@@ -390,7 +389,7 @@ object ClusterQueries extends QueryModule {
       val ranked = labels.join(docs, "id")
         .withColumn("rn", row_number().over(w))
         // feeds the canonical slice AND the member slice
-        .localCheckpoint(true)
+        .checkpointed
       val canon = ranked.filter(col("rn") === 1)
         .select(col("lbl"), col("id").as("canonical_id"), col("text").as("ctext"))
       def shArr(c: String) =
@@ -480,7 +479,7 @@ object ClusterQueries extends QueryModule {
       // so both consumers (sizes + the member join) read the same blocks
       val members = clusterLabels(spark, sfDir)
       val sizes = members.groupBy("lbl").agg(count(lit(1)).as("csize"))
-        .localCheckpoint(true) // cluster-count-sized
+        .checkpointed // cluster-count-sized
       val docs = DedupQueries.withPlantsFull(spark, sfDir)
         .select(col("doc_id"), col("lang"),
           size(split(col("text"), " ")).cast("long").as("n_toks"))

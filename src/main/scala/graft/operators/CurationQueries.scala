@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, QueryModule, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge._
 
 /** Corpus-curation operators a training-data pipeline runs between raw
   * ingest and tokenization: segment-level dedup statistics (the
@@ -41,7 +42,7 @@ object CurationQueries extends QueryModule {
     */
   private val segmentDedup = QueryDef(
     "q_segment_dedup",
-    (spark, sfDir) => {
+    (spark, sfDir) => scope {
       val segs = Tables.documents(spark, sfDir)
         .withColumn("toks", split(col("text"), " "))
         .select(col("doc_id"), col("lang"),
@@ -50,7 +51,7 @@ object CurationQueries extends QueryModule {
         .select("doc_id", "lang", "seg_h")
         // feeds both the dup-set aggregate and the per-doc tally — cache
         // so the scan+explode+hash runs once, not once per consumer
-        .cache()
+        .cached
       val dup = segs.groupBy("seg_h")
         .agg(countDistinct(col("doc_id")).as("nd"))
         .filter(col("nd") >= 2)
@@ -61,17 +62,15 @@ object CurationQueries extends QueryModule {
         .agg(count(lit(1)).as("n_segs"),
           sum(coalesce(col("is_dup"), lit(0L))).as("n_dup"))
         .withColumn("frac", col("n_dup") / col("n_segs"))
-      val perLang = perDoc.groupBy("lang")
+      perDoc.groupBy("lang")
         .agg(count(lit(1)).as("n_docs"),
           sum((col("frac") >= 0.3).cast("long")).as("n_flagged"),
           Ql.r(avg(col("frac")), 4).as("avg_dup_frac"))
         .orderBy("lang")
         // the result is a per-lang handful of rows — materialize it now so
-        // the segs cache's scope is this function, not the whole session
-        // (unreleased blocks would tax every later query in a bench run)
-        .localCheckpoint(true)
-      segs.unpersist(false)
-      perLang
+        // the scope releases the segs cache when this returns (unreleased
+        // blocks would tax every later query in a bench run)
+        .checkpointed
     },
     Some(s"""
       WITH segs AS (
@@ -918,7 +917,7 @@ object CurationQueries extends QueryModule {
           "(ln((CAST(c_t AS DOUBLE) + 1.0) / (n_tgt + 10000.0)) - " +
             "ln((CAST(c_r AS DOUBLE) + 1.0) / (n_raw + 10000.0))) * 1e6", 0)} AS BIGINT)"))
         .select("f", "lr_micro")
-        .localCheckpoint(true) // ≤B rows; the broadcast model
+        .checkpointed // ≤B rows; the broadcast model
       instR.join(broadcast(lrtab), "f")
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_bigrams"), sum(col("lr_micro")).as("score_micro"))

@@ -4,6 +4,7 @@ import graft.{QueryDef, QueryModule, Tables}
 import graft.functions.Vectors
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge._
 
 /** Training-data deduplication operators (SURVEY §2.I1/I2): exact hash,
   * MinHash+LSH banding, SimHash, and n-gram Jaccard — plus embedding-cosine
@@ -451,21 +452,20 @@ object DedupQueries extends QueryModule {
     */
   private val dedupRecall = QueryDef(
     "q_dedup_recall",
-    (spark, sfDir) => {
+    (spark, sfDir) => scope {
       // Each corpus-sized pipeline must run exactly ONCE: the truth and
       // candidate pair sets are checkpointed (they are pair-list-sized,
       // not corpus-sized), every downstream count reads the checkpoint,
-      // and all blocks pinned along the way are released before
-      // returning (cache scope = this function, the pageRank contract).
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
+      // and the body is one materialization scope: the returned report
+      // is a checkpoint, so every block pinned along the way is released
+      // on return.
       // ONE corpus shingle pass feeds BOTH the exact truth and the LSH
       // candidates (r17: the candidate side previously re-ran the whole
       // explode from scratch): the cached distinct (doc_id, h1, h2)
       // halves serve the 56-bit exact key by projection and the minhash
       // family directly (per-seed mins are the same over the distinct
       // set as over occurrences).
-      val hh = shingleHalves(withPlants(spark, sfDir)).distinct().cache()
+      val hh = shingleHalves(withPlants(spark, sfDir)).distinct().cached
       val (inter, sizes) = shingleIntersections(combinedSh(hh))
       val truth = inter
         .join(sizes.select(col("doc_id").as("d1"), col("sz").as("sz1")), "d1")
@@ -473,9 +473,9 @@ object DedupQueries extends QueryModule {
         .withColumn("jacc", Ql.r(col("inter") / (col("sz1") + col("sz2") - col("inter")), 4))
         .filter(col("jacc") >= 0.6)
         .select(col("d1"), col("d2"))
-        .localCheckpoint(true)
-      val cand = bandPairsFromWide(minhashSigsWide(hh)).localCheckpoint(true)
-      hh.unpersist(blocking = false)
+        .checkpointed
+      val cand = bandPairsFromWide(minhashSigsWide(hh)).checkpointed
+      release(hh)
       val hit = truth.join(cand, Seq("d1", "d2"), "left_semi")
       val out = truth.agg(count(lit(1)).as("n_truth"))
         .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
@@ -483,10 +483,7 @@ object DedupQueries extends QueryModule {
         .select(col("n_truth"), col("n_cand"), col("n_hit"),
           Ql.r(col("n_hit") / col("n_truth").cast("double"), 4).as("recall"),
           Ql.r(col("n_hit") / col("n_cand").cast("double"), 4).as("precision"))
-      val mine = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-      val collected = out.localCheckpoint(true)
-      mine.values.foreach(_.unpersist(blocking = false))
-      collected
+      out.checkpointed
     },
     Some(s"""
       WITH sh AS (
@@ -584,7 +581,7 @@ object DedupQueries extends QueryModule {
   private val dedupSimhashPairs = QueryDef(
     "q_dedup_simhash_pairs",
     (spark, sfDir) => {
-      val fp = simhashFp(spark, sfDir, 200).cache()
+      val fp = simhashFp(spark, sfDir, 200).cached
       val bands = fp.select(col("doc_id"), col("fingerprint"),
           explode(expr("sequence(0, 3)")).as("band"))
         .withColumn("band_key", expr("(fingerprint >> (15 * band)) & 32767"))
@@ -622,7 +619,7 @@ object DedupQueries extends QueryModule {
   private val dedupNgramJaccard = QueryDef(
     "q_dedup_ngram_jaccard",
     (spark, sfDir) => {
-      val sh = shingles(withPlants(spark, sfDir)).cache()
+      val sh = shingles(withPlants(spark, sfDir)).cached
       val (inter, sizes) = shingleIntersections(sh)
       inter
         .join(sizes.select(col("doc_id").as("d1"), col("sz").as("sz1")), "d1")
@@ -673,7 +670,7 @@ object DedupQueries extends QueryModule {
         e.filter(col("vec_id") < 10).select(
           (col("vec_id") + 100000).as("vec_id"),
           expr("concat(slice(v, 1, 63), array(element_at(v, 64) + 0.1d))").as("v")))
-        .cache()
+        .cached
       // id-only banding table (vectors NOT duplicated per band)
       val banded = planted
         .select(col("vec_id"), explode(expr("sequence(0, 2)")).as("band"), col("v"))
@@ -749,7 +746,7 @@ object DedupQueries extends QueryModule {
         .filter(col("d1") < col("d2"))
         .filter(abs(col("len1") - col("len2")) <= 8)
         .select("d1", "d2", "t1", "t2")
-        .cache()
+        .cached
       // thresholded levenshtein: early-exits (returns -1) once the
       // distance provably exceeds 8 — a non-dup pair bails after a few
       // rows of the banded DP matrix instead of filling all O(n·m) of it
@@ -787,27 +784,26 @@ object DedupQueries extends QueryModule {
     */
   private val containment = QueryDef(
     "q_containment",
-    (spark, sfDir) => {
+    (spark, sfDir) => scope {
       val d = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
       val planted = d.unionByName(
         d.filter(col("doc_id") < 5).select(
           (col("doc_id") + 200000).as("doc_id"),
           concat_ws(" ", slice(split(col("text"), " "), 1, 20)).as("text")))
-      val sh = shingles(planted).cache()
+      val sh = shingles(planted).cached
       val (inter, sizes) = shingleIntersections(sh)
       val directed = inter
         .select(col("d1").as("src"), col("d2").as("dst"), col("inter"))
         .unionByName(inter
           .select(col("d2").as("src"), col("d1").as("dst"), col("inter")))
-      // materialize the tiny result, then release the shingle cache —
-      // its scope is this function, not the whole bench/verify session
+      // materialize the tiny result; the scope then releases the
+      // shingle cache, which the checkpoint no longer reaches
       val out = directed
         .join(sizes.select(col("doc_id").as("src"), col("sz")), "src")
         .withColumn("containment", Ql.r(col("inter") / col("sz"), 4))
         .filter(col("containment") >= 0.8)
         .select(col("src"), col("dst"), col("containment"))
-        .localCheckpoint(true)
-      sh.unpersist(false)
+        .checkpointed
       out.orderBy("src", "dst")
     },
     Some {
@@ -1002,19 +998,17 @@ object DedupQueries extends QueryModule {
     */
   private val minhashCalibration = QueryDef(
     "q_minhash_calibration",
-    (spark, sfDir) => {
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
+    (spark, sfDir) => scope {
       val docs = withPlants(spark, sfDir)
       // ONE corpus shingle pass feeds the signatures AND the exact
       // scorer (r17: previously two independent explode+distinct passes,
       // one per side); the wide 12-min signature row is checkpointed
       // once and serves both the band join and the per-seed agreement
       // join (unpivoted shuffle-free via stack).
-      val hh = shingleHalves(docs).distinct().cache()
-      val wide = minhashSigsWide(hh).localCheckpoint(true)
+      val hh = shingleHalves(docs).distinct().cached
+      val wide = minhashSigsWide(hh).checkpointed
       val sigs = sigsLongFromWide(wide)
-      val cand = bandPairsFromWide(wide).localCheckpoint(true)
+      val cand = bandPairsFromWide(wide).checkpointed
       val (inter, sizes) = shingleIntersections(combinedSh(hh))
       val est = cand
         .join(sigs.select(col("doc_id").as("d1"), col("seed"), col("mh").as("mh1")), "d1")
@@ -1032,12 +1026,7 @@ object DedupQueries extends QueryModule {
           s"${Ql.R("CAST(inter AS DOUBLE) / (sz1 + sz2 - inter)", 4)} AS exact_jaccard",
           s"${Ql.R("abs(n_common_mh / 12.0 - CAST(inter AS DOUBLE) / (sz1 + sz2 - inter))", 4)} AS abs_err")
         .orderBy("d1", "d2")
-      // snapshot the loop's blocks BEFORE the final checkpoint so the
-      // result's own blocks survive the release (the recall pattern)
-      val mine = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-      val collected = out.localCheckpoint(true)
-      mine.values.foreach(_.unpersist(blocking = false))
-      collected
+      out.checkpointed
     },
     Some(s"""
       WITH sh AS (
@@ -1175,7 +1164,7 @@ object DedupQueries extends QueryModule {
           "transform(sequence(0, size(toks) - 5), i -> concat_ws(' ', slice(toks, i + 1, 5)))")).as("sh0"))
         .select(col("source"), expr(Ql.md5PrefixLong("sh0", 14)).as("h"))
         .distinct()
-        .localCheckpoint(true) // feeds sizes AND both sides of the pair join
+        .checkpointed // feeds sizes AND both sides of the pair join
       val sizes = sh.groupBy("source").agg(count(lit(1)).as("n"))
       sh.select(col("source").as("src_a"), col("h"))
         .join(sh.select(col("source").as("src_b"), col("h")), "h")
@@ -1240,15 +1229,13 @@ object DedupQueries extends QueryModule {
     val nhat = "((n_run1 + 1.0) * (n_run2 + 1.0) / (m_both + 1.0) - 1.0)"
     QueryDef(
       "q_capture_recapture",
-      (spark, sfDir) => {
-        val sc = spark.sparkContext
-        val before = sc.getPersistentRDDs.keySet
+      (spark, sfDir) => scope {
         val docs = withPlants(spark, sfDir)
         // one explode+hash pass feeds both hash-family runs (r17: each
         // lshBandPairsOf call previously re-ran the corpus explode)
-        val hh = shingleHalves(docs).cache()
-        val run1 = bandPairsFromWide(minhashSigsWide(hh)).localCheckpoint(true)
-        val run2 = bandPairsFromWide(minhashSigsWide(hh, 12)).localCheckpoint(true)
+        val hh = shingleHalves(docs).cached
+        val run1 = bandPairsFromWide(minhashSigsWide(hh)).checkpointed
+        val run2 = bandPairsFromWide(minhashSigsWide(hh, 12)).checkpointed
         val out = run1.agg(count(lit(1)).as("n_run1"))
           .crossJoin(broadcast(run2.agg(count(lit(1)).as("n_run2"))))
           .crossJoin(broadcast(
@@ -1257,10 +1244,7 @@ object DedupQueries extends QueryModule {
             s"${Ql.R(nhat, 2)} AS chapman_n_hat",
             s"${Ql.R(s"n_run1 / $nhat", 4)} AS run1_coverage",
             s"${Ql.R(s"n_run2 / $nhat", 4)} AS run2_coverage")
-        val mine = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-        val collected = out.localCheckpoint(true)
-        mine.values.foreach(_.unpersist(blocking = false))
-        collected
+        out.checkpointed
       },
       Some(s"""
         WITH $lshCandSql,
@@ -1314,7 +1298,7 @@ object DedupQueries extends QueryModule {
           .withColumn("split_b", greatest(col("s1"), col("s2")))
           .groupBy("split_a", "split_b")
           .agg(count(lit(1)).as("n_pairs"))
-          .localCheckpoint(true)
+          .checkpointed
         val tot = g.agg(sum(col("n_pairs")).as("n_total"))
         g.crossJoin(broadcast(tot))
           .selectExpr("split_a", "split_b",
@@ -1354,7 +1338,7 @@ object DedupQueries extends QueryModule {
     */
   private val dedupWinnowing: QueryDef = QueryDef(
     "q_dedup_winnowing",
-    (spark, sfDir) => {
+    (spark, sfDir) => scope {
       import org.apache.spark.sql.expressions.Window
       // scatter by doc_id: absorbed by the per-doc fingerprint window's
       // own partitioning (same key), so the 4-gram explode + md5 runs
@@ -1371,24 +1355,22 @@ object DedupQueries extends QueryModule {
       // no shared gram exchange left for AQE to reuse, and the four
       // consumers (df count, anti join, both self-join sides) would each
       // re-run the explode+window pipeline — cache the fingerprint table
-      // (≈ grams/w rows) so it materializes once, released before return
+      // (≈ grams/w rows) so it materializes once, released on return
       val fps = grams
         .withColumn("minh", min(col("h")).over(wWin))
         .filter(col("i") <= col("g") - 4) // complete windows only
         .select(col("doc_id"), col("minh")).distinct()
-        .cache()
+        .cached
       val hot = fps.groupBy("minh").agg(count(lit(1)).as("df"))
         .filter(col("df") > 100).select("minh")
       val rare = fps.join(broadcast(hot), Seq("minh"), "left_anti")
-      val out = rare.select(col("minh"), col("doc_id").as("d1"))
+      rare.select(col("minh"), col("doc_id").as("d1"))
         .join(rare.select(col("minh"), col("doc_id").as("d2")), "minh")
         .filter(col("d1") < col("d2"))
         .groupBy("d1", "d2").agg(count(lit(1)).as("n_shared"))
         .filter(col("n_shared") >= 2)
         .orderBy("d1", "d2")
-        .localCheckpoint(true) // pair-table-sized; lets the cache release
-      fps.unpersist(false)
-      out
+        .checkpointed // pair-table-sized; lets the cache release
     },
     Some(s"""
       WITH grams AS (
@@ -1423,11 +1405,11 @@ object DedupQueries extends QueryModule {
     * cluster's min member". Shuffles size to the candidate graph (the
     * ClusterQueries.clusterLabels discipline — candidate edges are
     * orders of magnitude below corpus size, CC proven at 5M docs); the
-    * scaffold's pinned blocks are the caller's to release via the
-    * snapshot-and-release pattern.
+    * scaffold's pinned blocks land in the caller's materialization
+    * scope.
     */
   private def lshClusters(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    val cand = lshBandPairs(spark, sfDir).localCheckpoint(true)
+    val cand = lshBandPairs(spark, sfDir).checkpointed
     (ClusterQueries.clusterLabelsOf(cand), cand)
   }
 
@@ -1454,23 +1436,17 @@ object DedupQueries extends QueryModule {
     */
   private val splitSafe: QueryDef = QueryDef(
     "q_split_safe",
-    (spark, sfDir) => {
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
+    (spark, sfDir) => scope {
       val (labels, _) = lshClusters(spark, sfDir)
       val assigned = withPlants(spark, sfDir).select("doc_id")
         .join(labels.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
         .withColumn("split",
           expr(splitCase(SamplingQueries.bucketExpr("coalesce(lbl, doc_id)"))))
-      val pre = sc.getPersistentRDDs.keySet
       val g = assigned.groupBy("split").agg(
           count(lit(1)).as("n_docs"),
           sum(when(col("lbl").isNotNull, 1L).otherwise(0L)).as("n_clustered_docs"),
           countDistinct(col("lbl")).as("n_clusters"))
-        .localCheckpoint(true) // 3-row report; scaffold blocks released below
-      val mine = sc.getPersistentRDDs.filter {
-        case (id, _) => !before(id) && pre(id) }
-      mine.values.foreach(_.unpersist(blocking = false))
+        .checkpointed // 3-row report; the scope releases the scaffold
       val tot = g.agg(sum(col("n_docs")).as("n_total"))
       g.crossJoin(broadcast(tot))
         .selectExpr("split", "n_docs", "n_clustered_docs", "n_clusters",
@@ -1509,13 +1485,10 @@ object DedupQueries extends QueryModule {
     */
   private val splitSafeLeakage: QueryDef = QueryDef(
     "q_split_safe_leakage",
-    (spark, sfDir) => {
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
+    (spark, sfDir) => scope {
       val (labels, cand) = lshClusters(spark, sfDir)
       val lab = labels.withColumn("split",
         expr(splitCase(SamplingQueries.bucketExpr("lbl"))))
-      val pre = sc.getPersistentRDDs.keySet
       val g = cand
         .join(lab.select(col("id").as("d1"), col("split").as("s1")), "d1")
         .join(lab.select(col("id").as("d2"), col("split").as("s2")), "d2")
@@ -1523,10 +1496,7 @@ object DedupQueries extends QueryModule {
         .withColumn("split_b", greatest(col("s1"), col("s2")))
         .groupBy("split_a", "split_b")
         .agg(count(lit(1)).as("n_pairs"))
-        .localCheckpoint(true) // <=6-row matrix; scaffold released below
-      val mine = sc.getPersistentRDDs.filter {
-        case (id, _) => !before(id) && pre(id) }
-      mine.values.foreach(_.unpersist(blocking = false))
+        .checkpointed // <=6-row matrix; the scope releases the scaffold
       val tot = g.agg(sum(col("n_pairs")).as("n_total"))
       g.crossJoin(broadcast(tot))
         .selectExpr("split_a", "split_b",
@@ -1572,22 +1542,16 @@ object DedupQueries extends QueryModule {
     val devTxt = "abs(100.0 * o / n_split - 100.0 * n_m / n_corpus)"
     QueryDef(
       "q_split_balance",
-      (spark, sfDir) => {
-        val sc = spark.sparkContext
-        val before = sc.getPersistentRDDs.keySet
+      (spark, sfDir) => scope {
         val (labels, _) = lshClusters(spark, sfDir)
         val assigned = Tables.documents(spark, sfDir)
           .select("doc_id", "lang", "source")
           .join(labels.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
           .withColumn("split",
             expr(splitCase(SamplingQueries.bucketExpr("coalesce(lbl, doc_id)"))))
-        val pre = sc.getPersistentRDDs.keySet
         val g = assigned.groupBy("split", "lang", "source")
           .agg(count(lit(1)).as("n"))
-          .localCheckpoint(true) // grid-sized; corpus work ends here
-        val mine = sc.getPersistentRDDs.filter {
-          case (id, _) => !before(id) && pre(id) }
-        mine.values.foreach(_.unpersist(blocking = false))
+          .checkpointed // grid-sized; corpus work ends here
         val tot = g.agg(sum("n").as("n_corpus"))
         val bySplit = g.groupBy("split").agg(sum("n").as("n_split"))
         def chiOf(margin: String): DataFrame = {
@@ -1684,9 +1648,7 @@ object DedupQueries extends QueryModule {
                         ELSE 'd_j_lt_035' END"""
     QueryDef(
       "q_capture_recapture_stratified",
-      (spark, sfDir) => {
-        val sc = spark.sparkContext
-        val before = sc.getPersistentRDDs.keySet
+      (spark, sfDir) => scope {
         val docs = withPlants(spark, sfDir)
         // one shingle pass, three consumers (the candidateOverlap
         // discipline): the cached distinct (doc_id, h1, h2) halves feed
@@ -1694,28 +1656,22 @@ object DedupQueries extends QueryModule {
         // re-distinct'd a string cache per side) and both independent
         // hash-family runs (min over the distinct set == min over
         // occurrences)
-        val hh = shingleHalves(docs).distinct().cache()
+        val hh = shingleHalves(docs).distinct().cached
         val (inter, sizes) = shingleIntersections(combinedSh(hh))
         val run1 = bandPairsFromWide(minhashSigsWide(hh))
-          .localCheckpoint(true)
+          .checkpointed
         val run2 = bandPairsFromWide(minhashSigsWide(hh, 12))
-          .localCheckpoint(true)
+          .checkpointed
         val pairs = run1.select(col("d1"), col("d2"), lit(1L).as("in1"))
           .join(run2.select(col("d1"), col("d2"), lit(1L).as("in2")),
             Seq("d1", "d2"), "full_outer")
           .na.fill(0L, Seq("in1", "in2"))
-        val preScored = sc.getPersistentRDDs.keySet
         val scored = pairs.join(inter, Seq("d1", "d2"), "left")
           .join(sizes.select(col("doc_id").as("d1"), col("sz").as("sz1")), "d1")
           .join(sizes.select(col("doc_id").as("d2"), col("sz").as("sz2")), "d2")
           .withColumn("inter", coalesce(col("inter"), lit(0L)))
           .selectExpr(s"$strat AS stratum", "in1", "in2")
-          .localCheckpoint(true) // pair-list-sized; corpus work ends here
-        // release everything pinned along the way EXCEPT the result
-        // checkpoint itself (snapshot taken before it materialized)
-        val mine = sc.getPersistentRDDs.filter {
-          case (id, _) => !before(id) && preScored(id) }
-        mine.values.foreach(_.unpersist(blocking = false))
+          .checkpointed // pair-list-sized; corpus work ends here
         val perh = scored.groupBy("stratum").agg(
           sum("in1").as("n_run1"), sum("in2").as("n_run2"),
           sum(expr("in1 * in2")).as("m_both"))
@@ -1805,7 +1761,7 @@ object DedupQueries extends QueryModule {
         .agg(count(lit(1)).as("n_shingles"),
           sum("df").as("instances"),
           sum(expr("df * (df - 1) div 2")).as("pair_work"))
-        .localCheckpoint(true) // <=64 rows; feeds the share total too
+        .checkpointed // <=64 rows; feeds the share total too
       hist.crossJoin(broadcast(hist.agg(sum("pair_work").as("total_pw"))))
         .selectExpr("bkt AS df_log2_bucket", "n_shingles", "instances",
           "pair_work",
@@ -1855,7 +1811,7 @@ object DedupQueries extends QueryModule {
         .agg(count(lit(1)).as("n_buckets"),
           sum("c").as("docs"),
           sum(expr("c * (c - 1) div 2")).as("cand_pairs"))
-        .localCheckpoint(true)
+        .checkpointed
       hist.crossJoin(broadcast(hist.agg(sum("cand_pairs").as("total_cp"))))
         .selectExpr("bkt AS size_log2_bucket", "n_buckets", "docs", "cand_pairs",
           s"${Ql.R("CASE WHEN total_cp > 0 THEN 100.0 * cand_pairs / total_cp ELSE 0.0 END", 4)} AS cand_pair_pct")
@@ -1881,7 +1837,8 @@ object DedupQueries extends QueryModule {
     * (d1, d2, inter, sz1, sz2) — the scored-pair scaffold
     * q_dedup_threshold_sweep and q_lsh_banding_planner share (the same
     * join q_minhash_calibration performs inline). Everything downstream
-    * of the band join is candidate-sized. Caller owns block hygiene.
+    * of the band join is candidate-sized. Its cache and checkpoints land
+    * in the caller's materialization scope.
     */
   private[graft] def candidateOverlap(docs: DataFrame): DataFrame = {
     // ONE corpus shingle pass feeds both sides: the cached distinct
@@ -1891,7 +1848,7 @@ object DedupQueries extends QueryModule {
     // per side) and the minhash signatures directly — rebuilding
     // shingles per side doubled the dominant explode+distinct of the two
     // heaviest queries (review finding)
-    val hh = shingleHalves(docs).distinct().cache()
+    val hh = shingleHalves(docs).distinct().cached
     val (inter, sizes) = shingleIntersections(combinedSh(hh))
     bandPairsFromWide(minhashSigsWide(hh))
       .join(inter, Seq("d1", "d2"), "left")
@@ -1930,11 +1887,9 @@ object DedupQueries extends QueryModule {
     */
   private val thresholdSweep = QueryDef(
     "q_dedup_threshold_sweep",
-    (spark, sfDir) => {
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
+    (spark, sfDir) => scope {
       val docs = withPlants(spark, sfDir)
-      val pj = candidateOverlap(docs).localCheckpoint(true)
+      val pj = candidateOverlap(docs).checkpointed
       val tokLen = docs.select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("tl"))
       val totals = tokLen.agg(count(lit(1)).as("n_docs"),
@@ -1944,7 +1899,7 @@ object DedupQueries extends QueryModule {
           explode(expr("array(5L, 6L, 7L, 8L, 9L)")).as("t10"))
         .filter(col("inter") * 10 >=
           col("t10") * (col("sz1") + col("sz2") - col("inter")))
-        .localCheckpoint(true) // candidate-sized × 5
+        .checkpointed // candidate-sized × 5
       val pairsPerT = sweep.groupBy("t10").agg(count(lit(1)).as("n_dup_pairs"))
       val removedTok = sweep.select("t10", "d2").distinct()
         .join(tokLen, col("d2") === col("doc_id"))
@@ -1964,10 +1919,7 @@ object DedupQueries extends QueryModule {
           "CAST(coalesce(tokens_removed, 0) AS BIGINT) AS tokens_removed",
           s"${Ql.R("1.0 - CAST(coalesce(tokens_removed, 0) AS DOUBLE) / n_tokens", 6)} AS token_keep_rate")
         .orderBy("threshold")
-      val mine = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-      val collected = out.localCheckpoint(true)
-      mine.values.foreach(_.unpersist(blocking = false))
-      collected
+      out.checkpointed
     },
     Some(s"""
       WITH sh AS (
@@ -2039,9 +1991,7 @@ object DedupQueries extends QueryModule {
 
   private val bandingPlanner = QueryDef(
     "q_lsh_banding_planner",
-    (spark, sfDir) => {
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
+    (spark, sfDir) => scope {
       val pj = candidateOverlap(withPlants(spark, sfDir))
       val scored = pj.selectExpr(
         s"${Ql.R("CAST(inter AS DOUBLE) / (sz1 + sz2 - inter)", 4)} AS j",
@@ -2069,10 +2019,7 @@ object DedupQueries extends QueryModule {
           s"${Ql.R("sp / 1e6", 2)} AS exp_candidate_pairs",
           s"CASE WHEN n_dups = 0 THEN 0e0 ELSE ${Ql.R("spd / 1e6 / n_dups", 6)} END AS exp_dup_recall")
         .orderBy(col("bands").desc)
-      val mine = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-      val collected = out.localCheckpoint(true)
-      mine.values.foreach(_.unpersist(blocking = false))
-      collected
+      out.checkpointed
     },
     Some {
       val cfgSelects = bandingConfigs.map { case (b, r) =>
@@ -2200,14 +2147,14 @@ object DedupQueries extends QueryModule {
     (spark, sfDir) => {
       val bands = bandKeysOf(withPlants(spark, sfDir))
         // feeds the pair self-join AND the bucket-occupancy aggregate
-        .localCheckpoint(true)
+        .checkpointed
       val pb = bands.select(col("band"), col("band_key"), col("doc_id").as("d1"))
         .join(bands.select(col("band"), col("band_key"), col("doc_id").as("d2")),
           Seq("band", "band_key"))
         .filter(col("d1") < col("d2"))
         .select("band", "d1", "d2").distinct()
         // feeds the per-pair band count AND the per-band tally
-        .localCheckpoint(true)
+        .checkpointed
       val perPair = pb.groupBy("d1", "d2").agg(count(lit(1)).as("nb"))
       val mb = bands.groupBy("band", "band_key").agg(count(lit(1)).as("c"))
         .filter(col("c") >= 2)
@@ -2263,13 +2210,11 @@ object DedupQueries extends QueryModule {
     */
   private val contamNeardup = QueryDef(
     "q_contam_neardup",
-    (spark, sfDir) => {
-      // block hygiene: candidateOverlap caches its shingle table and the
-      // corpus is localCheckpointed — materialize the |langs|-row report,
-      // then release every block this query created (the rule all
+    (spark, sfDir) => scope {
+      // candidateOverlap caches its shingle table and the corpus is
+      // checkpointed — materialize the |langs|-row report; the scope
+      // then releases every block this query pinned (the rule all
       // candidateOverlap callers follow)
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
       val raw = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("lang"), col("text"))
       val base = raw
@@ -2282,7 +2227,7 @@ object DedupQueries extends QueryModule {
       // scatter BEFORE the checkpoint: the union-of-scans is 1-file
       // skewed (single row group per file), and the checkpointed layout
       // is what every downstream fan-out inherits
-      val corpus = Tables.scatter(base.unionByName(plants)).localCheckpoint(true)
+      val corpus = Tables.scatter(base.unionByName(plants)).checkpointed
       val pj = candidateOverlap(corpus.select(col("doc_id"), col("text")))
       val buck = corpus.select(col("doc_id"),
         expr(SamplingQueries.bucketExpr("doc_id")).as("b"))
@@ -2306,9 +2251,7 @@ object DedupQueries extends QueryModule {
           count(col("test_doc")).as("n_cand"),
           sum(coalesce(col("confirmed"), lit(0)).cast("long")).as("n_confirmed"),
           Ql.r(max(coalesce(col("jac"), lit(0.0))), 4).as("max_jac"))
-      val mine = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-      val report = out.localCheckpoint(true)
-      mine.values.foreach(_.unpersist(blocking = false))
+      val report = out.checkpointed
       report.orderBy("lang")
     },
     Some(s"""

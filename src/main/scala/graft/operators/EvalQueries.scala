@@ -4,6 +4,7 @@ import graft.{QueryDef, QueryModule, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge._
 
 /** Model/data evaluation metrics — the measurement side of a training-data
   * pipeline (reference provenance: SURVEY.md §2.I mandates the
@@ -496,7 +497,7 @@ object EvalQueries extends QueryModule {
   private val kappaAgreement = QueryDef(
     "q_kappa_agreement",
     (spark, sfDir) => {
-      val conf = TextQueries.langConfusion(spark, sfDir).localCheckpoint(true)
+      val conf = TextQueries.langConfusion(spark, sfDir).checkpointed
       val diag = conf.filter(col("lang") === col("pred"))
         .agg(coalesce(sum(col("n")), lit(0L)).as("agree"))
       val marg = conf.groupBy("lang").agg(sum(col("n")).as("row_n"))
@@ -921,7 +922,7 @@ object EvalQueries extends QueryModule {
           .groupBy("l_partkey")
           .agg(sum(col("l_quantity").cast("long")).as("q"),
             sum(Ql.r(col("l_extendedprice") * 100, 0).cast("long")).as("r"))
-          .localCheckpoint(true) // feeds both rank assignments
+          .checkpointed // feeds both rank assignments
         def ranks(metric: String, rank: String) = {
           val withB = parts.withColumn("bkt", expr(s"length(bin($metric))"))
           val offsets = withB.groupBy("bkt").agg(count(lit(1)).as("cnt"))
@@ -973,7 +974,7 @@ object EvalQueries extends QueryModule {
         .groupBy("l_partkey")
         .agg(sum(col("l_quantity").cast("long")).as("q"),
           sum(Ql.r(col("l_extendedprice") * 100, 0).cast("long")).as("r"))
-        .localCheckpoint(true)
+        .checkpointed
       val topQ = parts.orderBy(col("q").desc, col("l_partkey")).limit(200)
       val topR = parts.orderBy(col("r").desc, col("l_partkey")).limit(200)
       val common = topQ.select("l_partkey", "q", "r")
@@ -1046,7 +1047,7 @@ object EvalQueries extends QueryModule {
           Ql.r(avg(col("score")), 4).as("mean_score"))
         .withColumn("cw", sum("n").over(wc))
         .withColumn("cy", sum("y").over(wc))
-        .localCheckpoint(true) // ≤10 rows, consumed by three join arms
+        .checkpointed // ≤10 rows, consumed by three join arms
       val i = cum.select(col("bin").as("bi"),
         (col("cw") - col("n")).as("wi"), (col("cy") - col("y")).as("yi"))
       val k = cum.select(col("bin").as("bk"))
@@ -1131,13 +1132,13 @@ object EvalQueries extends QueryModule {
         .groupBy(col("a.event_type").as("i"), col("b.event_type").as("j"))
         .agg(count(lit(1)).as("n"),
           sum((col("a.c") > col("b.c")).cast("long")).as("w"))
-        .localCheckpoint(true) // |types|² rows drive every MM round
+        .checkpointed // |types|² rows drive every MM round
       val wt = pw.groupBy("i")
         .agg(sum("w").as("wins"), sum("n").as("games"))
-        .localCheckpoint(true)
+        .checkpointed
       val anchorType = wt.agg(min("i").as("at"))
       var r = wt.select(col("i").as("type"), lit(1.0).as("p"))
-        .localCheckpoint(true)
+        .checkpointed
       for (_ <- 1 to btIters) {
         val den = pw
           .join(r.as("pi"), col("i") === col("pi.type"))
@@ -1154,7 +1155,7 @@ object EvalQueries extends QueryModule {
         // is NOT the falsified no-checkpoint cadence experiment, which
         // fused un-truncated plans), but the |types|-row materialization
         // job per round is deferred into the next round's stage work.
-        r = org.apache.spark.sql.graftbridge.CheckpointBridge.lazyTruncate(u.crossJoin(broadcast(anchor))
+        r = truncate(u.crossJoin(broadcast(anchor))
           .select(col("type"),
             Ql.r(col("p") / greatest(col("ap"), lit(1e-12)), 7).as("p")))
       }

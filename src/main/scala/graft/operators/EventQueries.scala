@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, QueryModule, Tables}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge._
 
 /** Stream-shaped queries over the `events` table — the batch twins of the
   * reference's Kinesis→Lambda aggregation patterns (per-time-bucket keyed
@@ -1129,7 +1130,7 @@ object EventQueries extends QueryModule {
     "q_stl_residual_anomaly",
     (spark, sfDir) => {
       val detrended = detrendedDaily(spark, sfDir)
-        .localCheckpoint(true) // feeds the seasonal fit and the residual scan
+        .checkpointed // feeds the seasonal fit and the residual scan
       val seasonal = detrended.groupBy("event_type", "dow")
         .agg(Ql.r(avg(col("x") - col("trend")), 6).as("seasonal"))
       val resid = detrended.join(broadcast(seasonal), Seq("event_type", "dow"))
@@ -1195,7 +1196,7 @@ object EventQueries extends QueryModule {
     "q_seasonal_strength",
     (spark, sfDir) => {
       val dt = detrendedDaily(spark, sfDir)
-        .localCheckpoint(true) // feeds the seasonal fit and the variance scan
+        .checkpointed // feeds the seasonal fit and the variance scan
       val seasonal = dt.groupBy("event_type", "dow")
         .agg(Ql.r(avg(col("x") - col("trend")), 6).as("seasonal"))
       dt.join(seasonal, Seq("event_type", "dow"))
@@ -1243,7 +1244,7 @@ object EventQueries extends QueryModule {
       val ud = Tables.events(spark, sfDir)
         .select(to_date(col("ts")).as("day"), col("user_id"))
         .distinct()
-        .localCheckpoint(true) // feeds the fan-out, the 1-day counts, and the bounds
+        .checkpointed // feeds the fan-out, the 1-day counts, and the bounds
       val bounds = ud.agg(min("day").as("mind"), max("day").as("maxd"))
       val d7 = ud
         .select(col("user_id"), explode(expr("sequence(0, 6)")).as("i"), col("day"))
@@ -1309,7 +1310,7 @@ object EventQueries extends QueryModule {
         when(col("dp").isNotNull, datediff(col("dp"), col("d0")))
           .otherwise(datediff(col("maxd"), col("d0"))).cast("long").as("t"),
         col("dp").isNotNull.cast("long").as("ev"))
-      .localCheckpoint(true)
+      .checkpointed
   }
 
   /** Per-event-day risk table (t, d, n, f): deaths d, at-risk n, and the
@@ -1480,11 +1481,11 @@ object EventQueries extends QueryModule {
       val nT = firstP.join(masks, Seq("user_id"), "left")
         .select(coalesce(col("mask"), lit(0L)).as("mask"))
         .groupBy("mask").agg(count(lit(1)).as("n"))
-        .localCheckpoint(true) // ≤8 coalition rows
+        .checkpointed // ≤8 coalition rows
       val vS = spark.range(8).select(col("id").as("s"))
         .join(broadcast(nT), expr("(mask & s) = mask"), "left")
         .groupBy("s").agg(coalesce(sum("n"), lit(0L)).as("v"))
-        .localCheckpoint(true) // 8 rows
+        .checkpointed // 8 rows
       val channels = spark.range(1)
         .select(explode(expr(
           "array(struct(1L AS bit, 'click' AS channel), " +
@@ -1622,7 +1623,7 @@ object EventQueries extends QueryModule {
         .filter(col("from_type").isNotNull)
         .groupBy(col("from_type"), col("event_type").as("to_type"))
         .agg(count(lit(1)).as("n"))
-        .localCheckpoint(true) // feeds all three iterations + the share
+        .checkpointed // feeds all three iterations + the share
       val p = pairs
         .withColumn("p",
           expr("CAST(n AS DOUBLE) / sum(n) OVER (PARTITION BY from_type)"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, QueryModule, Tables}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge._
 
 /** Feature-engineering and approximate-query-processing operators — the
   * table-to-model-input side of a training pipeline (SURVEY.md §2.I
@@ -469,7 +470,7 @@ object FeatureQueries extends QueryModule {
       val joined = orders.join(broadcast(cust),
           col("o_custkey") === col("c_custkey"))
         .select(col("c_mktsegment"), col("c_custkey"), col("cents"))
-        .localCheckpoint(true) // feeds the truth AND the sampled estimate
+        .checkpointed // feeds the truth AND the sampled estimate
       val truth = joined.groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n_true"), sum("cents").as("s_true"))
       val est = joined

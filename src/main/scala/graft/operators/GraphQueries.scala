@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, QueryModule, Tables}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge._
 
 /** Iterative graph analytics over a derived co-purchase graph (parts that
   * appear in the same order are linked). PageRank (Page et al. 1999,
@@ -55,7 +56,7 @@ object GraphQueries extends QueryModule {
     * The edge table is checkpointed pre-partitioned by src with the
     * partitioning declared on the flat leaf (CheckpointBridge): a plain
     * localCheckpoint under AQE reports unknown partitioning and every
-    * round re-shuffles the full edge table, while a `.cache()` keeps the
+    * round re-shuffles the full edge table, while a cache keeps the
     * partitioning but not the lineage truncation (the per-round Catalyst
     * re-analysis over the un-truncated subtree tripled the loop, measured
     * 5.5 → 15.4 s, NOTES #13). With the declared leaf every round's
@@ -75,11 +76,9 @@ object GraphQueries extends QueryModule {
   private def pageRankInputs(edgesIn: org.apache.spark.sql.DataFrame): (
       org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, Double,
       org.apache.spark.sql.DataFrame) = {
-    val edges = org.apache.spark.sql.graftbridge.CheckpointBridge
-      .localCheckpointPartitionedBy(edgesIn, Seq("src"))
-    val deg = org.apache.spark.sql.graftbridge.CheckpointBridge
-      .localCheckpointPartitionedBy(
-        edges.groupBy("src").agg(count(lit(1)).as("d")), Seq("src"))
+    val edges = edgesIn.checkpointedBy("src")
+    val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
+      .checkpointedBy("src")
     val n = deg.count().toDouble
     (edges, deg, n, deg.select(col("src").as("node"), lit(1.0 / n).as("pr")))
   }
@@ -120,35 +119,26 @@ object GraphQueries extends QueryModule {
     * — mass conservation, uniformity on regular graphs — on synthetic
     * graphs.
     *
-    * Block hygiene: every `localCheckpoint(true)` here pins materialized
-    * RDD blocks in the block manager, and nothing else ever releases
-    * them — in a long multi-tenant driver session that is a leak (r6
-    * verdict measured rerun-slower-than-first + 324 MB heap growth from
-    * exactly this). So the final ranks frame (node-count-sized) is
-    * checkpointed too, making it self-contained, and every intermediate
-    * persisted during the loop is then unpersisted before returning —
-    * cache scope = this function, the same contract as
-    * [[DedupQueries]]' containment/segment queries.
+    * Block hygiene: the body is one materialization scope
+    * (CheckpointBridge.scope). The final ranks frame (node-count-sized)
+    * is checkpointed, so its lineage no longer reaches the loop's
+    * checkpoints, and the scope releases those when the call returns or
+    * throws; only the final ranks' blocks pass to the caller's scope.
+    * Unreleased checkpoints pile up in a long driver session (r6
+    * measured rerun-slower-than-first + 324 MB heap growth from exactly
+    * this).
     */
   def pageRank(edgesIn: org.apache.spark.sql.DataFrame, rounds: Int,
-      cadence: Int = 4): org.apache.spark.sql.DataFrame = {
-    val sc = edgesIn.sparkSession.sparkContext
-    // snapshot of persisted RDDs before this call: queries run one at a
-    // time in verify/bench/specs, so everything persisted between here
-    // and the post-loop snapshot is ours to release
-    val before = sc.getPersistentRDDs.keySet
+      cadence: Int = 4): org.apache.spark.sql.DataFrame = scope {
     val (edges, deg, n, ranks0) = pageRankInputs(edgesIn)
     var ranks = ranks0
     for (i <- 1 to rounds) {
       ranks = pageRankStep(edges, deg, n, ranks)
-      if (i % cadence == 0 && i < rounds) ranks = ranks.localCheckpoint(true)
+      if (i % cadence == 0 && i < rounds) ranks = ranks.checkpointed
     }
     // materialize the final frame so it no longer depends on the loop's
-    // pinned blocks, then release every block this call persisted
-    val mine = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-    val out = ranks.localCheckpoint(true)
-    mine.values.foreach(_.unpersist(blocking = false))
-    out
+    // pinned blocks; the scope then releases those
+    ranks.checkpointed
   }
 
   /** Run-to-convergence PageRank: the [[pageRank]] update loop with an
@@ -169,15 +159,13 @@ object GraphQueries extends QueryModule {
     * is for production runs where the mixing time is unknown.
     */
   def pageRankConverged(edgesIn: org.apache.spark.sql.DataFrame, tol: Double,
-      maxRounds: Int = 100): (org.apache.spark.sql.DataFrame, Int) = {
-    val sc = edgesIn.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
+      maxRounds: Int = 100): (org.apache.spark.sql.DataFrame, Int) = scope {
     val (edges, deg, n, ranks0) = pageRankInputs(edgesIn)
     var ranks = ranks0
     var rounds = 0
     var delta = Double.MaxValue
     while (delta >= tol && rounds < maxRounds) {
-      val next = pageRankStep(edges, deg, n, ranks).localCheckpoint(true)
+      val next = pageRankStep(edges, deg, n, ranks).checkpointed
       delta = next.join(ranks.select(col("node"), col("pr").as("pr0")), "node")
         .agg(sum(abs(col("pr") - col("pr0"))).as("d")).head().getDouble(0)
       ranks = next
@@ -186,10 +174,7 @@ object GraphQueries extends QueryModule {
     if (delta >= tol)
       throw new IllegalStateException(
         s"PageRank did not converge to $tol in $maxRounds rounds (delta=$delta)")
-    val mine = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-    val out = ranks.localCheckpoint(true)
-    mine.values.foreach(_.unpersist(blocking = false))
-    (out, rounds)
+    (ranks.checkpointed, rounds)
   }
 
   /** Fixed-iteration PageRank, not run-to-convergence: a fixed round
@@ -263,7 +248,7 @@ object GraphQueries extends QueryModule {
     "q_market_basket",
     (spark, sfDir) => {
       val items = orderItems(spark, sfDir)
-        .localCheckpoint(true) // feeds supports, pairs, and the order count
+        .checkpointed // feeds supports, pairs, and the order count
       val nOrders = items.agg(countDistinct(col("l_orderkey")).cast("double").as("n_orders"))
       val supp = items.groupBy("l_partkey").agg(count(lit(1)).as("s"))
       val pairs = itemPairs(items).filter(col("s_ab") >= 3)
@@ -316,7 +301,7 @@ object GraphQueries extends QueryModule {
       // prunes the incidental-pair noise the same way q_market_basket does
       val edges = itemPairs(orderItems(spark, sfDir))
         .filter(col("s_ab") >= 2).select("a", "b")
-        .localCheckpoint(true) // feeds deg, orientation, and the closing join
+        .checkpointed // feeds deg, orientation, and the closing join
       val deg = edges.select(col("a").as("v"))
         .unionByName(edges.select(col("b").as("v")))
         .groupBy("v").agg(count(lit(1)).as("dg"))
@@ -328,7 +313,7 @@ object GraphQueries extends QueryModule {
         when(aFirst, col("a")).otherwise(col("b")).as("src"),
         when(aFirst, col("b")).otherwise(col("a")).as("dst"),
         when(aFirst, col("db")).otherwise(col("da")).as("kd"))
-        .localCheckpoint(true)
+        .checkpointed
       val o1 = oriented.select(col("src"), col("dst").as("d1"), col("kd").as("k1"))
       val o2 = oriented.select(col("src"), col("dst").as("d2"), col("kd").as("k2"))
       val wedges = o1.join(o2, "src")
@@ -386,7 +371,7 @@ object GraphQueries extends QueryModule {
       sfDir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val items = orderItems(spark, sfDir)
-      .localCheckpoint(true) // feeds supports and pairs
+      .checkpointed // feeds supports and pairs
     val supp = items.groupBy("l_partkey").agg(count(lit(1)).as("s"))
     val pairs = itemPairs(items).filter(col("s_ab") >= 2)
     val directed = pairs.select(col("a").as("item"), col("b").as("nbr"), col("s_ab"))
@@ -446,9 +431,9 @@ object GraphQueries extends QueryModule {
     "q_itemsets3",
     (spark, sfDir) => {
       val items = orderItems(spark, sfDir)
-        .localCheckpoint(true) // feeds the triple join and the pair prune
+        .checkpointed // feeds the triple join and the pair prune
       val fp = itemPairs(items).filter(col("s_ab") >= 2)
-        .select("a", "b").localCheckpoint(true) // reused by 3 semi-joins
+        .select("a", "b").checkpointed // reused by 3 semi-joins
       // the (a,b) prune runs BEFORE the third items join — that ordering
       // IS Apriori: the dominant join's input shrinks by the
       // infrequent-pair fraction (the vast majority) instead of fanning
@@ -554,15 +539,13 @@ object GraphQueries extends QueryModule {
     */
   private val hits = QueryDef(
     "q_hits",
-    (spark, sfDir) => {
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
+    (spark, sfDir) => scope {
       val o = Tables.orders(spark, sfDir).select(col("o_orderkey"), col("o_custkey"))
       val li = Tables.lineitem(spark, sfDir).select(col("l_orderkey"), col("l_partkey"))
       val edges = li.join(o, li("l_orderkey") === o("o_orderkey"))
         .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
         .distinct()
-        .localCheckpoint(true)
+        .checkpointed
       var hub = edges.select(col("c")).distinct().withColumn("h", lit(1.0))
       var auth: org.apache.spark.sql.DataFrame = null
       for (_ <- 1 to 3) {
@@ -583,20 +566,18 @@ object GraphQueries extends QueryModule {
         // the eager shape — the summation grouping is unchanged). At
         // 100 TB the checkpoints stay |nodes|-sized vs a rounds × |edges|
         // double evaluation.
-        val rawA = org.apache.spark.sql.graftbridge.CheckpointBridge.lazyTruncate(
+        val rawA = truncate(
           edges.join(hub, "c").groupBy("p").agg(sum(col("h")).as("a0")))
         val sumA = rawA.agg(sum(col("a0")).as("sa"))
         auth = rawA.crossJoin(broadcast(sumA))
           .select(col("p"), Ql.r(col("a0") / col("sa"), 7).as("a"))
-        val rawH = org.apache.spark.sql.graftbridge.CheckpointBridge.lazyTruncate(
+        val rawH = truncate(
           edges.join(auth, "p").groupBy("c").agg(sum(col("a")).as("h0")))
         val sumH = rawH.agg(sum(col("h0")).as("sh"))
         hub = rawH.crossJoin(broadcast(sumH))
           .select(col("c"), Ql.r(col("h0") / col("sh"), 7).as("h"))
       }
-      val mine = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-      val authFinal = auth.localCheckpoint(true)
-      mine.values.foreach(_.unpersist(blocking = false))
+      val authFinal = auth.checkpointed
       authFinal.orderBy(col("a").desc, col("p")).limit(15)
         .select(col("p").as("partkey"), col("a").as("authority"))
     },
@@ -723,7 +704,8 @@ object GraphQueries extends QueryModule {
     * loop discipline: eager localCheckpoint each round so Catalyst never
     * re-analyzes the accumulated lineage, convergence decided on a
     * 1-row aggregate of the checkpointed degree table, every persisted
-    * block released before returning, and a loud failure past maxRounds
+    * block released when it returns or throws (a materialization scope),
+    * and a loud failure past maxRounds
     * rather than an unconverged answer. Termination is guaranteed anyway:
     * each non-final round strictly shrinks the vertex set, so rounds ≤
     * |V|; the k-core fixpoint is unique (the maximal subgraph with all
@@ -734,14 +716,12 @@ object GraphQueries extends QueryModule {
     * Returns (survivors(src, degree), rounds-to-converge).
     */
   def kcoreConverged(edges: org.apache.spark.sql.DataFrame, k: Int,
-      maxRounds: Int = 50): (org.apache.spark.sql.DataFrame, Int) = {
-    val sc = edges.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    var e = edges.select("src", "dst").localCheckpoint(true)
+      maxRounds: Int = 50): (org.apache.spark.sql.DataFrame, Int) = scope {
+    var e = edges.select("src", "dst").checkpointed
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxRounds) {
-      val d = e.groupBy("src").agg(count(lit(1)).as("d")).localCheckpoint(true)
+      val d = e.groupBy("src").agg(count(lit(1)).as("d")).checkpointed
       val Array(nNodes, nKept) = d
         .agg(count(lit(1)), sum(when(col("d") >= k, 1L).otherwise(0L)))
         .head().toSeq.map(v => if (v == null) 0L else v.asInstanceOf[Long]).toArray
@@ -751,31 +731,27 @@ object GraphQueries extends QueryModule {
         e = e.join(keep, "src")
           .join(keep.select(col("src").as("dst")), "dst")
           .select("src", "dst")
-          .localCheckpoint(true)
+          .checkpointed
         rounds += 1
       }
     }
     if (!converged)
       throw new IllegalStateException(s"k-core did not converge in $rounds rounds")
-    val mine = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-    val out = e.groupBy("src").agg(count(lit(1)).as("degree")).localCheckpoint(true)
-    mine.values.foreach(_.unpersist(blocking = false))
+    val out = e.groupBy("src").agg(count(lit(1)).as("degree")).checkpointed
     (out, rounds)
   }
 
   private val kcore = QueryDef(
     "q_kcore",
-    (spark, sfDir) => {
+    (spark, sfDir) => scope {
       val k = 100
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
       val li = Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey"), col("l_partkey"))
       var e = li.select(col("l_orderkey"), col("l_partkey").as("src"))
         .join(li.select(col("l_orderkey"), col("l_partkey").as("dst")), "l_orderkey")
         .filter(col("src") =!= col("dst"))
         .select("src", "dst")
-        .localCheckpoint(true)
+        .checkpointed
       var stats: org.apache.spark.sql.DataFrame = null
       for (round <- 1 to 3) {
         // node-sized checkpoint (r17 session 2, the kcoreConverged shape):
@@ -788,13 +764,13 @@ object GraphQueries extends QueryModule {
         // edge checkpoint (the keep filter is its first consumer and
         // persists the blocks; the stats row reads them later), saving
         // one driver-scheduled materialization job per round.
-        val d = org.apache.spark.sql.graftbridge.CheckpointBridge.lazyTruncate(
+        val d = truncate(
           e.groupBy("src").agg(count(lit(1)).as("d")))
         val keep = d.filter(col("d") >= k).select("src")
         val next = e.join(keep, "src")
           .join(keep.select(col("src").as("dst")), "dst")
           .select("src", "dst")
-          .localCheckpoint(true)
+          .checkpointed
         val row = d.agg(count(lit(1)).as("n_nodes"),
             sum(when(col("d") >= k, 1L).otherwise(0L)).as("n_kept"))
           .crossJoin(next.agg(count(lit(1)).as("n_edges")))
@@ -803,12 +779,9 @@ object GraphQueries extends QueryModule {
         stats = if (stats == null) row else stats.union(row)
         e = next
       }
-      // 3-row result: materialize it off the pinned edge lists, then
-      // release every block this call persisted (pageRank's contract)
-      val mine = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-      val out = stats.orderBy("round").localCheckpoint(true)
-      mine.values.foreach(_.unpersist(blocking = false))
-      out
+      // 3-row result: materialize it off the pinned edge lists; the scope
+      // then releases those (pageRank's contract)
+      stats.orderBy("round").checkpointed
     },
     Some(s"""
       WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
@@ -865,7 +838,7 @@ object GraphQueries extends QueryModule {
     (spark, sfDir) => {
       val edges = itemPairs(orderItems(spark, sfDir))
         .filter(col("s_ab") >= 2).select("a", "b")
-        .localCheckpoint(true) // feeds deg, wedges, and the anti-join
+        .checkpointed // feeds deg, wedges, and the anti-join
       val deg = edges.select(col("a").as("v"))
         .unionByName(edges.select(col("b").as("v")))
         .groupBy("v").agg(count(lit(1)).as("dg"))
@@ -920,18 +893,16 @@ object GraphQueries extends QueryModule {
     */
   private val sssp = QueryDef(
     "q_sssp",
-    (spark, sfDir) => {
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
+    (spark, sfDir) => scope {
       val edges = itemPairs(orderItems(spark, sfDir))
         .filter(col("s_ab") >= 2)
         .select(col("a"), col("b"), expr("100 div s_ab").as("w"))
-        .localCheckpoint(true) // feeds the source row and all 4 rounds
+        .checkpointed // feeds the source row and all 4 rounds
       val adj = edges.select(col("a").as("u"), col("b").as("v"), col("w"))
         .unionByName(edges.select(col("b").as("u"), col("a").as("v"), col("w")))
       var dist = edges.agg(min(col("a")).as("node"))
         .withColumn("d", lit(0L))
-        .localCheckpoint(true)
+        .checkpointed
       for (_ <- 1 to 4) {
         val relax = dist.join(adj, dist("node") === adj("u"))
           .select(adj("v").as("node"), (dist("d") + adj("w")).as("d"))
@@ -940,14 +911,11 @@ object GraphQueries extends QueryModule {
         // but the node-table materialization job per round is deferred
         // into the next consumer (both next-round consumers read the
         // persisted blocks); the final eager checkpoint drives the chain.
-        dist = org.apache.spark.sql.graftbridge.CheckpointBridge.lazyTruncate(dist.unionByName(relax)
+        dist = truncate(dist.unionByName(relax)
           .groupBy("node").agg(min(col("d")).as("d")))
       }
-      val mine = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-      val out = dist.orderBy(col("d"), col("node")).limit(20)
-        .localCheckpoint(true)
-      mine.values.foreach(_.unpersist(blocking = false))
-      out
+      dist.orderBy(col("d"), col("node")).limit(20)
+        .checkpointed
     },
     Some {
       val rounds = (1 to 4).map { i =>
@@ -987,7 +955,7 @@ object GraphQueries extends QueryModule {
     (spark, sfDir) => {
       val edges = itemPairs(orderItems(spark, sfDir))
         .filter(col("s_ab") >= 2).select("a", "b")
-        .localCheckpoint(true) // feeds deg and both label joins
+        .checkpointed // feeds deg and both label joins
       val brand = Tables.part(spark, sfDir)
         .select(col("p_partkey"), col("p_brand"))
       val labeled = edges
@@ -1069,7 +1037,7 @@ object GraphQueries extends QueryModule {
         .filter(col("s_ab") >= 3)
       val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
         .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
-        .localCheckpoint(true) // feeds degrees + both sides of the 2-hop join
+        .checkpointed // feeds degrees + both sides of the 2-hop join
       val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
       val relay = deg.filter(col("d") <= 100).select(col("src").as("mid"))
       // relay is node-sized (grows with the catalog) — a keyed semi-shape
@@ -1129,7 +1097,7 @@ object GraphQueries extends QueryModule {
     "q_rec_coverage",
     (spark, sfDir) => {
       val topk = cfTopK(spark, sfDir)
-        .localCheckpoint(true) // feeds the appearance and decay aggregations
+        .checkpointed // feeds the appearance and decay aggregations
       val catalog = orderItems(spark, sfDir)
         .agg(countDistinct("l_partkey").as("n_catalog"))
       val app = topk.groupBy("nbr").agg(count(lit(1)).as("ap"))
@@ -1185,19 +1153,17 @@ object GraphQueries extends QueryModule {
     */
   private val closeness = QueryDef(
     "q_closeness",
-    (spark, sfDir) => {
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
+    (spark, sfDir) => scope {
       val edges = itemPairs(orderItems(spark, sfDir))
         .filter(col("s_ab") >= 2)
         .select(col("a"), col("b"), expr("100 div s_ab").as("w"))
-        .localCheckpoint(true) // feeds the source rows and all 4 rounds
+        .checkpointed // feeds the source rows and all 4 rounds
       val adj = edges.select(col("a").as("u"), col("b").as("v"), col("w"))
         .unionByName(edges.select(col("b").as("u"), col("a").as("v"), col("w")))
       var dist = edges.select(col("a")).distinct()
         .orderBy("a").limit(4)
         .select(col("a").as("src"), col("a").as("node"), lit(0L).as("d"))
-        .localCheckpoint(true)
+        .checkpointed
       for (_ <- 1 to 4) {
         val relax = dist.join(adj, dist("node") === adj("u"))
           .select(dist("src").as("src"), adj("v").as("node"),
@@ -1205,19 +1171,16 @@ object GraphQueries extends QueryModule {
         // r18: LAZY per-round checkpoints (the q_sssp rationale — plan
         // truncation unchanged, per-round materialization job deferred
         // into the consumer; the final eager checkpoint drives the chain)
-        dist = org.apache.spark.sql.graftbridge.CheckpointBridge.lazyTruncate(dist.unionByName(relax)
+        dist = truncate(dist.unionByName(relax)
           .groupBy("src", "node").agg(min(col("d")).as("d")))
       }
-      val mine = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-      val out = dist.filter(col("d") > 0)
+      dist.filter(col("d") > 0)
         .groupBy("src")
         .agg(count(lit(1)).as("n_reached"),
           sum("d").as("sum_dist"),
           Ql.r(sum(lit(1.0) / col("d")), 4).as("harmonic"))
         .orderBy("src")
-        .localCheckpoint(true)
-      mine.values.foreach(_.unpersist(blocking = false))
-      out
+        .checkpointed
     },
     Some {
       val rounds = (1 to 4).map { i =>
@@ -1280,7 +1243,7 @@ object GraphQueries extends QueryModule {
       when(aFirst, col("a")).otherwise(col("b")).as("src"),
       when(aFirst, col("b")).otherwise(col("a")).as("dst"),
       when(aFirst, col("db")).otherwise(col("da")).as("kd"))
-      .localCheckpoint(true)
+      .checkpointed
     val o1 = oriented.select(col("src"), col("dst").as("d1"), col("kd").as("k1"))
     val o2 = oriented.select(col("src"), col("dst").as("d2"), col("kd").as("k2"))
     val tri = o1.join(o2, "src")
@@ -1301,8 +1264,9 @@ object GraphQueries extends QueryModule {
     * left join re-attaching support to the edge list, under the
     * kcoreConverged loop discipline: eager localCheckpoint per round so
     * Catalyst never re-analyzes accumulated lineage, convergence decided
-    * on a 1-row aggregate, every persisted block released before
-    * returning, loud failure past maxRounds. Termination: each non-final
+    * on a 1-row aggregate, every persisted block released when it
+    * returns or throws (a materialization scope), loud failure past
+    * maxRounds. Termination: each non-final
     * round strictly removes ≥1 edge, so rounds ≤ |E|; the k-truss
     * fixpoint is unique (maximal subgraph with all edge supports ≥ k−2),
     * so the loop cannot stabilize on a wrong answer. For k=3 the loop
@@ -1315,56 +1279,32 @@ object GraphQueries extends QueryModule {
     * the q_ktruss convention. Returns (survivors(a, b, sup), peel rounds).
     */
   def ktrussConverged(edgesIn: org.apache.spark.sql.DataFrame, k: Int,
-      maxRounds: Int = 50): (org.apache.spark.sql.DataFrame, Int) = {
+      maxRounds: Int = 50): (org.apache.spark.sql.DataFrame, Int) = scope {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
     val t = (k - 2).toLong
-    val sc = edgesIn.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    var e = edgesIn.select("a", "b").localCheckpoint(true)
+    var e = edgesIn.select("a", "b").checkpointed
     var rounds = 0
     var converged = false
     var supported: org.apache.spark.sql.DataFrame = null
-    // try/finally: the per-round checkpoint blocks must be released on the
-    // non-convergence throw (and any mid-loop failure) too, not only on
-    // the success path — a thrown loop must not leak blocks into the rest
-    // of a bench session. `doomed` is pinned BEFORE the result's own
-    // checkpoint so the finally never releases the survivors' blocks.
-    var doomed: Set[Int] = Set.empty
-    try {
-      while (!converged && rounds < maxRounds) {
-        // left join: edges in zero triangles are absent from edgeSupport's
-        // output and must read as sup=0, not silently survive
-        supported = e.join(edgeSupport(e), Seq("a", "b"), "left")
-          .select(col("a"), col("b"), coalesce(col("sup"), lit(0L)).as("sup"))
-          .localCheckpoint(true)
-        val Array(nEdges, nKept) = supported
-          .agg(count(lit(1)), sum(when(col("sup") >= t, 1L).otherwise(0L)))
-          .head().toSeq.map(v => if (v == null) 0L else v.asInstanceOf[Long]).toArray
-        if (nKept == nEdges) converged = true
-        else {
-          e = supported.filter(col("sup") >= t).select("a", "b")
-            .localCheckpoint(true)
-          rounds += 1
-        }
-      }
-      if (!converged) {
-        doomed = sc.getPersistentRDDs.keySet.toSet -- before
-        throw new IllegalStateException(s"k-truss did not converge in $rounds rounds")
-      }
-      // pin the loop's blocks BEFORE the final checkpoint so the result's
-      // own fresh blocks survive the finally's release (the recall pattern)
-      doomed = sc.getPersistentRDDs.keySet.toSet -- before
-      val out = supported.localCheckpoint(true)
-      (out, rounds)
-    } finally {
-      // on a mid-loop throw `doomed` is still empty — release everything
-      // created since `before`; on the planned paths it excludes `out`
-      val ids = if (doomed.nonEmpty) doomed
-        else sc.getPersistentRDDs.keySet.toSet -- before
-      sc.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (ids(id)) rdd.unpersist(blocking = false)
+    while (!converged && rounds < maxRounds) {
+      // left join: edges in zero triangles are absent from edgeSupport's
+      // output and must read as sup=0, not silently survive
+      supported = e.join(edgeSupport(e), Seq("a", "b"), "left")
+        .select(col("a"), col("b"), coalesce(col("sup"), lit(0L)).as("sup"))
+        .checkpointed
+      val Array(nEdges, nKept) = supported
+        .agg(count(lit(1)), sum(when(col("sup") >= t, 1L).otherwise(0L)))
+        .head().toSeq.map(v => if (v == null) 0L else v.asInstanceOf[Long]).toArray
+      if (nKept == nEdges) converged = true
+      else {
+        e = supported.filter(col("sup") >= t).select("a", "b")
+          .checkpointed
+        rounds += 1
       }
     }
+    if (!converged)
+      throw new IllegalStateException(s"k-truss did not converge in $rounds rounds")
+    (supported.checkpointed, rounds)
   }
 
   private val ktruss: QueryDef = {
@@ -1373,10 +1313,10 @@ object GraphQueries extends QueryModule {
       (spark, sfDir) => {
         val e0 = itemPairs(orderItems(spark, sfDir))
           .filter(col("s_ab") >= 2).select("a", "b")
-          .localCheckpoint(true)
-        val s1 = edgeSupport(e0).localCheckpoint(true)
-        val e1 = s1.filter(col("sup") >= 1).select("a", "b").localCheckpoint(true)
-        val s2 = edgeSupport(e1).localCheckpoint(true)
+          .checkpointed
+        val s1 = edgeSupport(e0).checkpointed
+        val e1 = s1.filter(col("sup") >= 1).select("a", "b").checkpointed
+        val s2 = edgeSupport(e1).checkpointed
         def roundRow(r: Int, in: org.apache.spark.sql.DataFrame,
             sup: org.apache.spark.sql.DataFrame) =
           in.agg(count(lit(1)).as("n_edges_in"))

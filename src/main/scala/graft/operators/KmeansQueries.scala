@@ -5,6 +5,7 @@ import graft.functions.Vectors
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge._
 
 /** Lloyd-iteration k-means over the embedding column — the trained coarse
   * quantizer for IVF search (upgrading q_ann_ivf's label-mean stand-in).
@@ -53,7 +54,7 @@ object KmeansQueries extends QueryModule {
       var cent = e.filter(col("vec_id") < K)
         .select(col("vec_id").as("cid"), col("v").as("c"))
       for (_ <- 1 to 2)
-        cent = update(assign(e, cent)).localCheckpoint(true)
+        cent = update(assign(e, cent)).checkpointed
       assign(e, cent)
         .groupBy("cid")
         .agg(count(lit(1)).as("n"), Ql.r(sum(col("d"))).as("inertia"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, QueryModule, Tables}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge._
 
 /** G10 misc functions (SURVEY §2.G10). Nondeterministic-by-design ids
   * (monotonically_increasing_id, uuid, spark_partition_id,
@@ -241,11 +242,9 @@ object MiscQueries extends QueryModule {
       // localCheckpoint reports UNKNOWN partitioning under AQE, so each
       // level re-shuffled the full edge table — with the declared leaf
       // only the (smaller) frontier side moves per level
-      org.apache.spark.sql.graftbridge.CheckpointBridge
-        .localCheckpointPartitionedBy(
-          pairs.select(col("a").as("u"), col("b").as("v"))
-            .unionByName(pairs.select(col("b").as("u"), col("a").as("v"))),
-          Seq("u"))
+      pairs.select(col("a").as("u"), col("b").as("v"))
+        .unionByName(pairs.select(col("b").as("u"), col("a").as("v")))
+        .checkpointedBy("u")
         .createOrReplaceTempView("v_edges_rec")
       spark.sql("""
         WITH RECURSIVE

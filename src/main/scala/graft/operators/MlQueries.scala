@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, QueryModule, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge._
 
 /** Distributed classical-ML operators fit by SUFFICIENT STATISTICS — the
   * StatQueries discipline (ridge/OLS precedent) extended to iterative
@@ -42,7 +43,7 @@ object MlQueries extends QueryModule {
         val d = Tables.orders(spark, sfDir).selectExpr(
           "CASE WHEN o_orderpriority = '1-URGENT' THEN 1.0 ELSE 0.0 END AS y",
           "ln(o_totalprice) AS x")
-          .localCheckpoint(true) // 3 passes (2 rounds + the LL readout)
+          .checkpointed // 3 passes (2 rounds + the LL readout)
         def round(beta: DataFrame): DataFrame =
           d.crossJoin(broadcast(beta))
             .selectExpr("y", "x", "b0", "b1", s"$sigp AS p")
@@ -336,20 +337,20 @@ object MlQueries extends QueryModule {
         import org.apache.spark.sql.expressions.Window
         val docs = Tables.documents(spark, sfDir)
           .withColumn("bucket", expr(SamplingQueries.bucketExpr("doc_id")))
-          .localCheckpoint(true) // train counts, priors, and test scan
+          .checkpointed // train counts, priors, and test scan
         val trainTok = docs.filter(col("bucket") < 80)
           .select(col("lang"), expr(segCase).as("seg"),
             explode(split(col("text"), " ")).as("tok"))
           .filter(length(col("tok")) > 0)
         val segCounts = trainTok.groupBy("lang", "tok", "seg")
           .agg(count(lit(1)).as("c"))
-          .localCheckpoint(true) // model-sized: vocab x langs x 4 bands
+          .checkpointed // model-sized: vocab x langs x 4 bands
         val thr = segCounts
           .select(col("lang"), col("tok"), col("seg"), col("c"),
             explode(expr("array(10, 20, 40, 80)")).as("t"))
           .filter(col("seg") <= col("t"))
           .groupBy("t", "lang", "tok").agg(sum("c").as("c"))
-          .localCheckpoint(true) // feeds totals, vocab, and the grid
+          .checkpointed // feeds totals, vocab, and the grid
         val langTot = thr.groupBy("t", "lang").agg(sum("c").as("tot"))
         val vocabT = thr.select("t", "tok").distinct()
         val vSize = vocabT.groupBy("t").agg(count(lit(1)).as("v"))
@@ -479,7 +480,7 @@ object MlQueries extends QueryModule {
         val base = Tables.events(spark, sfDir)
           .selectExpr("hour(ts) AS h", "(dayofweek(ts) - 1) AS dw",
             s"CAST(${Ql.R("value * 100", 0)} AS BIGINT) AS c")
-          .localCheckpoint(true) // 3 passes: 2 histograms + the SSE readout
+          .checkpointed // 3 passes: 2 histograms + the SSE readout
         // best threshold t: rows with feature < t go left; candidates are
         // the prefix rows of the bounded histogram (≤24 rows — the window
         // below runs over the histogram, never the corpus)
@@ -502,12 +503,12 @@ object MlQueries extends QueryModule {
         }
         val h1 = base.groupBy(col("h")).agg(count(lit(1)).as("n"), sum("c").as("s"))
         val s1 = bestSplit(h1.withColumnRenamed("h", "f"), "f")
-          .localCheckpoint(true)
+          .checkpointed
         val r1 = base.crossJoin(broadcast(s1))
           .selectExpr("dw", "c - CASE WHEN h < thr THEN mu_l ELSE mu_r END AS r")
         val h2 = r1.groupBy(col("dw")).agg(count(lit(1)).as("n"), sum("r").as("s"))
         val s2 = bestSplit(h2.withColumnRenamed("dw", "f"), "f")
-          .localCheckpoint(true)
+          .checkpointed
         val sse = base.crossJoin(broadcast(s1.selectExpr("thr AS t1", "mu_l AS l1", "mu_r AS r1")))
           .crossJoin(broadcast(s2.selectExpr("thr AS t2", "mu_l AS l2", "mu_r AS r2")))
           .selectExpr("c - CASE WHEN h < t1 THEN l1 ELSE r1 END AS e1",
@@ -704,7 +705,7 @@ object MlQueries extends QueryModule {
       .select(col("event_type"), Ql.r(col("value") * 100, 0).cast("long").as("c"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("c").as("s"), sum(expr("c * c")).as("s2"))
-      .localCheckpoint(true) // |types| rows feed the pooled MSE and the grid
+      .checkpointed // |types| rows feed the pooled MSE and the grid
     val pooled = g.agg(
       sum("n").as("nt"), count(lit(1)).as("k"),
       // within-group sum of squares: Σ(s2 - s²/n), exact integer s/s2
@@ -811,7 +812,7 @@ object MlQueries extends QueryModule {
         .selectExpr("type_a", "type_b", "m", "z", "abs(z) / sqrt(2.0) AS x")
         .withColumn("t", expr("1.0 / (1.0 + 0.3275911 * x)"))
         .withColumn("p_value", Ql.r(expr(normalPSql), 6))
-        .localCheckpoint(true) // grid-sized; feeds the rank scan twice
+        .checkpointed // grid-sized; feeds the rank scan twice
       val ranked = scored
         .withColumn("k",
           row_number().over(Window.orderBy("p_value", "type_a", "type_b"))
@@ -883,7 +884,7 @@ object MlQueries extends QueryModule {
         .agg(sum("y").as("sx"), count(lit(1)).as("n"))
         .selectExpr("event_type", "hr",
           s"CAST(${Ql.R("CAST(sx AS DOUBLE) / n", 0)} AS BIGINT) AS yhat")
-        .localCheckpoint(true) // |types|×24 rows
+        .checkpointed // |types|×24 rows
       val cal = base.filter(col("b") >= 60 && col("b") < 80)
         .join(broadcast(model), Seq("event_type", "hr"))
         .select(col("event_type"), abs(col("y") - col("yhat")).as("r"))
@@ -992,7 +993,7 @@ object MlQueries extends QueryModule {
   private[graft] def matchingAttOf(users0: org.apache.spark.sql.DataFrame,
       caliper: Int = 5): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val users = users0.localCheckpoint(true) // feeds grids, naive means, match join
+    val users = users0.checkpointed // feeds grids, naive means, match join
     val cGrid = users.filter(col("treated") === 0)
       .groupBy("s").agg(count(lit(1)).as("cn"), sum("y").as("cy"))
     val tGrid = users.filter(col("treated") === 1)
@@ -1163,7 +1164,7 @@ object MlQueries extends QueryModule {
         val daily = Tables.events(spark, sfDir)
           .groupBy(to_date(col("ts")).as("day"))
           .agg(sum(Ql.r(col("value") * 100, 0).cast("long")).as("x"))
-          .localCheckpoint(true) // the tiny series feeds both rounds
+          .checkpointed // the tiny series feeds both rounds
         // best split of a day-ordered segment: rows with day < split go
         // left; gain relative to the segment's own mean-only SSE
         def bestSplit(seg: DataFrame, segName: String): DataFrame = {
@@ -1183,7 +1184,7 @@ object MlQueries extends QueryModule {
               "CAST(floor(CAST(st - sl AS DOUBLE) / (nt - nl) + 0.5) AS BIGINT) AS mean_r_cents")
             .orderBy(col("gain").desc, col("split_after")).limit(1)
         }
-        val s1 = bestSplit(daily, "full").localCheckpoint(true)
+        val s1 = bestSplit(daily, "full").checkpointed
         val left = daily.crossJoin(broadcast(s1.select(col("split_after").as("cut"))))
           .filter(col("day") <= col("cut")).select("day", "x")
         val right = daily.crossJoin(broadcast(s1.select(col("split_after").as("cut"))))
@@ -1458,7 +1459,7 @@ object MlQueries extends QueryModule {
         .select(to_date(col("ts")).as("day"),
           Ql.r(col("value") * 100, 0).cast("long").as("c"))
         .groupBy("day").agg(sum("c").as("c"))
-        .localCheckpoint(true) // feeds both join sides + the day count
+        .checkpointed // feeds both join sides + the day count
       val slopes = daily.select(col("day").as("d1"), col("c").as("c1"))
         .join(daily.select(col("day").as("d2"), col("c").as("c2")),
           col("d1") < col("d2"))
@@ -1517,7 +1518,7 @@ object MlQueries extends QueryModule {
           .select(to_date(col("ts")).as("day"),
             Ql.r(col("value") * 100, 0).cast("long").as("c"))
           .groupBy("day").agg(sum("c").as("c"))
-          .localCheckpoint(true) // cutoff scan + sign scan
+          .checkpointed // cutoff scan + sign scan
         val cut = daily
           .withColumn("rn", row_number().over(Window.orderBy("c", "day")))
           .crossJoin(broadcast(daily.agg(count(lit(1)).as("nd"))))
@@ -1639,7 +1640,7 @@ object MlQueries extends QueryModule {
           .groupBy("flag")
           .agg(count(lit(1)).as("n"), sum("y").as("s"),
             sum(col("y").cast("decimal(18,0)") * col("y")).as("ss"))
-          .localCheckpoint(true) // tiny; both sides of the pair grid
+          .checkpointed // tiny; both sides of the pair grid
         grp.select(col("flag").as("flag1"), col("n").as("n1"),
             col("s").as("s1"), col("ss").as("ss1"))
           .join(grp.select(col("flag").as("flag2"), col("n").as("n2"),

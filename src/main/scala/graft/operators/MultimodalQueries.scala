@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, QueryModule}
 import graft.multimodal.MultimodalPipeline
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge._
 
 /** Oracle-checked queries over the multimodal pipeline. The stub decoder's
   * md5 arithmetic is replicated in DuckDB SQL, so the mapPartitions path is
@@ -21,7 +22,7 @@ object MultimodalQueries extends QueryModule {
       // cached: the decode feeds both the feature projection and the
       // resize branch — one decode pass, not two
       val feats = MultimodalPipeline.extractFeatures(
-        MultimodalPipeline.mediaTable(spark, sfDir).filter(col("doc_id") < 100)).cache()
+        MultimodalPipeline.mediaTable(spark, sfDir).filter(col("doc_id") < 100)).cached
       val resized = MultimodalPipeline.resize(feats)
         .select(col("doc_id"), col("width").as("r_w"), col("height").as("r_h"))
       feats.toDF()

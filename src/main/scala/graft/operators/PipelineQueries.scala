@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, QueryModule, Tables}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge._
 
 /** Training-data pipeline assembly operators (SURVEY §2.I extension):
   * sequence packing into token-budget shards, context-window chunking,
@@ -164,23 +165,21 @@ object PipelineQueries extends QueryModule {
               WHERE len(t) >= 5)"""
 
   private[graft] def contamDocHits(corpus: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+      : org.apache.spark.sql.DataFrame = scope {
     val docs = contamShingles(corpus, "lang")
       // both split sides derive from this one shingle set — cache so the
       // explode+md5+distinct shuffle runs once, not once per consumer
-      .cache()
+      .cached
     val trainSh = docs.filter(col("b") < 90).select("sh").distinct()
     val testSh = docs.filter(col("b") >= 90)
     val hits = testSh.join(trainSh, "sh")
       .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
-    val perDoc = testSh.select("doc_id", "lang").distinct()
+    testSh.select("doc_id", "lang").distinct()
       .join(hits, Seq("doc_id"), "left")
       .withColumn("n_hits", coalesce(col("n_hits"), lit(0L)))
-      // test-doc-count-sized — materialized while the cache is alive,
-      // shingle blocks released in-query (same hygiene as q_decontam_scrub)
-      .localCheckpoint(true)
-    docs.unpersist(false)
-    perDoc
+      // test-doc-count-sized — materialized while the cache is alive;
+      // the scope releases the shingle blocks on return
+      .checkpointed
   }
 
   private val contamination = QueryDef(
@@ -223,8 +222,8 @@ object PipelineQueries extends QueryModule {
     */
   private val decontamScrub = QueryDef(
     "q_decontam_scrub",
-    (spark, sfDir) => {
-      val sh = contamShingles(Tables.documents(spark, sfDir), "lang").cache()
+    (spark, sfDir) => scope {
+      val sh = contamShingles(Tables.documents(spark, sfDir), "lang").cached
       val trainSh = sh.filter(col("b") < 90)
       val testSh = sh.filter(col("b") >= 90)
       val testSet = testSh.select("sh").distinct()
@@ -234,7 +233,7 @@ object PipelineQueries extends QueryModule {
       val scrubbed = trainSize.join(trainHits, Seq("doc_id"), "left")
         .na.fill(0L, Seq("n_hits"))
         .withColumn("removed", expr("2 * n_hits >= n_sh"))
-        .localCheckpoint(true) // train-doc-sized decision table
+        .checkpointed // train-doc-sized decision table
       val keptSet = trainSh.join(
           scrubbed.filter(col("removed")).select("doc_id"), Seq("doc_id"), "left_anti")
         .select("sh").distinct()
@@ -255,11 +254,9 @@ object PipelineQueries extends QueryModule {
           "coalesce(b0, CAST(0 AS BIGINT)) AS n_contam_before",
           "coalesce(a0, CAST(0 AS BIGINT)) AS n_contam_after")
         // materialize the |langs|-row report while the shingle cache is
-        // alive, then RELEASE sh in-query — a verify/ad-hoc session has no
-        // bench loop clearCache() to stop the module's largest intermediate
-        // from taxing every later query (the ClusterQueries hygiene rule)
-        .localCheckpoint(true)
-      sh.unpersist(false)
+        // alive; the scope then releases sh, so the module's largest
+        // intermediate does not tax every later query in the session
+        .checkpointed
       report.orderBy("lang")
     },
     Some(s"""
@@ -319,7 +316,7 @@ object PipelineQueries extends QueryModule {
     */
   private val contamNgramSweep = QueryDef(
     "q_contam_ngram_sweep",
-    (spark, sfDir) => {
+    (spark, sfDir) => scope {
       val ns = Seq(5, 8, 13)
       // two-level explode (r17 session 2): explode the n grid first, then
       // the per-n gram transform — same (doc_id, b, n, sh) set as the old
@@ -340,7 +337,7 @@ object PipelineQueries extends QueryModule {
         .select(col("doc_id"), col("b"), col("n"),
           expr(Ql.md5PrefixLong("sh0", 14)).as("sh"))
         .distinct()
-        .cache()
+        .cached
       val trainSh = sh.filter(col("b") < 90).select("n", "sh").distinct()
       val testSh = sh.filter(col("b") >= 90)
       val hits = testSh.join(trainSh, Seq("n", "sh"))
@@ -350,15 +347,13 @@ object PipelineQueries extends QueryModule {
       // zero qualifying test docs must still report (r16 review finding)
       val nGrid = spark.range(1)
         .select(explode(array(ns.map(n => lit(n)): _*)).as("n"))
-      val rep = nGrid
+      nGrid
         .join(testSh.groupBy("n").agg(countDistinct(col("doc_id")).as("n_test")),
           Seq("n"), "left")
         .join(hits.groupBy("n").agg(count(lit(1)).as("n_contaminated"),
           sum(col("n_hits")).as("n_hit_shingles")), Seq("n"), "left")
         .na.fill(0L, Seq("n_test", "n_contaminated", "n_hit_shingles"))
-        .localCheckpoint(true) // 3-row report; the shingle cache releases below
-      sh.unpersist(false)
-      rep
+        .checkpointed // 3-row report; the shingle cache releases below
         .selectExpr("n", "n_test", "n_contaminated",
           s"${Ql.R("100.0 * n_contaminated / greatest(n_test, 1)", 4)} AS contam_pct",
           "n_hit_shingles")
@@ -653,10 +648,10 @@ object PipelineQueries extends QueryModule {
       .filter(col("rn_hash") === 1)
       // feeds BOTH the candidate surface and the returned keep-list plan:
       // materialize so the corpus-wide sha256 + hash-window pass runs
-      // once (blocks land in the callers' snapshot-and-release window)
-      .localCheckpoint(true)
+      // once (blocks land in the caller's materialization scope)
+      .checkpointed
     val cand = DedupQueries.lshBandPairsOf(deduped.select("doc_id", "text"))
-      .localCheckpoint(true)
+      .checkpointed
     val labels = ClusterQueries.clusterLabelsOf(cand)
     val keepList = deduped
       .withColumn("rn_key", row_number().over(keepFirstKey))
@@ -705,11 +700,8 @@ object PipelineQueries extends QueryModule {
     */
   private val curationPipelineSafe = QueryDef(
     "q_curation_pipeline_safe",
-    (spark, sfDir) => {
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
+    (spark, sfDir) => scope {
       val kl = curationKeepListSafe(DedupQueries.withPlantsFull(spark, sfDir))
-      val pre = sc.getPersistentRDDs.keySet
       val g = kl.groupBy("split")
         .agg(
           count(lit(1)).as("n_docs"),
@@ -717,10 +709,7 @@ object PipelineQueries extends QueryModule {
           countDistinct(col("source"), col("shard")).as("n_shards"),
           countDistinct(col("lang")).as("n_langs"),
           sum(when(col("lbl").isNotNull, 1L).otherwise(0L)).as("n_clustered_docs"))
-        .localCheckpoint(true) // 3-row report; scaffold blocks released below
-      val mine = sc.getPersistentRDDs.filter {
-        case (id, _) => !before(id) && pre(id) }
-      mine.values.foreach(_.unpersist(blocking = false))
+        .checkpointed // 3-row report; the scope releases the scaffold
       g.orderBy("split")
     },
     Some(s"""
@@ -748,9 +737,7 @@ object PipelineQueries extends QueryModule {
     */
   private val curationSafeLeakage = QueryDef(
     "q_curation_safe_leakage",
-    (spark, sfDir) => {
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
+    (spark, sfDir) => scope {
       val docs = DedupQueries.withPlantsFull(spark, sfDir)
       // r18 (verdict item 4): reuse the chain's OWN checkpointed candidate
       // surface instead of re-running the corpus-sized banding over the
@@ -759,8 +746,7 @@ object PipelineQueries extends QueryModule {
       // inner joins against `sp` (kept docs only) below apply exactly
       // that restriction. One banding pass instead of two.
       val (kl, cand) = curationKeepListSafeWithCand(docs)
-      val kept = kl.select("doc_id", "split").localCheckpoint(true)
-      val pre = sc.getPersistentRDDs.keySet
+      val kept = kl.select("doc_id", "split").checkpointed
       val sp = kept.withColumn("s_doc",
         expr(DedupQueries.splitCase(SamplingQueries.bucketExpr("doc_id"))))
       val j = cand
@@ -776,10 +762,7 @@ object PipelineQueries extends QueryModule {
           greatest(col("c1"), col("c2")).as("split_b")))
         .groupBy("rule", "split_a", "split_b")
         .agg(count(lit(1)).as("n_pairs"))
-        .localCheckpoint(true) // <=12-row matrix; scaffold released below
-      val mine = sc.getPersistentRDDs.filter {
-        case (id, _) => !before(id) && pre(id) }
-      mine.values.foreach(_.unpersist(blocking = false))
+        .checkpointed // <=12-row matrix; the scope releases the scaffold
       g.selectExpr("rule", "split_a", "split_b",
           "CAST(split_a != split_b AS INT) AS is_leak", "n_pairs")
         .orderBy("rule", "split_a", "split_b")
@@ -974,7 +957,7 @@ object PipelineQueries extends QueryModule {
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("user"), col("l_partkey").as("item"))
         .distinct()
-        .localCheckpoint(true) // feeds candidates AND the rejection join
+        .checkpointed // feeds candidates AND the rejection join
       val pmax = Tables.part(spark, sfDir).agg(max("p_partkey").as("pmax"))
       val cands = pos
         .select(col("user"), col("item"), explode(expr("sequence(0, 2)")).as("slot"))
@@ -1160,7 +1143,7 @@ object PipelineQueries extends QueryModule {
     */
   private val contamRunLength = QueryDef(
     "q_contam_run_length",
-    (spark, sfDir) => {
+    (spark, sfDir) => scope {
       import org.apache.spark.sql.expressions.Window
       // scatter by doc_id: the cache below materializes the scattered
       // layout, the hit-position windows re-use the doc_id clustering,
@@ -1177,7 +1160,7 @@ object PipelineQueries extends QueryModule {
         .select(col("doc_id"), col("lang"), col("b"), col("pos"),
           expr(Ql.md5PrefixLong("g", 14)).as("sh"))
         // feeds the train set, the test side, and the test-doc roster
-        .cache()
+        .cached
       val trainSh = grams.filter(col("b") < 90).select("sh").distinct()
       val test = grams.filter(col("b") >= 90)
       val w = Window.partitionBy("doc_id").orderBy("pos")
@@ -1197,8 +1180,7 @@ object PipelineQueries extends QueryModule {
           max(col("longest")).as("max_run"),
           sum(col("longest")).as("sum_longest"))
         // |langs|-row report materialized while the cache is alive
-        .localCheckpoint(true)
-      grams.unpersist(false)
+        .checkpointed
       report.orderBy("lang")
     },
     Some(s"""
@@ -1261,7 +1243,7 @@ object PipelineQueries extends QueryModule {
         .partitionBy(sha2(col("text").cast("binary"), 256)).orderBy("doc_id")
       val staged = corpus.withColumn("ex_rn", row_number().over(wEx))
         // feeds the survivor near-dup scaffold AND the per-lang tallies
-        .localCheckpoint(true)
+        .checkpointed
       val surv = staged.filter(col("ex_rn") === 1)
       val labels = ClusterQueries.clusterLabelsOf(
         DedupQueries.lshBandPairsOf(surv.select(col("doc_id"), col("text"))))
@@ -1325,8 +1307,8 @@ object PipelineQueries extends QueryModule {
     */
   private val contamAttribution = QueryDef(
     "q_contam_attribution",
-    (spark, sfDir) => {
-      val sh = contamShingles(Tables.documents(spark, sfDir), "source").cache()
+    (spark, sfDir) => scope {
+      val sh = contamShingles(Tables.documents(spark, sfDir), "source").cached
       val trainSh = sh.filter(col("b") < 90).select("source", "sh").distinct()
       val hits = sh.filter(col("b") >= 90).select(col("doc_id"), col("sh"))
         .join(trainSh, "sh")
@@ -1339,8 +1321,7 @@ object PipelineQueries extends QueryModule {
           Ql.r(col("n_gram_hits") * lit(100.0) / col("total_hits"), 4))
         .select("source", "n_test_docs_hit", "n_gram_hits", "hit_share_pct")
         // |sources|-row report materialized while the cache is alive
-        .localCheckpoint(true)
-      sh.unpersist(false)
+        .checkpointed
       report.orderBy("source")
     },
     Some(s"""
@@ -1380,11 +1361,11 @@ object PipelineQueries extends QueryModule {
     (spark, sfDir) => {
       val corpus = DedupQueries.withPlantsFull(spark, sfDir)
         // feeds the chain AND the kept-doc text join
-        .localCheckpoint(true)
+        .checkpointed
       val keep = curationKeepList(corpus)
         .select("doc_id", "split", "source", "shard")
         // feeds the banding input AND both pair-endpoint joins
-        .localCheckpoint(true)
+        .checkpointed
       val pairs = DedupQueries.lshBandPairsOf(
         keep.select("doc_id").join(corpus.select("doc_id", "text"), "doc_id"))
       val a = keep.select(col("doc_id").as("d1"), col("split").as("s1"),
@@ -1442,7 +1423,7 @@ object PipelineQueries extends QueryModule {
     (spark, sfDir) => {
       val docs = Tables.documents(spark, sfDir)
         // feeds both chains AND the roster join
-        .localCheckpoint(true)
+        .checkpointed
       val a = curationKeepList(docs).select(col("doc_id"), lit(1L).as("in_a"))
       val b = curationKeepListLsh(docs).select(col("doc_id"), lit(1L).as("in_b"))
       docs.select("doc_id", "lang")

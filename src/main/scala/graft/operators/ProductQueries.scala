@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, QueryModule, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge._
 
 /** Product-analytics operators over the event stream — the RFM/engagement
   * battery a growth team runs daily, built on the repo's scale idioms:
@@ -59,7 +60,7 @@ object ProductQueries extends QueryModule {
         .agg(max(unix_micros(col("ts"))).as("fresh"),
           count(lit(1)).as("freq"),
           sum(Ql.r(col("value") * 100, 0).cast("long")).as("cents"))
-        .localCheckpoint(true) // feeds three rank sweeps
+        .checkpointed // feeds three rank sweeps
       val n = u.agg(count(lit(1)).as("n"))
       val q = "((5 * (%s - 1)) div n) + 1"
       u.join(bitRanks(u, "fresh", "user_id", "rk_r"), "user_id")
@@ -251,7 +252,7 @@ object ProductQueries extends QueryModule {
       val cust = Tables.orders(spark, sfDir)
         .groupBy("o_custkey")
         .agg(sum(Ql.r(col("o_totalprice") * 100, 0).cast("long")).as("cents"))
-        .localCheckpoint(true)
+        .checkpointed
       val n = cust.agg(count(lit(1)).as("n"), sum("cents").as("tot"))
       val dec = cust.join(bitRanks(cust, "cents", "o_custkey", "rk"), "o_custkey")
         .crossJoin(broadcast(n))
@@ -315,7 +316,7 @@ object ProductQueries extends QueryModule {
             .as("conv"))
         .withColumn("arm",
           when(expr(SamplingQueries.bucketExpr("user_id")) < 50, "T").otherwise("C"))
-        .localCheckpoint(true)
+        .checkpointed
       val n = u.agg(count(lit(1)).as("n"))
       val dec = u.join(bitRanks(u, "score", "user_id", "rk"), "user_id")
         .crossJoin(broadcast(n))
@@ -410,7 +411,7 @@ object ProductQueries extends QueryModule {
       // each from it. rev = Σ cents = Σ weekly Σ cents exactly (BIGINT).
       val wk0 = li.groupBy("l_partkey", "yr", "wk")
         .agg(sum("q").as("wq"), sum("cents").as("wcents"))
-        .localCheckpoint(true)
+        .checkpointed
       val weeks = wk0.select("yr", "wk").distinct().agg(count(lit(1)).as("nw"))
       val parts = wk0.groupBy("l_partkey").agg(sum("wcents").as("rev"))
       val wkly = wk0.groupBy("l_partkey")
@@ -501,7 +502,7 @@ object ProductQueries extends QueryModule {
         .selectExpr("c_mktsegment AS segment",
           "least(3L, CAST(floor(o_totalprice / 100000.0) AS LONG)) AS band")
         .groupBy("segment", "band").agg(count(lit(1)).as("n"))
-        .localCheckpoint(true) // feeds both margins and the cells
+        .checkpointed // feeds both margins and the cells
       val segTot = cells.groupBy("segment").agg(sum("n").as("ns"))
       val bandTot = cells.groupBy("band").agg(sum("n").as("nb"))
       val tot = cells.agg(sum("n").as("nt"))

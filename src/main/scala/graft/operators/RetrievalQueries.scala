@@ -4,6 +4,7 @@ import graft.{QueryDef, QueryModule, Tables}
 import graft.functions.Vectors
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge._
 
 /** Retrieval-serving operators — the ranking layer above the corpus
   * (BM25 feeds these; the ANN stack is their vector sibling). Scale
@@ -34,17 +35,17 @@ object RetrievalQueries extends QueryModule {
     (spark, sfDir) => {
       val cand = TextQueries
         .bm25TopK(Tables.documents(spark, sfDir), Seq("stream", "join", "window"))
-        .localCheckpoint(true) // 20 rows
+        .checkpointed // 20 rows
       val emb = Tables.embeddings(spark, sfDir)
         .select(col("vec_id").as("doc_id"), Vectors.toDouble(col("embedding")).as("v"))
       val ce = emb.join(broadcast(cand.select("doc_id", "score")), "doc_id")
-        .localCheckpoint(true) // 20 rows with vectors
+        .checkpointed // 20 rows with vectors
       val a = ce.selectExpr("doc_id AS i", "score AS si", "v AS vi")
       val b = ce.selectExpr("doc_id AS j", "v AS vj")
       val pair = a.join(broadcast(b), col("i") =!= col("j"))
         .select(col("i"), col("si"), col("j"),
           Ql.r(Vectors.dot(col("vi"), col("vj")), 6).as("sim"))
-        .localCheckpoint(true) // <=20*19 rows
+        .checkpointed // <=20*19 rows
       val s1 = ce.selectExpr("doc_id", "score AS rel")
         .orderBy(col("rel").desc, col("doc_id")).limit(1)
         .selectExpr("doc_id", "1 AS rank", "rel",
@@ -164,7 +165,7 @@ object RetrievalQueries extends QueryModule {
         .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
         .filter(length(col("tok")) > 0)
         .distinct()
-        .localCheckpoint(true) // langs x vocab rows — feeds sizes, grid, inter
+        .checkpointed // langs x vocab rows — feeds sizes, grid, inter
       val sizes = lv.groupBy("lang").agg(count(lit(1)).as("sz"))
       val inter = lv.as("a")
         .join(lv.as("b"), col("a.tok") === col("b.tok") && col("a.lang") < col("b.lang"))
@@ -213,10 +214,9 @@ object RetrievalQueries extends QueryModule {
     */
   /** The Dirichlet-QL top-20 scorer over an arbitrary documents frame —
     * factored so q_rank_overlap can lay its ranking next to BM25's
-    * (ONE definition of the pipeline; the QueryDef below owns block
-    * hygiene). Returns (doc_id, n_hit_terms, dl, score) top-20 by
-    * (score DESC, doc_id). NOTE: eagerly localCheckpoints its hit list —
-    * callers release blocks via the snapshot pattern.
+    * (ONE definition of the pipeline). Returns (doc_id, n_hit_terms,
+    * dl, score) top-20 by (score DESC, doc_id). NOTE: eagerly
+    * checkpoints its hit list, into the caller's materialization scope.
     */
   private[operators] def qlTopK(docs: DataFrame, terms: Seq[String]): DataFrame = {
     val termArr = s"array(${terms.map(t => s"'$t'").mkString(", ")})"
@@ -227,7 +227,7 @@ object RetrievalQueries extends QueryModule {
         explode(col("toks")).as("w"))
     val coll = tok.agg(count(lit(1)).cast("double").as("ctot"))
     val hits = tok.filter(expr(s"array_contains($termArr, w)"))
-      .localCheckpoint(true) // feeds ctf, tf, and the candidate list
+      .checkpointed // feeds ctf, tf, and the candidate list
     val ctf = hits.groupBy("w").agg(count(lit(1)).cast("double").as("ctf"))
     // LEFT join + coalesce: a query term with zero collection
     // frequency keeps its smoothed floor for every candidate rather
@@ -289,16 +289,10 @@ object RetrievalQueries extends QueryModule {
     val terms = Seq("stream", "join", "window")
     QueryDef(
       "q_query_likelihood",
-      (spark, sfDir) => {
-        val sc = spark.sparkContext
-        val before = sc.getPersistentRDDs.keySet
-        val out = qlTopK(Tables.documents(spark, sfDir), terms)
-        // release the eager checkpoint's blocks once the result is
-        // snapshotted (module contract: no blocks outlive the query)
-        val mine = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-        val collected = out.localCheckpoint(true)
-        mine.values.foreach(_.unpersist(blocking = false))
-        collected
+      (spark, sfDir) => scope {
+        // the scope releases the eager checkpoint's blocks once the result
+        // is checkpointed (module contract: no blocks outlive the query)
+        qlTopK(Tables.documents(spark, sfDir), terms).checkpointed
       },
       Some(s"""
         WITH ${qlOracleCtes("", terms)}
@@ -331,10 +325,8 @@ object RetrievalQueries extends QueryModule {
     }.mkString(" ") + " END"
     QueryDef(
       "q_rank_overlap",
-      (spark, sfDir) => {
+      (spark, sfDir) => scope {
         import org.apache.spark.sql.expressions.Window
-        val sc = spark.sparkContext
-        val before = sc.getPersistentRDDs.keySet
         val docs = Tables.documents(spark, sfDir)
         def ranked(df: DataFrame, rc: String) = df
           .withColumn(rc, row_number()
@@ -344,7 +336,7 @@ object RetrievalQueries extends QueryModule {
         val b = ranked(qlTopK(docs, terms), "rb")
         val common = a.join(b, "doc_id")
           .select(col("doc_id"), greatest(col("ra"), col("rb")).as("dmin"))
-          .localCheckpoint(true) // ≤20 rows
+          .checkpointed // ≤20 rows
         val depths = spark.range(1, k + 1).select(col("id").as("d"))
         val ov = depths
           .join(broadcast(common), col("dmin") <= col("d"), "left")
@@ -358,10 +350,7 @@ object RetrievalQueries extends QueryModule {
         val res = out.crossJoin(broadcast(rbo))
           .select(col("d"), col("overlap"), col("agreement"), col("rbo"))
           .orderBy("d")
-        val mine = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-        val collected = res.localCheckpoint(true)
-        mine.values.foreach(_.unpersist(blocking = false))
-        collected
+        res.checkpointed
       },
       Some(s"""
         WITH ${TextQueries.bm25OracleCtes},

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, QueryModule, Tables}
 import graft.functions.Vectors
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge._
 
 /** Similarity search over the embedding column (SURVEY §2.I3/I4).
   * Embeddings are L2-normalized, so cosine ≡ dot product — the queries use
@@ -223,7 +224,7 @@ object SimilarityQueries extends QueryModule {
         .withColumn("rank", row_number().over(wTop))
         .filter(col("rank") <= 10)
         .select(col("qid"), col("vec_id"))
-        .localCheckpoint(true) // 20 queries x 10 rows
+        .checkpointed // 20 queries x 10 rows
       val wProbe = Window.partitionBy("qid").orderBy(col("cscore").desc, col("label"))
       val probed = q.crossJoin(broadcast(centroids))
         .withColumn("cscore", Ql.r(Vectors.dot(col("qv"), col("centroid")), 6))
@@ -233,7 +234,7 @@ object SimilarityQueries extends QueryModule {
       val scored = probed.join(base, "label")
         .withColumn("score", Ql.r(Vectors.dot(col("qv"), col("v")), 4))
         .select("qid", "crank", "vec_id", "score")
-        .localCheckpoint(true) // candidate lists; the dot products run once
+        .checkpointed // candidate lists; the dot products run once
       val np = spark.range(0, 4)
         .select(expr("shiftleft(1, CAST(id AS INT))").as("nprobe"))
       val tiered = scored.join(broadcast(np), col("crank") <= col("nprobe"))
@@ -430,8 +431,9 @@ object SimilarityQueries extends QueryModule {
     * in this corpus is ~0.51, so without plants the drop path would be
     * vacuously untested) and its centroid-bucketed assignment, shared by
     * q_semantic_dedup and q_semdedup_eps_sweep so the measured bucketing
-    * is the served one. Returns (e, assigned, centroids); `e` is cached
-    * and the caller unpersists it after materializing its report. The
+    * is the served one. Returns (assigned, centroids); the planted
+    * table is cached, so callers run this inside a materialization
+    * scope and checkpoint their report before it returns. The
     * centroid frame is returned so consumers that need it
     * (q_proto_pruning's prototypicality) score against the SAME avg()
     * instance the assignment used — a recomputed centroid could differ
@@ -439,7 +441,7 @@ object SimilarityQueries extends QueryModule {
     * boundary.
     */
   private def semAssigned(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+      sfDir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     val e0 = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("label"), Vectors.toDouble(col("embedding")).as("v"))
@@ -447,12 +449,12 @@ object SimilarityQueries extends QueryModule {
       e0.filter(col("vec_id") < 10).select(
         (col("vec_id") + 100000).as("vec_id"), col("label"),
         expr("concat(slice(v, 1, 63), array(element_at(v, 64) + 0.1d))").as("v")))
-      .cache()
+      .cached
     val centroids = labelCentroids(e)
       .select(col("label").as("cl"), col("centroid"))
       // K rows, materialized ONCE so the assignment and any downstream
       // centroid consumer read the same avg() realization
-      .localCheckpoint(true)
+      .checkpointed
     // rank on the ROUNDED score (rounding contract): centroid components
     // come from avg() whose summation order is partitioning-dependent
     val wAssign = Window.partitionBy("vec_id").orderBy(col("cscore").desc, col("cl"))
@@ -462,7 +464,7 @@ object SimilarityQueries extends QueryModule {
       .filter(col("arank") === 1)
       .select(col("cl").as("cluster"), col("vec_id"), col("v"),
         sqrt(Vectors.normSq(col("v"))).as("norm"))
-    (e, assigned, centroids)
+    (assigned, centroids)
   }
 
   /** Oracle twin of [[semAssigned]]: CTE chain ending in
@@ -489,8 +491,8 @@ object SimilarityQueries extends QueryModule {
 
   private val semanticDedup = QueryDef(
     "q_semantic_dedup",
-    (spark, sfDir) => {
-      val (e, assigned, _) = semAssigned(spark, sfDir)
+    (spark, sfDir) => scope {
+      val (assigned, _) = semAssigned(spark, sfDir)
       val dropped = assigned
         .select(col("cluster"), col("vec_id").as("d1"), col("v").as("v1"), col("norm").as("n1"))
         .join(assigned
@@ -500,17 +502,15 @@ object SimilarityQueries extends QueryModule {
         .filter(Ql.r(Vectors.dot(col("v1"), col("v2")) / (col("n1") * col("n2")), 4) >= 0.9)
         .select(col("cluster"), col("d2")).distinct()
         .groupBy("cluster").agg(count(lit(1)).as("n_dropped"))
-      val report = assigned.groupBy("cluster").agg(count(lit(1)).as("n_vecs"))
+      assigned.groupBy("cluster").agg(count(lit(1)).as("n_vecs"))
         .join(dropped, Seq("cluster"), "left")
         .select(col("cluster"), col("n_vecs"),
           coalesce(col("n_dropped"), lit(0L)).as("n_dropped"),
           (col("n_vecs") - coalesce(col("n_dropped"), lit(0L))).as("n_kept"))
         .orderBy("cluster")
-        // K-row report — materialize so the planted-union cache's scope
-        // is this function, not the rest of the session
-        .localCheckpoint(true)
-      e.unpersist(false)
-      report
+        // K-row report — materialize so the scope can release the
+        // planted-union cache when this returns
+        .checkpointed
     },
     Some(s"""
       WITH $semAssignedSql,
@@ -546,8 +546,8 @@ object SimilarityQueries extends QueryModule {
     */
   private val semdedupEpsSweep = QueryDef(
     "q_semdedup_eps_sweep",
-    (spark, sfDir) => {
-      val (e, assigned, _) = semAssigned(spark, sfDir)
+    (spark, sfDir) => scope {
+      val (assigned, _) = semAssigned(spark, sfDir)
       val md = assigned
         .select(col("cluster"), col("vec_id").as("d1"), col("v").as("v1"), col("norm").as("n1"))
         .join(assigned
@@ -557,10 +557,9 @@ object SimilarityQueries extends QueryModule {
         .select(col("d2"),
           Ql.r(Vectors.dot(col("v1"), col("v2")) / (col("n1") * col("n2")), 4).as("cr"))
         .groupBy("d2").agg(max(col("cr")).as("max_cos"))
-        .localCheckpoint(true) // per-doc table; the pair pass runs once
+        .checkpointed // per-doc table; the pair pass runs once
       val tot = assigned.agg(count(lit(1)).as("n_total"))
-        .localCheckpoint(true) // 1 row, materialized before the cache drops
-      e.unpersist(false)
+        .checkpointed // 1 row, materialized before the cache drops
       md.agg(
           count(when(col("max_cos") >= expr("30e-2"), 1)).as("c30"),
           count(when(col("max_cos") >= expr("40e-2"), 1)).as("c40"),
@@ -981,7 +980,7 @@ object SimilarityQueries extends QueryModule {
     */
   private val mutualKnn = QueryDef(
     "q_mutual_knn",
-    (spark, sfDir) => {
+    (spark, sfDir) => scope {
       import org.apache.spark.sql.expressions.Window
       val e0 = Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), col("label"), Vectors.toDouble(col("embedding")).as("v"))
@@ -989,7 +988,7 @@ object SimilarityQueries extends QueryModule {
         e0.filter(col("vec_id") < 10).select(
           (col("vec_id") + 100000).as("vec_id"), col("label"),
           expr("concat(slice(v, 1, 63), array(element_at(v, 64) + 0.1d))").as("v")))
-        .cache()
+        .cached
       val centroids = labelCentroids(e)
         .select(col("label").as("cl"), col("centroid"))
       val wAssign = Window.partitionBy("vec_id").orderBy(col("cscore").desc, col("cl"))
@@ -1012,7 +1011,7 @@ object SimilarityQueries extends QueryModule {
         .withColumn("rn", row_number().over(wnn))
         .filter(col("rn") === 1)
         .select("d1", "d2", "l1", "l2", "score")
-        .localCheckpoint(true) // both sides of the reciprocity join
+        .checkpointed // both sides of the reciprocity join
       val out = nn
         .join(nn.select(col("d1").as("m2"), col("d2").as("m1")),
           col("d1") === col("m1") && col("d2") === col("m2"))
@@ -1020,7 +1019,6 @@ object SimilarityQueries extends QueryModule {
         .select(col("d1"), col("d2"), col("score"),
           (col("l1") === col("l2")).cast("int").as("same_label"))
         .orderBy(col("score").desc, col("d1")).limit(20)
-      e.unpersist(false)
       out
     },
     Some(s"""
@@ -1077,18 +1075,16 @@ object SimilarityQueries extends QueryModule {
     */
   private val submodularSelect = QueryDef(
     "q_submodular_select",
-    (spark, sfDir) => {
+    (spark, sfDir) => scope {
       import org.apache.spark.sql.expressions.Window
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
       val e = Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), Vectors.toDouble(col("embedding")).as("v"))
-        .localCheckpoint(true)
+        .checkpointed
       var cands = e.filter(col("vec_id") % 10 === 0)
         .select(col("vec_id").as("c"), col("v").as("cv"))
-        .localCheckpoint(true)
+        .checkpointed
       var best = e.select(col("vec_id"), lit(0.0).as("best"))
-        .localCheckpoint(true)
+        .checkpointed
       var sel: org.apache.spark.sql.DataFrame = null
       // The similarity matrix is NOT materialized (r17): the old shape
       // localCheckpointed the |corpus|×|pool| sims frame per round to
@@ -1101,9 +1097,7 @@ object SimilarityQueries extends QueryModule {
       // nothing corpus×pool ever stored (guide §1.2: fix the shape, not
       // the constants). Per-round release now only retires the previous
       // round's best snapshot.
-      var prevRoundIds: Set[Int] = Set.empty
       for (r <- 1 to 5) {
-        val preRound = sc.getPersistentRDDs.keySet
         def sims = e.join(best, "vec_id")
           .crossJoin(broadcast(cands))
           .select(col("vec_id"), col("c"),
@@ -1114,8 +1108,7 @@ object SimilarityQueries extends QueryModule {
           .groupBy("c").agg(sum("tu").as("gu"))
           .orderBy(col("gu").desc, col("c")).limit(1)
           .withColumn("rank", lit(r))
-          .localCheckpoint(true) // 1 row — read again by sel AFTER the loop
-        val pickedIds = (sc.getPersistentRDDs.keySet -- preRound).toSet
+          .checkpointed // 1 row — read again by sel AFTER the loop
         // coverage update against the ONE picked vector, not the whole
         // pool: the old `sims ⋈ picked` kept only the picked candidate's
         // rows but still COMPUTED corpus × pool dot products first (the
@@ -1126,34 +1119,28 @@ object SimilarityQueries extends QueryModule {
         // 6-dp rounding), and at 100 TB the difference between one
         // corpus-sized pass and a corpus × pool pass per round.
         val pickedVec = cands.join(picked.select("c"), Seq("c"))
+        val prevBest = best
         best = e.join(best, "vec_id")
           .crossJoin(broadcast(pickedVec))
           .select(col("vec_id"),
             greatest(col("best"),
               Ql.r(Vectors.dot(col("v"), col("cv")), 6)).as("best"))
-          .localCheckpoint(true)
+          .checkpointed
         cands = cands.join(picked.select("c"), Seq("c"), "left_anti")
         sel = if (sel == null) picked else sel.unionByName(picked)
         // dead: the PREVIOUS round's best snapshot. NEVER the picked rows
         // — sel reads every picked checkpoint after the loop, and a
         // released localCheckpoint cannot be recomputed.
-        sc.getPersistentRDDs
-          .filter { case (id, _) => prevRoundIds(id) }
-          .values.foreach(_.unpersist(blocking = false))
-        prevRoundIds =
-          (sc.getPersistentRDDs.keySet -- preRound).toSet -- pickedIds
+        release(prevBest)
       }
-      val out = sel
+      sel
         .withColumn("objective", Ql.r(
           sum("gu").over(Window.orderBy("rank")
             .rowsBetween(Window.unboundedPreceding, 0)) / lit(1e6), 4))
         .select(col("rank"), col("c").as("vec_id"),
           Ql.r(col("gu") / lit(1e6), 4).as("marginal_gain"), col("objective"))
         .orderBy("rank")
-      val mine = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-      val collected = out.localCheckpoint(true)
-      mine.values.foreach(_.unpersist(blocking = false))
-      collected
+        .checkpointed
     },
     Some {
       val rounds = (1 to 5).map { r =>
@@ -1296,7 +1283,7 @@ object SimilarityQueries extends QueryModule {
       val e = Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), col("label"), Vectors.toDouble(col("embedding")).as("v"))
       val lists = e.groupBy("label").agg(count(lit(1)).as("n_vecs"))
-        .localCheckpoint(true) // K rows; feeds probe-cost join AND summary
+        .checkpointed // K rows; feeds probe-cost join AND summary
       val centroids = labelCentroids(e)
       val wProbe = Window.partitionBy("qid").orderBy(col("cscore").desc, col("label"))
       val probed = e.filter(col("vec_id") < 20)
@@ -1310,7 +1297,7 @@ object SimilarityQueries extends QueryModule {
         .select(col("qid"), col("label"))
         // ~2·n_q rows; feeds the hits rollup AND the scan-cost rollup —
         // materialize so the centroid+probe pass runs once, structurally
-        .localCheckpoint(true)
+        .checkpointed
       val hits = probed.groupBy("label").agg(count(lit(1)).as("probes_hit"))
       val summary = lists
         .agg(count(lit(1)).as("k_lists"), sum(col("n_vecs")).as("n_total"),
@@ -1394,9 +1381,9 @@ object SimilarityQueries extends QueryModule {
     */
   private val protoPruning = QueryDef(
     "q_proto_pruning",
-    (spark, sfDir) => {
+    (spark, sfDir) => scope {
       import org.apache.spark.sql.expressions.Window
-      val (e, assigned, cents) = semAssigned(spark, sfDir)
+      val (assigned, cents) = semAssigned(spark, sfDir)
       val centroids = cents
         .select(col("cl").as("cluster"), col("centroid"),
           sqrt(Vectors.normSq(col("centroid"))).as("cnorm"))
@@ -1407,8 +1394,7 @@ object SimilarityQueries extends QueryModule {
         .withColumn("k", expr(s"CAST(${Ql.R("proto * 10000", 0)} AS BIGINT)"))
         .select("cluster", "vec_id", "k")
         // feeds the bucket histogram AND the verdict rollup — one pass
-        .localCheckpoint(true)
-      e.unpersist(false)
+        .checkpointed
       val h = kd.groupBy("cluster", "k").agg(count(lit(1)).as("hn"))
       val wCum = Window.partitionBy("cluster").orderBy(col("k").desc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, QueryModule, Tables}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge._
 
 /** Mergeable-summary patterns beyond the HLL sketch family
   * (AggQueries.aggHllMerge): count-min frequency sketches, Bloom-filter
@@ -100,7 +101,7 @@ object SketchQueries extends QueryModule {
     */
   private val bloomDecontam = QueryDef(
     "q_bloom_decontam",
-    (spark, sfDir) => {
+    (spark, sfDir) => scope {
       val k = 3
       val m = 1 << 22
       val posOf = Ql.md5PrefixLong("concat(cast(salt AS STRING), ':', sh0)", 14)
@@ -126,7 +127,7 @@ object SketchQueries extends QueryModule {
           (expr(posOf) % m).as("p"))
         .select(col("doc_id"), col("b"), col("gh"),
           (col("p") / 32).cast("long").as("word"), (col("p") % 32).cast("int").as("bit"))
-        .cache()
+        .cached
       val bitmap = pos.filter(col("b") < 90)
         .select("word", "bit").distinct()
         .groupBy("word").agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), bit))").as("bits"))
@@ -140,9 +141,10 @@ object SketchQueries extends QueryModule {
       val exact = pos.filter(col("b") >= 90).select("doc_id", "gh").distinct()
         .join(trainGh, Seq("gh"), "leftsemi")
         .withColumn("exact_hit", lit(1))
-      // materialize the tiny per-doc report, THEN drop the position
-      // cache (unpersisting before the first action would throw the
-      // cache away unused and recompute pos once per consumer)
+      // materialize the tiny per-doc report; the scope drops the
+      // position cache after that (dropping it before the first action
+      // would throw the cache away unused and recompute pos once per
+      // consumer)
       val out = probe.join(exact, Seq("doc_id", "gh"), "left")
         .withColumn("exact_hit", coalesce(col("exact_hit"), lit(0)))
         .groupBy("doc_id")
@@ -150,8 +152,7 @@ object SketchQueries extends QueryModule {
           sum(col("bloom_hit")).cast("long").as("n_bloom_hit"),
           sum(col("exact_hit")).cast("long").as("n_exact_hit"),
           min((col("bloom_hit") >= col("exact_hit")).cast("int")).as("no_false_neg"))
-        .localCheckpoint(true)
-      pos.unpersist(false)
+        .checkpointed
       out.orderBy("doc_id")
     },
     Some {
@@ -344,10 +345,8 @@ object SketchQueries extends QueryModule {
     */
   private val kmvSketch = QueryDef(
     "q_kmv_sketch",
-    (spark, sfDir) => {
+    (spark, sfDir) => scope {
       val hx = Ql.md5PrefixLong("concat(CAST(user_id AS STRING), ':', event_type)", 14)
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
       val e = Tables.events(spark, sfDir)
         .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
       val b = e.agg(min(col("us")).as("lo"), max(col("us")).as("hi"))
@@ -357,7 +356,7 @@ object SketchQueries extends QueryModule {
             .otherwise("cur"))
         .select(col("half"), expr(hx).as("h"))
         .distinct()
-        .localCheckpoint(true) // feeds both k-min passes and the membership probe
+        .checkpointed // feeds both k-min passes and the membership probe
       val k = 256
       def kmin(half: String) = halves.filter(col("half") === half)
         .select(col("h")).orderBy("h").limit(k)
@@ -386,8 +385,7 @@ object SketchQueries extends QueryModule {
       val exactBoth = halves.filter(col("half") === "ref").select(col("h"))
         .join(halves.filter(col("half") === "cur").select(col("h")), Seq("h"), "left_semi")
         .agg(count(lit(1)).as("exact_intersect"))
-      val mine = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-      val out = est(refK).withColumnRenamed("est", "est_ref")
+      est(refK).withColumnRenamed("est", "est_ref")
         .crossJoin(broadcast(est(curK).withColumnRenamed("est", "est_cur")))
         .crossJoin(broadcast(est(unionK).withColumnRenamed("est", "est_union")))
         .crossJoin(broadcast(both))
@@ -406,9 +404,7 @@ object SketchQueries extends QueryModule {
           floor(col("n_both").cast("double") * col("est_union") / col("k_union"))
             .cast("long").as("est_intersect"),
           col("exact_ref"), col("exact_cur"), col("exact_intersect"))
-        .localCheckpoint(true) // materialize the 1-row report, then release
-      mine.values.foreach(_.unpersist(blocking = false))
-      out
+        .checkpointed // materialize the 1-row report; the scope releases halves
     },
     Some {
       val hx = Ql.Md5PrefixLong("CAST(user_id AS VARCHAR) || ':' || event_type", 14)

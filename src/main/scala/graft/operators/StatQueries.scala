@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, QueryModule, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge._
 
 /** Statistical-modeling operators over the warehouse tables: closed-form
   * model fits (ridge via normal equations, per-segment OLS trends), the
@@ -813,10 +814,8 @@ object StatQueries extends QueryModule {
     */
   def powerIterationConverged(covIn: org.apache.spark.sql.DataFrame,
       tol: Double, maxRounds: Int = 200)
-      : (org.apache.spark.sql.DataFrame, Double, Int) = {
-    val sc = covIn.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val cov = covIn.localCheckpoint(true)
+      : (org.apache.spark.sql.DataFrame, Double, Int) = scope {
+    val cov = covIn.checkpointed
     val d = cov.select("i").distinct()
     val dims = d.count() // matrix dimension — report-sized driver fetch
     var v = d.withColumn("v", lit(1.0 / math.sqrt(dims.toDouble)))
@@ -824,7 +823,7 @@ object StatQueries extends QueryModule {
     var lastR = Double.NaN
     var delta = Double.MaxValue
     while (delta >= tol && rounds < maxRounds) {
-      v = powerIterStep(cov, v).localCheckpoint(true)
+      v = powerIterStep(cov, v).checkpointed
       val r = rayleighQuotient(cov, v)
       if (!lastR.isNaN) delta = math.abs(r - lastR)
       lastR = r
@@ -833,10 +832,7 @@ object StatQueries extends QueryModule {
     if (delta >= tol)
       throw new IllegalStateException(
         s"power iteration did not converge to $tol in $maxRounds rounds (delta=$delta)")
-    val mine = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-    val out = v.localCheckpoint(true)
-    mine.values.foreach(_.unpersist(blocking = false))
-    (out, lastR, rounds)
+    (v.checkpointed, lastR, rounds)
   }
 
   /** Top principal component of the embedding cloud (first 16 dims for
@@ -879,7 +875,7 @@ object StatQueries extends QueryModule {
         // the 256-row covariance is referenced five times (v0, three
         // iterations, the Rayleigh quotient) — pin it so the corpus
         // self-join runs ONCE, not once per reference
-        .localCheckpoint(true)
+        .checkpointed
       val v0 = cov.select(col("i")).distinct().withColumn("v", lit(0.25))
       val v3 = powerIterStep(cov, powerIterStep(cov, powerIterStep(cov, v0)))
       val eig = cov
@@ -2336,7 +2332,7 @@ object StatQueries extends QueryModule {
       val g = e.groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),
           sum(expr("x * y")).as("sxy"), sum(expr("x * x")).as("sxx"))
-        .localCheckpoint(true) // |types| rows feed the grid and the pooled fold
+        .checkpointed // |types| rows feed the grid and the pooled fold
       val slope =
         """(CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
            / (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)"""
@@ -2429,7 +2425,7 @@ object StatQueries extends QueryModule {
       val indexed = daily
         .withColumn("rn",
           row_number().over(Window.orderBy("day")).cast("long"))
-        .localCheckpoint(true) // calendar-bounded day table
+        .checkpointed // calendar-bounded day table
       val grid = indexed
         .select(col("rn"), col("c"),
           explode(expr("array(4L, 8L, 16L, 32L)")).as("m"))
@@ -2456,7 +2452,7 @@ object StatQueries extends QueryModule {
         .agg(count(lit(1)).as("n_blocks"), sum("rs_u").as("srs"))
         .selectExpr("m", "n_blocks",
           s"${Ql.R("srs / 1e6 / n_blocks", 6)} AS mean_rs")
-        .localCheckpoint(true) // ≤4 rows; feeds the regression twice
+        .checkpointed // ≤4 rows; feeds the regression twice
       val reg = perM.selectExpr("m", "n_blocks", "mean_rs",
         s"$xCase AS xu",
         s"CAST(${Ql.R("ln(mean_rs) * 1000000", 0)} AS BIGINT) AS yu")
@@ -2555,7 +2551,7 @@ object StatQueries extends QueryModule {
         .select(Ql.r(col("value") * 100, 0).cast("long").as("c"),
           col("event_type"))
       val cells = e.groupBy("c", "event_type").agg(count(lit(1)).as("nct"))
-        .localCheckpoint(true) // type×cent grid: feeds ranks, groups, ties
+        .checkpointed // type×cent grid: feeds ranks, groups, ties
       val totC = cells.groupBy("c").agg(sum("nct").as("cnt"))
         .withColumn("bkt", expr("c div 1000"))
       val offsets = totC.groupBy("bkt").agg(sum("cnt").as("bn"))
@@ -2569,11 +2565,11 @@ object StatQueries extends QueryModule {
             .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
         .select(col("c"), col("cnt"),
           (lit(2L) * col("cum") + col("cnt") + 1L).as("m2"))
-        .localCheckpoint(true) // cent grid: feeds the group sums and the ties
+        .checkpointed // cent grid: feeds the group sums and the ties
       val grp = cells.join(ranked, "c")
         .groupBy("event_type")
         .agg(sum("nct").as("ng"), sum(expr("nct * m2")).as("r2"))
-        .localCheckpoint(true) // |types| rows
+        .checkpointed // |types| rows
       val ties = ranked.agg(sum("cnt").as("n"),
         sum(expr("cnt * cnt * cnt - cnt")).as("tt"))
       grp.agg(count(lit(1)).as("k"),
@@ -2652,7 +2648,7 @@ object StatQueries extends QueryModule {
         .select(Ql.r(col("value") * 100, 0).cast("long").as("c"),
           col("event_type"))
       val grid = e.groupBy("event_type", "c").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(true) // type×cent grid; feeds the median and the moments
+        .checkpointed // type×cent grid; feeds the median and the moments
       val ng = grid.groupBy("event_type").agg(sum("cnt").as("n_g"))
       val med = grid
         .withColumn("cum", sum("cnt").over(
@@ -2667,7 +2663,7 @@ object StatQueries extends QueryModule {
         .groupBy("event_type", "med")
         .agg(sum("cnt").as("n_g"), sum(expr("cnt * z")).as("sz"),
           sum(expr("cnt * z * z")).as("szz"))
-        .localCheckpoint(true) // |types| rows
+        .checkpointed // |types| rows
       // per-group SS terms quantize to 4 dp integer units BEFORE the
       // k-row sum (the q_kneser_ney discipline): each group's sz²/n_g
       // correction is one identical double op chain in both engines,
@@ -2774,7 +2770,7 @@ object StatQueries extends QueryModule {
       val cell = Tables.events(spark, sfDir)
         .groupBy(to_date(col("ts")).as("day"), col("event_type"))
         .agg(Ql.r(avg(Ql.r(col("value") * 100, 0).cast("long")), 6).as("m"))
-        .localCheckpoint(true) // day×type table, calendar-bounded
+        .checkpointed // day×type table, calendar-bounded
       // complete blocks only: a day missing a type cannot be ranked 1..k
       val k = cell.agg(countDistinct("event_type").as("k"))
       val days = cell.groupBy("day").agg(count(lit(1)).as("nt"))
@@ -2792,7 +2788,7 @@ object StatQueries extends QueryModule {
           (lit(2L) * (col("rk") - 1L) + col("tieN") + 1L).as("m2"))
       val perType = ranked.groupBy("event_type")
         .agg(sum("m2").as("r2"), count(lit(1)).as("n"))
-        .localCheckpoint(true) // |types| rows
+        .checkpointed // |types| rows
       perType.agg(count(lit(1)).as("k"), max("n").as("n"),
           sum(expr("CAST(r2 AS DOUBLE) * r2 / 4.0")).as("sr2"))
         .selectExpr("n", "k", "k - 1 AS df",
@@ -2859,7 +2855,7 @@ object StatQueries extends QueryModule {
         .groupBy("user_id", "event_type")
         .agg(max((col("value") > 180).cast("long")).as("x"))
       val colTot = x.groupBy("event_type").agg(sum("x").as("ct"))
-        .localCheckpoint(true) // |types| rows
+        .checkpointed // |types| rows
       // k = the checkpointed column-total row count — recomputing it via
       // countDistinct would rescan events (review finding)
       val k = colTot.agg(count(lit(1)).as("k"))

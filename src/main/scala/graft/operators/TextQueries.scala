@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, QueryModule, Tables}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge._
 
 /** Text-analysis operators for training-data pipelines (SURVEY §2.I5/I6/I8):
   * token statistics, tf-idf, n-gram language ID, quality scoring, token
@@ -167,8 +168,8 @@ object TextQueries extends QueryModule {
     */
   private val langIdF1 = QueryDef(
     "q_lang_id_f1",
-    (spark, sfDir) => {
-      val conf = langConfusion(spark, sfDir).cache()
+    (spark, sfDir) => scope {
+      val conf = langConfusion(spark, sfDir).cached
       val tp = conf.filter(col("lang") === col("pred"))
         .select(col("lang"), col("n").as("tp"))
       val actual = conf.groupBy("lang").agg(sum(col("n")).as("actual_n"))
@@ -187,9 +188,7 @@ object TextQueries extends QueryModule {
           Ql.r(when(col("p") + col("r") > 0,
             lit(2.0) * col("p") * col("r") / (col("p") + col("r"))).otherwise(lit(0.0)), 4).as("f1"))
         .orderBy("lang")
-      val collected = out.localCheckpoint(true)
-      conf.unpersist(blocking = false)
-      collected
+      out.checkpointed
     },
     Some(s"""
       WITH $langConfusionSql,
@@ -733,7 +732,7 @@ object TextQueries extends QueryModule {
         // feeds the bucket histogram (h → off AND nl) and the final rank
         // join — materialize so the corpus-scale bigram-LM scoring runs
         // once, not once per consumer (the q_top_p_filter discipline)
-        .localCheckpoint(true)
+        .checkpointed
       val h = keyed.groupBy("lang", "bkt").agg(count(lit(1)).as("hn"))
       val wPre = Window.partitionBy("lang").orderBy("bkt")
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -1040,9 +1039,7 @@ object TextQueries extends QueryModule {
     */
   private val sparseCosinePairs = QueryDef(
     "q_sparse_cosine_pairs",
-    (spark, sfDir) => {
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
+    (spark, sfDir) => scope {
       val docs = Tables.documents(spark, sfDir)
       val nDf = docs.agg(count(lit(1)).cast("double").as("nn"))
       val tf = docs
@@ -1054,23 +1051,20 @@ object TextQueries extends QueryModule {
         .crossJoin(broadcast(nDf))
         .select(col("doc_id"), col("tok"),
           Ql.r(col("tf") * log(col("nn") / col("df")), 6).as("w"))
-        .localCheckpoint(true) // feeds both the norms and the pair join
+        .checkpointed // feeds both the norms and the pair join
       val norms = w.groupBy("doc_id").agg(sum(col("w") * col("w")).as("nsq"))
       val pairs = w.select(col("doc_id").as("a"), col("tok"), col("w").as("wa"))
         .join(w.select(col("doc_id").as("b"), col("tok"), col("w").as("wb")), "tok")
         .filter(col("a") < col("b"))
         .groupBy("a", "b").agg(sum(col("wa") * col("wb")).as("dot"))
-      val mine = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-      val out = pairs
+      pairs
         .join(norms.select(col("doc_id").as("a"), col("nsq").as("na")), "a")
         .join(norms.select(col("doc_id").as("b"), col("nsq").as("nb")), "b")
         .select(col("a"), col("b"),
           Ql.r(col("dot") / sqrt(col("na") * col("nb")), 4).as("cosine"))
         .orderBy(col("cosine").desc, col("a"), col("b"))
         .limit(20)
-        .localCheckpoint(true) // materialize before releasing w's blocks
-      mine.values.foreach(_.unpersist(blocking = false))
-      out
+        .checkpointed // materialize before releasing w's blocks
     },
     Some(s"""
       WITH n AS (SELECT CAST(count(*) AS DOUBLE) AS nn FROM documents),
@@ -1166,7 +1160,7 @@ object TextQueries extends QueryModule {
         // class, <=64 buckets however large the corpus
         .withColumn("bkt",
           expr("CAST(floor(-log2(CAST(n AS DOUBLE))) AS BIGINT)"))
-        .localCheckpoint(true) // feeds the histogram AND the sweep
+        .checkpointed // feeds the histogram AND the sweep
       val hist = types.groupBy("bkt")
         .agg(sum("n").as("b_mass"), count(lit(1)).as("b_types"))
       val wPre = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
@@ -1237,7 +1231,7 @@ object TextQueries extends QueryModule {
                i -> concat_ws(' ', slice(toks, i + 1, 5)))""")).as("g"))
       val counts = grams.groupBy("g").agg(count(lit(1)).as("r"))
       val hist = counts.groupBy("r").agg(count(lit(1)).as("n_r"))
-        .localCheckpoint(true) // ≤max-count rows; feeds totals and the r+1 self-join
+        .checkpointed // ≤max-count rows; feeds totals and the r+1 self-join
       val totals = hist.agg(
         sum(expr("r * n_r")).as("n_tokens"),
         coalesce(sum(when(col("r") === 1, col("n_r"))), lit(0L)).as("n1"))
@@ -1322,7 +1316,7 @@ object TextQueries extends QueryModule {
         .withColumn("b", element_at(split(col("bg"), " "), 2))
       val tb = bigrams.filter(col("is_train"))
         .groupBy("a", "b").agg(count(lit(1)).as("c12"))
-        .localCheckpoint(true) // ≤V² rows; feeds histories, continuations, totals
+        .checkpointed // ≤V² rows; feeds histories, continuations, totals
       val hist = tb.groupBy("a")
         .agg(sum("c12").as("c1"), count(lit(1)).as("nfw"))
       val cont = tb.groupBy("b").agg(count(lit(1)).as("nbw"))
@@ -1470,7 +1464,7 @@ object TextQueries extends QueryModule {
         .withColumn("r", row_number().over(
           Window.partitionBy("source").orderBy(col("dfw").desc, col("w"))))
         .filter(col("r") <= 10)
-        .localCheckpoint(true) // |sources|×10 rows
+        .checkpointed // |sources|×10 rows
       val tinc = inc.join(broadcast(top), Seq("source", "w"))
       val cooc = tinc.as("a")
         .join(tinc.as("b"), Seq("source", "doc_id"))
@@ -1555,12 +1549,12 @@ object TextQueries extends QueryModule {
   private lazy val krippendorffAlpha = QueryDef(
     "q_krippendorff_alpha",
     (spark, sfDir) => {
-      val conf = langConfusion(spark, sfDir).localCheckpoint(true)
+      val conf = langConfusion(spark, sfDir).checkpointed
       val paired = conf.filter(col("pred") =!= "??")
       val o = paired.select(col("lang").as("a"), col("pred").as("b"), col("n"))
         .union(paired.select(col("pred").as("a"), col("lang").as("b"), col("n")))
         .groupBy("a", "b").agg(sum("n").as("o"))
-        .localCheckpoint(true) // ≤(|langs|)² coincidence cells
+        .checkpointed // ≤(|langs|)² coincidence cells
       val marg = o.groupBy("a").agg(sum("o").as("nc"))
       val tot = o.agg(sum("o").as("nn"),
         sum(when(col("a") === col("b"), col("o")).otherwise(0L)).as("diag"))

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, QueryModule, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge._
 
 /** Warehouse-layout and frontier analytics: skyline (pareto frontier),
   * multi-dimensional histograms, and Z-order (Morton) clustering — the
@@ -700,7 +701,7 @@ object WarehouseQueries extends QueryModule {
           "CAST(user_id % 63 AS INT) AS b")
         .groupBy("event_type", "word")
         .agg(expr("bit_or(shiftleft(1L, b))").as("mask"))
-        .localCheckpoint(true) // the index relation — built once, queried twice
+        .checkpointed // the index relation — built once, queried twice
       val sizes = masks.groupBy("event_type")
         .agg(sum(expr("bit_count(mask)")).cast("long").as("nu"))
       val both = masks.as("a")

@@ -1,62 +1,109 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.classic
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.graftbridge.{ColumnBridge => CB}
+import scala.collection.mutable
 
-/** Bridge for an eager localCheckpoint that KEEPS a hash-partitioning
-  * claim. Under AQE, `Dataset.localCheckpoint` wraps the materialized RDD
-  * in a LogicalRDD whose outputPartitioning is unknown (the adaptive
-  * plan's partitioning is not visible at checkpoint time), so every
-  * downstream operator keyed the same way re-shuffles data that is
-  * ALREADY laid out correctly — for an iterative job that joins a large
-  * checkpointed table per round, that is one full-table exchange per
-  * round for nothing (guide §2.4). The bridge repartitions by the keys
-  * itself and re-declares exactly that partitioning on the flat
-  * LogicalRDD leaf (lineage stays truncated, so the per-round Catalyst
-  * re-analysis cost stays flat — the NOTES #13 constraint that rules out
-  * plain `.cache()` for loop-invariant tables).
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.{CachedRDDBuilder, InMemoryRelation}
+import org.apache.spark.storage.StorageLevel
+
+/** The one place an intermediate is materialized, and the one rule that
+  * releases it.
+  *
+  * Four ways to pin a frame's blocks: [[checkpoint]] (eager local
+  * checkpoint, lineage cut), `checkpoint(df, keys)` (the same, with a
+  * declared hash partitioning), [[truncate]] (plan-level cut, lazily
+  * persisted) and [[cache]]. Each records what it pins in the calling
+  * thread's innermost [[scope]]; outside any scope nothing is recorded
+  * and the caller owns the blocks.
+  *
+  * The rule: when a scope exits, normally or by a throw, it releases
+  * every pin it recorded except those REACHABLE from the frames it
+  * returns, and hands those to the enclosing scope. Reachable means
+  * through the frame's plan leaves (`LogicalRDD` for checkpoints and
+  * truncations, `InMemoryRelation` for caches) and then RDD
+  * dependencies. Reachability, not the order of creation, decides:
+  * a released local checkpoint cannot be recomputed, so a pin a
+  * returned frame still reads must survive however early it was made,
+  * and a pin behind a later checkpoint (whose lineage is cut) is dead
+  * however late. A scope releases only what it recorded, never a block
+  * another thread's scope pinned, so queries can share a session.
+  * (NOTES fact #28.)
   */
 object CheckpointBridge {
 
-  /** Plan-level lineage truncation with LAZY, deadlock-free
-    * materialization (r18): returns a LogicalRDD leaf over the frame's
-    * RDD, `persist`ed so every consumer computes each partition once —
-    * the multi-consumer reuse of a lazy `localCheckpoint(false)` WITHOUT
-    * its RDD-checkpoint machinery. That machinery is the problem:
-    * `RDD.doCheckpoint` runs at the end of EVERY job that touched the
-    * marked RDD, takes the GLOBAL `RDDCheckpointData` class lock, then
-    * the RDD's monitor — while the DAG scheduler resolving the same
-    * RDD's partitions takes them in the OPPOSITE order. With a lazy
-    * checkpoint whose first consumer is a broadcast-exchange thread
-    * (the HITS normalizer shape) the two race and the driver deadlocks
-    * (observed: jstack "Found one Java-level deadlock",
-    * dag-scheduler-event-loop vs broadcast-exchange-44, r18 session).
-    * Plain `persist` has per-block get-or-compute locking only — no
-    * global lock, no job-end hook — and keeps recomputability if blocks
-    * are evicted. Catalyst truncation is identical (LogicalRDD leaf via
-    * the same `fromDataset` Dataset.checkpoint uses, stats preserved);
-    * AQE still materializes the frame's shuffle stages at CREATION time
-    * (inside `toRdd`), so only the final stage is deferred into the
-    * first consumer's job. Callers release the blocks through the same
-    * getPersistentRDDs snapshot hygiene as checkpoints.
-    */
-  def lazyTruncate(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
-    val cdf = df.asInstanceOf[classic.DataFrame]
-    val rdd = cdf.queryExecution.toRdd.map(_.copy())
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    classic.Dataset.ofRows(session,
-      LogicalRDD.fromDataset(rdd, cdf, isStreaming = false))
+  /** One materialization: the RDD ids a plan leaf refers to it by (for
+    * a checkpoint or truncation), or the cache entry's builder (for a
+    * cache), and how to give its blocks back. */
+  private final class Pin(val rddIds: Set[Int], val builder: CachedRDDBuilder,
+      val release: () => Unit)
+
+  /** The pins of the calling thread's innermost scope, or null. Only
+    * that thread touches them. Deliberately not inheritable (as a
+    * DynamicVariable is): threads Spark's pools start while a scope is
+    * open (broadcast exchanges, query-stage creation) would inherit it,
+    * record into it after it has exited, and keep its pins' plans and
+    * RDDs reachable for as long as they live. */
+  private val current = new ThreadLocal[mutable.ArrayBuffer[Pin]]
+
+  private def record(pin: Pin): Unit = Option(current.get).foreach(_ += pin)
+
+  /** Runs `body` as one materialization scope (see the object doc):
+    * pins `body` records that its result cannot reach are released on
+    * exit, the rest pass to the enclosing scope. The result's frames are
+    * found in a Dataset, or inside tuples, Options and collections. */
+  def scope[T](body: => T): T = {
+    val outer = current.get
+    val pins = mutable.ArrayBuffer.empty[Pin]
+    current.set(pins)
+    var result: Option[T] = None
+    try {
+      result = Some(body)
+      result.get
+    } finally {
+      current.set(outer)
+      val live = result.fold((_: Pin) => false)(r => reachable(frames(r)))
+      val (kept, dropped) = pins.partition(live)
+      dropped.foreach(_.release())
+      Option(outer).foreach(_ ++= kept)
+    }
   }
 
-  /** Eagerly localCheckpoints `df` hash-repartitioned by `keys` and
-    * returns a frame whose leaf declares HashPartitioning(keys, n): a
-    * downstream join or aggregation clustered by `keys` (or a superset)
-    * adds no exchange on this side. The claim is true by construction:
-    * the repartition runs inside this call, immediately before the
-    * checkpoint.
+  /** Releases, now, the current scope's pins that `df` itself stands on:
+    * its cache entry if its plan is cached, else the checkpoints and
+    * truncations at its plan's leaves — not what those were built from.
+    * For a loop that no longer reads its previous round, or a function
+    * done with a cache before its scope ends. */
+  def release(df: DataFrame): Unit = Option(current.get).foreach { pins =>
+    val own = cacheEntry(df)
+    val leaves = if (own.isDefined) Set.empty[Int]
+      else qe(df).analyzed.collectLeaves().collect { case l: LogicalRDD => l.rdd.id }.toSet
+    val (mine, rest) = pins.partition(p => p.rddIds.exists(leaves) || own.exists(_ eq p.builder))
+    pins.clear(); pins ++= rest
+    mine.foreach(_.release())
+  }
+
+  /** Eager local checkpoint: the frame is computed now and its lineage
+    * cut, so later plans over it stay one leaf deep (NOTES #13). */
+  def checkpoint[T](ds: Dataset[T]): Dataset[T] = {
+    val ck = ds.localCheckpoint(true)
+    val rdd = leafRdd(ck)
+    record(new Pin(Set(rdd.id), null, () => rdd.unpersist(blocking = false)))
+    ck
+  }
+
+  /** Eager local checkpoint of `df` hash-repartitioned by `keys`, whose
+    * leaf declares HashPartitioning(keys, n): a downstream join or
+    * aggregation clustered by `keys` (or a superset) adds no exchange on
+    * this side. Under AQE a plain checkpoint's leaf has unknown
+    * partitioning, so an iterative job joining a large checkpointed
+    * table per round would re-shuffle it every round (guide §2.4). The
+    * claim is true by construction: the repartition runs inside this
+    * call, immediately before the checkpoint.
     *
     * n is the session's `numShufflePartitions` (under AQE the
     * `coalescePartitions.initialPartitionNum` when that is set), passed
@@ -66,24 +113,132 @@ object CheckpointBridge {
     * lets AQE coalesce it (to 1 partition on small inputs); a declared
     * count below the other side's exchange count makes EnsureRequirements
     * re-shuffle the declared leaf to match (NOTES fact #27), the very
-    * exchange this bridge exists to remove. AQE never coalesces a
-    * repartition by number, so the count declared is the count written.
+    * exchange this exists to remove. AQE never coalesces a repartition
+    * by number, so the count declared is the count written.
     */
-  def localCheckpointPartitionedBy(df: org.apache.spark.sql.DataFrame,
-      keys: Seq[String]): org.apache.spark.sql.DataFrame = {
+  def checkpoint(df: DataFrame, keys: Seq[String]): DataFrame = {
     val session = df.sparkSession.asInstanceOf[classic.SparkSession]
     val n = session.sessionState.conf.numShufflePartitions
     val ck = df.repartition(n, keys.map(df.col): _*).localCheckpoint(true)
       .asInstanceOf[classic.DataFrame]
+    val pinned = leafRdd(ck)
     val attrs = ck.queryExecution.analyzed.output
     val keyAttrs = keys.map(k => attrs.find(_.name == k).getOrElse(
       throw new IllegalArgumentException(s"no column $k in ${attrs.map(_.name)}")))
     val rdd = ck.queryExecution.toRdd
     require(rdd.getNumPartitions == n,
       s"checkpoint has ${rdd.getNumPartitions} partitions, declared $n")
-    val part = HashPartitioning(keyAttrs, n)
+    record(new Pin(Set(pinned.id, rdd.id), null, () => pinned.unpersist(blocking = false)))
     classic.Dataset.ofRows(session,
-      LogicalRDD(attrs, rdd, part, Nil, isStreaming = false, None)(
+      LogicalRDD(attrs, rdd, HashPartitioning(keyAttrs, n), Nil, isStreaming = false, None)(
         session, None, None))
+  }
+
+  /** Plan-level lineage truncation with LAZY, deadlock-free
+    * materialization: a LogicalRDD leaf over the frame's RDD, persisted
+    * so every consumer computes each partition once — the multi-consumer
+    * reuse of a lazy `localCheckpoint(false)` WITHOUT its RDD-checkpoint
+    * machinery. That machinery is the problem: `RDD.doCheckpoint` runs
+    * at the end of EVERY job that touched the marked RDD, takes the
+    * GLOBAL `RDDCheckpointData` class lock, then the RDD's monitor —
+    * while the DAG scheduler resolving the same RDD's partitions takes
+    * them in the OPPOSITE order. With a lazy checkpoint whose first
+    * consumer is a broadcast-exchange thread (the HITS normalizer shape)
+    * the two race and the driver deadlocks (observed: jstack "Found one
+    * Java-level deadlock", dag-scheduler-event-loop vs
+    * broadcast-exchange-44). Plain `persist` has per-block
+    * get-or-compute locking only — no global lock, no job-end hook — and
+    * keeps recomputability if blocks are evicted. Catalyst truncation is
+    * identical (LogicalRDD leaf via the same `fromDataset`
+    * Dataset.checkpoint uses, stats preserved); AQE still materializes
+    * the frame's shuffle stages at CREATION time (inside `toRdd`), so
+    * only the final stage is deferred into the first consumer's job.
+    * The lineage stays whole, so whatever the truncated frame was built
+    * from stays reachable through it (and is kept by a scope returning
+    * it).
+    */
+  def truncate(df: DataFrame): DataFrame = {
+    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val cdf = df.asInstanceOf[classic.DataFrame]
+    val rdd = cdf.queryExecution.toRdd.map(_.copy())
+    rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    record(new Pin(Set(rdd.id), null, () => rdd.unpersist(blocking = false)))
+    classic.Dataset.ofRows(session,
+      LogicalRDD.fromDataset(rdd, cdf, isStreaming = false))
+  }
+
+  /** Builders of cache entries made through [[cache]] inside a scope,
+    * with the number of live pins on each: two scopes caching the same
+    * plan share one entry, and only the last release drops it. An entry
+    * that existed before (cached by someone else) is not recorded. */
+  private val cacheOwners = new java.util.IdentityHashMap[CachedRDDBuilder, Integer]()
+
+  /** `Dataset.cache()`: lazy, filled by the first action that reads it,
+    * and substituted into any later plan with the same result. */
+  def cache[T](ds: Dataset[T]): Dataset[T] =
+    if (current.get == null) ds.cache()
+    else {
+      val builder = cacheOwners.synchronized {
+        val foreign = cacheEntry(ds).exists(b => !cacheOwners.containsKey(b))
+        ds.cache()
+        val b = cacheEntry(ds).get
+        if (foreign) null
+        else { cacheOwners.put(b, cacheOwners.getOrDefault(b, 0) + 1); b }
+      }
+      if (builder != null)
+        record(new Pin(Set.empty, builder, () => cacheOwners.synchronized {
+          val left = cacheOwners.get(builder) - 1
+          if (left > 0) cacheOwners.put(builder, left)
+          else { cacheOwners.remove(builder); ds.unpersist(blocking = false) }
+        }))
+      ds
+    }
+
+  /** Postfix forms of the four materializations, for method chains. */
+  implicit class Materializing[T](private val ds: Dataset[T]) extends AnyVal {
+    def checkpointed: Dataset[T] = checkpoint(ds)
+    def checkpointedBy(keys: String*): DataFrame = checkpoint(ds.toDF(), keys)
+    def truncated: DataFrame = truncate(ds.toDF())
+    def cached: Dataset[T] = cache(ds)
+  }
+
+  private def qe(df: Dataset[_]) = df.asInstanceOf[classic.Dataset[_]].queryExecution
+
+  private def leafRdd(ck: Dataset[_]): RDD[_] = qe(ck).analyzed match {
+    case l: LogicalRDD => l.rdd
+    case p => throw new IllegalStateException(s"checkpoint leaf is not a LogicalRDD: $p")
+  }
+
+  private def cacheEntry(ds: Dataset[_]): Option[CachedRDDBuilder] = {
+    val cdf = ds.asInstanceOf[classic.Dataset[_]]
+    cdf.sparkSession.sharedState.cacheManager.lookupCachedData(cdf)
+      .map(_.cachedRepresentation.cacheBuilder)
+  }
+
+  /** Frames in a scope's result. */
+  private def frames(v: Any): Seq[Dataset[_]] = v match {
+    case d: Dataset[_] => Seq(d)
+    case xs: IterableOnce[_] => xs.iterator.flatMap(frames).toSeq
+    case p: Product => p.productIterator.flatMap(frames).toSeq
+    case _ => Nil
+  }
+
+  /** Whether frames `fs` can still read a pin: through their plan
+    * leaves, then RDD dependencies. */
+  private def reachable(fs: Seq[Dataset[_]]): Pin => Boolean = {
+    val rdds = mutable.Set.empty[Int]
+    val builders = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[CachedRDDBuilder, java.lang.Boolean]())
+    def rdd(r: RDD[_]): Unit =
+      if (rdds.add(r.id)) r.dependencies.foreach(d => rdd(d.rdd))
+    def plan(p: LogicalPlan): Unit = p.foreachWithSubqueries {
+      case l: LogicalRDD => rdd(l.rdd)
+      case m: InMemoryRelation if builders.add(m.cacheBuilder) =>
+        if (m.cacheBuilder.isCachedColumnBuffersLoaded) rdd(m.cacheBuilder.cachedColumnBuffers)
+        plan(m.cacheBuilder.logicalPlan)
+      case _ =>
+    }
+    fs.foreach(f => plan(qe(f).withCachedData))
+    p => p.rddIds.exists(rdds) || builders.contains(p.builder)
   }
 }

@@ -17,11 +17,14 @@ import org.scalatest.concurrent.Eventually
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
 
-/** The claim `CheckpointBridge.localCheckpointPartitionedBy` makes, and
-  * what it buys an iterative loop: the frame's leaf declares
-  * HashPartitioning(keys, n) with n the session's shuffle-partition count,
-  * every row really sits in that partition, and a consuming plan adds no
-  * exchange over the declared leaf.
+/** The claims `CheckpointBridge` makes. The partitioned checkpoint
+  * `checkpoint(df, keys)`, and what it buys an iterative loop: the
+  * frame's leaf declares HashPartitioning(keys, n) with n the session's
+  * shuffle-partition count, every row really sits in that partition, and
+  * a consuming plan adds no exchange over the declared leaf. And the
+  * release rule of `scope`: on exit, normal or thrown, a scope releases
+  * the pins it recorded that its result cannot reach, and hands the rest
+  * to the enclosing scope.
   */
 class CheckpointBridgeSpec extends AnyFunSuite with SparkFixture
     with AdaptiveSparkPlanHelper with Eventually {
@@ -49,7 +52,7 @@ class CheckpointBridgeSpec extends AnyFunSuite with SparkFixture
     for ((initial, n) <- Seq(None -> 4, Some("7") -> 7);
          keys <- Seq(Seq("k"), Seq("k", "j")))
       withConf(Aqe -> Some("true"), InitialNum -> initial) {
-        val ck = CheckpointBridge.localCheckpointPartitionedBy(df, keys)
+        val ck = CheckpointBridge.checkpoint(df, keys)
         val declared = ck.queryExecution.analyzed.collectLeaves().collect {
           case l: LogicalRDD => l.outputPartitioning
         }
@@ -115,5 +118,109 @@ class CheckpointBridgeSpec extends AnyFunSuite with SparkFixture
       assert(bad.isEmpty,
         s"exchanges over a declared checkpoint leaf:\n${bad.mkString("\n")}\nplan:\n$loop")
     }
+  }
+
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("a scope keeps only what its result reaches, and passes that to the enclosing scope") {
+    import spark.implicits._
+    import CheckpointBridge._
+    val base = (0L until 50L).toDF("x")
+    val before = persisted
+    val (kept, innerLeft) = scope {
+      val (out, left) = {
+        val r = scope {
+          val a = base.filter($"x" % 2 === 0).checkpointed
+          val lazyOverA = a.select(($"x" + 1).as("y"))
+          val b = lazyOverA.checkpointed // lineage cut: a is not reachable from b
+          val t = b.truncated // persisted, lineage whole: b stays reachable through t
+          val c = base.cached
+          assert(c.count() == 50)
+          t.select($"y")
+        }
+        (r, persisted -- before)
+      }
+      // b and t survive (t's lineage reaches b); a and the cache are gone
+      assert(out.collect().map(_.getLong(0)).sorted.toSeq == (1L until 50L by 2).toSeq)
+      (out.count(), left)
+    }
+    assert(kept == 25)
+    assert(innerLeft.size == 2, s"inner scope left $innerLeft, want b and t only")
+    assert(spark.sharedState.cacheManager.lookupCachedData(
+      base.asInstanceOf[org.apache.spark.sql.classic.DataFrame]).isEmpty)
+    assert(persisted -- before == Set.empty, "the outer scope returned no frame, so it releases all")
+  }
+
+  test("a scope releases every pin it recorded when its body throws") {
+    import spark.implicits._
+    import CheckpointBridge._
+    val before = persisted
+    intercept[IllegalStateException] {
+      scope {
+        val a = (0L until 10L).toDF("x").checkpointed
+        a.select($"x").truncated.count()
+        (0L until 10L).toDF("z").checkpointedBy("z").count()
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(persisted -- before == Set.empty)
+  }
+
+  test("release drops a frame's own pin now, not what it was built from") {
+    import spark.implicits._
+    import CheckpointBridge._
+    val before = persisted
+    scope {
+      val a = (0L until 10L).toDF("x").checkpointed
+      val b = a.filter($"x" > 4).checkpointed
+      val c = a.filter($"x" < 3).checkpointedBy("x")
+      val d = a.select(($"x" * 2).as("y")).cached
+      assert(d.count() == 10)
+      release(b)
+      release(c)
+      release(d) // the cache only: a, which d was built from, stays
+      assert((persisted -- before).size == 1, "only a's checkpoint is left")
+      assert(a.count() == 10)
+    }
+    assert(persisted -- before == Set.empty)
+  }
+
+  test("scopes caching the same plan share one entry until the last releases it") {
+    import spark.implicits._
+    import CheckpointBridge._
+    val df = (0L until 20L).toDF("x").filter($"x" > 3)
+    val cm = spark.sharedState.cacheManager
+    def cached: Boolean =
+      cm.lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.DataFrame]).isDefined
+    scope {
+      df.cached.count()
+      scope { df.cached.count() }
+      assert(cached, "the inner scope must not drop the outer scope's cache")
+    }
+    assert(!cached)
+    // a cache made outside the bridge is not the bridge's to drop
+    df.cache()
+    try {
+      scope { df.cached.count() }
+      assert(cached)
+    } finally df.unpersist()
+  }
+
+  test("a thread started inside a scope does not record into it") {
+    import spark.implicits._
+    import CheckpointBridge._
+    val before = persisted
+    var child: org.apache.spark.sql.DataFrame = null
+    scope {
+      val t = new Thread(() => child = (0L until 5L).toDF("x").checkpointed)
+      t.start(); t.join()
+    }
+    // not the scope's pin: a pool thread started inside a scope outlives
+    // it, and must neither record into it nor keep its pins reachable
+    val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    try {
+      assert(left.size == 1)
+      assert(child.count() == 5)
+    } finally left.values.foreach(_.unpersist(blocking = true))
   }
 }

@@ -335,6 +335,41 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
       s"3 fixed rounds ($eig3) must sit farther from λ₁ than the loop ($eigN)")
   }
 
+  test("a convergence loop that gives up past maxRounds releases every block it pinned") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    def leavesNothing(name: String)(run: => Any): Unit = {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val e = intercept[IllegalStateException](run)
+      val left = sc.getPersistentRDDs.keySet.toSet -- before
+      assert(left.isEmpty, s"$name threw (${e.getMessage}) and left ${left.size} persisted RDDs")
+    }
+    // the slow-mixing cycle, the pendant chain, the narrow spectrum and
+    // the triangulated lattice of the tests above: each needs more than
+    // one round, so maxRounds = 1 makes every loop throw after pinning
+    val cyc = ((0 until 30).map(i => (i.toLong, ((i + 1) % 30).toLong))
+      :+ (0L, 15L)).toDF("src", "dst")
+    leavesNothing("pageRankConverged")(
+      operators.GraphQueries.pageRankConverged(cyc, 1e-3, maxRounds = 1))
+    val chain = (Seq((1L, 2L), (2L, 3L), (3L, 1L)) ++
+      (0 until 8).map(i => (if (i == 0) 1L else 100L + i, 101L + i))).toDF("src", "dst")
+    val sym = chain.unionByName(chain.select(col("dst").as("src"), col("src").as("dst")))
+    leavesNothing("kcoreConverged")(
+      operators.GraphQueries.kcoreConverged(sym, 2, maxRounds = 1))
+    val narrow = Seq((1L, 1L, 4.0), (2L, 2L, 3.2), (3L, 3L, 1.0), (4L, 4L, 0.5))
+      .toDF("i", "j", "c")
+    leavesNothing("powerIterationConverged")(
+      operators.StatQueries.powerIterationConverged(narrow, 1e-4, maxRounds = 1))
+    def vid(r: Int, c: Int): Long = (r * 100 + c).toLong
+    val lattice = (for {
+      r <- 0 to 8; c <- 0 to 8
+      (dr, dc) <- Seq((0, 1), (1, 0), (1, 1))
+      if r + dr <= 8 && c + dc <= 8
+    } yield (vid(r, c), vid(r + dr, c + dc))).toDF("a", "b")
+    leavesNothing("ktrussConverged")(
+      operators.GraphQueries.ktrussConverged(lattice, 4, maxRounds = 1))
+  }
+
   test("pointer-jumping CC labels disjoint components independently") {
     import spark.implicits._
     // two triangles + an isolated edge — labels must be each component's min

@@ -17,4 +17,33 @@ class RegistrySpec extends AnyFunSuite {
   test("every oracle belongs to a registered query") {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
+
+  /** One way to materialize: every checkpoint, truncation and cache in
+    * the query operators and the two runners goes through
+    * `org.apache.spark.sql.graftbridge.CheckpointBridge`, which records
+    * what it pins in the caller's materialization scope and releases it.
+    * A raw `localCheckpoint`, `cache()` or `persist` here would pin
+    * blocks no scope knows about, and a `getPersistentRDDs` diff would
+    * release blocks another query's scope still needs. Out of scope, on
+    * purpose: the per-micro-batch `persist`/`unpersist` pairs inside the
+    * `foreachBatch` bodies of `graft.streaming.StreamingJobs`, and the
+    * self-contained merge loop of `graft.functions.Bpe`, which each
+    * release what they pin before returning.
+    */
+  test("the operators and runners materialize only through CheckpointBridge") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val operators = Files.list(Paths.get("src/main/scala/graft/operators")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val files: Seq[Path] = operators ++
+      Seq("Bench.scala", "Verify.scala").map(f => Paths.get("src/main/scala/graft", f))
+    assert(operators.size > 10, s"operator sources not found from ${Paths.get("").toAbsolutePath}")
+    val banned = Seq("getPersistentRDDs", ".localCheckpoint(", ".cache()", ".persist(")
+    val hits = for {
+      f <- files
+      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
+      b <- banned if line.contains(b)
+    } yield s"${f.getFileName}:${n + 1}: $b"
+    assert(hits.isEmpty, s"materialization outside the bridge:\n${hits.mkString("\n")}")
+  }
 }
