@@ -12,13 +12,8 @@ object Bench {
       // the NTZ→LTZ events normalization (Tables.normalizeEventTs) is only
       // value-preserving under a UTC session zone — pin it like Verify does
       .config("spark.sql.session.timeZone", "UTC")
-      // AQE stays on (the at-scale configuration); knob for measuring its
-      // small-data planning overhead locally
-      .config("spark.sql.adaptive.enabled", {
-        val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true").toLowerCase
-        require(aqe == "true" || aqe == "false", s"SPARK_GRAFT_AQE must be true|false, got $aqe")
-        aqe
-      })
+      // AQE stays on (the at-scale configuration)
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       // 92+ back-to-back queries in one 8g JVM: bound the status-store and
       // generated-class retention so late queries aren't taxed by the early
@@ -192,7 +187,6 @@ object Bench {
     // ~90 queries' broadcasts pile up in the 8g heap and mid-run queries
     // pay 10-20× their isolated time in GC stalls (the r2 q_dead_letter
     // 23.8 s-vs-1.03 s anomaly). Runs OUTSIDE the timed window.
-    val interGc = sys.env.getOrElse("SPARK_GRAFT_BENCH_GC", "true").toBoolean
     var gcInQueries = 0L
     def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         recordFailure: Boolean): Double = {
@@ -208,7 +202,7 @@ object Bench {
       }
       val gcDt = gcMillis - gc0
       gcInQueries += gcDt
-      if (interGc) System.gc()
+      System.gc()
       System.err.println(
         f"[bench] $name%-28s $dt%7.2f s  gc=$gcDt%4d ms  heap=${heapUsedMb}%5d MB")
       dt
@@ -308,11 +302,9 @@ object Bench {
     // (EWMA/SPC/CUSUM/drift/SCD2) consume tiny day×type tables where
     // rows/s is meaningless, and the doc-driven processors (topK,
     // inverted index) read a different corpus — all are
-    // equivalence-spec'd in ScaleSmokeSpec instead. SPARK_GRAFT_BENCH_PROCS=0
-    // disables the sweep.
+    // equivalence-spec'd in ScaleSmokeSpec instead.
     val perProcessor: Seq[(String, Long)] =
-      if (sys.env.get("SPARK_GRAFT_BENCH_PROCS").contains("0")) Seq.empty
-      else stagedIn.map { in =>
+      stagedIn.map { in =>
         import spark.implicits._
         import org.apache.spark.sql.functions.{col, lit, pmod}
         import streaming.StreamingJobs
@@ -455,7 +447,7 @@ object Bench {
       f"start=$probeShStart%.3f mid=$probeShMid%.3f end=$probeShEnd%.3f -> " +
       f"$noiseProbeShuffleSec%.3f s")
     val failedSet0 = failed.toSet
-    val rerunN = sys.env.getOrElse("SPARK_GRAFT_BENCH_RERUN_N", "24").toInt
+    val rerunN = 24
     val slowestN = results.collect { case (k, v) if !failedSet0(k) => (k, v) }
       .toSeq.sortBy { case (k, v) => (-v, k) }.take(rerunN)
     // Adaptive retime (r13 close-out lesson): the ±40% ambient noise
@@ -526,49 +518,48 @@ object Bench {
     // Grouped mode: the per-query loop pays a ~0.9 s plan+schedule floor
     // per query, which at 200+ queries dominates the total and measures
     // Spark session scheduling, not the engine. The grouped pass runs the
-    // suite in waves of SPARK_GRAFT_BENCH_GROUP queries: each wave builds
-    // its members' frames (serially — iterative queries run their eager
-    // per-round actions here), normalizes each to a 1-row count aggregate,
-    // and evaluates the whole wave as ONE union job so the scheduler
-    // overlaps the members' stages. grouped_total is the amortized-floor
-    // companion to `total`; 0 disables.
-    val groupN = sys.env.getOrElse("SPARK_GRAFT_BENCH_GROUP", "8").toInt
+    // suite in waves of groupN queries: each wave builds its members'
+    // frames (serially — iterative queries run their eager per-round
+    // actions here), normalizes each to a 1-row count aggregate, and
+    // evaluates the whole wave as ONE union job so the scheduler overlaps
+    // the members' stages. grouped_total is the amortized-floor companion
+    // to `total`.
+    //
+    // Each member is reduced to sum(xxhash64(all columns)), NOT count(1):
+    // a bare count lets ColumnPruning drop every projection expression
+    // (and the scan's columns) so map-heavy queries would measure ~0
+    // work. Hashing the full output row keeps each query's expressions
+    // and reads live. Trailing ORDER BYs are still eliminated under the
+    // aggregate (EliminateSorts) — grouped_total measures the unsorted
+    // dataflow, stated here so the serial/grouped gap is interpreted
+    // correctly.
+    val groupN = 8
     val failedSetG = failed.toSet
-    val groupedTotal: Option[Double] =
-      if (groupN <= 1) None
-      else {
-        // reduce each member to sum(xxhash64(all columns)), NOT count(1):
-        // a bare count lets ColumnPruning drop every projection expression
-        // (and the scan's columns) so map-heavy queries would measure ~0
-        // work. Hashing the full output row keeps each query's expressions
-        // and reads live. Trailing ORDER BYs are still eliminated under
-        // the aggregate (EliminateSorts) — grouped_total measures the
-        // unsorted dataflow, stated here so the serial/grouped gap is
-        // interpreted correctly.
-        import org.apache.spark.sql.functions.{col => gcol, struct => gstruct,
-          sum => gsum, xxhash64 => gxx}
-        var tot = 0.0
-        results.collect { case (k, _) if !failedSetG(k) => k }
-          .toSeq.sorted.grouped(groupN).foreach { wave =>
-            val dt = scope {
-              val t0 = System.nanoTime()
-              try {
-                wave.map { n =>
-                  val q = SparkEntry.queries(n)(spark, sfDir)
-                  q.agg(gsum(gxx(gstruct(q.columns.map(gcol): _*))))
-                }.reduce(_.unionAll(_)).count()
-              } catch { case e: Throwable =>
-                System.err.println(s"[bench] grouped wave ${wave.head}.. FAILED: ${e.getMessage}")
-              }
-              (System.nanoTime() - t0) / 1e9
+    val groupedTotal = {
+      import org.apache.spark.sql.functions.{col => gcol, struct => gstruct,
+        sum => gsum, xxhash64 => gxx}
+      var tot = 0.0
+      results.collect { case (k, _) if !failedSetG(k) => k }
+        .toSeq.sorted.grouped(groupN).foreach { wave =>
+          val dt = scope {
+            val t0 = System.nanoTime()
+            try {
+              wave.map { n =>
+                val q = SparkEntry.queries(n)(spark, sfDir)
+                q.agg(gsum(gxx(gstruct(q.columns.map(gcol): _*))))
+              }.reduce(_.unionAll(_)).count()
+            } catch { case e: Throwable =>
+              System.err.println(s"[bench] grouped wave ${wave.head}.. FAILED: ${e.getMessage}")
             }
-            tot += dt
-            System.err.println(
-              f"[bench] grouped wave ${wave.head}%-24s +${wave.size - 1} others $dt%7.2f s")
-            if (interGc) System.gc()
+            (System.nanoTime() - t0) / 1e9
           }
-        Some(tot)
-      }
+          tot += dt
+          System.err.println(
+            f"[bench] grouped wave ${wave.head}%-24s +${wave.size - 1} others $dt%7.2f s")
+          System.gc()
+        }
+      tot
+    }
     val streamEps = if (streamSec > 0) streamRows / streamSec else 0.0
     // 3-decimal (millisecond) precision for per-query times
     def ms3(v: Double): String =
@@ -626,9 +617,7 @@ object Bench {
       val qjson = qs.map { case (k, v) => "\"" + k + "\":" + ms3(v) }
         .mkString("{", ",", "}")
       val om = if (omitted > 0) s""","queries_omitted":$omitted,"queries_full":"BENCH_LOCAL.json"""" else ""
-      val grouped = groupedTotal
-        .map(g => s""","grouped_total":${ms3(g)},"group_n":$groupN""").getOrElse("")
-      s"""{"metric":"total","value":${ms3(total)},"unit":"sec","queries":$qjson,"queries_basis":"best_of_2_for_${rerunN}_slowest_plus_${suspects.size}_adaptive_first_run_rest"$om,"failures":$failures,"gc_in_queries_sec":${ms3(gcInQueries / 1e3)},"stream_rows":$streamRows,"stream_rows_per_sec":${streamEps.round},"median_batch_rows_per_sec":${streamMedianEps.round}$procJson$slowestJson,"steady_state_total":${ms3(steadyTotal)},"noise_probe_sec":${ms3(noiseProbeSec)},"noise_index":${ms3(noiseIndex)},"noise_probe_shuffle_sec":${ms3(noiseProbeShuffleSec)},"noise_index_shuffle":${ms3(noiseIndexShuffle)},"steady_state_total_noise_adj":${ms3(steadyNoiseAdj)}$grouped,"sf":"$sfDir","total_sec":${ms3(total)},"warm_failures":$warmFailures}"""
+      s"""{"metric":"total","value":${ms3(total)},"unit":"sec","queries":$qjson,"queries_basis":"best_of_2_for_${rerunN}_slowest_plus_${suspects.size}_adaptive_first_run_rest"$om,"failures":$failures,"gc_in_queries_sec":${ms3(gcInQueries / 1e3)},"stream_rows":$streamRows,"stream_rows_per_sec":${streamEps.round},"median_batch_rows_per_sec":${streamMedianEps.round}$procJson$slowestJson,"steady_state_total":${ms3(steadyTotal)},"noise_probe_sec":${ms3(noiseProbeSec)},"noise_index":${ms3(noiseIndex)},"noise_probe_shuffle_sec":${ms3(noiseProbeShuffleSec)},"noise_index_shuffle":${ms3(noiseIndexShuffle)},"steady_state_total_noise_adj":${ms3(steadyNoiseAdj)},"grouped_total":${ms3(groupedTotal)},"group_n":$groupN,"sf":"$sfDir","total_sec":${ms3(total)},"warm_failures":$warmFailures}"""
     }
     // canonical per-query values: best-of-2 where a rerun exists
     val bySlowest = results.map { case (k, v) =>

@@ -22,7 +22,8 @@ object Tables {
   }
 
   /** Session confs that change what parquet schema inference returns for
-    * the same file (`nanosAsLong` is what [[events]] flips). */
+    * the same file (`nanosAsLong` is what [[events]] sets for a nanos
+    * `ts`). */
   private val inferenceConfs = Seq(
     "spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.parquet.inferTimestampNTZ.enabled")
@@ -68,9 +69,10 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
-  /** `events.ts` is parquet TIMESTAMP(NANOS,ntz), which Spark 4.x refuses to
-    * read natively (PARQUET_TYPE_ILLEGAL). Read it as long nanos via the
-    * legacy conf (runtime-settable) and convert to a microsecond timestamp.
+  /** `events.ts` was parquet TIMESTAMP(NANOS,ntz), which Spark 4.x refuses to
+    * read natively (PARQUET_TYPE_ILLEGAL). Such a file is read as long nanos
+    * via the legacy conf ([[readNanosTsAsLong]]) and converted to a
+    * microsecond timestamp.
     * The conversion uses integer `div`, NOT double division: nanosecond
     * epochs (~1.7e18) exceed 2^53, so a round-trip through double would
     * corrupt low-order digits. Lossless on this data (no sub-µs components).
@@ -81,8 +83,38 @@ object Tables {
     * TimestampType column every downstream query expects.
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    readNanosTsAsLong(spark, Seq(s"$sfDir/events.parquet"))
     normalizeEventTs(table(spark, sfDir, "events"))
+  }
+
+  /** Sets the session's legacy `nanosAsLong` conf when one of `paths`
+    * (parquet files, or directories of them) stores `ts` as
+    * TIMESTAMP(NANOS), and only then: any other encoding leaves the
+    * session conf, and with it the schema cache key and every later
+    * parquet read, as it was. The footers are read on the driver, which
+    * starts no Spark job. */
+  private[graft] def readNanosTsAsLong(spark: SparkSession, paths: Seq[String]): Unit = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    val conf = spark.sparkContext.hadoopConfiguration
+    def dataFile(path: String): Option[org.apache.hadoop.fs.Path] = {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val fs = p.getFileSystem(conf)
+      if (!fs.getFileStatus(p).isDirectory) Some(p)
+      else fs.listStatus(p).map(_.getPath)
+        .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
+    }
+    def nanosTs(f: org.apache.hadoop.fs.Path): Boolean = {
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+      val schema = try reader.getFooter.getFileMetaData.getSchema finally reader.close()
+      schema.containsField("ts") &&
+        (schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+          case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+          case _ => false
+        })
+    }
+    if (paths.flatMap(dataFile).exists(nanosTs))
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
   }
 
   /** Normalize an events frame's `ts` to session-UTC TimestampType across

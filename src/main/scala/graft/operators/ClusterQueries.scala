@@ -93,6 +93,28 @@ object ClusterQueries extends QueryModule {
          SELECT * FROM ${DedupQueries.plantsSql}),
        $edgesChainSql"""
 
+  /** One full label round relative to `prev`: neighbor-min + 3 pointer
+    * jumps through prev, returning (id, old, lbl) with old = prev's
+    * label. Factored out of [[connectedComponents]], which runs it twice
+    * per eager job.
+    */
+  private[graft] def ccRound(adj: DataFrame, prev: DataFrame): DataFrame = {
+    val nbrMin = adj.join(prev, adj("b") === prev("id"))
+      .groupBy(col("a")).agg(min(col("lbl")).as("nlbl"))
+    var cur = prev.join(nbrMin, prev("id") === nbrMin("a"), "left")
+      .select(col("id"), col("lbl").as("old"),
+        least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
+    // chase the label's own label through the previous round's table
+    // (labels are always node ids, so the lookup always hits)
+    for (_ <- 1 to 3) {
+      val p = prev.select(col("id").as("pid"), col("lbl").as("plbl"))
+      cur = cur.join(p, cur("lbl") === p("pid"), "left")
+        .select(cur("id"), cur("old"),
+          least(cur("lbl"), coalesce(col("plbl"), cur("lbl"))).as("lbl"))
+    }
+    cur
+  }
+
   /** Connected components over an undirected adjacency list `adj(a, b)`
     * (both directions present). TWO rounds run per eager job (the second
     * rides a lazy mid-round localCheckpoint — see the loop body), and
@@ -126,28 +148,6 @@ object ClusterQueries extends QueryModule {
     * past maxRounds it fails loudly rather than emit unconverged (wrong)
     * components.
     */
-  /** One full label round relative to `prev`: neighbor-min + 3 pointer
-    * jumps through prev, returning (id, old, lbl) with old = prev's
-    * label. Factored out of [[connectedComponents]], which runs it twice
-    * per eager job (the committed round plans are under plans/r18).
-    */
-  private[graft] def ccRound(adj: DataFrame, prev: DataFrame): DataFrame = {
-    val nbrMin = adj.join(prev, adj("b") === prev("id"))
-      .groupBy(col("a")).agg(min(col("lbl")).as("nlbl"))
-    var cur = prev.join(nbrMin, prev("id") === nbrMin("a"), "left")
-      .select(col("id"), col("lbl").as("old"),
-        least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
-    // chase the label's own label through the previous round's table
-    // (labels are always node ids, so the lookup always hits)
-    for (_ <- 1 to 3) {
-      val p = prev.select(col("id").as("pid"), col("lbl").as("plbl"))
-      cur = cur.join(p, cur("lbl") === p("pid"), "left")
-        .select(cur("id"), cur("old"),
-          least(cur("lbl"), coalesce(col("plbl"), cur("lbl"))).as("lbl"))
-    }
-    cur
-  }
-
   def connectedComponents(adj: DataFrame, maxRounds: Int = 50): (DataFrame, Int) = scope {
     var labels = adj.select(col("a").as("id")).distinct()
       .withColumn("lbl", col("id"))

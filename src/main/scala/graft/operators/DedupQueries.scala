@@ -376,23 +376,13 @@ object DedupQueries extends QueryModule {
     * exchanges (the shingle exchange carries ~60× more bytes/doc; guide
     * §2.2 targets 100 MB–1 GB/partition) puts the per-partition hash map
     * at tens of MB. Skewed band keys are split by AQE's skew-join
-    * handling, which covers shuffled-hash joins (guide §2.5). For
-    * deployments where executor memory per task cannot hold that build
-    * (Spark's SHJ build map does not spill), the strategy is a knob:
-    * `spark.graft.lsh.bandJoin = merge` plans the same single-pipeline
-    * shape as a sort-merge join (the two sides' exchanges stay
-    * canonically identical, so ReuseExchange still runs the signature
-    * pipeline once; SMJ spills gracefully) — plan dump committed at
-    * plans/r18/q_dedup_minhash_mergeknob.txt. Default stays shuffle_hash:
-    * no sort, and the bench basis is unchanged.
+    * handling, which covers shuffled-hash joins (guide §2.5).
     */
   private def bandPairsFromWide(wide: DataFrame): DataFrame = {
     val bands = bandKeysFromWide(wide)
     val a = bands.select(col("band"), col("band_key"), col("doc_id").as("d1"))
     val b = bands.select(col("band"), col("band_key"), col("doc_id").as("d2"))
-    val strategy = wide.sparkSession.conf.get("spark.graft.lsh.bandJoin",
-      sys.env.getOrElse("SPARK_GRAFT_LSH_BANDJOIN", "shuffle_hash"))
-    a.hint(strategy).join(b, Seq("band", "band_key"))
+    a.hint("shuffle_hash").join(b, Seq("band", "band_key"))
       .filter(col("d1") < col("d2"))
       .select(col("d1"), col("d2"))
       .distinct()

@@ -685,16 +685,6 @@ object GraphQueries extends QueryModule {
       FROM deg GROUP BY 1 ORDER BY 1
     """))
 
-  /** k-core peeling (k=100, 3 unrolled rounds) over the co-purchase
-    * graph: repeatedly drop nodes whose degree fell below k, reporting
-    * per-round survivor/edge counts — the densest-subgraph audit that
-    * explains PageRank/HITS mass concentration. Each round is one keyed
-    * degree aggregation plus two semi-joins (both shuffle on the node
-    * key); the edge list is localCheckpointed per round so round r+1
-    * scans materialized edges instead of replaying r joins — the same
-    * iterate-then-pin discipline as pageRank. All outputs are exact
-    * integer counts: zero cross-engine float risk.
-    */
   /** Convergence-loop k-core — the variant a graph of unknown depth
     * needs: peel until a round removes zero vertices (the oracled
     * q_kcore keeps its fixed 3-round contract because that is what the
@@ -741,6 +731,16 @@ object GraphQueries extends QueryModule {
     (out, rounds)
   }
 
+  /** k-core peeling (k=100, 3 unrolled rounds) over the co-purchase
+    * graph: repeatedly drop nodes whose degree fell below k, reporting
+    * per-round survivor/edge counts — the densest-subgraph audit that
+    * explains PageRank/HITS mass concentration. Each round is one keyed
+    * degree aggregation plus two semi-joins (both shuffle on the node
+    * key); the edge list is localCheckpointed per round so round r+1
+    * scans materialized edges instead of replaying r joins — the same
+    * iterate-then-pin discipline as pageRank. All outputs are exact
+    * integer counts: zero cross-engine float risk.
+    */
   private val kcore = QueryDef(
     "q_kcore",
     (spark, sfDir) => scope {

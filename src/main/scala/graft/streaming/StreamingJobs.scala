@@ -40,12 +40,13 @@ object StreamingJobs {
     * a landing zone holding pre-r8 long-nanos files alongside r8
     * micros-NTZ files (plausible across a driver-round boundary) would
     * otherwise either die mid-stream with a parquet type mismatch or
-    * silently normalize only one encoding. One footer read per staged
+    * silently normalize only one encoding. Long nanos are read through
+    * the legacy conf, which [[graft.Tables.readNanosTsAsLong]] sets only
+    * when a staged file stores `ts` as nanos. Footer reads per staged
     * file, start-up only; a single encoding per directory is the
     * documented precondition this check enforces.
     */
   def fileSource(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 1): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     useForkFreeCheckpoints(spark)
     val dirPath = new org.apache.hadoop.fs.Path(dir)
     val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -66,6 +67,7 @@ object StreamingJobs {
         }
         buf.toArray
       } else Array.empty[String]
+    graft.Tables.readNanosTsAsLong(spark, staged.toSeq)
     val tsEncodings = staged
       .map(f => spark.read.parquet(f).schema
         .find(_.name == "ts").map(_.dataType.sql).getOrElse("<missing>"))

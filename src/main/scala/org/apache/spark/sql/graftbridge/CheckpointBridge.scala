@@ -87,12 +87,21 @@ object CheckpointBridge {
     mine.foreach(_.release())
   }
 
+  /** Gives an RDD's blocks back through `SparkContext.unpersistRDD`.
+    * `RDD.unpersist` does the same but first warns, for every locally
+    * checkpointed RDD, that it cannot be recomputed; a pin is released
+    * only once nothing reads it (a scope's rule, or a caller's
+    * [[release]]), so that is true every time and the warning says
+    * nothing. */
+  private def unpersisting(rdd: RDD[_]): () => Unit =
+    () => rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
   /** Eager local checkpoint: the frame is computed now and its lineage
     * cut, so later plans over it stay one leaf deep (NOTES #13). */
   def checkpoint[T](ds: Dataset[T]): Dataset[T] = {
     val ck = ds.localCheckpoint(true)
     val rdd = leafRdd(ck)
-    record(new Pin(Set(rdd.id), null, () => rdd.unpersist(blocking = false)))
+    record(new Pin(Set(rdd.id), null, unpersisting(rdd)))
     ck
   }
 
@@ -128,7 +137,7 @@ object CheckpointBridge {
     val rdd = ck.queryExecution.toRdd
     require(rdd.getNumPartitions == n,
       s"checkpoint has ${rdd.getNumPartitions} partitions, declared $n")
-    record(new Pin(Set(pinned.id, rdd.id), null, () => pinned.unpersist(blocking = false)))
+    record(new Pin(Set(pinned.id, rdd.id), null, unpersisting(pinned)))
     classic.Dataset.ofRows(session,
       LogicalRDD(attrs, rdd, HashPartitioning(keyAttrs, n), Nil, isStreaming = false, None)(
         session, None, None))
@@ -162,7 +171,7 @@ object CheckpointBridge {
     val cdf = df.asInstanceOf[classic.DataFrame]
     val rdd = cdf.queryExecution.toRdd.map(_.copy())
     rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    record(new Pin(Set(rdd.id), null, () => rdd.unpersist(blocking = false)))
+    record(new Pin(Set(rdd.id), null, unpersisting(rdd)))
     classic.Dataset.ofRows(session,
       LogicalRDD.fromDataset(rdd, cdf, isStreaming = false))
   }

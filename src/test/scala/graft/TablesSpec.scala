@@ -1,15 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.concurrent.ConcurrentLinkedQueue
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.BeforeAndAfterAll
-import org.scalatest.concurrent.Eventually
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.time.{Seconds, Span}
 
 /** `Tables.table` infers each parquet schema once per session, file
   * version and inference conf, then reads with that schema. The tables
@@ -17,7 +11,7 @@ import org.scalatest.time.{Seconds, Span}
   * directory first, so no earlier read in this JVM has filled the cache
   * for them.
   */
-class TablesSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll with Eventually {
+class TablesSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
 
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
   private lazy val dir: Path = {
@@ -36,30 +30,6 @@ class TablesSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll wi
   override def afterAll(): Unit = {
     deleteTree(dir)
     super.afterAll()
-  }
-
-  /** Spark jobs started while `body` runs. A marker job runs after it;
-    * the listener bus delivers job starts in order, so once the marker is
-    * seen every job of `body` has been seen too. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup("tables-spec-body", "reads under test")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup("tables-spec-marker", "marker")
-      try sc.parallelize(1 to 1, 1).count() finally sc.clearJobGroup()
-      eventually(timeout(Span(30, Seconds))) {
-        assert(groups.asScala.exists(_ == "tables-spec-marker"))
-      }
-      groups.asScala.count(_ == "tables-spec-body")
-    } finally sc.removeSparkListener(l)
   }
 
   test("each table's cached schema equals a fresh inference, and a second read starts no job") {
@@ -108,11 +78,59 @@ class TablesSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll wi
       spark.conf.set(NanosAsLong, "false")
       assert(jobsDuring(Tables.table(spark, d, "events")) == 0)
     } finally {
-      before match {
-        case Some(v) => spark.conf.set(NanosAsLong, v)
-        case None => spark.conf.unset(NanosAsLong)
-      }
+      setOrUnset(NanosAsLong, before)
       deleteTree(own)
     }
   }
+
+  test("an events read leaves the session conf alone, so no table is inferred twice") {
+    val own = Files.createTempDirectory("tables-spec-conf")
+    Seq("orders", "events").foreach(t =>
+      Files.copy(dir.resolve(s"$t.parquet"), own.resolve(s"$t.parquet")))
+    val d = own.toString
+    val before = spark.conf.getOption(NanosAsLong)
+    // a session that has not asked for nanos-as-long reads
+    spark.conf.unset(NanosAsLong)
+    try {
+      val conf = spark.conf.getAll
+      assert(jobsDuring(Tables.table(spark, d, "orders")) >= 1, "the first read infers")
+      assert(Tables.events(spark, d).count() > 0)
+      val changed = spark.conf.getAll.toSet diff conf.toSet
+      assert(changed.isEmpty, s"the events read changed the session conf: $changed")
+      assert(jobsDuring(Tables.table(spark, d, "orders")) == 0,
+        "orders was inferred again after the events read")
+    } finally {
+      setOrUnset(NanosAsLong, before)
+      deleteTree(own)
+    }
+  }
+
+  test("an events file storing ts as TIMESTAMP(NANOS) is read as microseconds through nanosAsLong") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    import spark.implicits._
+    // Spark cannot write nanosecond timestamps; parquet's own writer can
+    val own = Files.createTempDirectory("tables-spec-nanos")
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val w = ExampleParquetWriter.builder(
+      new org.apache.hadoop.fs.Path(own.resolve("events.parquet").toString)).withType(schema).build()
+    val ns = 1700000000123456000L
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("event_id", 1L).append("ts", ns))
+    finally w.close()
+    val before = spark.conf.getOption(NanosAsLong)
+    spark.conf.unset(NanosAsLong)
+    try {
+      val micros = Tables.events(spark, own.toString).selectExpr("unix_micros(ts)").as[Long].head()
+      assert(micros == ns / 1000)
+      assert(spark.conf.getOption(NanosAsLong).contains("true"))
+    } finally {
+      setOrUnset(NanosAsLong, before)
+      deleteTree(own)
+    }
+  }
+
+  private def setOrUnset(key: String, value: Option[String]): Unit =
+    value.fold(spark.conf.unset(key))(spark.conf.set(key, _))
 }
