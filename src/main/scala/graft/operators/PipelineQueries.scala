@@ -440,9 +440,10 @@ object PipelineQueries extends QueryModule {
     * hash split → fixed-boundary packing per (split, source). Returns the
     * per-doc keep-list with its decisions: (doc_id, lang, source, tok,
     * text_hash, prefix_key, split, shard). The streaming twin reproduces
-    * the same keep-list incrementally (batch-local windows + history
-    * anti-joins + carried pack offsets); ScaleSmokeSpec proves row-for-row
-    * equality on doc_id-sliced replay.
+    * the same keep-list incrementally (first-entrant-wins keep-first
+    * state per text_hash and per (lang, prefix_key) in the state store +
+    * carried pack offsets); ScaleSmokeSpec proves row-for-row equality
+    * on doc_id-sliced replay.
     */
   def curationKeepList(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -537,11 +538,10 @@ object PipelineQueries extends QueryModule {
     * bucket-greedy production knob (bucket collision ⇒ presumed
     * near-dup; no pair verification step), and deliberately defined
     * over stage ENTRANTS rather than survivors, because that is the
-    * rule that decomposes exactly into batch-local window + anti-join
-    * against prior batches' bucket keys — the decomposition the
-    * streaming twin ([[graft.streaming.StreamingJobs
-    * .curationPipelineSink]] with nearDup="lsh") is proven row-for-row
-    * against. The verified candidate→cluster→canonical path stays
+    * rule that decomposes exactly into a per-bucket first-entrant state
+    * carried across batches — the decomposition the streaming twin
+    * ([[graft.streaming.StreamingJobs.curationPipelineSink]] with
+    * nearDup="lsh") is proven row-for-row against. The verified candidate→cluster→canonical path stays
     * available as the batch q_dedup_canonical. Scale shape: band keys
     * are per-doc (corpus-linear), the window partitions by
     * (band, band_key) — high-cardinality buckets, never all-pairs.

@@ -430,10 +430,14 @@ object SimilarityQueries extends QueryModule {
     * last component +0.1, cosine ≈ 0.995 — the natural pairwise maximum
     * in this corpus is ~0.51, so without plants the drop path would be
     * vacuously untested) and its centroid-bucketed assignment, shared by
-    * q_semantic_dedup and q_semdedup_eps_sweep so the measured bucketing
-    * is the served one. Returns (assigned, centroids); the planted
-    * table is cached, so callers run this inside a materialization
-    * scope and checkpoint their report before it returns. The
+    * q_semantic_dedup, q_semdedup_eps_sweep, q_proto_pruning and
+    * q_mutual_knn so the measured bucketing is the served one. Returns
+    * (assigned, centroids); `assigned` carries (cluster, vec_id, label,
+    * v, norm). The planted table is checkpointed here, before any
+    * consumer plans over it, so every branch that reads it (centroids,
+    * assignment, both sides of a self-join) scans one finished leaf and
+    * AQE has no cache-filling stage whose finishing order could change
+    * the plan. The
     * centroid frame is returned so consumers that need it
     * (q_proto_pruning's prototypicality) score against the SAME avg()
     * instance the assignment used — a recomputed centroid could differ
@@ -449,7 +453,7 @@ object SimilarityQueries extends QueryModule {
       e0.filter(col("vec_id") < 10).select(
         (col("vec_id") + 100000).as("vec_id"), col("label"),
         expr("concat(slice(v, 1, 63), array(element_at(v, 64) + 0.1d))").as("v")))
-      .cached
+      .checkpointed
     val centroids = labelCentroids(e)
       .select(col("label").as("cl"), col("centroid"))
       // K rows, materialized ONCE so the assignment and any downstream
@@ -462,13 +466,13 @@ object SimilarityQueries extends QueryModule {
       .withColumn("cscore", Ql.r(Vectors.dot(col("v"), col("centroid")), 6))
       .withColumn("arank", row_number().over(wAssign))
       .filter(col("arank") === 1)
-      .select(col("cl").as("cluster"), col("vec_id"), col("v"),
+      .select(col("cl").as("cluster"), col("vec_id"), col("label"), col("v"),
         sqrt(Vectors.normSq(col("v"))).as("norm"))
     (assigned, centroids)
   }
 
   /** Oracle twin of [[semAssigned]]: CTE chain ending in
-    * `assigned(cluster, vec_id, v, norm)`.
+    * `assigned(cluster, vec_id, label, v, norm)`.
     */
   private val semAssignedSql =
     """e0 AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -484,7 +488,7 @@ object SimilarityQueries extends QueryModule {
               GROUP BY 1, 2)
         GROUP BY 1),
       assigned AS (
-        SELECT cl AS cluster, vec_id, v, sqrt(list_dot_product(v, v)) AS norm
+        SELECT cl AS cluster, vec_id, label, v, sqrt(list_dot_product(v, v)) AS norm
         FROM e, cent
         QUALIFY row_number() OVER (PARTITION BY vec_id
           ORDER BY round(list_dot_product(v, centroid) + 1e-9, 6) DESC, cl) = 1)"""
@@ -509,7 +513,7 @@ object SimilarityQueries extends QueryModule {
           (col("n_vecs") - coalesce(col("n_dropped"), lit(0L))).as("n_kept"))
         .orderBy("cluster")
         // K-row report — materialize so the scope can release the
-        // planted-union cache when this returns
+        // planted-union checkpoint when this returns
         .checkpointed
     },
     Some(s"""
@@ -559,7 +563,7 @@ object SimilarityQueries extends QueryModule {
         .groupBy("d2").agg(max(col("cr")).as("max_cos"))
         .checkpointed // per-doc table; the pair pass runs once
       val tot = assigned.agg(count(lit(1)).as("n_total"))
-        .checkpointed // 1 row, materialized before the cache drops
+        .checkpointed // 1 row
       md.agg(
           count(when(col("max_cos") >= expr("30e-2"), 1)).as("c30"),
           count(when(col("max_cos") >= expr("40e-2"), 1)).as("c40"),
@@ -974,30 +978,15 @@ object SimilarityQueries extends QueryModule {
     * centroid (one 10-row broadcast pass), compare pairs ONLY within a
     * cluster — O(Σ cluster²), cluster id is the join key — then take
     * the top-20 mutual pairs by cosine via TakeOrderedAndProject. The
-    * planted near-twins (same scheme as q_semantic_dedup) guarantee the
-    * mutual path is non-vacuously exercised; label agreement rides
-    * along as the mining-quality proxy.
+    * scaffold is q_semantic_dedup's ([[semAssigned]]), whose planted
+    * near-twins guarantee the mutual path is non-vacuously exercised;
+    * label agreement rides along as the mining-quality proxy.
     */
   private val mutualKnn = QueryDef(
     "q_mutual_knn",
     (spark, sfDir) => scope {
       import org.apache.spark.sql.expressions.Window
-      val e0 = Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("label"), Vectors.toDouble(col("embedding")).as("v"))
-      val e = e0.unionByName(
-        e0.filter(col("vec_id") < 10).select(
-          (col("vec_id") + 100000).as("vec_id"), col("label"),
-          expr("concat(slice(v, 1, 63), array(element_at(v, 64) + 0.1d))").as("v")))
-        .cached
-      val centroids = labelCentroids(e)
-        .select(col("label").as("cl"), col("centroid"))
-      val wAssign = Window.partitionBy("vec_id").orderBy(col("cscore").desc, col("cl"))
-      val assigned = e.crossJoin(broadcast(centroids))
-        .withColumn("cscore", Ql.r(Vectors.dot(col("v"), col("centroid")), 6))
-        .withColumn("arank", row_number().over(wAssign))
-        .filter(col("arank") === 1)
-        .select(col("cl").as("cluster"), col("vec_id"), col("label"), col("v"),
-          sqrt(Vectors.normSq(col("v"))).as("norm"))
+      val (assigned, _) = semAssigned(spark, sfDir)
       val wnn = Window.partitionBy("d1").orderBy(col("score").desc, col("d2"))
       val nn = assigned
         .select(col("cluster"), col("vec_id").as("d1"), col("label").as("l1"),
@@ -1022,24 +1011,7 @@ object SimilarityQueries extends QueryModule {
       out
     },
     Some(s"""
-      WITH e0 AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                  FROM embeddings),
-      e AS (
-        SELECT * FROM e0
-        UNION ALL
-        SELECT vec_id + 100000, label, v[1:63] || [v[64] + 0.1] FROM e0 WHERE vec_id < 10),
-      cent AS (
-        SELECT label AS cl, list(c ORDER BY pos) AS centroid
-        FROM (SELECT label, g.i AS pos, avg(v[g.i]) AS c
-              FROM e, generate_series(1, 64) g(i)
-              GROUP BY 1, 2)
-        GROUP BY 1),
-      assigned AS (
-        SELECT cl AS cluster, vec_id, label, v,
-               sqrt(list_dot_product(v, v)) AS norm
-        FROM e, cent
-        QUALIFY row_number() OVER (PARTITION BY vec_id
-          ORDER BY round(list_dot_product(v, centroid) + 1e-9, 6) DESC, cl) = 1),
+      WITH $semAssignedSql,
       nn AS (
         SELECT d1, d2, l1, l2, score FROM (
           SELECT a.vec_id AS d1, b.vec_id AS d2, a.label AS l1, b.label AS l2,

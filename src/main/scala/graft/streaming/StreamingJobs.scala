@@ -188,7 +188,7 @@ object StreamingJobs {
 
   /** transformWithState requires the RocksDB state-store provider
     * (NOTES fact #12); ONE definition so a provider/conf change cannot
-    * miss one of the five stateful jobs.
+    * miss one of the stateful jobs that call it.
     */
   private def requireRocksDb(spark: SparkSession): Unit =
     spark.conf.set(
@@ -1518,131 +1518,14 @@ object StreamingJobs {
       }
   }
 
-  /** A8/I8/H8: the streaming quality-gate scrub — "scrub before anything
-    * else sees the text", as a routing map over the raw document stream.
-    * Each micro-batch goes through the SAME gate expressions as the
-    * batch queries ([[graft.operators.CurationQueries]].gopherSignals /
-    * piiScrub are shared definitions, so the stream's keep/reject
-    * verdicts cannot drift from the batch report): accepted docs are
-    * archived with PII already redacted; rejects route to the
-    * dead-letter path carrying every failed-rule flag plus a compact
-    * reason list for triage. Both destinations are written inside ONE
-    * foreachBatch from one persisted scan of the batch (the fan-out
-    * shape), and each batch lands in its own `batch=<id>` directory with
-    * overwrite semantics — a micro-batch replayed after a crash between
-    * write and checkpoint commit overwrites its own partial output
-    * instead of duplicating it, the same idempotence contract as
-    * [[upsertSink]] without the merge machinery. Stateless row-local
-    * gates ⇒ no state store, no watermark; throughput scales with
-    * partition count.
-    */
-  /** Compacted cross-batch history set for [[curationPipelineSink]] —
-    * an append-only keyed set stored as parquet with the
-    * [[upsertSink]] immutable-generation discipline (resolution by
-    * `_SUCCESS` completeness rather than a pointer file: `read(B)`
-    * must resolve generation ids < B, which a newest-wins pointer
-    * cannot express), all filesystem access through the Hadoop FS API
-    * (works on HDFS/S3, not just a driver-local disk).
-    *
-    * Layout under `root/`: `gen-<b>/` compacted snapshots (complete =
-    * `_SUCCESS`), `delta/batch=<i>/` per-batch
-    * contributions since the last snapshot. Every `compactEvery`-th
-    * batch folds snapshot + deltas + its own contribution into a new
-    * generation and prunes; between compactions a batch appends one
-    * delta. Per-batch READ volume is therefore bounded by
-    * 1 + (compactEvery − 1) directories at any stream age — the r12
-    * design read `batch=0..B−1`, O(B) dirs per batch and O(B²) over a
-    * stream's life. The trade is explicit: compaction rewrites the
-    * full history every compactEvery batches (amortized
-    * O(history/compactEvery) bytes written per batch — standard
-    * parquet-table compaction cost, tunable by the cadence) in
-    * exchange for bounded read fan-in; a history bigger than periodic
-    * rewrites tolerate belongs in transformWithState/RocksDB, whose
-    * LSM pays the same compaction cost incrementally.
-    *
-    * Replay safety (exactly-once): `read(B)` only ever resolves
-    * generations with id < B plus deltas with id < B, so a batch
-    * replayed after its own compaction committed re-reads exactly the
-    * pre-B state (the previous generation survives pruning, and a
-    * compaction at B only deletes deltas the previous generation
-    * already covers); every write is an idempotent whole-dir overwrite.
-    */
-  private[graft] class HistorySet(spark: SparkSession, root: String, compactEvery: Int = 8) {
-    private val fs = fsFor(spark, root)
-    private def p(s: String) = new org.apache.hadoop.fs.Path(s"$root/$s")
-    private def complete(gen: String): Boolean =
-      fs.exists(new org.apache.hadoop.fs.Path(p(gen), "_SUCCESS"))
-    // a stray non-numeric dir under the root (a tool-created scratch
-    // dir, a manually-renamed generation) must be SKIPPED, not parsed:
-    // an unguarded .toLong here throws inside foreachBatch and kills
-    // the stream over a directory the protocol never wrote
-    private def numericSuffix(name: String, prefix: String): Option[Long] = {
-      val s = name.stripPrefix(prefix)
-      // digit check + toLongOption: the latter alone would accept signs,
-      // the former alone would still throw on an all-digit suffix past
-      // Long.MaxValue (a 20-digit dir name must be skipped, not fatal)
-      if (name.startsWith(prefix) && s.nonEmpty && s.forall(_.isDigit))
-        s.toLongOption
-      else None
-    }
-    private def genIds(): Seq[Long] =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(root))) Seq.empty
-      else fs.listStatus(new org.apache.hadoop.fs.Path(root))
-        .map(_.getPath.getName).toSeq
-        .flatMap(n => numericSuffix(n, "gen-").filter(_ => complete(n)))
-
-    /** (history through batch `batchId`−1, number of dirs read). */
-    def read(batchId: Long): (Option[DataFrame], Int) = {
-      val gen = genIds().filter(_ < batchId).sorted.lastOption
-      val deltas = (gen.map(_ + 1).getOrElse(0L) until batchId)
-        .map(i => s"delta/batch=$i").filter(d => fs.exists(p(d)))
-      val dirs = gen.map(g => s"$root/gen-$g").toSeq ++ deltas.map(d => s"$root/$d")
-      (if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*)), dirs.size)
-    }
-
-    /** Record this batch's contribution; compact on the cadence.
-      * Returns the rows rewritten by a compaction (the size of the new
-      * generation, read back from the written footers — a metadata-only
-      * count, no second pass over the union), or −1 for a plain delta
-      * batch — so the sink can surface the write-side amortization in
-      * `metrics/batch=<id>` next to the read-side dir counts.
-      */
-    def write(batchId: Long, contribution: DataFrame,
-        history: Option[DataFrame]): Long = {
-      if ((batchId + 1) % compactEvery == 0) {
-        val all = history.map(_.unionByName(contribution)).getOrElse(contribution)
-        // a generation is resolvable the moment Spark's job commit drops
-        // _SUCCESS — genIds() is the single source of truth, no pointer
-        // file (read(B) must resolve gen ids < B, which a newest-wins
-        // pointer cannot express)
-        all.distinct().write.mode("overwrite").parquet(s"$root/gen-$batchId")
-        val rewritten = spark.read.parquet(s"$root/gen-$batchId").count()
-        val stale = genIds().sorted.dropRight(2)
-        stale.foreach(g => fs.delete(p(s"gen-$g"), true))
-        // deltas at or below the PREVIOUS snapshot are covered by both
-        // retained generations; newer ones must survive until this
-        // batch commits (a replay of batch B re-reads them). ONE
-        // listStatus of delta/ (bounded at ~2·compactEvery entries by
-        // this very pruning), not an exists() probe per historic batch
-        // id — per-compaction metadata calls stay O(compactEvery).
-        val prevGen = genIds().filter(_ < batchId).sorted.lastOption.getOrElse(-1L)
-        if (fs.exists(p("delta")))
-          fs.listStatus(p("delta")).map(_.getPath)
-            .filter(d => numericSuffix(d.getName, "batch=").exists(_ <= prevGen))
-            .foreach(fs.delete(_, true))
-        rewritten
-      } else {
-        contribution.write.mode("overwrite").parquet(s"$root/delta/batch=$batchId")
-        -1L
-      }
-    }
-  }
+  // ---- I12 + H6: the curation pipeline with its state in the state store ----
 
   /** Fail-fast guard for restarting a curation stream over an existing
-    * output directory in the WRONG near-dup mode (the key history's
-    * schema is mode-specific: a (lang, prefix_key) history read into a
-    * (band, band_key) join would fail mid-batch with an opaque
-    * AnalysisException). The mode is persisted in the output root on
+    * output directory in the WRONG near-dup mode (the key state is
+    * mode-specific: `prefix` keeps one entry per (lang, prefix_key),
+    * `lsh` one first entrant per band bucket, in a different stateful
+    * processor, so a checkpoint written in one mode cannot carry the
+    * other's decisions). The mode is persisted in the output root on
     * first contact; a restart supplying a different mode fails at batch
     * start with a message that names both modes.
     */
@@ -1676,80 +1559,14 @@ object StreamingJobs {
     }
   }
 
-  /** Stages 3–5 of the curation decision chain (near-dup removal → hash
-    * split → shard packing) plus the per-batch bookkeeping (keep-list
-    * write, key history, pack offsets, metrics) — ONE definition shared
-    * by [[curationPipelineSink]] (directory-backed exact-dedup history)
-    * and [[curationPipelineSinkTws]] (state-store exact-dedup), so the
-    * two sinks' decisions cannot drift. `s2` carries the exact-dedup
-    * survivors (doc_id, lang, source, text, tok, text_hash, prefix_key).
-    * `writeHashHistory` runs right after the keep-list lands (the
-    * crash-replay write order) and returns the hash compaction's
-    * rows-rewritten (−1 for a delta batch, or when the hash state lives
-    * in the state store).
-    */
-  private def curationStage345(outDir: String, batchId: Long, s2: DataFrame,
-      nearDup: String, hashHistDirs: Int, writeHashHistory: () => Long): Unit = {
-    val spark = s2.sparkSession
-    import org.apache.spark.sql.expressions.Window
-    val keyHist = new HistorySet(spark, s"$outDir/keys")
-    // stage 3 (near-dup): keep-first decomposition over the stage's
-    // ENTRANT history (stage-2 survivors)
-    val (priorKeys, nKeyDirs) = keyHist.read(batchId)
-    // schema-level mode check, independent of the marker file: an outDir
-    // whose key history predates the marker (or lost it) still fails
-    // LOUDLY here instead of mid-join with an opaque AnalysisException
-    priorKeys.foreach { h =>
-      val expect =
-        if (nearDup == "prefix") Set("lang", "prefix_key") else Set("band", "band_key")
-      require(h.columns.toSet == expect,
-        s"key history under $outDir/keys has columns [${h.columns.mkString(", ")}] " +
-          s"— not the nearDup=$nearDup schema [${expect.mkString(", ")}]; " +
-          "resume with the mode that wrote it or use a fresh outDir")
-    }
-    var bandsRef: Option[DataFrame] = None
-    val (s3, keyContribution) = nearDup match {
-      case "prefix" =>
-        val wKey = Window.partitionBy("lang", "prefix_key").orderBy("doc_id")
-        val keyFirst = s2
-          .withColumn("rn", row_number().over(wKey))
-          .filter(col("rn") === 1).drop("rn")
-        val kept = priorKeys.fold(keyFirst)(h =>
-          keyFirst.join(h, Seq("lang", "prefix_key"), "left_anti"))
-        (kept, s2.select("lang", "prefix_key").distinct())
-      case "lsh" =>
-        val bands = graft.operators.DedupQueries
-          .bandKeysOf(s2.select("doc_id", "text")).persist()
-        bandsRef = Some(bands)
-        val wBand = Window.partitionBy("band", "band_key").orderBy("doc_id")
-        val localBad = bands
-          .withColumn("rn", row_number().over(wBand))
-          .filter(col("rn") > 1).select("doc_id")
-        val histBad = priorKeys.fold(spark.range(0).select(col("id").as("doc_id")))(
-          h => bands.join(h, Seq("band", "band_key"), "left_semi").select("doc_id"))
-        val kept = s2.join(localBad.union(histBad).distinct(),
-          Seq("doc_id"), "left_anti")
-        (kept, bands.select("band", "band_key").distinct())
-    }
-    curationStage45(outDir, batchId, s3, nearDup, hashHistDirs, nKeyDirs,
-      () => (writeHashHistory(),
-        keyHist.write(batchId, keyContribution, priorKeys)))
-    bandsRef.foreach(_.unpersist())
-  }
-
   /** Stages 4–5 of the curation chain (hash split → shard packing) plus
-    * the per-batch bookkeeping (keep-list write, history writes via the
-    * caller's closure, pack offsets, metrics) — the tail shared by ALL
-    * THREE sinks ([[curationPipelineSink]], [[curationPipelineSinkTws]],
-    * [[curationPipelineSinkTwsAll]]); `s3` carries the near-dup
-    * survivors. `writeHistories` runs right after the keep-list lands
-    * (the crash-replay write order) and returns the (hash, key)
-    * compaction rows-rewritten (−1 per side when that history is a plain
-    * delta batch or lives in the state store).
+    * the per-batch bookkeeping (keep-list write, pack offsets, metrics)
+    * of [[curationPipelineSink]]; `s3` carries the near-dup survivors.
+    * Both keep-first histories live in the state store, so the only
+    * cross-batch file state here is the (split × source) offsets table.
     */
   private def curationStage45(outDir: String, batchId: Long, s3: DataFrame,
-      nearDup: String, hashHistDirs: Int, keyHistDirs: Int,
-      writeHistories: () => (Long, Long)): Unit = {
+      nearDup: String): Unit = {
     val spark = s3.sparkSession
     import org.apache.spark.sql.expressions.Window
     val fs = fsFor(spark, outDir)
@@ -1783,9 +1600,8 @@ object StreamingJobs {
     packed
       .select(keepCols.head, keepCols.tail: _*)
       .write.mode("overwrite").parquet(s"$outDir/keep/batch=$batchId")
-    // history + offsets snapshots for the NEXT batch (written last:
+    // offsets snapshot for the NEXT batch (written after the keep-list:
     // a crash mid-batch replays from the checkpoint and overwrites)
-    val (hashRewritten, keyRewritten) = writeHistories()
     val add = packed.groupBy("split", "source").agg(sum("tok").as("add"))
     prevOff.join(add, Seq("split", "source"), "full_outer")
       .select(col("split"), col("source"),
@@ -1794,112 +1610,18 @@ object StreamingJobs {
     if (batchId >= 2)
       fs.delete(new org.apache.hadoop.fs.Path(
         s"$outDir/offsets/gen-${batchId - 2}"), true)
-    // auditable boundedness, BOTH sides of the compaction trade: what
-    // this batch read (dir counts) and what its compactions rewrote
-    // (rows; −1 = no compaction this batch)
-    spark.range(1).select(
-      lit(batchId).as("batch_id"),
-      lit(hashHistDirs).as("hash_hist_dirs"),
-      lit(keyHistDirs).as("key_hist_dirs"),
-      lit(nearDup).as("near_dup_mode"),
-      lit(hashRewritten).as("hash_rows_rewritten"),
-      lit(keyRewritten).as("key_rows_rewritten"))
+    spark.range(1).select(lit(batchId).as("batch_id"), lit(nearDup).as("near_dup_mode"))
       .write.mode("overwrite").parquet(s"$outDir/metrics/batch=$batchId")
     packed.unpersist()
   }
 
-  /** I12 at PIPELINE granularity, streaming: the whole curation decision
-    * chain — gate → exact dedup → near-dup removal → hash split → shard
-    * packing — as ONE streaming job over the raw document stream,
-    * replacing the reference's per-record Lambda chain. Stage
-    * definitions are SHARED with the batch pipeline
-    * ([[graft.operators.PipelineQueries.curationKeepList]] /
-    * [[graft.operators.PipelineQueries.curationKeepListLsh]]): the
-    * stream's keep-list provably equals the batch one row-for-row under
-    * doc_id-ordered replay (ScaleSmokeSpec), because each global
-    * keep-first-by-doc_id window decomposes exactly into a batch-local
-    * keep-first plus an anti-join against the history of every earlier
-    * batch's STAGE ENTRANTS, and the running pack offsets carry per
-    * (split, source) across batches.
-    *
-    * `nearDup` selects stage 3: `"prefix"` keeps first per
-    * (lang, first-3-tokens) — the cheap heuristic; `"lsh"` buckets docs
-    * with the served MinHash banding
-    * ([[graft.operators.DedupQueries.bandKeysOf]], 4 bands × 3 rows)
-    * and drops a doc iff any of its band buckets holds an earlier
-    * entrant — the same first-in-every-bucket rule as the batch twin.
-    * Both histories are the stage's ENTRANTS (stage-2 survivors): an
-    * entrant blocks later look-alikes even if it was itself dropped, by
-    * construction of the batch window rule — that is what makes the
-    * decomposition exact.
-    *
-    * Cross-batch state lives in the OUTPUT directory, not the state
-    * store, via [[HistorySet]] (generation-compacted, Hadoop-FS,
-    * bounded per-batch read volume) — per-batch dir-read counts are
-    * recorded under `metrics/batch=<id>` so the boundedness is
-    * auditable, not asserted. The offsets table is (split × source)
-    * rows, rewritten per batch with two generations retained (replay of
-    * batch B reads B−1's snapshot). All per-batch outputs are
-    * idempotent whole-dir overwrites — the scrubRoute/upsertSink
-    * replay contract. At RocksDB-state volumes the same stage chain
-    * could instead hold hash/bucket history in transformWithState; the
-    * directory form is chosen so the keep-list, its decisions, and the
-    * dedup state stay one `spark.read.parquet` away from audit.
-    */
-  def curationPipelineSink(docs: DataFrame, outDir: String, checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      nearDup: String = "prefix") = {
-    require(nearDup == "prefix" || nearDup == "lsh", s"unknown nearDup mode: $nearDup")
-    useForkFreeCheckpoints(docs.sparkSession)
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import org.apache.spark.sql.expressions.Window
-        requireNearDupMode(spark, outDir, nearDup)
-        val hashHist = new HistorySet(spark, s"$outDir/hashes")
-        // stage 1 (gate) + the decision keys, same expressions as the
-        // batch chain
-        val gated = batch
-          .withColumn("tok", size(split(col("text"), " ")))
-          .filter(col("tok") >= 20)
-          .withColumn("text_hash", sha2(col("text").cast("binary"), 256))
-          .withColumn("prefix_key",
-            concat_ws(" ", slice(split(col("text"), " "), 1, 3)))
-          .persist()
-        // stage 2 (exact dedup): batch-local keep-first by doc_id, then
-        // drop anything whose hash appeared in an earlier batch — under
-        // doc_id-ordered replay that earlier doc IS the global first
-        val wHash = Window.partitionBy("text_hash").orderBy("doc_id")
-        val hashFirst = gated
-          .withColumn("rn", row_number().over(wHash))
-          .filter(col("rn") === 1).drop("rn")
-        val (priorHashes, nHashDirs) = hashHist.read(batchId)
-        val s2 = priorHashes.fold(hashFirst)(h =>
-          hashFirst.join(h, Seq("text_hash"), "left_anti")).persist()
-        // stages 3–5 + bookkeeping are the shared tail; the hash history
-        // write runs inside it, right after the keep-list lands
-        curationStage345(outDir, batchId, s2, nearDup, nHashDirs,
-          () => hashHist.write(batchId,
-            gated.select("text_hash").distinct(), priorHashes))
-        s2.unpersist(); gated.unpersist()
-        ()
-      }
-  }
-
-  // ---- I12 + H6: the curation pipeline with STATE-STORE exact dedup ----
-
   case class CurDoc(doc_id: Long, lang: String, source: String, text: String,
       tok: Int, text_hash: String, prefix_key: String)
 
-  /** Stage 1 (gate) + decision keys + the state-store exact-dedup stage,
-    * shared by [[curationPipelineSinkTws]] and
-    * [[curationPipelineSinkTwsAll]]: the gated stream keyed by text_hash
+  /** Stage 1 (gate) + decision keys + the state-store exact-dedup stage
+    * of [[curationPipelineSink]]: the gated stream keyed by text_hash
     * through [[HashDedupProcessor]] — its output is exactly the stage-2
-    * survivors. One definition so a gate change cannot silently diverge
-    * the TWS sinks from each other.
+    * survivors. The gate expressions are the batch chain's.
     */
   private def gatedHashDeduped(docs: DataFrame): org.apache.spark.sql.Dataset[CurDoc] = {
     val spark = docs.sparkSession
@@ -1919,18 +1641,15 @@ object StreamingJobs {
         org.apache.spark.sql.streaming.OutputMode.Update())
   }
 
-  /** Exact-dedup keep-first as a transformWithState processor: per
-    * text_hash, state is the kept doc_id — the first batch that sees a
-    * hash emits its min-doc_id row and pins the state; every later
-    * arrival of the same hash emits nothing. Under doc_id-ordered
-    * replay "first arrival, min within batch" IS the global
-    * keep-first-by-doc_id, the same decomposition argument as the
-    * directory-history sink — but the hash set lives in RocksDB behind
-    * the state-store checkpoint instead of parquet generations, so
-    * there is no periodic full-history rewrite: the LSM pays the
-    * compaction cost incrementally, which is the right trade once the
-    * accumulated hash history outgrows [[HistorySet]]'s cadence
-    * rewrites (months-lived streams).
+  /** Keep-first as a transformWithState processor: per key, state is the
+    * kept doc_id — the first batch that sees a key emits its min-doc_id
+    * row and pins the state; every later arrival of the same key emits
+    * nothing. Under doc_id-ordered replay "first arrival, min within
+    * batch" IS the global keep-first-by-doc_id. The key set lives in
+    * RocksDB behind the state-store checkpoint, so the LSM pays the
+    * compaction cost incrementally and no batch rewrites the history.
+    * [[curationPipelineSink]] runs it twice: keyed by text_hash (exact
+    * dedup) and, in `prefix` mode, by (lang, prefix_key).
     */
   class HashDedupProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[String, CurDoc, CurDoc] {
@@ -1946,42 +1665,6 @@ object StreamingJobs {
         val first = rows.minBy(_.doc_id)
         kept.update(first.doc_id)
         Iterator.single(first)
-      }
-  }
-
-  /** [[curationPipelineSink]] with the exact-dedup stage moved into the
-    * state store ([[HashDedupProcessor]] via transformWithState/RocksDB)
-    * — the documented endgame for streams whose hash history outgrows
-    * HistorySet's periodic rewrites. Stages 1 (gate) and 3–5 are the
-    * SAME definitions as the directory-history sink
-    * ([[curationStage345]]), so the two variants provably make identical
-    * decisions (ScaleSmokeSpec runs the same row-for-row batch-equality
-    * proof against both, plus a checkpoint-resume restart case for the
-    * state's durability). The near-dup key history remains a
-    * [[HistorySet]]: its entrant volume is stage-2-survivor-sized
-    * (strictly smaller than the hash side) and keeping it in the output
-    * dir preserves one-`spark.read`-away auditability of the near-dup
-    * state.
-    */
-  def curationPipelineSinkTws(docs: DataFrame, outDir: String, checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      nearDup: String = "prefix") = {
-    require(nearDup == "prefix" || nearDup == "lsh", s"unknown nearDup mode: $nearDup")
-    requireRocksDb(docs.sparkSession)
-    useForkFreeCheckpoints(docs.sparkSession)
-    gatedHashDeduped(docs).toDF().writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        requireNearDupMode(batch.sparkSession, outDir, nearDup)
-        val b = batch.persist()
-        // hash history lives in the state store: 0 dirs read, no
-        // compaction rewrites to report (−1)
-        curationStage345(outDir, batchId, b, nearDup,
-          hashHistDirs = 0, () => -1L)
-        b.unpersist()
-        ()
       }
   }
 
@@ -2025,28 +1708,41 @@ object StreamingJobs {
       }
   }
 
-  /** The ALL-state-store curation sink (r14 verdict #3): BOTH keep-first
-    * histories — the exact-dedup hash set AND the stage-3 near-dup keys
-    * — live in transformWithState/RocksDB, so the sink maintains no
-    * history directory at all (offsets/metrics remain tiny per-batch
-    * snapshots). The months-lived-stream argument that moved the hash
-    * side into the state store applies to the key side at exactly the
-    * same stream age; [[curationPipelineSinkTws]] keeps the directory
-    * key history for auditability, this variant completes the endgame.
+  /** I12 at PIPELINE granularity, streaming: the whole curation decision
+    * chain — gate → exact dedup → near-dup removal → hash split → shard
+    * packing — as ONE streaming job over the raw document stream,
+    * replacing the reference's per-record Lambda chain and its DynamoDB
+    * state. Stage definitions are SHARED with the batch pipeline
+    * ([[graft.operators.PipelineQueries.curationKeepList]] /
+    * [[graft.operators.PipelineQueries.curationKeepListLsh]]): the
+    * stream's keep-list provably equals the batch one row-for-row under
+    * doc_id-ordered replay (ScaleSmokeSpec), because each global
+    * keep-first-by-doc_id window decomposes exactly into a first-entrant
+    * rule over every earlier batch's STAGE ENTRANTS, and the running pack
+    * offsets carry per (split, source) across batches.
     *
-    * Stage 3 decomposes per mode into a second keyed first-entrant-wins
-    * pass: `prefix` re-keys the hash survivors by (lang, prefix_key)
-    * through the SAME [[HashDedupProcessor]] rule; `lsh` explodes each
-    * survivor into its 4 band-bucket rows
+    * Both keep-first histories live in transformWithState/RocksDB behind
+    * the checkpoint: the exact-dedup hash set ([[HashDedupProcessor]]
+    * keyed by text_hash) and the stage-3 near-dup keys. `nearDup` selects
+    * stage 3: `"prefix"` re-keys the hash survivors by (lang, first-3
+    * tokens) through the SAME [[HashDedupProcessor]] rule; `"lsh"`
+    * explodes each survivor into its 4 band-bucket rows
     * ([[graft.operators.DedupQueries.bandKeysLocal]], the row-local twin
-    * of the served banding) and ANDs the per-bucket
-    * [[BucketDedupProcessor]] verdicts batch-locally. Stages 1, 4–5 and
-    * all bookkeeping are the shared definitions ([[curationStage45]]),
-    * so all three sinks provably make identical decisions (ScaleSmokeSpec
-    * runs the same row-for-row equality + restart proofs against this
-    * variant in both modes).
+    * of the served 4 bands × 3 rows MinHash banding) and ANDs the
+    * per-bucket [[BucketDedupProcessor]] verdicts batch-locally. Both
+    * histories hold the stage's ENTRANTS (stage-2 survivors): an entrant
+    * blocks later look-alikes even if it was itself dropped, by
+    * construction of the batch window rule — that is what makes the
+    * decomposition exact.
+    *
+    * The output directory holds no history: `keep/batch=<id>` (the
+    * keep-list), `offsets/gen-<id>` ((split × source) rows, two
+    * generations retained: a replay of batch B reads B−1's snapshot),
+    * `metrics/batch=<id>` (batch id and mode) and the `_near_dup_mode`
+    * marker. All per-batch outputs are idempotent whole-dir overwrites —
+    * the scrubRoute/upsertSink replay contract.
     */
-  def curationPipelineSinkTwsAll(docs: DataFrame, outDir: String, checkpoint: String,
+  def curationPipelineSink(docs: DataFrame, outDir: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow(),
       nearDup: String = "prefix") = {
     require(nearDup == "prefix" || nearDup == "lsh", s"unknown nearDup mode: $nearDup")
@@ -2058,7 +1754,7 @@ object StreamingJobs {
       case "prefix" =>
         // the same first-entrant-wins rule, re-keyed by the stage-3 key:
         // keep-first per (lang, prefix_key) over the stage-2 survivors
-        s2.groupByKey(d => d.lang + " " + d.prefix_key)
+        s2.groupByKey(d => d.lang + "\u0000" + d.prefix_key)
           .transformWithState(new HashDedupProcessor,
             org.apache.spark.sql.streaming.TimeMode.None(),
             org.apache.spark.sql.streaming.OutputMode.Update())
@@ -2090,15 +1786,30 @@ object StreamingJobs {
             b.select(col("doc.*")).distinct()
               .join(bad, Seq("doc_id"), "left_anti")
         }
-        // both histories live in the state store: 0 dirs read, no
-        // compaction rewrites to report (−1, −1)
-        curationStage45(outDir, batchId, kept, nearDup,
-          hashHistDirs = 0, keyHistDirs = 0, () => (-1L, -1L))
+        curationStage45(outDir, batchId, kept, nearDup)
         b.unpersist()
         ()
       }
   }
 
+  /** A8/I8/H8: the streaming quality-gate scrub — "scrub before anything
+    * else sees the text", as a routing map over the raw document stream.
+    * Each micro-batch goes through the SAME gate expressions as the
+    * batch queries ([[graft.operators.CurationQueries]].gopherSignals /
+    * piiScrub are shared definitions, so the stream's keep/reject
+    * verdicts cannot drift from the batch report): accepted docs are
+    * archived with PII already redacted; rejects route to the
+    * dead-letter path carrying every failed-rule flag plus a compact
+    * reason list for triage. Both destinations are written inside ONE
+    * foreachBatch from one persisted scan of the batch (the fan-out
+    * shape), and each batch lands in its own `batch=<id>` directory with
+    * overwrite semantics — a micro-batch replayed after a crash between
+    * write and checkpoint commit overwrites its own partial output
+    * instead of duplicating it, the same idempotence contract as
+    * [[upsertSink]] without the merge machinery. Stateless row-local
+    * gates ⇒ no state store, no watermark; throughput scales with
+    * partition count.
+    */
   def scrubRoute(docs: DataFrame, acceptDir: String, dlqDir: String,
       checkpoint: String, trigger: Trigger = Trigger.AvailableNow()) = {
     useForkFreeCheckpoints(docs.sparkSession)

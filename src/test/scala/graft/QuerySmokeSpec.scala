@@ -158,15 +158,7 @@ object PlanLedger {
       "finish: 13 jobs and 7 exchanges, or 11 and 5 (two runs in six)"),
     "q_bradley_terry" -> ("each round's truncation, a lazily persisted RDD, is first " +
       "computed by the next round's two join sides at once; jobs and stages vary " +
-      "(81 to 84 in ten runs), the plan does not"),
-    "q_mutual_knn" -> ("its planted-union cache is first filled inside the final " +
-      "action, read from three plan branches; AQE re-plans around whichever cache " +
-      "stage finishes first (18 or 19 jobs, 8 or 9 exchanges in ten runs)"),
-    "q_semantic_dedup" -> ("reads its planted-union cache from both sides of a self-join " +
-      "and AQE re-plans around whichever cache stage finishes first " +
-      "(17 or 18 jobs, 9 or 10 exchanges in ten runs)"),
-    "q_semdedup_eps_sweep" -> ("the q_semantic_dedup scaffold and self-join, same cause " +
-      "(16 or 17 jobs, 7 or 8 exchanges in ten runs)"))
+      "(81 to 84 in ten runs), the plan does not"))
 
   /** Plan nodes counted, by the name Spark gives them in a plan. */
   private val counted = Seq("Exchange", "ReusedExchange", "SortMergeJoin",

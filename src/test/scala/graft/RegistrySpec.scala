@@ -46,4 +46,28 @@ class RegistrySpec extends AnyFunSuite {
     } yield s"${f.getFileName}:${n + 1}: $b"
     assert(hits.isEmpty, s"materialization outside the bridge:\n${hits.mkString("\n")}")
   }
+
+  /** A raw control byte in a source file makes `grep` report "binary
+    * file matches" and ripgrep's directory search skip the file, so a
+    * search for a definition silently misses it. Write such characters
+    * as escapes (`"\u0000"`); tab, newline, vertical tab, form feed and
+    * carriage return stay allowed.
+    */
+  test("no source file holds a raw control byte") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val sources = Files.walk(Paths.get("src")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(sources.size > 50, s"sources not found from ${Paths.get("").toAbsolutePath}")
+    val hits = for {
+      f <- sources
+      bytes = Files.readAllBytes(f)
+      i <- bytes.indices
+      b = bytes(i) & 0xff if b < 0x09 || (b >= 0x0e && b <= 0x1f)
+    } yield {
+      val line = bytes.iterator.take(i).count(_ == '\n') + 1
+      f"$f:$line: byte 0x$b%02x"
+    }
+    assert(hits.isEmpty, s"raw control bytes in sources:\n${hits.mkString("\n")}")
+  }
 }

@@ -1118,252 +1118,6 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
     got.zip(want).foreach { case (g, w) => assert(g == w, s"$g vs $w") }
   }
 
-  test("sf0.01 streaming curation pipeline equals the batch keep-list row-for-row") {
-    import graft.streaming.StreamingJobs
-    val sf = "/root/testdata/sf0.01"
-    // The [NS] integration story at PIPELINE granularity: gate → exact
-    // dedup → weak-key near-dup → split → shard packing wired as ONE
-    // streaming job (curationPipelineSink) over the raw document stream,
-    // vs the batch chain (PipelineQueries.curationKeepList — the same
-    // shared stage definitions q_curation_pipeline aggregates). Replay
-    // the corpus as 6 doc_id-ordered slices; the streamed keep-list
-    // (union of the per-batch keep/batch=* outputs) must equal the batch
-    // keep-list ROW-FOR-ROW — every kept doc, every decision column
-    // (split assignment AND shard number), nothing extra. doc_id-ordered
-    // arrival is the documented precondition (it is what makes the
-    // global keep-first windows decompose into batch-local window +
-    // history anti-join).
-    val docs = Tables.documents(spark, sf)
-      .select(col("doc_id"), col("lang"), col("source"), col("text"))
-    // sliceReplay slices on a ts column: doc_id AS the event time gives
-    // doc_id-range slices arriving in ascending order
-    val in = sliceReplay(
-      docs.withColumn("ts", col("doc_id").cast("timestamp")), 6, "graft_cur")
-    val src = spark.readStream
-      .schema(docs.withColumn("ts", col("doc_id").cast("timestamp")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-      .drop("ts")
-    val out = java.nio.file.Files.createTempDirectory("graft_cur_out").toString
-    val q = StreamingJobs.curationPipelineSink(src, out,
-        java.nio.file.Files.createTempDirectory("graft_cur_ckpt").toString)
-      .start()
-    assert(q.awaitTermination(180000), "curation stream did not finish in 180s")
-    val batches = new java.io.File(s"$out/keep").listFiles()
-      .filter(_.getName.startsWith("batch=")).map(_.toString)
-    assert(batches.length >= 4,
-      s"replay must actually exercise cross-batch state, got ${batches.length} batches")
-    val cols = Seq("doc_id", "lang", "source", "tok", "text_hash",
-      "prefix_key", "split", "shard")
-    val got = spark.read.parquet(batches: _*)
-      .select(cols.head, cols.tail: _*)
-      .collect().map(_.toSeq).toSet
-    val want = operators.PipelineQueries.curationKeepList(docs)
-      .collect().map(_.toSeq).toSet
-    info(s"streaming keep-list: ${got.size} docs over ${batches.length} batches; " +
-      s"batch keep-list: ${want.size} docs")
-    assert(got.size == want.size && got == want,
-      s"keep-lists differ: ${(want -- got).take(3)} missing, " +
-        s"${(got -- want).take(3)} extra")
-    // and the aggregate the oracled query reports matches too (same rows
-    // in ⇒ same shape out; this pins the aggregation wiring)
-    val aggGot = spark.read.parquet(batches: _*)
-      .groupBy("split").agg(count(lit(1)).as("n_docs"),
-        sum("tok").as("tok_total"),
-        countDistinct(col("source"), col("shard")).as("n_shards"))
-      .collect().map(_.toSeq).toSet
-    val aggWant = operators.PipelineQueries.curationKeepList(docs)
-      .groupBy("split").agg(count(lit(1)).as("n_docs"),
-        sum("tok").as("tok_total"),
-        countDistinct(col("source"), col("shard")).as("n_shards"))
-      .collect().map(_.toSeq).toSet
-    assert(aggGot == aggWant, s"per-split shapes differ: $aggGot vs $aggWant")
-  }
-
-  test("sf0.01 LSH-backed streaming curation equals the batch LSH keep-list row-for-row") {
-    import graft.streaming.StreamingJobs
-    val sf = "/root/testdata/sf0.01"
-    // The same pipeline-equality proof with the REAL near-dup detector in
-    // stage 3: the streaming sink in nearDup="lsh" mode (MinHash band
-    // buckets, first-in-every-bucket, history = prior batches' entrant
-    // bucket keys) must equal PipelineQueries.curationKeepListLsh — the
-    // batch chain the oracled q_curation_pipeline_lsh aggregates —
-    // ROW-FOR-ROW under doc_id-ordered replay, split and shard included.
-    val docs = Tables.documents(spark, sf)
-      .select(col("doc_id"), col("lang"), col("source"), col("text"))
-    val in = sliceReplay(
-      docs.withColumn("ts", col("doc_id").cast("timestamp")), 6, "graft_clsh")
-    val src = spark.readStream
-      .schema(docs.withColumn("ts", col("doc_id").cast("timestamp")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-      .drop("ts")
-    val out = java.nio.file.Files.createTempDirectory("graft_clsh_out").toString
-    val q = StreamingJobs.curationPipelineSink(src, out,
-        java.nio.file.Files.createTempDirectory("graft_clsh_ckpt").toString,
-        nearDup = "lsh")
-      .start()
-    assert(q.awaitTermination(300000), "LSH curation stream did not finish in 300s")
-    val batches = new java.io.File(s"$out/keep").listFiles()
-      .filter(_.getName.startsWith("batch=")).map(_.toString)
-    assert(batches.length >= 4,
-      s"replay must actually exercise cross-batch state, got ${batches.length} batches")
-    val cols = Seq("doc_id", "lang", "source", "tok", "text_hash", "split", "shard")
-    val got = spark.read.parquet(batches: _*)
-      .select(cols.head, cols.tail: _*)
-      .collect().map(_.toSeq).toSet
-    val want = operators.PipelineQueries.curationKeepListLsh(docs)
-      .collect().map(_.toSeq).toSet
-    info(s"LSH streaming keep-list: ${got.size} docs over ${batches.length} batches; " +
-      s"batch keep-list: ${want.size} docs")
-    assert(got.size == want.size && got == want,
-      s"keep-lists differ: ${(want -- got).take(3)} missing, " +
-        s"${(got -- want).take(3)} extra")
-  }
-
-  test("sf0.01 TWS curation sink (RocksDB hash state) equals the batch keep-list row-for-row") {
-    import graft.streaming.StreamingJobs
-    val sf = "/root/testdata/sf0.01"
-    // The state-store variant of the exact-dedup stage
-    // (curationPipelineSinkTws: hash history in transformWithState/
-    // RocksDB keyed state instead of parquet generations — the endgame
-    // for streams whose history outgrows HistorySet's periodic rewrites)
-    // must make IDENTICAL decisions to the directory-history sink and
-    // the batch chain: same 6-slice doc_id-ordered replay, same
-    // row-for-row bar, every decision column included.
-    val docs = Tables.documents(spark, sf)
-      .select(col("doc_id"), col("lang"), col("source"), col("text"))
-    val in = sliceReplay(
-      docs.withColumn("ts", col("doc_id").cast("timestamp")), 6, "graft_tws")
-    val src = spark.readStream
-      .schema(docs.withColumn("ts", col("doc_id").cast("timestamp")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-      .drop("ts")
-    val out = java.nio.file.Files.createTempDirectory("graft_tws_out").toString
-    val q = StreamingJobs.curationPipelineSinkTws(src, out,
-        java.nio.file.Files.createTempDirectory("graft_tws_ckpt").toString)
-      .start()
-    assert(q.awaitTermination(180000), "TWS curation stream did not finish in 180s")
-    val batches = new java.io.File(s"$out/keep").listFiles()
-      .filter(_.getName.startsWith("batch=")).map(_.toString)
-    assert(batches.length >= 4,
-      s"replay must actually exercise cross-batch state, got ${batches.length} batches")
-    val cols = Seq("doc_id", "lang", "source", "tok", "text_hash",
-      "prefix_key", "split", "shard")
-    val got = spark.read.parquet(batches: _*)
-      .select(cols.head, cols.tail: _*)
-      .collect().map(_.toSeq).toSet
-    val want = operators.PipelineQueries.curationKeepList(docs)
-      .collect().map(_.toSeq).toSet
-    info(s"TWS streaming keep-list: ${got.size} docs over ${batches.length} batches; " +
-      s"batch keep-list: ${want.size} docs")
-    assert(got.size == want.size && got == want,
-      s"keep-lists differ: ${(want -- got).take(3)} missing, " +
-        s"${(got -- want).take(3)} extra")
-  }
-
-  test("TWS curation sink: hash state survives a checkpoint-resume restart") {
-    import graft.streaming.StreamingJobs
-    // Durability proof for the state-store exact-dedup: drain 3 slices
-    // with one query, STOP it, then start a NEW query on the same
-    // checkpoint with 3 more slices staged. The corpus plants 20 docs in
-    // the post-restart half that are byte-identical to pre-restart docs
-    // but carry a DIFFERENT lang — the one shape whose drop decision can
-    // come ONLY from the hash state (the near-dup key history cannot
-    // block them: a different lang is a different (lang, prefix) key).
-    // Lost state ⇒ every plant survives into the keep-list; equality
-    // with the batch chain (which sees the whole corpus at once) proves
-    // the resumed state is exactly the pre-restart state.
-    val base = spark.range(600).select(
-      col("id").as("doc_id"),
-      element_at(array(lit("en"), lit("de"), lit("fr")),
-        (pmod(hash(col("id") * 3), lit(3)) + 1).cast("int")).as("lang"),
-      element_at(array(lit("web"), lit("books")),
-        (pmod(hash(col("id") * 5), lit(2)) + 1).cast("int")).as("source"),
-      expr("concat_ws(' ', transform(sequence(0, 29), " +
-        "j -> concat('w', pmod(hash(id * 31 + j), 3000))))").as("text"))
-    val plants = base.filter(col("doc_id") < 20)
-      .select((col("doc_id") + 600L).as("doc_id"), lit("xx").as("lang"),
-        col("source"), col("text"))
-    val docs = base.unionByName(plants).localCheckpoint(true)
-    val inAll = sliceReplay(
-      docs.withColumn("ts", col("doc_id").cast("timestamp")), 6, "graft_twsr")
-    val slices = new java.io.File(inAll).listFiles().sortBy(_.getName)
-    val in = java.nio.file.Files.createTempDirectory("graft_twsr_in").toString
-    def stage(range: Range): Unit = range.foreach { i =>
-      java.nio.file.Files.move(slices(i).toPath,
-        java.nio.file.Paths.get(in, slices(i).getName))
-    }
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_twsr_ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_twsr_out").toString
-    def run(): Unit = {
-      val src = spark.readStream
-        .schema(docs.withColumn("ts", col("doc_id").cast("timestamp")).schema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-        .drop("ts")
-      val q = StreamingJobs.curationPipelineSinkTws(src, out, ckpt).start()
-      assert(q.awaitTermination(180000), "TWS restart stream did not finish in 180s")
-    }
-    stage(0 until 3); run() // slices 0..2 drain, the query STOPS
-    val preBatches = new java.io.File(s"$out/keep").listFiles().length
-    stage(3 until 6); run() // a NEW query resumes the same checkpoint
-    val batches = new java.io.File(s"$out/keep").listFiles()
-      .filter(_.getName.startsWith("batch=")).map(_.toString)
-    assert(preBatches >= 2 && batches.length > preBatches,
-      s"restart must add batches: $preBatches before, ${batches.length} after")
-    val got = spark.read.parquet(batches: _*)
-      .select("doc_id", "lang", "source", "tok", "text_hash", "prefix_key",
-        "split", "shard")
-      .collect().map(_.toSeq).toSet
-    val want = operators.PipelineQueries.curationKeepList(docs)
-      .collect().map(_.toSeq).toSet
-    assert(got == want, s"keep-lists differ across the restart: " +
-      s"${(want -- got).take(3)} missing, ${(got -- want).take(3)} extra")
-    // the plants are the sharp check: kept ⇔ the hash state was lost
-    val keptPlants = spark.read.parquet(batches: _*)
-      .filter(col("doc_id") >= 600).count()
-    assert(keptPlants == 0, s"$keptPlants cross-restart byte-identical plants " +
-      "survived — the RocksDB hash state was not resumed from the checkpoint")
-  }
-
-  test("sf0.01 TWS curation sink in LSH mode equals the batch LSH keep-list row-for-row") {
-    import graft.streaming.StreamingJobs
-    val sf = "/root/testdata/sf0.01"
-    // The remaining sink×mode combination: state-store exact dedup
-    // FEEDING the LSH band-bucket near-dup stage (bandKeysOf over the
-    // TWS-emitted survivors + the directory key history). Must equal
-    // PipelineQueries.curationKeepListLsh row-for-row like the other
-    // three arms, so the 2x2 {directory, TWS} x {prefix, lsh} grid is
-    // fully proven rather than claimed.
-    val docs = Tables.documents(spark, sf)
-      .select(col("doc_id"), col("lang"), col("source"), col("text"))
-    val in = sliceReplay(
-      docs.withColumn("ts", col("doc_id").cast("timestamp")), 6, "graft_twsl")
-    val src = spark.readStream
-      .schema(docs.withColumn("ts", col("doc_id").cast("timestamp")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-      .drop("ts")
-    val out = java.nio.file.Files.createTempDirectory("graft_twsl_out").toString
-    val q = StreamingJobs.curationPipelineSinkTws(src, out,
-        java.nio.file.Files.createTempDirectory("graft_twsl_ckpt").toString,
-        nearDup = "lsh")
-      .start()
-    assert(q.awaitTermination(300000), "TWS LSH curation stream did not finish in 300s")
-    val batches = new java.io.File(s"$out/keep").listFiles()
-      .filter(_.getName.startsWith("batch=")).map(_.toString)
-    assert(batches.length >= 4,
-      s"replay must actually exercise cross-batch state, got ${batches.length} batches")
-    val cols = Seq("doc_id", "lang", "source", "tok", "text_hash", "split", "shard")
-    val got = spark.read.parquet(batches: _*)
-      .select(cols.head, cols.tail: _*)
-      .collect().map(_.toSeq).toSet
-    val want = operators.PipelineQueries.curationKeepListLsh(docs)
-      .collect().map(_.toSeq).toSet
-    info(s"TWS LSH streaming keep-list: ${got.size} docs over ${batches.length} batches; " +
-      s"batch keep-list: ${want.size} docs")
-    assert(got.size == want.size && got == want,
-      s"keep-lists differ: ${(want -- got).take(3)} missing, " +
-        s"${(got -- want).take(3)} extra")
-  }
-
   scaleTest("1M-vector IVF-PQ ANN: Lloyd-trained probe bounds candidate volume and finds planted neighbors") {
     // The ANN counterpart of the 5M dedup proofs (r14 verdict #4). 1M
     // synthetic 64-dim vectors in 64 well-separated hash-derived clusters
@@ -1632,7 +1386,7 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("bandKeysLocal is bit-identical to the served DataFrame banding") {
-    // the ALL-state-store sink computes band keys row-locally (a stream
+    // the curation sink computes band keys row-locally (a stream
     // can't run explode/groupBy before its stateful operator); the local
     // twin must reproduce the served banding EXACTLY or the sink's LSH
     // decisions silently diverge from every batch/oracle surface
@@ -1649,12 +1403,12 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
       s"${(want -- got).take(3)} missing, ${(got -- want).take(3)} extra")
   }
 
-  /** Shared body of the ALL-state-store sink equality proofs: the same
-    * 6-slice doc_id-ordered sf0.01 replay as the other sink arms, against
-    * the same batch twin, row-for-row — with BOTH keep-first histories
-    * (hash + near-dup key) in RocksDB and no history directory at all.
+  /** Shared body of the curation sink equality proofs: a 6-slice
+    * doc_id-ordered sf0.01 replay against the batch twin, row-for-row,
+    * with BOTH keep-first histories (hash + near-dup key) in RocksDB and
+    * no history directory at all.
     */
-  private def twsAllEqualityCase(nearDup: String,
+  private def curationEqualityCase(nearDup: String,
       batchTwin: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
     import graft.streaming.StreamingJobs
     val sf = "/root/testdata/sf0.01"
@@ -1667,15 +1421,15 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
       .option("maxFilesPerTrigger", "1").parquet(in)
       .drop("ts")
     val out = java.nio.file.Files.createTempDirectory(s"graft_twsa_${nearDup}_out").toString
-    val q = StreamingJobs.curationPipelineSinkTwsAll(src, out,
+    val q = StreamingJobs.curationPipelineSink(src, out,
         java.nio.file.Files.createTempDirectory(s"graft_twsa_${nearDup}_ckpt").toString,
         nearDup = nearDup)
       .start()
-    assert(q.awaitTermination(300000), "TWS-all curation stream did not finish in 300s")
+    assert(q.awaitTermination(300000), "curation stream did not finish in 300s")
     // the whole point of the variant: no history directories exist
     assert(!new java.io.File(s"$out/hashes").exists() &&
       !new java.io.File(s"$out/keys").exists(),
-      "all-state-store sink must maintain no history directory")
+      "the curation sink must maintain no history directory")
     val batches = new java.io.File(s"$out/keep").listFiles()
       .filter(_.getName.startsWith("batch=")).map(_.toString)
     assert(batches.length >= 4,
@@ -1689,7 +1443,7 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
     val want = batchTwin(docs)
       .select(cols.head, cols.tail: _*)
       .collect().map(_.toSeq).toSet
-    info(s"TWS-all $nearDup streaming keep-list: ${got.size} docs over " +
+    info(s"$nearDup streaming keep-list: ${got.size} docs over " +
       s"${batches.length} batches; batch keep-list: ${want.size} docs")
     assert(got.size == want.size && got == want,
       s"keep-lists differ: ${(want -- got).take(3)} missing, " +
@@ -1697,11 +1451,11 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("sf0.01 ALL-state-store curation sink (prefix) equals the batch keep-list row-for-row") {
-    twsAllEqualityCase("prefix", operators.PipelineQueries.curationKeepList)
+    curationEqualityCase("prefix", operators.PipelineQueries.curationKeepList)
   }
 
   test("sf0.01 ALL-state-store curation sink (lsh) equals the batch LSH keep-list row-for-row") {
-    twsAllEqualityCase("lsh", operators.PipelineQueries.curationKeepListLsh)
+    curationEqualityCase("lsh", operators.PipelineQueries.curationKeepListLsh)
   }
 
   /** Restart durability for the ALL-state-store sink, per mode. The
@@ -1715,7 +1469,7 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
     * on either side ⇒ plants survive into the keep-list; equality with
     * the batch chain pins everything else.
     */
-  private def twsAllRestartCase(nearDup: String,
+  private def curationRestartCase(nearDup: String,
       batchTwin: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
     import graft.streaming.StreamingJobs
     val base = spark.range(600).select(
@@ -1759,9 +1513,9 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
         .schema(docs.withColumn("ts", col("doc_id").cast("timestamp")).schema)
         .option("maxFilesPerTrigger", "1").parquet(in)
         .drop("ts")
-      val q = StreamingJobs.curationPipelineSinkTwsAll(src, out, ckpt,
+      val q = StreamingJobs.curationPipelineSink(src, out, ckpt,
         nearDup = nearDup).start()
-      assert(q.awaitTermination(180000), "TWS-all restart stream did not finish in 180s")
+      assert(q.awaitTermination(180000), "curation restart stream did not finish in 180s")
     }
     stage(0 until 3); run() // slices 0..2 drain, the query STOPS
     val preBatches = new java.io.File(s"$out/keep").listFiles().length
@@ -1798,20 +1552,21 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("ALL-state-store sink: hash AND key state survive a checkpoint-resume restart (prefix)") {
-    twsAllRestartCase("prefix", operators.PipelineQueries.curationKeepList)
+    curationRestartCase("prefix", operators.PipelineQueries.curationKeepList)
   }
 
   test("ALL-state-store sink: hash AND key state survive a checkpoint-resume restart (lsh)") {
-    twsAllRestartCase("lsh", operators.PipelineQueries.curationKeepListLsh)
+    curationRestartCase("lsh", operators.PipelineQueries.curationKeepListLsh)
   }
 
   scaleTest("5M-doc streaming curation: the pipeline sink at 50x bench scale equals the batch chain") {
     import graft.streaming.StreamingJobs
-    // The last batch/streaming scale asymmetry: the batch chain has its
-    // 5M proof below; here the STREAMING sink digests the same synthetic
-    // corpus in 8 doc_id-ordered slices (AvailableNow, one file per
-    // trigger) and its accumulated keep-list must equal the batch run —
-    // compared distributively (exceptAll both ways), never collected.
+    // The prefix-mode arm at scale: the batch chain has its 5M proof
+    // below; here the STREAMING sink digests the same synthetic corpus in
+    // 8 doc_id-ordered slices (AvailableNow, one file per trigger) with
+    // its hash and (lang, prefix_key) histories in RocksDB, and its
+    // accumulated keep-list must equal the batch run — compared
+    // distributively (exceptAll both ways), never collected.
     val base = spark.range(5000000L).select(
       col("id").as("doc_id"),
       element_at(array(lit("en"), lit("de"), lit("fr"), lit("es"), lit("it")),
@@ -1837,6 +1592,13 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
       .start()
     assert(q.awaitTermination(900000), "5M curation stream did not finish in 900s")
     val secs = (System.nanoTime() - t0) / 1e9
+    val perBatch = q.recentProgress.toSeq
+      .filter(p => p.numInputRows > 0 && p.durationMs.containsKey("triggerExecution"))
+      .map(p => p.batchId -> p.durationMs.get("triggerExecution").toDouble / 1000)
+      .sortBy(_._1)
+    assert(!new java.io.File(s"$out/hashes").exists() &&
+      !new java.io.File(s"$out/keys").exists(),
+      "the curation sink must maintain no history directory")
     val nBatches = spark.read.parquet(s"$out/metrics").count()
     val cols = Seq("doc_id", "lang", "source", "tok", "text_hash",
       "prefix_key", "split", "shard")
@@ -1848,6 +1610,7 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
     val extra = got.exceptAll(want).count()
     info(f"5M-doc streaming keep-list: $nGot docs over $nBatches batches in " +
       f"$secs%.1f s (${5001000 / secs}%.0f docs/s ingested); " +
+      s"per-batch sec [${perBatch.map(p => f"${p._2}%.1f").mkString(", ")}]; " +
       s"missing $missing, extra $extra vs the batch chain")
     assert(nBatches == 8L, s"expected 8 batches, got $nBatches")
     assert(missing == 0L && extra == 0L,
@@ -1857,11 +1620,8 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
 
   scaleTest("5M-doc ALL-state-store streaming curation (lsh): the RocksDB-only sink at 50x bench scale equals the batch chain") {
     import graft.streaming.StreamingJobs
-    // r15 verdict #1 (the last batch/streaming scale asymmetry): the
-    // TwsAll endgame sink had sf0.01 equality + restart proofs in both
-    // modes, but the 5M streaming proof above still drives the
-    // directory-history sink. This case runs a 5M corpus through
-    // curationPipelineSinkTwsAll in LSH mode — the 4x-state arm: BOTH
+    // The LSH arm at scale. This case runs a 5M corpus through
+    // curationPipelineSink in LSH mode — the 4x-state arm: BOTH
     // keep-first histories (the ~5M-entry exact-dedup hash set AND the
     // ~4-per-survivor band-bucket set) live in RocksDB behind the
     // checkpoint, no history directory at all — and the accumulated
@@ -1869,8 +1629,7 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
     // collected). 1000 byte-identical plants exercise the hash state
     // across slice boundaries; 500 one-token-edit plants exercise the
     // bucket state. Per-batch wall time and the final on-disk
-    // state-store size are reported in-band (the RocksDB growth the r15
-    // verdict called unmeasured).
+    // state-store size are reported in-band.
     val base = spark.range(5000000L).select(
       col("id").as("doc_id"),
       element_at(array(lit("en"), lit("de"), lit("fr"), lit("es"), lit("it")),
@@ -1896,9 +1655,9 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
     val out = java.nio.file.Files.createTempDirectory("graft_c5mtws_out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_c5mtws_ckpt").toString
     val t0 = System.nanoTime()
-    val q = StreamingJobs.curationPipelineSinkTwsAll(src, out, ckpt, nearDup = "lsh")
+    val q = StreamingJobs.curationPipelineSink(src, out, ckpt, nearDup = "lsh")
       .start()
-    assert(q.awaitTermination(1500000), "5M TwsAll curation stream did not finish in 1500s")
+    assert(q.awaitTermination(1500000), "5M LSH curation stream did not finish in 1500s")
     val secs = (System.nanoTime() - t0) / 1e9
     val perBatch = q.recentProgress.toSeq
       .filter(p => p.numInputRows > 0 && p.durationMs.containsKey("triggerExecution"))
@@ -1908,7 +1667,7 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
     // state is behind the checkpoint's state store
     assert(!new java.io.File(s"$out/hashes").exists() &&
       !new java.io.File(s"$out/keys").exists(),
-      "all-state-store sink must maintain no history directory")
+      "the curation sink must maintain no history directory")
     val stateBytes = {
       val root = java.nio.file.Paths.get(ckpt, "state")
       if (!java.nio.file.Files.exists(root)) 0L
@@ -1929,7 +1688,7 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
     val extra = got.exceptAll(want).count()
     val keptDups = got.filter(col("doc_id") >= 5000000L && col("doc_id") < 5001000L).count()
     val keptEdits = got.filter(col("doc_id") >= 5001000L).count()
-    info(f"5M-doc TwsAll(lsh) keep-list: $nGot docs over $nBatches batches in " +
+    info(f"5M-doc curation (lsh) keep-list: $nGot docs over $nBatches batches in " +
       f"$secs%.1f s (${5001500 / secs}%.0f docs/s ingested); " +
       f"state store ${stateBytes / 1048576.0}%.1f MiB on disk; " +
       s"per-batch sec [${perBatch.map(p => f"${p._2}%.1f").mkString(", ")}]; " +
@@ -1939,17 +1698,17 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
     assert(keptDups == 0L,
       s"$keptDups byte-identical plants survived the RocksDB hash state")
     assert(missing == 0L && extra == 0L,
-      s"5M TwsAll streaming keep-list diverges from the batch chain: " +
+      s"5M LSH streaming keep-list diverges from the batch chain: " +
         s"$missing missing, $extra extra")
     assert(stateBytes > 0L, "state store left no on-disk footprint to measure")
   }
 
-  scaleTest("5M-doc TwsAll(lsh) crash-restart mid-corpus: GiB-scale RocksDB state reloads and every straddling decision holds") {
+  scaleTest("5M-doc streaming curation (lsh) crash-restart mid-corpus: GiB-scale RocksDB state reloads and every straddling decision holds") {
     import graft.streaming.StreamingJobs
-    // r16 verdict #1 (the last at-scale resilience asymmetry): the 5M
-    // TwsAll proof above is one uninterrupted stream, while the
-    // checkpoint-resume restart proofs run at sf0.01 — but a months-
-    // lived production stream WILL restart mid-corpus with GiB of
+    // The at-scale resilience proof: the 5M LSH proof above is one
+    // uninterrupted stream, while the checkpoint-resume restart proofs
+    // run at sf0.01 — but a months-lived production stream WILL
+    // restart mid-corpus with GiB of
     // state. Same corpus and sink as the uninterrupted case; the staged-
     // input idiom of the sf0.01 restart case stops the stream after 4 of
     // 8 slices (AvailableNow drains what is staged, the query STOPS),
@@ -2002,9 +1761,9 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
         .schema(docs.withColumn("ts", col("doc_id").cast("timestamp")).schema)
         .option("maxFilesPerTrigger", "1").parquet(in)
         .drop("ts")
-      val q = StreamingJobs.curationPipelineSinkTwsAll(src, out, ckpt, nearDup = "lsh")
+      val q = StreamingJobs.curationPipelineSink(src, out, ckpt, nearDup = "lsh")
         .start()
-      assert(q.awaitTermination(1200000), "5M TwsAll restart leg did not finish in 1200s")
+      assert(q.awaitTermination(1200000), "5M LSH restart leg did not finish in 1200s")
       q.recentProgress.toSeq
         .filter(p => p.numInputRows > 0 && p.durationMs.containsKey("triggerExecution"))
         .map(p => p.batchId -> p.durationMs.get("triggerExecution").toDouble / 1000)
@@ -2026,7 +1785,7 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
     val reloadOverhead = post.head._2 - med
     assert(!new java.io.File(s"$out/hashes").exists() &&
       !new java.io.File(s"$out/keys").exists(),
-      "all-state-store sink must maintain no history directory")
+      "the curation sink must maintain no history directory")
     val nBatches = spark.read.parquet(s"$out/metrics").count()
     val cols = Seq("doc_id", "lang", "source", "tok", "text_hash", "split", "shard")
     val got = spark.read.parquet(s"$out/keep").select(cols.head, cols.tail: _*)
@@ -2038,7 +1797,7 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
     val keptDups = got.filter(col("doc_id") >= 5000000L && col("doc_id") < 5001000L).count()
     val keptEdits = got.filter(col("doc_id") >= 5001000L).count()
     val wantEdits = want.filter(col("doc_id") >= 5001000L).count()
-    info(f"5M TwsAll(lsh) restart: $nGot docs over $nBatches batches; state at restart " +
+    info(f"5M curation (lsh) restart: $nGot docs over $nBatches batches; state at restart " +
       f"${bytesAtRestart / 1048576.0}%.1f MiB, final ${stateBytes / 1048576.0}%.1f MiB; " +
       s"pre-batch sec [${pre.map(p => f"${p._2}%.1f").mkString(", ")}], " +
       s"post-batch sec [${post.map(p => f"${p._2}%.1f").mkString(", ")}]; " +
@@ -2052,129 +1811,11 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
       s"streaming kept $keptEdits, batch $wantEdits " +
       "— the RocksDB band-bucket state was not resumed at 5M scale")
     assert(missing == 0L && extra == 0L,
-      s"restarted 5M TwsAll keep-list diverges from the batch chain: " +
+      s"restarted 5M LSH keep-list diverges from the batch chain: " +
         s"$missing missing, $extra extra")
     assert(bytesAtRestart > 100L * 1048576,
       f"restart must happen with substantial state on disk, found " +
         f"${bytesAtRestart / 1048576.0}%.1f MiB")
-  }
-
-  /** Shared body of the two 48-batch bounded-history cases. The r12
-    * design read batch=0..B-1 history dirs in batch B — O(B) dirs per
-    * batch, O(B²) over a stream's life. The generation-compacted
-    * HistorySet bounds that: every batch reads at most one snapshot +
-    * (compactEvery − 1) deltas, at ANY stream age. Replay 48 slices and
-    * audit the per-batch metrics the sink records — late batches must
-    * read no more history dirs than early ones — plus the write-side
-    * trade (rows rewritten on exactly the compaction batches), the
-    * retention bound (≤2 generations), and the row-for-row batch
-    * equality of the 6-slice proofs.
-    */
-  private def boundedHistoryCase(nearDup: String,
-      batchTwin: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
-    import graft.streaming.StreamingJobs
-    val sf = "/root/testdata/sf0.001"
-    val docs = Tables.documents(spark, sf)
-      .select(col("doc_id"), col("lang"), col("source"), col("text"))
-    val in = sliceReplay(
-      docs.withColumn("ts", col("doc_id").cast("timestamp")), 48, s"graft_c48_$nearDup")
-    val src = spark.readStream
-      .schema(docs.withColumn("ts", col("doc_id").cast("timestamp")).schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-      .drop("ts")
-    val out = java.nio.file.Files.createTempDirectory(s"graft_c48_${nearDup}_out").toString
-    val q = StreamingJobs.curationPipelineSink(src, out,
-        java.nio.file.Files.createTempDirectory(s"graft_c48_${nearDup}_ckpt").toString,
-        nearDup = nearDup)
-      .start()
-    assert(q.awaitTermination(480000), "48-batch curation stream did not finish in 480s")
-    val metrics = spark.read.parquet(s"$out/metrics")
-      .select("batch_id", "hash_hist_dirs", "key_hist_dirs",
-        "hash_rows_rewritten", "key_rows_rewritten")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3), r.getLong(4)))
-    assert(metrics.length == 48, s"expected 48 batches, got ${metrics.length}")
-    val maxDirs = metrics.map(m => math.max(m._2, m._3)).max
-    val lateMax = metrics.filter(_._1 >= 40).map(m => math.max(m._2, m._3)).max
-    info(s"48-batch $nearDup history reads: max dirs/batch $maxDirs, max over batches " +
-      s"40..47 $lateMax (r12 design would read up to 47); compaction rewrites " +
-      s"${metrics.filter(m => (m._1 + 1) % 8 == 0).map(m => s"b${m._1}:${m._4}/${m._5}").mkString(" ")}")
-    assert(maxDirs <= 8, s"history read volume must stay within the compaction " +
-      s"cadence bound (1 snapshot + 7 deltas), got $maxDirs")
-    assert(lateMax <= 8, s"late batches must read no more than the cadence bound, got $lateMax")
-    // the write-side amortization is recorded in-band: exactly the
-    // compaction batches (every 8th) report a rewrite size, deltas −1
-    metrics.foreach { m =>
-      if ((m._1 + 1) % 8 == 0)
-        assert(m._4 >= 0 && m._5 >= 0,
-          s"batch ${m._1} compacted but recorded no rewrite size: $m")
-      else
-        assert(m._4 == -1L && m._5 == -1L,
-          s"delta batch ${m._1} recorded a compaction rewrite: $m")
-    }
-    // retained state stays bounded too: at most 2 generations per history
-    val gens = new java.io.File(s"$out/hashes").listFiles()
-      .map(_.getName).filter(_.startsWith("gen-"))
-    assert(gens.length <= 2, s"generation pruning must retain <=2, got ${gens.toSeq}")
-    // and the decisions are still exactly the batch chain's
-    val got = spark.read.parquet(s"$out/keep")
-      .select("doc_id", "split", "shard")
-      .collect().map(_.toSeq).toSet
-    val want = batchTwin(docs)
-      .select("doc_id", "split", "shard")
-      .collect().map(_.toSeq).toSet
-    assert(got == want, s"keep-lists differ after 48-batch replay: " +
-      s"${(want -- got).take(3)} missing, ${(got -- want).take(3)} extra")
-  }
-
-  scaleTest("48-batch streaming curation: history read volume stays flat (compaction cadence)") {
-    boundedHistoryCase("prefix", operators.PipelineQueries.curationKeepList)
-  }
-
-  scaleTest("48-batch LSH streaming curation: the 4x-larger band-key history stays cadence-bounded") {
-    // the LSH arm's history carries 4 band keys per entrant — the
-    // heaviest history this sink maintains, so the cadence bound is
-    // shown where it matters most
-    boundedHistoryCase("lsh", operators.PipelineQueries.curationKeepListLsh)
-  }
-
-  test("HistorySet replay protocol: a replayed batch always resolves pre-batch state") {
-    import graft.streaming.StreamingJobs
-    // The exactly-once claim, pinned directly instead of argued in
-    // comments: for EVERY batch id — delta batches, the first compaction,
-    // a later compaction — read(B) after write(B) has committed must
-    // still resolve the state as it was BEFORE batch B (Spark only ever
-    // replays the last uncommitted batch, and a replayed foreachBatch
-    // must recompute identical output). Each batch contributes {B}, so
-    // expected read(B) = {0..B-1}; any stale/pruned-too-early dir shows
-    // up as a wrong set. Also pins the bounded-read and bounded-retention
-    // invariants batch by batch.
-    val root = java.nio.file.Files.createTempDirectory("graft_hist").toString
-    val h = new StreamingJobs.HistorySet(spark, root, compactEvery = 4)
-    def contrib(b: Long) = spark.range(b, b + 1).select(col("id").as("k"))
-    def readSet(b: Long): (Set[Long], Int) = {
-      val (df, n) = h.read(b)
-      (df.map(_.select("k").collect().map(_.getLong(0)).toSet).getOrElse(Set.empty), n)
-    }
-    (0L to 10L).foreach { b =>
-      val want = (0L until b).toSet
-      val (pre, nPre) = readSet(b)
-      assert(pre == want, s"batch $b pre-write read: got $pre, want $want")
-      h.write(b, contrib(b), h.read(b)._1)
-      // REPLAY of batch b after its write committed (incl. compactions at
-      // b = 3, 7): the re-read must STILL see only pre-b state
-      val (replay, nReplay) = readSet(b)
-      assert(replay == want,
-        s"REPLAYED batch $b read post-write state: got $replay, want $want")
-      assert(nPre <= 4 && nReplay <= 4,
-        s"batch $b read $nPre/$nReplay dirs — cadence bound (1 gen + 3 deltas) broken")
-      // ... and a replayed WRITE must be idempotent too
-      h.write(b, contrib(b), h.read(b)._1)
-      assert(readSet(b + 1)._1 == (0L to b).toSet,
-        s"double-write of batch $b corrupted the committed state")
-    }
-    val gens = new java.io.File(root).listFiles()
-      .map(_.getName).filter(_.startsWith("gen-")).sorted
-    assert(gens.length <= 2, s"retention must keep <=2 generations, got ${gens.toSeq}")
   }
 
   scaleTest("5M-doc batch curation pipeline: the full keep-list chain at 50x bench scale") {
