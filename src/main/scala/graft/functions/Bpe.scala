@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge.{release, scope, Materializing}
 
 /** Distributed BPE (byte-pair encoding) merge learning — the token-
   * vocabulary step of a training-data pipeline, as an iterative Spark job:
@@ -50,12 +51,15 @@ object Bpe {
   }
 
   /** Learn `numMerges` merges. One tiny (single-row) driver fetch per
-    * round — the argmax — everything else stays distributed.
+    * round — the argmax — everything else stays distributed. One
+    * materialization scope: each round's table is a truncation, the
+    * previous round's is released once the next is filled, and the last
+    * is released on return (or on a throw).
     */
-  def learnMerges(words0: Dataset[WordSyms], numMerges: Int): Seq[Merge] = {
+  def learnMerges(words0: Dataset[WordSyms], numMerges: Int): Seq[Merge] = scope {
     val spark = words0.sparkSession
     import spark.implicits._
-    var words = words0.cache()
+    var words = words0.truncated
     val merges = Seq.newBuilder[Merge]
     var done = false
     for (rank <- 0 until numMerges if !done) {
@@ -77,12 +81,11 @@ object Bpe {
         val (l, r) = (best(0).getString(0), best(0).getString(1))
         merges += Merge(rank, l, r)
         val prev = words
-        words = prev.map(w => w.copy(syms = mergeOnce(w.syms, l, r))).cache()
-        words.count() // materialize before unpersisting the parent
-        prev.unpersist()
+        words = prev.map(w => w.copy(syms = mergeOnce(w.syms, l, r))).truncated
+        words.count() // materialize before releasing the parent
+        release(prev)
       }
     }
-    words.unpersist()
     merges.result()
   }
 }

@@ -198,9 +198,9 @@ object ClusterQueries extends QueryModule {
     * blocking is orders of magnitude smaller than the documents table,
     * so corpus-sized partition counts just multiply per-round scheduler
     * overhead (one partition per ~500k edges; the count is a cheap
-    * action on the cached frame). The body is one materialization
+    * action on the truncated frame). The body is one materialization
     * scope: the final labels are a checkpoint (lineage cut), so the
-    * cached inputs and every round's blocks are unreachable from them
+    * truncated inputs and every round's blocks are unreachable from them
     * and are released when this returns, instead of taxing every later
     * query in a bench/verify session.
     */
@@ -213,12 +213,12 @@ object ClusterQueries extends QueryModule {
     * sizing/hygiene sequence.
     */
   private[operators] def clusterLabelsOf(e0: DataFrame): DataFrame = scope {
-    val e = e0.cached
+    val e = e0.truncated
     val parts = math.max(1, (e.count() / 500000L).toInt)
     val adj = e.select(col("d1").as("a"), col("d2").as("b"))
       .unionByName(e.select(col("d2").as("a"), col("d1").as("b")))
       .repartition(parts)
-      .cached
+      .truncated
     connectedComponents(adj)._1
   }
 

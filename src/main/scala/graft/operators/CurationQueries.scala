@@ -49,9 +49,9 @@ object CurationQueries extends QueryModule {
           explode(expr(segArr("toks"))).as("seg"))
         .withColumn("seg_h", expr(Ql.md5PrefixLong("seg", 14)))
         .select("doc_id", "lang", "seg_h")
-        // feeds both the dup-set aggregate and the per-doc tally — cache
+        // feeds both the dup-set aggregate and the per-doc tally — truncate
         // so the scan+explode+hash runs once, not once per consumer
-        .cached
+        .truncated
       val dup = segs.groupBy("seg_h")
         .agg(countDistinct(col("doc_id")).as("nd"))
         .filter(col("nd") >= 2)
@@ -68,7 +68,7 @@ object CurationQueries extends QueryModule {
           Ql.r(avg(col("frac")), 4).as("avg_dup_frac"))
         .orderBy("lang")
         // the result is a per-lang handful of rows — materialize it now so
-        // the scope releases the segs cache when this returns (unreleased
+        // the scope releases the segs truncation when this returns (unreleased
         // blocks would tax every later query in a bench run)
         .checkpointed
     },

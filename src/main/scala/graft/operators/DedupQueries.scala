@@ -320,9 +320,13 @@ object DedupQueries extends QueryModule {
   /** Oracle twin of [[bandKeysOf]]: CTE chain ending in `${pfx}bands
     * (doc_id, band, band_key)` over a CTE `src(doc_id, text)` — every
     * CTE name is prefixed so the chain composes into larger WITHs
-    * (q_curation_pipeline_lsh splices it after its dedup stages).
+    * (q_curation_pipeline_lsh splices it after its dedup stages). `off`
+    * shifts the 12 hash seeds, for an independent second hash family
+    * (q_capture_recapture).
     */
-  private[graft] def bandKeysSqlOver(src: String, pfx: String): String = s"""${pfx}sh AS (
+  private[graft] def bandKeysSqlOver(src: String, pfx: String, off: Int = 0): String = {
+    val seed = if (off == 0) "g.i" else s"(g.i + $off)"
+    s"""${pfx}sh AS (
         SELECT DISTINCT doc_id, array_to_string(t[i + 1 : i + 3], ' ') AS sh
         FROM (SELECT doc_id, t, unnest(generate_series(0, len(t) - 3)) AS i
               FROM (SELECT doc_id, string_split(text, ' ') AS t FROM $src)
@@ -338,13 +342,14 @@ object DedupQueries extends QueryModule {
         FROM ${pfx}sh),
       ${pfx}mh AS (
         SELECT doc_id, g.i AS seed,
-               min(((2 * g.i + 1) * h1 + (g.i * g.i + g.i + 1) * h2 + g.i) % 2147483647) AS mh
+               min(((2 * $seed + 1) * h1 + ($seed * $seed + $seed + 1) * h2 + $seed) % 2147483647) AS mh
         FROM ${pfx}msh, generate_series(0, 11) g(i)
         GROUP BY 1, 2),
       ${pfx}bands AS (
         SELECT doc_id, seed // 3 AS band,
                string_agg(CAST(mh AS VARCHAR), ',' ORDER BY seed) AS band_key
         FROM ${pfx}mh GROUP BY 1, 2)"""
+  }
 
   /** The band-bucket candidate self-join as a CTE over a
     * `(doc_id, band, band_key)` CTE produced by [[bandKeysSqlOver]] —
@@ -388,35 +393,18 @@ object DedupQueries extends QueryModule {
       .distinct()
   }
 
-  /** Oracle twin of [[lshBandPairs]] as a parameterized CTE chain ending
-    * in `cand<sfx>(d1, d2)` — `sfx` suffixes every CTE name so two
-    * independent instances (distinct `off` seed offsets) coexist in one
-    * WITH (q_capture_recapture); the unsuffixed offset-0 instance is
-    * [[lshCandSql]]. First CTE is named `msh` so it can also coexist
-    * with the Jaccard side's `sh` CTE (q_dedup_recall).
+  /** Oracle twin of [[lshBandPairs]]: [[bandKeysSqlOver]] over the
+    * planted corpus, seeds offset by `off`, then [[candPairsSqlOver]],
+    * ending in `${"$"}{pfx}cand(d1, d2)`. The band chain's CTEs are named
+    * `${"$"}{pfx}l…` (`lsh`, `lmh`, `lbands` unprefixed), so it coexists
+    * with the Jaccard side's `sh` CTE (q_dedup_recall), and two instances
+    * with distinct prefixes and offsets coexist in one WITH
+    * (q_capture_recapture); the unprefixed offset-0 instance is
+    * [[lshCandSql]].
     */
-  private def lshCandSqlNamed(sfx: String, off: Int) = s"""msh$sfx AS (
-        SELECT doc_id, sh,
-               list_sum(list_transform(generate_series(0, 6), j ->
-                 CAST(strpos('0123456789abcdef', substr(md5(sh), j + 1, 1)) - 1 AS BIGINT)
-                   << (4 * (6 - j)))) AS h1,
-               list_sum(list_transform(generate_series(0, 6), j ->
-                 CAST(strpos('0123456789abcdef', substr(md5(sh), j + 8, 1)) - 1 AS BIGINT)
-                   << (4 * (6 - j)))) AS h2
-        FROM ($shinglesSql)),
-      mh$sfx AS (
-        SELECT doc_id, g.i AS seed,
-               min(((2 * (g.i + $off) + 1) * h1 + ((g.i + $off) * (g.i + $off) + (g.i + $off) + 1) * h2 + (g.i + $off)) % 2147483647) AS mh
-        FROM msh$sfx, generate_series(0, 11) g(i)
-        GROUP BY 1, 2),
-      bands$sfx AS (
-        SELECT doc_id, seed // 3 AS band,
-               string_agg(CAST(mh AS VARCHAR), ',' ORDER BY seed) AS band_key
-        FROM mh$sfx GROUP BY 1, 2),
-      cand$sfx AS (
-        SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-        FROM bands$sfx a JOIN bands$sfx b
-          ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id)"""
+  private def lshCandSqlNamed(pfx: String, off: Int) =
+    s"""${bandKeysSqlOver(plantsSql, s"${pfx}l", off)},
+      ${candPairsSqlOver(s"${pfx}lbands", pfx)}"""
 
   private val lshCandSql = lshCandSqlNamed("", 0)
 
@@ -451,11 +439,11 @@ object DedupQueries extends QueryModule {
       // on return.
       // ONE corpus shingle pass feeds BOTH the exact truth and the LSH
       // candidates (r17: the candidate side previously re-ran the whole
-      // explode from scratch): the cached distinct (doc_id, h1, h2)
+      // explode from scratch): the truncated distinct (doc_id, h1, h2)
       // halves serve the 56-bit exact key by projection and the minhash
       // family directly (per-seed mins are the same over the distinct
       // set as over occurrences).
-      val hh = shingleHalves(withPlants(spark, sfDir)).distinct().cached
+      val hh = shingleHalves(withPlants(spark, sfDir)).distinct().truncated
       val (inter, sizes) = shingleIntersections(combinedSh(hh))
       val truth = inter
         .join(sizes.select(col("doc_id").as("d1"), col("sz").as("sz1")), "d1")
@@ -571,7 +559,7 @@ object DedupQueries extends QueryModule {
   private val dedupSimhashPairs = QueryDef(
     "q_dedup_simhash_pairs",
     (spark, sfDir) => {
-      val fp = simhashFp(spark, sfDir, 200).cached
+      val fp = simhashFp(spark, sfDir, 200).truncated
       val bands = fp.select(col("doc_id"), col("fingerprint"),
           explode(expr("sequence(0, 3)")).as("band"))
         .withColumn("band_key", expr("(fingerprint >> (15 * band)) & 32767"))
@@ -609,7 +597,7 @@ object DedupQueries extends QueryModule {
   private val dedupNgramJaccard = QueryDef(
     "q_dedup_ngram_jaccard",
     (spark, sfDir) => {
-      val sh = shingles(withPlants(spark, sfDir)).cached
+      val sh = shingles(withPlants(spark, sfDir)).truncated
       val (inter, sizes) = shingleIntersections(sh)
       inter
         .join(sizes.select(col("doc_id").as("d1"), col("sz").as("sz1")), "d1")
@@ -653,14 +641,14 @@ object DedupQueries extends QueryModule {
     (spark, sfDir) => {
       val e = Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), Vectors.toDouble(col("embedding")).as("v"))
-      // cached: referenced by both sides of the band self-join and both
+      // truncated: referenced by both sides of the band self-join and both
       // candidate→vector joins — without it the union + parquet scan
       // re-executes four times
       val planted = e.unionByName(
         e.filter(col("vec_id") < 10).select(
           (col("vec_id") + 100000).as("vec_id"),
           expr("concat(slice(v, 1, 63), array(element_at(v, 64) + 0.1d))").as("v")))
-        .cached
+        .truncated
       // id-only banding table (vectors NOT duplicated per band)
       val banded = planted
         .select(col("vec_id"), explode(expr("sequence(0, 2)")).as("band"), col("v"))
@@ -726,7 +714,7 @@ object DedupQueries extends QueryModule {
       val b = d.select(col("block"), col("doc_id").as("d2"),
         col("text").as("t2"), col("len").as("len2"))
       // candidate pairs: block equality + cheap length pre-filter ONLY.
-      // The cache is deliberate — it is a predicate-pushdown barrier.
+      // The truncation is deliberate — it is a predicate-pushdown barrier.
       // Without it Catalyst pushes the levenshtein filter INTO the join
       // condition, where it is re-evaluated per conjunct for every
       // block-equal pair before d1<d2 prunes (measured 6× slower). The
@@ -736,7 +724,7 @@ object DedupQueries extends QueryModule {
         .filter(col("d1") < col("d2"))
         .filter(abs(col("len1") - col("len2")) <= 8)
         .select("d1", "d2", "t1", "t2")
-        .cached
+        .truncated
       // thresholded levenshtein: early-exits (returns -1) once the
       // distance provably exceeds 8 — a non-dup pair bails after a few
       // rows of the banded DP matrix instead of filling all O(n·m) of it
@@ -780,14 +768,14 @@ object DedupQueries extends QueryModule {
         d.filter(col("doc_id") < 5).select(
           (col("doc_id") + 200000).as("doc_id"),
           concat_ws(" ", slice(split(col("text"), " "), 1, 20)).as("text")))
-      val sh = shingles(planted).cached
+      val sh = shingles(planted).truncated
       val (inter, sizes) = shingleIntersections(sh)
       val directed = inter
         .select(col("d1").as("src"), col("d2").as("dst"), col("inter"))
         .unionByName(inter
           .select(col("d2").as("src"), col("d1").as("dst"), col("inter")))
       // materialize the tiny result; the scope then releases the
-      // shingle cache, which the checkpoint no longer reaches
+      // shingle truncation, which the checkpoint no longer reaches
       val out = directed
         .join(sizes.select(col("doc_id").as("src"), col("sz")), "src")
         .withColumn("containment", Ql.r(col("inter") / col("sz"), 4))
@@ -995,7 +983,7 @@ object DedupQueries extends QueryModule {
       // one per side); the wide 12-min signature row is checkpointed
       // once and serves both the band join and the per-seed agreement
       // join (unpivoted shuffle-free via stack).
-      val hh = shingleHalves(docs).distinct().cached
+      val hh = shingleHalves(docs).distinct().truncated
       val wide = minhashSigsWide(hh).checkpointed
       val sigs = sigsLongFromWide(wide)
       val cand = bandPairsFromWide(wide).checkpointed
@@ -1028,8 +1016,8 @@ object DedupQueries extends QueryModule {
         SELECT c.d1, c.d2,
                CAST(sum(CASE WHEN m1.mh = m2.mh THEN 1 ELSE 0 END) AS BIGINT) AS n_common_mh
         FROM cand c
-          JOIN mh m1 ON m1.doc_id = c.d1
-          JOIN mh m2 ON m2.doc_id = c.d2 AND m1.seed = m2.seed
+          JOIN lmh m1 ON m1.doc_id = c.d1
+          JOIN lmh m2 ON m2.doc_id = c.d2 AND m1.seed = m2.seed
         GROUP BY 1, 2),
       j AS (
         SELECT e.d1, e.d2, e.n_common_mh, COALESCE(i.inter, 0) AS inter,
@@ -1223,7 +1211,7 @@ object DedupQueries extends QueryModule {
         val docs = withPlants(spark, sfDir)
         // one explode+hash pass feeds both hash-family runs (r17: each
         // lshBandPairsOf call previously re-ran the corpus explode)
-        val hh = shingleHalves(docs).cached
+        val hh = shingleHalves(docs).truncated
         val run1 = bandPairsFromWide(minhashSigsWide(hh)).checkpointed
         val run2 = bandPairsFromWide(minhashSigsWide(hh, 12)).checkpointed
         val out = run1.agg(count(lit(1)).as("n_run1"))
@@ -1238,11 +1226,11 @@ object DedupQueries extends QueryModule {
       },
       Some(s"""
         WITH $lshCandSql,
-        ${lshCandSqlNamed("2", 12)},
+        ${lshCandSqlNamed("run2_", 12)},
         s AS (
           SELECT (SELECT count(*) FROM cand) AS n_run1,
-                 (SELECT count(*) FROM cand2) AS n_run2,
-                 (SELECT count(*) FROM cand JOIN cand2 USING (d1, d2)) AS m_both)
+                 (SELECT count(*) FROM run2_cand) AS n_run2,
+                 (SELECT count(*) FROM cand JOIN run2_cand USING (d1, d2)) AS m_both)
         SELECT n_run1, n_run2, m_both,
                ${Ql.R(nhat, 2)} AS chapman_n_hat,
                ${Ql.R(s"n_run1 / $nhat", 4)} AS run1_coverage,
@@ -1341,16 +1329,16 @@ object DedupQueries extends QueryModule {
         .select(col("doc_id"), col("g"), col("pos").as("i"),
           expr(Ql.md5PrefixLong("col", 14)).as("h"))
       val wWin = Window.partitionBy("doc_id").orderBy("i").rowsBetween(0, 3)
-      // cache: with the scatter exchange absorbed by the window there is
+      // truncate: with the scatter exchange absorbed by the window there is
       // no shared gram exchange left for AQE to reuse, and the four
       // consumers (df count, anti join, both self-join sides) would each
-      // re-run the explode+window pipeline — cache the fingerprint table
+      // re-run the explode+window pipeline — truncate the fingerprint table
       // (≈ grams/w rows) so it materializes once, released on return
       val fps = grams
         .withColumn("minh", min(col("h")).over(wWin))
         .filter(col("i") <= col("g") - 4) // complete windows only
         .select(col("doc_id"), col("minh")).distinct()
-        .cached
+        .truncated
       val hot = fps.groupBy("minh").agg(count(lit(1)).as("df"))
         .filter(col("df") > 100).select("minh")
       val rare = fps.join(broadcast(hot), Seq("minh"), "left_anti")
@@ -1360,7 +1348,7 @@ object DedupQueries extends QueryModule {
         .groupBy("d1", "d2").agg(count(lit(1)).as("n_shared"))
         .filter(col("n_shared") >= 2)
         .orderBy("d1", "d2")
-        .checkpointed // pair-table-sized; lets the cache release
+        .checkpointed // pair-table-sized; lets the truncation release
     },
     Some(s"""
       WITH grams AS (
@@ -1641,12 +1629,12 @@ object DedupQueries extends QueryModule {
       (spark, sfDir) => scope {
         val docs = withPlants(spark, sfDir)
         // one shingle pass, three consumers (the candidateOverlap
-        // discipline): the cached distinct (doc_id, h1, h2) halves feed
+        // discipline): the truncated distinct (doc_id, h1, h2) halves feed
         // the exact scorer (56-bit key by projection — the old shape
-        // re-distinct'd a string cache per side) and both independent
+        // re-distinct'd a cached string table per side) and both independent
         // hash-family runs (min over the distinct set == min over
         // occurrences)
-        val hh = shingleHalves(docs).distinct().cached
+        val hh = shingleHalves(docs).distinct().truncated
         val (inter, sizes) = shingleIntersections(combinedSh(hh))
         val run1 = bandPairsFromWide(minhashSigsWide(hh))
           .checkpointed
@@ -1686,9 +1674,9 @@ object DedupQueries extends QueryModule {
           FROM ($shinglesSql)),
         $interCtesSql,
         $lshCandSql,
-        ${lshCandSqlNamed("2", 12)},
+        ${lshCandSqlNamed("run2_", 12)},
         p1 AS (SELECT d1, d2, CAST(1 AS BIGINT) AS in1 FROM cand),
-        p2 AS (SELECT d1, d2, CAST(1 AS BIGINT) AS in2 FROM cand2),
+        p2 AS (SELECT d1, d2, CAST(1 AS BIGINT) AS in2 FROM run2_cand),
         pairs AS (
           SELECT coalesce(p1.d1, p2.d1) AS d1, coalesce(p1.d2, p2.d2) AS d2,
                  coalesce(in1, 0) AS in1, coalesce(in2, 0) AS in2
@@ -1812,7 +1800,7 @@ object DedupQueries extends QueryModule {
       occ AS (
         SELECT band, band_key, count(*) AS c,
                CAST(floor(log2(CAST(count(*) AS DOUBLE))) AS BIGINT) AS bkt
-        FROM bands GROUP BY 1, 2),
+        FROM lbands GROUP BY 1, 2),
       hist AS (
         SELECT bkt, count(*) AS n_buckets, CAST(sum(c) AS BIGINT) AS docs,
                CAST(sum(c * (c - 1) // 2) AS BIGINT) AS cand_pairs
@@ -1827,18 +1815,18 @@ object DedupQueries extends QueryModule {
     * (d1, d2, inter, sz1, sz2) — the scored-pair scaffold
     * q_dedup_threshold_sweep and q_lsh_banding_planner share (the same
     * join q_minhash_calibration performs inline). Everything downstream
-    * of the band join is candidate-sized. Its cache and checkpoints land
+    * of the band join is candidate-sized. Its truncation and checkpoints land
     * in the caller's materialization scope.
     */
   private[graft] def candidateOverlap(docs: DataFrame): DataFrame = {
-    // ONE corpus shingle pass feeds both sides: the cached distinct
+    // ONE corpus shingle pass feeds both sides: the truncated distinct
     // (doc_id, h1, h2) halves serve the exact-overlap machinery (56-bit
     // combined key by projection — bijective, so no re-distinct needed;
     // the old shape cached shingle STRINGS and paid a second distinct
     // per side) and the minhash signatures directly — rebuilding
     // shingles per side doubled the dominant explode+distinct of the two
     // heaviest queries (review finding)
-    val hh = shingleHalves(docs).distinct().cached
+    val hh = shingleHalves(docs).distinct().truncated
     val (inter, sizes) = shingleIntersections(combinedSh(hh))
     bandPairsFromWide(minhashSigsWide(hh))
       .join(inter, Seq("d1", "d2"), "left")
@@ -2201,7 +2189,7 @@ object DedupQueries extends QueryModule {
   private val contamNeardup = QueryDef(
     "q_contam_neardup",
     (spark, sfDir) => scope {
-      // candidateOverlap caches its shingle table and the corpus is
+      // candidateOverlap truncates its shingle table and the corpus is
       // checkpointed — materialize the |langs|-row report; the scope
       // then releases every block this query pinned (the rule all
       // candidateOverlap callers follow)

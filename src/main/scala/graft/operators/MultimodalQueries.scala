@@ -19,10 +19,10 @@ object MultimodalQueries extends QueryModule {
   private val multimodalFeatures = QueryDef(
     "q_multimodal_features",
     (spark, sfDir) => {
-      // cached: the decode feeds both the feature projection and the
+      // truncated: the decode feeds both the feature projection and the
       // resize branch — one decode pass, not two
       val feats = MultimodalPipeline.extractFeatures(
-        MultimodalPipeline.mediaTable(spark, sfDir).filter(col("doc_id") < 100)).cached
+        MultimodalPipeline.mediaTable(spark, sfDir).filter(col("doc_id") < 100)).truncated
       val resized = MultimodalPipeline.resize(feats)
         .select(col("doc_id"), col("width").as("r_w"), col("height").as("r_h"))
       feats.toDF()

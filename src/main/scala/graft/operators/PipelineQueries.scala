@@ -123,7 +123,7 @@ object PipelineQueries extends QueryModule {
     * text) corpus — per TEST doc (deterministic md5 bucket ≥ 90), the
     * count of its distinct 5-grams that appear anywhere in the train
     * side: (doc_id, lang, n_hits), test-doc-count-sized and
-    * materialized (the corpus-scale shingle cache is released before
+    * materialized (the corpus-scale shingle truncation is released before
     * returning). Exposed so ScaleSmokeSpec can drive the SERVED
     * measurement at 5M docs; q_contamination is one keyed aggregate
     * over it.
@@ -133,7 +133,7 @@ object PipelineQueries extends QueryModule {
     * the audit (lang-keyed), the scrub, and the source attribution all
     * measure the SAME surface (a gram-rule change cannot silently
     * de-synchronize them). `keyCol` is the metadata column carried along
-    * (lang or source). Caller caches and releases.
+    * (lang or source). Caller truncates and releases.
     */
   private[graft] def contamShingles(corpus: org.apache.spark.sql.DataFrame,
       keyCol: String): org.apache.spark.sql.DataFrame =
@@ -167,9 +167,9 @@ object PipelineQueries extends QueryModule {
   private[graft] def contamDocHits(corpus: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = scope {
     val docs = contamShingles(corpus, "lang")
-      // both split sides derive from this one shingle set — cache so the
+      // both split sides derive from this one shingle set — truncate so the
       // explode+md5+distinct shuffle runs once, not once per consumer
-      .cached
+      .truncated
     val trainSh = docs.filter(col("b") < 90).select("sh").distinct()
     val testSh = docs.filter(col("b") >= 90)
     val hits = testSh.join(trainSh, "sh")
@@ -177,7 +177,7 @@ object PipelineQueries extends QueryModule {
     testSh.select("doc_id", "lang").distinct()
       .join(hits, Seq("doc_id"), "left")
       .withColumn("n_hits", coalesce(col("n_hits"), lit(0L)))
-      // test-doc-count-sized — materialized while the cache is alive;
+      // test-doc-count-sized — materialized while the truncation is alive;
       // the scope releases the shingle blocks on return
       .checkpointed
   }
@@ -217,13 +217,13 @@ object PipelineQueries extends QueryModule {
     * the kept train set. Per lang: train size, scrub count/share, and
     * test-side contaminated-doc counts before vs after (a targeted
     * scrub lowers "after" but need not zero it: low-containment train
-    * docs legitimately stay). One cached shingle table feeds every
+    * docs legitimately stay). One truncated shingle table feeds every
     * side; all joins are per-shingle hash joins, never doc×doc.
     */
   private val decontamScrub = QueryDef(
     "q_decontam_scrub",
     (spark, sfDir) => scope {
-      val sh = contamShingles(Tables.documents(spark, sfDir), "lang").cached
+      val sh = contamShingles(Tables.documents(spark, sfDir), "lang").truncated
       val trainSh = sh.filter(col("b") < 90)
       val testSh = sh.filter(col("b") >= 90)
       val testSet = testSh.select("sh").distinct()
@@ -253,7 +253,7 @@ object PipelineQueries extends QueryModule {
           "coalesce(n_test0, CAST(0 AS BIGINT)) AS n_test",
           "coalesce(b0, CAST(0 AS BIGINT)) AS n_contam_before",
           "coalesce(a0, CAST(0 AS BIGINT)) AS n_contam_after")
-        // materialize the |langs|-row report while the shingle cache is
+        // materialize the |langs|-row report while the shingle truncation is
         // alive; the scope then releases sh, so the module's largest
         // intermediate does not tax every later query in the session
         .checkpointed
@@ -337,7 +337,7 @@ object PipelineQueries extends QueryModule {
         .select(col("doc_id"), col("b"), col("n"),
           expr(Ql.md5PrefixLong("sh0", 14)).as("sh"))
         .distinct()
-        .cached
+        .truncated
       val trainSh = sh.filter(col("b") < 90).select("n", "sh").distinct()
       val testSh = sh.filter(col("b") >= 90)
       val hits = testSh.join(trainSh, Seq("n", "sh"))
@@ -353,7 +353,7 @@ object PipelineQueries extends QueryModule {
         .join(hits.groupBy("n").agg(count(lit(1)).as("n_contaminated"),
           sum(col("n_hits")).as("n_hit_shingles")), Seq("n"), "left")
         .na.fill(0L, Seq("n_test", "n_contaminated", "n_hit_shingles"))
-        .checkpointed // 3-row report; the shingle cache releases below
+        .checkpointed // 3-row report; the shingle truncation releases below
         .selectExpr("n", "n_test", "n_contaminated",
           s"${Ql.R("100.0 * n_contaminated / greatest(n_test, 1)", 4)} AS contam_pct",
           "n_hit_shingles")
@@ -1145,7 +1145,7 @@ object PipelineQueries extends QueryModule {
     "q_contam_run_length",
     (spark, sfDir) => scope {
       import org.apache.spark.sql.expressions.Window
-      // scatter by doc_id: the cache below materializes the scattered
+      // scatter by doc_id: the truncation below materializes the scattered
       // layout, the hit-position windows re-use the doc_id clustering,
       // and the 5-gram posexplode + md5 runs 32-way instead of on the
       // single-row-group scan task
@@ -1160,7 +1160,7 @@ object PipelineQueries extends QueryModule {
         .select(col("doc_id"), col("lang"), col("b"), col("pos"),
           expr(Ql.md5PrefixLong("g", 14)).as("sh"))
         // feeds the train set, the test side, and the test-doc roster
-        .cached
+        .truncated
       val trainSh = grams.filter(col("b") < 90).select("sh").distinct()
       val test = grams.filter(col("b") >= 90)
       val w = Window.partitionBy("doc_id").orderBy("pos")
@@ -1179,7 +1179,7 @@ object PipelineQueries extends QueryModule {
           sum((col("longest") >= 8).cast("long")).as("n_substantial"),
           max(col("longest")).as("max_run"),
           sum(col("longest")).as("sum_longest"))
-        // |langs|-row report materialized while the cache is alive
+        // |langs|-row report materialized while the truncation is alive
         .checkpointed
       report.orderBy("lang")
     },
@@ -1308,7 +1308,7 @@ object PipelineQueries extends QueryModule {
   private val contamAttribution = QueryDef(
     "q_contam_attribution",
     (spark, sfDir) => scope {
-      val sh = contamShingles(Tables.documents(spark, sfDir), "source").cached
+      val sh = contamShingles(Tables.documents(spark, sfDir), "source").truncated
       val trainSh = sh.filter(col("b") < 90).select("source", "sh").distinct()
       val hits = sh.filter(col("b") >= 90).select(col("doc_id"), col("sh"))
         .join(trainSh, "sh")
@@ -1320,7 +1320,7 @@ object PipelineQueries extends QueryModule {
         .withColumn("hit_share_pct",
           Ql.r(col("n_gram_hits") * lit(100.0) / col("total_hits"), 4))
         .select("source", "n_test_docs_hit", "n_gram_hits", "hit_share_pct")
-        // |sources|-row report materialized while the cache is alive
+        // |sources|-row report materialized while the truncation is alive
         .checkpointed
       report.orderBy("source")
     },

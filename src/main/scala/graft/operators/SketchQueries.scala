@@ -107,7 +107,7 @@ object SketchQueries extends QueryModule {
       val posOf = Ql.md5PrefixLong("concat(cast(salt AS STRING), ':', sh0)", 14)
       // scatter: the 5-gram explode plus FOUR md5s per occurrence (gh +
       // 3 salted positions) otherwise runs on the single-row-group scan's
-      // one task; the cache right below materializes whatever partitioning
+      // one task; the truncation right below materializes whatever partitioning
       // the exchange gives, so the fan-out runs 32-way (guide §2.5)
       val grams = graft.Tables.scatter(Tables.documents(spark, sfDir))
         .withColumn("b", expr(SamplingQueries.bucketExpr("doc_id")))
@@ -127,7 +127,7 @@ object SketchQueries extends QueryModule {
           (expr(posOf) % m).as("p"))
         .select(col("doc_id"), col("b"), col("gh"),
           (col("p") / 32).cast("long").as("word"), (col("p") % 32).cast("int").as("bit"))
-        .cached
+        .truncated
       val bitmap = pos.filter(col("b") < 90)
         .select("word", "bit").distinct()
         .groupBy("word").agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), bit))").as("bits"))
@@ -142,8 +142,8 @@ object SketchQueries extends QueryModule {
         .join(trainGh, Seq("gh"), "leftsemi")
         .withColumn("exact_hit", lit(1))
       // materialize the tiny per-doc report; the scope drops the
-      // position cache after that (dropping it before the first action
-      // would throw the cache away unused and recompute pos once per
+      // position truncation after that (dropping it before the first
+      // action would throw it away unused and recompute pos once per
       // consumer)
       val out = probe.join(exact, Seq("doc_id", "gh"), "left")
         .withColumn("exact_hit", coalesce(col("exact_hit"), lit(0)))

@@ -169,7 +169,7 @@ object TextQueries extends QueryModule {
   private val langIdF1 = QueryDef(
     "q_lang_id_f1",
     (spark, sfDir) => scope {
-      val conf = langConfusion(spark, sfDir).cached
+      val conf = langConfusion(spark, sfDir).truncated
       val tp = conf.filter(col("lang") === col("pred"))
         .select(col("lang"), col("n").as("tp"))
       val actual = conf.groupBy("lang").agg(sum(col("n")).as("actual_n"))

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge.{scope, Materializing}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
@@ -1500,7 +1501,9 @@ object StreamingJobs {
 
   /** A6/A7/H8: fan-out sink — one micro-batch, several destinations
     * (aggregate "DynamoDB" table + raw archive), the SNS/multi-sink shape.
-    * batchDF is persisted so the two writes scan the input once.
+    * The batch is truncated inside one materialization scope, so the two
+    * writes scan the input once and its blocks are released when the
+    * batch ends, also when a write throws.
     */
   def fanOutSink(agg: DataFrame, countersOut: String, archiveOut: String,
       checkpoint: String, trigger: Trigger = Trigger.AvailableNow()) = {
@@ -1509,13 +1512,11 @@ object StreamingJobs {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        batch.write.mode("append").parquet(countersOut)
-        batch.filter(col("n") > 1).write.mode("append").parquet(archiveOut)
-        batch.unpersist()
-        ()
-      }
+      .foreachBatch((batch: DataFrame, batchId: Long) => scope {
+        val b = batch.truncated
+        b.write.mode("append").parquet(countersOut)
+        b.filter(col("n") > 1).write.mode("append").parquet(archiveOut)
+      })
   }
 
   // ---- I12 + H6: the curation pipeline with its state in the state store ----
@@ -1526,8 +1527,9 @@ object StreamingJobs {
     * `lsh` one first entrant per band bucket, in a different stateful
     * processor, so a checkpoint written in one mode cannot carry the
     * other's decisions). The mode is persisted in the output root on
-    * first contact; a restart supplying a different mode fails at batch
-    * start with a message that names both modes.
+    * first contact; a restart supplying a different mode fails when the
+    * sink is built, before Spark reads the checkpoint, with a message
+    * that names both modes.
     */
   private def requireNearDupMode(spark: SparkSession, outDir: String,
       nearDup: String): Unit = {
@@ -1542,9 +1544,10 @@ object StreamingJobs {
       }
     if (existing.nonEmpty)
       require(existing == nearDup,
-        s"output dir $outDir holds a nearDup=$existing key history; " +
-          s"restarting it with nearDup=$nearDup would join the wrong key " +
-          s"schema — resume with nearDup=$existing or use a fresh outDir")
+        s"output dir $outDir was started with nearDup=$existing; its " +
+          s"checkpoint's key state belongs to the nearDup=$existing stateful " +
+          s"processor and cannot carry nearDup=$nearDup decisions — resume " +
+          s"with nearDup=$existing or use a fresh outDir and checkpoint")
     else {
       // write-then-rename so a crash mid-write cannot leave an empty
       // marker that blocks every later restart; an empty marker (from a
@@ -1564,6 +1567,7 @@ object StreamingJobs {
     * of [[curationPipelineSink]]; `s3` carries the near-dup survivors.
     * Both keep-first histories live in the state store, so the only
     * cross-batch file state here is the (split × source) offsets table.
+    * The packed frame is truncated into the caller's scope.
     */
   private def curationStage45(outDir: String, batchId: Long, s3: DataFrame,
       nearDup: String): Unit = {
@@ -1596,7 +1600,7 @@ object StreamingJobs {
       .withColumn("cum_before",
         sum(col("tok")).over(packW) - col("tok") + col("off"))
       .withColumn("shard", expr("cum_before div 2048"))
-      .persist()
+      .truncated
     packed
       .select(keepCols.head, keepCols.tail: _*)
       .write.mode("overwrite").parquet(s"$outDir/keep/batch=$batchId")
@@ -1612,7 +1616,6 @@ object StreamingJobs {
         s"$outDir/offsets/gen-${batchId - 2}"), true)
     spark.range(1).select(lit(batchId).as("batch_id"), lit(nearDup).as("near_dup_mode"))
       .write.mode("overwrite").parquet(s"$outDir/metrics/batch=$batchId")
-    packed.unpersist()
   }
 
   case class CurDoc(doc_id: Long, lang: String, source: String, text: String,
@@ -1769,13 +1772,13 @@ object StreamingJobs {
           .toDF()
     }
     useForkFreeCheckpoints(spark)
+    requireNearDupMode(spark, outDir, nearDup)
     s3.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        requireNearDupMode(batch.sparkSession, outDir, nearDup)
-        val b = batch.persist()
+      .foreachBatch((batch: DataFrame, batchId: Long) => scope {
+        val b = batch.truncated
         val kept = nearDup match {
           case "prefix" => b
           case "lsh" =>
@@ -1787,9 +1790,7 @@ object StreamingJobs {
               .join(bad, Seq("doc_id"), "left_anti")
         }
         curationStage45(outDir, batchId, kept, nearDup)
-        b.unpersist()
-        ()
-      }
+      })
   }
 
   /** A8/I8/H8: the streaming quality-gate scrub — "scrub before anything
@@ -1801,7 +1802,7 @@ object StreamingJobs {
     * archived with PII already redacted; rejects route to the
     * dead-letter path carrying every failed-rule flag plus a compact
     * reason list for triage. Both destinations are written inside ONE
-    * foreachBatch from one persisted scan of the batch (the fan-out
+    * foreachBatch from one truncated scan of the batch (the fan-out
     * shape), and each batch lands in its own `batch=<id>` directory with
     * overwrite semantics — a micro-batch replayed after a crash between
     * write and checkpoint commit overwrites its own partial output
@@ -1817,10 +1818,10 @@ object StreamingJobs {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch((batch: DataFrame, batchId: Long) => scope {
         val scrubbed = graft.operators.CurationQueries
           .piiScrub(graft.operators.CurationQueries.gopherSignals(batch))
-          .persist()
+          .truncated
         scrubbed.filter(col("keep"))
           .select(col("doc_id"), col("source"), col("redacted").as("text"),
             col("n_email"), col("n_phone"))
@@ -1834,8 +1835,6 @@ object StreamingJobs {
               when(!col("st_ok"), lit("stopwords")),
               when(!col("dg_ok"), lit("digits"))).as("reasons"))
           .write.mode("overwrite").parquet(s"$dlqDir/batch=$batchId")
-        scrubbed.unpersist()
-        ()
-      }
+      })
   }
 }

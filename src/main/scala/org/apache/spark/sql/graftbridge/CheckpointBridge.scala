@@ -4,29 +4,27 @@ import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.execution.columnar.{CachedRDDBuilder, InMemoryRelation}
 import org.apache.spark.storage.StorageLevel
 
 /** The one place an intermediate is materialized, and the one rule that
   * releases it.
   *
-  * Four ways to pin a frame's blocks: [[checkpoint]] (eager local
+  * Three ways to pin a frame's blocks: [[checkpoint]] (eager local
   * checkpoint, lineage cut), `checkpoint(df, keys)` (the same, with a
-  * declared hash partitioning), [[truncate]] (plan-level cut, lazily
-  * persisted) and [[cache]]. Each records what it pins in the calling
-  * thread's innermost [[scope]]; outside any scope nothing is recorded
-  * and the caller owns the blocks.
+  * declared hash partitioning) and [[truncate]] (plan-level cut, lazily
+  * persisted: the one way to let several consumers read a frame that is
+  * computed once). Each records what it pins in the calling thread's
+  * innermost [[scope]]; outside any scope nothing is recorded and the
+  * caller owns the blocks.
   *
   * The rule: when a scope exits, normally or by a throw, it releases
   * every pin it recorded except those REACHABLE from the frames it
   * returns, and hands those to the enclosing scope. Reachable means
-  * through the frame's plan leaves (`LogicalRDD` for checkpoints and
-  * truncations, `InMemoryRelation` for caches) and then RDD
-  * dependencies. Reachability, not the order of creation, decides:
+  * through the `LogicalRDD` leaves of the frame's analyzed plan and then
+  * RDD dependencies. Reachability, not the order of creation, decides:
   * a released local checkpoint cannot be recomputed, so a pin a
   * returned frame still reads must survive however early it was made,
   * and a pin behind a later checkpoint (whose lineage is cut) is dead
@@ -36,11 +34,9 @@ import org.apache.spark.storage.StorageLevel
   */
 object CheckpointBridge {
 
-  /** One materialization: the RDD ids a plan leaf refers to it by (for
-    * a checkpoint or truncation), or the cache entry's builder (for a
-    * cache), and how to give its blocks back. */
-  private final class Pin(val rddIds: Set[Int], val builder: CachedRDDBuilder,
-      val release: () => Unit)
+  /** One materialization: the RDD ids a plan leaf refers to it by, and
+    * how to give its blocks back. */
+  private final class Pin(val rddIds: Set[Int], val release: () => Unit)
 
   /** The pins of the calling thread's innermost scope, or null. Only
     * that thread touches them. Deliberately not inheritable (as a
@@ -74,15 +70,12 @@ object CheckpointBridge {
   }
 
   /** Releases, now, the current scope's pins that `df` itself stands on:
-    * its cache entry if its plan is cached, else the checkpoints and
-    * truncations at its plan's leaves — not what those were built from.
-    * For a loop that no longer reads its previous round, or a function
-    * done with a cache before its scope ends. */
-  def release(df: DataFrame): Unit = Option(current.get).foreach { pins =>
-    val own = cacheEntry(df)
-    val leaves = if (own.isDefined) Set.empty[Int]
-      else qe(df).analyzed.collectLeaves().collect { case l: LogicalRDD => l.rdd.id }.toSet
-    val (mine, rest) = pins.partition(p => p.rddIds.exists(leaves) || own.exists(_ eq p.builder))
+    * the checkpoints and truncations at its plan's leaves — not what
+    * those were built from. For a loop that no longer reads its previous
+    * round, or a function done with a truncation before its scope ends. */
+  def release(df: Dataset[_]): Unit = Option(current.get).foreach { pins =>
+    val leaves = qe(df).analyzed.collectLeaves().collect { case l: LogicalRDD => l.rdd.id }.toSet
+    val (mine, rest) = pins.partition(_.rddIds.exists(leaves))
     pins.clear(); pins ++= rest
     mine.foreach(_.release())
   }
@@ -101,7 +94,7 @@ object CheckpointBridge {
   def checkpoint[T](ds: Dataset[T]): Dataset[T] = {
     val ck = ds.localCheckpoint(true)
     val rdd = leafRdd(ck)
-    record(new Pin(Set(rdd.id), null, unpersisting(rdd)))
+    record(new Pin(Set(rdd.id), unpersisting(rdd)))
     ck
   }
 
@@ -137,7 +130,7 @@ object CheckpointBridge {
     val rdd = ck.queryExecution.toRdd
     require(rdd.getNumPartitions == n,
       s"checkpoint has ${rdd.getNumPartitions} partitions, declared $n")
-    record(new Pin(Set(pinned.id, rdd.id), null, unpersisting(pinned)))
+    record(new Pin(Set(pinned.id, rdd.id), unpersisting(pinned)))
     classic.Dataset.ofRows(session,
       LogicalRDD(attrs, rdd, HashPartitioning(keyAttrs, n), Nil, isStreaming = false, None)(
         session, None, None))
@@ -164,51 +157,22 @@ object CheckpointBridge {
     * only the final stage is deferred into the first consumer's job.
     * The lineage stays whole, so whatever the truncated frame was built
     * from stays reachable through it (and is kept by a scope returning
-    * it).
+    * it). The result keeps `ds`'s encoder.
     */
-  def truncate(df: DataFrame): DataFrame = {
-    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
-    val cdf = df.asInstanceOf[classic.DataFrame]
-    val rdd = cdf.queryExecution.toRdd.map(_.copy())
+  def truncate[T](ds: Dataset[T]): Dataset[T] = {
+    val cds = ds.asInstanceOf[classic.Dataset[T]]
+    val rdd = cds.queryExecution.toRdd.map(_.copy())
     rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    record(new Pin(Set(rdd.id), null, unpersisting(rdd)))
-    classic.Dataset.ofRows(session,
-      LogicalRDD.fromDataset(rdd, cdf, isStreaming = false))
+    record(new Pin(Set(rdd.id), unpersisting(rdd)))
+    new classic.Dataset[T](cds.sparkSession,
+      LogicalRDD.fromDataset(rdd, cds, isStreaming = false), cds.encoder)
   }
 
-  /** Builders of cache entries made through [[cache]] inside a scope,
-    * with the number of live pins on each: two scopes caching the same
-    * plan share one entry, and only the last release drops it. An entry
-    * that existed before (cached by someone else) is not recorded. */
-  private val cacheOwners = new java.util.IdentityHashMap[CachedRDDBuilder, Integer]()
-
-  /** `Dataset.cache()`: lazy, filled by the first action that reads it,
-    * and substituted into any later plan with the same result. */
-  def cache[T](ds: Dataset[T]): Dataset[T] =
-    if (current.get == null) ds.cache()
-    else {
-      val builder = cacheOwners.synchronized {
-        val foreign = cacheEntry(ds).exists(b => !cacheOwners.containsKey(b))
-        ds.cache()
-        val b = cacheEntry(ds).get
-        if (foreign) null
-        else { cacheOwners.put(b, cacheOwners.getOrDefault(b, 0) + 1); b }
-      }
-      if (builder != null)
-        record(new Pin(Set.empty, builder, () => cacheOwners.synchronized {
-          val left = cacheOwners.get(builder) - 1
-          if (left > 0) cacheOwners.put(builder, left)
-          else { cacheOwners.remove(builder); ds.unpersist(blocking = false) }
-        }))
-      ds
-    }
-
-  /** Postfix forms of the four materializations, for method chains. */
+  /** Postfix forms of the three materializations, for method chains. */
   implicit class Materializing[T](private val ds: Dataset[T]) extends AnyVal {
     def checkpointed: Dataset[T] = checkpoint(ds)
     def checkpointedBy(keys: String*): DataFrame = checkpoint(ds.toDF(), keys)
-    def truncated: DataFrame = truncate(ds.toDF())
-    def cached: Dataset[T] = cache(ds)
+    def truncated: Dataset[T] = truncate(ds)
   }
 
   private def qe(df: Dataset[_]) = df.asInstanceOf[classic.Dataset[_]].queryExecution
@@ -216,12 +180,6 @@ object CheckpointBridge {
   private def leafRdd(ck: Dataset[_]): RDD[_] = qe(ck).analyzed match {
     case l: LogicalRDD => l.rdd
     case p => throw new IllegalStateException(s"checkpoint leaf is not a LogicalRDD: $p")
-  }
-
-  private def cacheEntry(ds: Dataset[_]): Option[CachedRDDBuilder] = {
-    val cdf = ds.asInstanceOf[classic.Dataset[_]]
-    cdf.sparkSession.sharedState.cacheManager.lookupCachedData(cdf)
-      .map(_.cachedRepresentation.cacheBuilder)
   }
 
   /** Frames in a scope's result. */
@@ -236,18 +194,12 @@ object CheckpointBridge {
     * leaves, then RDD dependencies. */
   private def reachable(fs: Seq[Dataset[_]]): Pin => Boolean = {
     val rdds = mutable.Set.empty[Int]
-    val builders = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[CachedRDDBuilder, java.lang.Boolean]())
     def rdd(r: RDD[_]): Unit =
       if (rdds.add(r.id)) r.dependencies.foreach(d => rdd(d.rdd))
-    def plan(p: LogicalPlan): Unit = p.foreachWithSubqueries {
+    fs.foreach(f => qe(f).analyzed.foreachWithSubqueries {
       case l: LogicalRDD => rdd(l.rdd)
-      case m: InMemoryRelation if builders.add(m.cacheBuilder) =>
-        if (m.cacheBuilder.isCachedColumnBuffersLoaded) rdd(m.cacheBuilder.cachedColumnBuffers)
-        plan(m.cacheBuilder.logicalPlan)
       case _ =>
-    }
-    fs.foreach(f => plan(qe(f).withCachedData))
-    p => p.rddIds.exists(rdds) || builders.contains(p.builder)
+    })
+    p => p.rddIds.exists(rdds)
   }
 }

@@ -134,20 +134,18 @@ class CheckpointBridgeSpec extends AnyFunSuite with SparkFixture
           val lazyOverA = a.select(($"x" + 1).as("y"))
           val b = lazyOverA.checkpointed // lineage cut: a is not reachable from b
           val t = b.truncated // persisted, lineage whole: b stays reachable through t
-          val c = base.cached
+          val c = base.truncated
           assert(c.count() == 50)
           t.select($"y")
         }
         (r, persisted -- before)
       }
-      // b and t survive (t's lineage reaches b); a and the cache are gone
+      // b and t survive (t's lineage reaches b); a and c are gone
       assert(out.collect().map(_.getLong(0)).sorted.toSeq == (1L until 50L by 2).toSeq)
       (out.count(), left)
     }
     assert(kept == 25)
     assert(innerLeft.size == 2, s"inner scope left $innerLeft, want b and t only")
-    assert(spark.sharedState.cacheManager.lookupCachedData(
-      base.asInstanceOf[org.apache.spark.sql.classic.DataFrame]).isEmpty)
     assert(persisted -- before == Set.empty, "the outer scope returned no frame, so it releases all")
   }
 
@@ -174,36 +172,25 @@ class CheckpointBridgeSpec extends AnyFunSuite with SparkFixture
       val a = (0L until 10L).toDF("x").checkpointed
       val b = a.filter($"x" > 4).checkpointed
       val c = a.filter($"x" < 3).checkpointedBy("x")
-      val d = a.select(($"x" * 2).as("y")).cached
+      val d = a.select(($"x" * 2).as("y")).truncated
       assert(d.count() == 10)
       release(b)
       release(c)
-      release(d) // the cache only: a, which d was built from, stays
+      release(d) // the truncation only: a, which d was built from, stays
       assert((persisted -- before).size == 1, "only a's checkpoint is left")
       assert(a.count() == 10)
     }
     assert(persisted -- before == Set.empty)
   }
 
-  test("scopes caching the same plan share one entry until the last releases it") {
+  test("a truncation keeps its encoder, so a typed frame stays typed") {
     import spark.implicits._
     import CheckpointBridge._
-    val df = (0L until 20L).toDF("x").filter($"x" > 3)
-    val cm = spark.sharedState.cacheManager
-    def cached: Boolean =
-      cm.lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.DataFrame]).isDefined
     scope {
-      df.cached.count()
-      scope { df.cached.count() }
-      assert(cached, "the inner scope must not drop the outer scope's cache")
+      val t: org.apache.spark.sql.Dataset[(Long, String)] =
+        Seq((2L, "b"), (1L, "a")).toDS().truncated
+      assert(t.map(_._1 * 10).collect().sorted.toSeq == Seq(10L, 20L))
     }
-    assert(!cached)
-    // a cache made outside the bridge is not the bridge's to drop
-    df.cache()
-    try {
-      scope { df.cached.count() }
-      assert(cached)
-    } finally df.unpersist()
   }
 
   test("a thread started inside a scope does not record into it") {

@@ -28,8 +28,6 @@ class OtherSchemeFs(uri: URI, conf: Configuration)
   */
 class CheckpointManagerSpec extends AnyFunSuite with SparkFixture {
 
-  private def tmpDir(prefix: String) = Files.createTempDirectory(prefix)
-
   private def names(dir: java.nio.file.Path): Set[String] =
     dir.toFile.listFiles().map(_.getName).toSet
 
@@ -40,11 +38,11 @@ class CheckpointManagerSpec extends AnyFunSuite with SparkFixture {
     new ForkFreeCheckpointFileManager(new Path(dir.toUri), conf)
 
   test("file: paths use Spark's FileSystem-based manager") {
-    assert(manager(tmpDir("graft_cfm0")).delegate.isInstanceOf[FileSystemBasedCheckpointFileManager])
+    assert(manager(tempDir("graft_cfm0")).delegate.isInstanceOf[FileSystemBasedCheckpointFileManager])
   }
 
   test("createAtomic + close publishes the file and its Hadoop .crc, and nothing else") {
-    val dir = tmpDir("graft_cfm1")
+    val dir = tempDir("graft_cfm1")
     val fm = manager(dir)
     val out = fm.createAtomic(new Path(dir.toUri.toString, "0"), overwriteIfPossible = false)
     out.write("v1\n{}".getBytes("UTF-8"))
@@ -56,7 +54,7 @@ class CheckpointManagerSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("cancel() leaves neither the final file nor the temp file") {
-    val dir = tmpDir("graft_cfm2")
+    val dir = tempDir("graft_cfm2")
     val out = manager(dir).createAtomic(new Path(dir.toUri.toString, "1"), overwriteIfPossible = false)
     out.write(Array[Byte](1, 2, 3))
     assert(names(dir).nonEmpty, "the temp file exists while writing")
@@ -65,7 +63,7 @@ class CheckpointManagerSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("overwriteIfPossible = false on an existing path throws FileAlreadyExistsException") {
-    val dir = tmpDir("graft_cfm3")
+    val dir = tempDir("graft_cfm3")
     val fm = manager(dir)
     val p = new Path(dir.toUri.toString, "2")
     val first = fm.createAtomic(p, overwriteIfPossible = false)
@@ -89,7 +87,7 @@ class CheckpointManagerSpec extends AnyFunSuite with SparkFixture {
       stock.initialize(URI.create("file:///"), conf)
       val ours = new ForkFreeLocalFileSystem()
       ours.initialize(URI.create("file:///"), conf)
-      val (a, b) = (tmpDir("graft_cfm4a"), tmpDir("graft_cfm4b"))
+      val (a, b) = (tempDir("graft_cfm4a"), tempDir("graft_cfm4b"))
       // the manager's create and mkdirs against the stock filesystem's
       val fm = manager(a, conf)
       val out = fm.createAtomic(new Path(a.toUri.toString, "f"), overwriteIfPossible = false)
@@ -128,7 +126,7 @@ class CheckpointManagerSpec extends AnyFunSuite with SparkFixture {
     val key = ForkFreeCheckpointFileManager.ConfKey
     val providerKey = SQLConf.STATE_STORE_PROVIDER_CLASS.key
     val savedProvider = spark.conf.get(providerKey)
-    val tmp = tmpDir("graft_cfm_restart")
+    val tmp = tempDir("graft_cfm_restart")
     // 4,000 events, one every 3 s of event time (3.3 hours, so four
     // hourly windows per event type), in four time-ordered slices: every
     // slice lies past the watermark the previous ones set, so no row is

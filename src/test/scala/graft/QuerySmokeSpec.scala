@@ -29,7 +29,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * stage, an exchange or a materialization, or changes a join strategy,
   * shows up in its own diff.
   *
-  * Then queries that checkpoint, truncate and cache heavily run at once
+  * Then queries that checkpoint and truncate heavily run at once
   * in the one session, each in its own scope (ROADMAP item 3). A scope
   * releases only what its own thread pinned, so no query can release
   * another's live checkpoint: every result equals the serial run's, and

@@ -18,32 +18,28 @@ class RegistrySpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
-  /** One way to materialize: every checkpoint, truncation and cache in
-    * the query operators and the two runners goes through
-    * `org.apache.spark.sql.graftbridge.CheckpointBridge`, which records
-    * what it pins in the caller's materialization scope and releases it.
-    * A raw `localCheckpoint`, `cache()` or `persist` here would pin
+  /** One way to materialize: every checkpoint and truncation in the
+    * program goes through `org.apache.spark.sql.graftbridge.CheckpointBridge`,
+    * which records what it pins in the caller's materialization scope and
+    * releases it when the scope exits, also on a throw. A raw
+    * `localCheckpoint`, `cache()` or `persist` anywhere else would pin
     * blocks no scope knows about, and a `getPersistentRDDs` diff would
-    * release blocks another query's scope still needs. Out of scope, on
-    * purpose: the per-micro-batch `persist`/`unpersist` pairs inside the
-    * `foreachBatch` bodies of `graft.streaming.StreamingJobs`, and the
-    * self-contained merge loop of `graft.functions.Bpe`, which each
-    * release what they pin before returning.
+    * release blocks another query's scope still needs. The scan covers
+    * every source under `src/main/scala` except the bridge's own
+    * package, where those calls are made.
     */
-  test("the operators and runners materialize only through CheckpointBridge") {
-    import java.nio.file.{Files, Path, Paths}
+  test("the program materializes only through CheckpointBridge") {
+    import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val operators = Files.list(Paths.get("src/main/scala/graft/operators")).iterator.asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-    val files: Seq[Path] = operators ++
-      Seq("Bench.scala", "Verify.scala").map(f => Paths.get("src/main/scala/graft", f))
-    assert(operators.size > 10, s"operator sources not found from ${Paths.get("").toAbsolutePath}")
+    val files = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(f => f.toString.endsWith(".scala") && !f.toString.contains("/graftbridge/")).toSeq
+    assert(files.size > 40, s"sources not found from ${Paths.get("").toAbsolutePath}")
     val banned = Seq("getPersistentRDDs", ".localCheckpoint(", ".cache()", ".persist(")
     val hits = for {
       f <- files
       (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
       b <- banned if line.contains(b)
-    } yield s"${f.getFileName}:${n + 1}: $b"
+    } yield s"$f:${n + 1}: $b"
     assert(hits.isEmpty, s"materialization outside the bridge:\n${hits.mkString("\n")}")
   }
 

@@ -461,8 +461,8 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
     val bounds = ev.agg(min("ts"), max("ts")).head()
     val (lo, hi) = (bounds.getTimestamp(0).getTime, bounds.getTimestamp(1).getTime)
     val width = (hi - lo) / nSlices + 1
-    val in = java.nio.file.Files.createTempDirectory(s"${prefix}_in")
-    val staging = java.nio.file.Files.createTempDirectory(s"${prefix}_stage")
+    val in = tempDir(s"${prefix}_in")
+    val staging = tempDir(s"${prefix}_stage")
     (0 until nSlices).foreach { i =>
       ev.filter(col("ts") >= lit(new java.sql.Timestamp(lo + i * width)) &&
           col("ts") < lit(new java.sql.Timestamp(lo + (i + 1) * width)))
@@ -492,7 +492,7 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
       .writeStream.format("memory").queryName("attr_scale")
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_attr_ckpt").toString)
+        tempDir("graft_attr_ckpt").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     assert(q.awaitTermination(180000), "attribution stream did not finish in 180s")
@@ -529,7 +529,7 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
       .writeStream.format("memory").queryName("funnel_scale")
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_funnel_ckpt").toString)
+        tempDir("graft_funnel_ckpt").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     assert(q.awaitTermination(180000), "funnel stream did not finish in 180s")
@@ -569,7 +569,7 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
       .writeStream.format("memory").queryName("ewma_scale")
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_ewma_ckpt").toString)
+        tempDir("graft_ewma_ckpt").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     assert(q.awaitTermination(180000), "EWMA stream did not finish in 180s")
@@ -627,7 +627,7 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
       .writeStream.format("memory").queryName("drift_scale")
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_drift_ckpt").toString)
+        tempDir("graft_drift_ckpt").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     assert(q.awaitTermination(180000), "drift stream did not finish in 180s")
@@ -673,7 +673,7 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
       .writeStream.format("memory").queryName("cusum_scale")
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_cusum_ckpt").toString)
+        tempDir("graft_cusum_ckpt").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     assert(q.awaitTermination(180000), "cusum stream did not finish in 180s")
@@ -718,7 +718,7 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
       .writeStream.format("memory").queryName("spc_scale")
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_spc_ckpt").toString)
+        tempDir("graft_spc_ckpt").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     assert(q.awaitTermination(180000), "SPC stream did not finish in 180s")
@@ -746,8 +746,8 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
     // files and let the processor fold them in arrival order.
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val in = java.nio.file.Files.createTempDirectory("graft_topk_in")
-    val staging = java.nio.file.Files.createTempDirectory("graft_topk_stage")
+    val in = tempDir("graft_topk_in")
+    val staging = tempDir("graft_topk_stage")
     (0 until 4).foreach { i =>
       docs.filter(col("doc_id") % 4 === i)
         .coalesce(1).write.mode("overwrite").parquet(s"$staging/s$i")
@@ -762,7 +762,7 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
       .writeStream.format("memory").queryName("topk_scale")
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_topk_ckpt").toString)
+        tempDir("graft_topk_ckpt").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     assert(q.awaitTermination(180000), "top-k stream did not finish in 180s")
@@ -814,9 +814,9 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
       .select(col("tok"), col("doc_id"), col("cnt"))
       .as[StreamingJobs.TokenPosting]
     val updates = StreamingJobs.invIndexStream(src).toDF()
-    val table = java.nio.file.Files.createTempDirectory("graft_invidx_table").toString
+    val table = tempDir("graft_invidx_table").toString
     val q = StreamingJobs.upsertSink(updates, table,
-        java.nio.file.Files.createTempDirectory("graft_invidx_ckpt").toString,
+        tempDir("graft_invidx_ckpt").toString,
         key = "tok", versionCol = "tf")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
@@ -1097,9 +1097,9 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
       .select(col("tok"), col("doc_id"), col("cnt"))
       .as[StreamingJobs.TokenPosting]
     val updates = StreamingJobs.invIndexStream(src).toDF()
-    val table = java.nio.file.Files.createTempDirectory("graft_bm25idx_table").toString
+    val table = tempDir("graft_bm25idx_table").toString
     val q = StreamingJobs.upsertSink(updates, table,
-        java.nio.file.Files.createTempDirectory("graft_bm25idx_ckpt").toString,
+        tempDir("graft_bm25idx_ckpt").toString,
         key = "tok", versionCol = "tf")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
@@ -1420,9 +1420,9 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
       .schema(docs.withColumn("ts", col("doc_id").cast("timestamp")).schema)
       .option("maxFilesPerTrigger", "1").parquet(in)
       .drop("ts")
-    val out = java.nio.file.Files.createTempDirectory(s"graft_twsa_${nearDup}_out").toString
+    val out = tempDir(s"graft_twsa_${nearDup}_out").toString
     val q = StreamingJobs.curationPipelineSink(src, out,
-        java.nio.file.Files.createTempDirectory(s"graft_twsa_${nearDup}_ckpt").toString,
+        tempDir(s"graft_twsa_${nearDup}_ckpt").toString,
         nearDup = nearDup)
       .start()
     assert(q.awaitTermination(300000), "curation stream did not finish in 300s")
@@ -1501,13 +1501,13 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
     val inAll = sliceReplay(
       docs.withColumn("ts", col("doc_id").cast("timestamp")), 6, s"graft_twsar_$nearDup")
     val slices = new java.io.File(inAll).listFiles().sortBy(_.getName)
-    val in = java.nio.file.Files.createTempDirectory(s"graft_twsar_${nearDup}_in").toString
+    val in = tempDir(s"graft_twsar_${nearDup}_in").toString
     def stage(range: Range): Unit = range.foreach { i =>
       java.nio.file.Files.move(slices(i).toPath,
         java.nio.file.Paths.get(in, slices(i).getName))
     }
-    val ckpt = java.nio.file.Files.createTempDirectory(s"graft_twsar_${nearDup}_ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory(s"graft_twsar_${nearDup}_out").toString
+    val ckpt = tempDir(s"graft_twsar_${nearDup}_ckpt").toString
+    val out = tempDir(s"graft_twsar_${nearDup}_out").toString
     def run(): Unit = {
       val src = spark.readStream
         .schema(docs.withColumn("ts", col("doc_id").cast("timestamp")).schema)
@@ -1559,6 +1559,23 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
     curationRestartCase("lsh", operators.PipelineQueries.curationKeepListLsh)
   }
 
+  test("restarting a curation output dir in the other near-dup mode fails, naming both modes") {
+    import graft.streaming.StreamingJobs
+    val docs = Tables.documents(spark, "/root/testdata/sf0.01")
+      .select(col("doc_id"), col("lang"), col("source"), col("text"))
+      .withColumn("ts", col("doc_id").cast("timestamp"))
+    val in = sliceReplay(docs, 2, "graft_mode")
+    val (ckpt, out) = (tempDir("graft_mode_ckpt").toString, tempDir("graft_mode_out").toString)
+    def sink(nearDup: String) = StreamingJobs.curationPipelineSink(
+      spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", "1").parquet(in)
+        .drop("ts"), out, ckpt, nearDup = nearDup)
+    assert(sink("prefix").start().awaitTermination(180000), "prefix stream did not finish in 180s")
+    val e = intercept[IllegalArgumentException](sink("lsh"))
+    Seq("nearDup=prefix", "nearDup=lsh",
+        "key state belongs to the nearDup=prefix stateful processor")
+      .foreach(w => assert(e.getMessage.contains(w), e.getMessage))
+  }
+
   scaleTest("5M-doc streaming curation: the pipeline sink at 50x bench scale equals the batch chain") {
     import graft.streaming.StreamingJobs
     // The prefix-mode arm at scale: the batch chain has its 5M proof
@@ -1585,10 +1602,10 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
       .schema(docs.withColumn("ts", col("doc_id").cast("timestamp")).schema)
       .option("maxFilesPerTrigger", "1").parquet(in)
       .drop("ts")
-    val out = java.nio.file.Files.createTempDirectory("graft_c5m_out").toString
+    val out = tempDir("graft_c5m_out").toString
     val t0 = System.nanoTime()
     val q = StreamingJobs.curationPipelineSink(src, out,
-        java.nio.file.Files.createTempDirectory("graft_c5m_ckpt").toString)
+        tempDir("graft_c5m_ckpt").toString)
       .start()
     assert(q.awaitTermination(900000), "5M curation stream did not finish in 900s")
     val secs = (System.nanoTime() - t0) / 1e9
@@ -1652,8 +1669,8 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
       .schema(docs.withColumn("ts", col("doc_id").cast("timestamp")).schema)
       .option("maxFilesPerTrigger", "1").parquet(in)
       .drop("ts")
-    val out = java.nio.file.Files.createTempDirectory("graft_c5mtws_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_c5mtws_ckpt").toString
+    val out = tempDir("graft_c5mtws_out").toString
+    val ckpt = tempDir("graft_c5mtws_ckpt").toString
     val t0 = System.nanoTime()
     val q = StreamingJobs.curationPipelineSink(src, out, ckpt, nearDup = "lsh")
       .start()
@@ -1739,13 +1756,13 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
     val inAll = sliceReplay(
       docs.withColumn("ts", col("doc_id").cast("timestamp")), 8, "graft_c5mtwsr")
     val slices = new java.io.File(inAll).listFiles().sortBy(_.getName)
-    val in = java.nio.file.Files.createTempDirectory("graft_c5mtwsr_in").toString
+    val in = tempDir("graft_c5mtwsr_in").toString
     def stage(range: Range): Unit = range.foreach { i =>
       java.nio.file.Files.move(slices(i).toPath,
         java.nio.file.Paths.get(in, slices(i).getName))
     }
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_c5mtwsr_ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_c5mtwsr_out").toString
+    val ckpt = tempDir("graft_c5mtwsr_ckpt").toString
+    val out = tempDir("graft_c5mtwsr_out").toString
     def stateBytes: Long = {
       val root = java.nio.file.Paths.get(ckpt, "state")
       if (!java.nio.file.Files.exists(root)) 0L
@@ -1879,9 +1896,9 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
       .option("maxFilesPerTrigger", "1").parquet(in)
       .as[StreamingJobs.RfmInput]
     val updates = StreamingJobs.rfmStream(src).toDF()
-    val table = java.nio.file.Files.createTempDirectory("graft_rfm_table").toString
+    val table = tempDir("graft_rfm_table").toString
     val q = StreamingJobs.upsertSink(updates, table,
-        java.nio.file.Files.createTempDirectory("graft_rfm_ckpt").toString,
+        tempDir("graft_rfm_ckpt").toString,
         key = "user_id", versionCol = "freq")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
@@ -1919,9 +1936,9 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
       .select(col("event_type"), col("user_id"))
       .as[StreamingJobs.HllInput]
     val updates = StreamingJobs.hllDistinctStream(src).toDF()
-    val table = java.nio.file.Files.createTempDirectory("graft_hll_table").toString
+    val table = tempDir("graft_hll_table").toString
     val q = StreamingJobs.upsertSink(updates, table,
-        java.nio.file.Files.createTempDirectory("graft_hll_ckpt").toString,
+        tempDir("graft_hll_ckpt").toString,
         key = "event_type", versionCol = "n_rows")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
@@ -1963,9 +1980,9 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
     val updates = StreamingJobs.scd2Stream(src).toDF()
       .withColumn("skey", concat_ws("#", col("custkey"), col("version")))
       .withColumn("closed", (col("is_current") === 0).cast("int"))
-    val table = java.nio.file.Files.createTempDirectory("graft_scd2_table").toString
+    val table = tempDir("graft_scd2_table").toString
     val q = StreamingJobs.upsertSink(updates, table,
-        java.nio.file.Files.createTempDirectory("graft_scd2_ckpt").toString,
+        tempDir("graft_scd2_ckpt").toString,
         key = "skey", versionCol = "closed")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
@@ -2004,7 +2021,7 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
       .writeStream.format("memory").queryName("mg_scale")
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_mg_ckpt").toString)
+        tempDir("graft_mg_ckpt").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     assert(q.awaitTermination(180000), "MG stream did not finish in 180s")
@@ -2058,7 +2075,7 @@ class ScaleSmokeSpec extends AnyFunSuite with SparkFixture {
       .writeStream.format("memory").queryName("res_scale")
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_res_ckpt").toString)
+        tempDir("graft_res_ckpt").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     assert(q.awaitTermination(180000), "reservoir stream did not finish in 180s")

@@ -40,7 +40,7 @@ class SkewBucketSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("bucketed tables join without a shuffle exchange") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val wh = tempDir("graft_wh").toString
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
     s2.sql("DROP TABLE IF EXISTS orders_b")

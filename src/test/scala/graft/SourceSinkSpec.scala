@@ -11,8 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class SourceSinkSpec extends AnyFunSuite with SparkFixture {
 
   private val sf = "/root/testdata/sf0.001"
-  private def tmpDir() =
-    java.nio.file.Files.createTempDirectory("graft_io").toString
+  private def tmpDir() = tempDir("graft_io").toString
 
   test("A9: csv and json round-trip with explicit schemas") {
     val dir = tmpDir()

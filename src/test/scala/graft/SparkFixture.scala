@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable
@@ -10,13 +12,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
   SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
+import org.scalatest.{BeforeAndAfterAll, Suite}
 import org.scalatest.concurrent.Eventually.{eventually, timeout}
 import org.scalatest.time.{Seconds, Span}
 
 /** One shared local session per suite (lazy, reused across suites in the
-  * same JVM via getOrCreate).
+  * same JVM via getOrCreate), and temp directories that go when the suite
+  * ends.
   */
-trait SparkFixture {
+trait SparkFixture extends BeforeAndAfterAll { this: Suite =>
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
@@ -33,6 +37,21 @@ trait SparkFixture {
     .config(streaming.ForkFreeCheckpointFileManager.ConfKey,
       classOf[streaming.ForkFreeCheckpointFileManager].getName)
     .getOrCreate()
+
+  private val tempDirs = new ConcurrentLinkedQueue[Path]()
+
+  /** A fresh directory under the system temp dir; it and everything
+    * written into it are deleted when the suite ends. */
+  def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.forEach(d => if (Files.exists(d))
+      Files.walk(d).sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p)))
+    finally super.afterAll()
 
   /** Spark jobs started while `body` runs. */
   def jobsDuring(body: => Unit): Int = started(body)._2.jobs

@@ -302,7 +302,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   test("A6: keyed upsert sink keeps the latest row per key across batches") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_upsert").toString
+    val tmp = tempDir("graft_upsert").toString
     val ms = MemoryStream[Ev]
     val q = StreamingJobs.upsertSink(
       ms.toDF().select(col("user_id"), col("value"), col("ts")),
@@ -324,7 +324,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   test("A6: upsert table survives a lost pointer (falls back to newest generation)") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_upsert2").toString
+    val tmp = tempDir("graft_upsert2").toString
     val ms = MemoryStream[Ev]
     val q = StreamingJobs.upsertSink(
       ms.toDF().select(col("user_id"), col("value"), col("ts")),
@@ -342,7 +342,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
 
   test("A6: replayed committed batch is a no-op, not a crash (exactly-once effect)") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_upsert3").toString
+    val tmp = tempDir("graft_upsert3").toString
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
     def addFile(n: Int, value: Double): Unit =
       Seq((1L, value, at(n))).toDF("user_id", "value", "ts")
@@ -384,7 +384,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
 
   test("A6: crash between generation write and pointer swap keeps the old generation live") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_upsert5").toString
+    val tmp = tempDir("graft_upsert5").toString
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
     def addFile(n: Int, value: Double): Unit =
       Seq((1L, value, at(n))).toDF("user_id", "value", "ts")
@@ -426,7 +426,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   test("A6: partial first generation (no _SUCCESS) is re-merged, not trusted") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_upsert4").toString
+    val tmp = tempDir("graft_upsert4").toString
     // simulate a crash mid-write of the very first generation: a gen-0
     // dir with data but NO _SUCCESS marker and no pointer file. Recovery
     // must re-merge (overwriting the junk), never no-op on the partial.
@@ -534,7 +534,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("A1/A5/H8: file source -> watermarked agg -> fan-out foreachBatch sink") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val tmp = tempDir("graft_stream").toString
     // the file source consumes a directory of arriving files (the S3
     // landing-zone shape) — stage the events file into one
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
@@ -551,6 +551,30 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     assert(counters.count() > 0)
     val archive = spark.read.parquet(s"$tmp/archive")
     assert(archive.count() <= counters.count())
+  }
+
+  test("a fan-out micro-batch whose archive write throws releases what it pinned") {
+    val tmp = tempDir("graft_fanout_throw")
+    java.nio.file.Files.createDirectories(tmp.resolve("in"))
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
+      tmp.resolve("in/events.parquet"))
+    // a regular file where the archive's parent directory should be: the
+    // counters write succeeds, the archive write cannot make its directory
+    java.nio.file.Files.write(tmp.resolve("blocker"), Array[Byte](1))
+    def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // CacheManager.numCachedEntries is package-private to Spark SQL
+    val cm = spark.sharedState.cacheManager
+    def entries: Any = cm.getClass.getMethod("numCachedEntries").invoke(cm)
+    val (rddsBefore, entriesBefore) = (persisted, entries)
+    val src = StreamingJobs.fileSource(spark, s"$tmp/in", 1)
+    val q = StreamingJobs.fanOutSink(StreamingJobs.tumblingCounts(src),
+      s"$tmp/counters", s"$tmp/blocker/archive", s"$tmp/ckpt").start()
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination(180000))
+    assert(java.nio.file.Files.isDirectory(tmp.resolve("counters")),
+      "the batch must fail at its second write, after the first has read the pin")
+    assert(persisted -- rddsBefore == Set.empty, "the failed batch left persisted RDDs")
+    assert(entries == entriesBefore, "the failed batch left a cache entry")
   }
 
   test("A8/I8: streaming scrub routes the batch gates' exact keep/reject verdicts") {
@@ -573,7 +597,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       .unionByName(CurationQueries.piiPlants(d.select(col("doc_id"), col("text")))
         .withColumn("source", lit("pii_planted")))
       .unionByName(piiAccept)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scrub").toString
+    val tmp = tempDir("graft_scrub").toString
     input.repartition(3).write.parquet(s"$tmp/in") // 3 files -> 3 micro-batches
     val src = spark.readStream.schema(input.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$tmp/in")
@@ -624,7 +648,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     val d = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"), col("source"))
       .filter(col("doc_id") < 200)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scrub_replay").toString
+    val tmp = tempDir("graft_scrub_replay").toString
     d.repartition(2).write.parquet(s"$tmp/in")
     def start(ckpt: String) = StreamingJobs.scrubRoute(
       spark.readStream.schema(d.schema)

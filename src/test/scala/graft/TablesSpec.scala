@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `Tables.table` infers each parquet schema once per session, file
@@ -11,25 +10,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * directory first, so no earlier read in this JVM has filled the cache
   * for them.
   */
-class TablesSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
+class TablesSpec extends AnyFunSuite with SparkFixture {
 
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
   private lazy val dir: Path = {
-    val d = Files.createTempDirectory("tables-spec")
+    val d = tempDir("tables-spec")
     Tables.all.foreach { t =>
       Files.copy(java.nio.file.Paths.get(s"perfbench/data/sf0.01/$t.parquet"),
         d.resolve(s"$t.parquet"), StandardCopyOption.COPY_ATTRIBUTES)
       d.resolve(s"$t.parquet").toFile.setWritable(true)
     }
     d
-  }
-
-  private def deleteTree(root: Path): Unit =
-    Files.walk(root).sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
-
-  override def afterAll(): Unit = {
-    deleteTree(dir)
-    super.afterAll()
   }
 
   test("each table's cached schema equals a fresh inference, and a second read starts no job") {
@@ -46,23 +37,21 @@ class TablesSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
 
   test("a rewritten table file is inferred again") {
     import spark.implicits._
-    val d = Files.createTempDirectory("tables-spec-rewrite")
+    val d = tempDir("tables-spec-rewrite")
     val out = d.resolve("t.parquet").toString
-    try {
-      Seq((1L, "a")).toDF("k", "s").write.parquet(out)
-      assert(Tables.table(spark, d.toString, "t").columns.toSeq == Seq("k", "s"))
-      assert(jobsDuring(Tables.table(spark, d.toString, "t")) == 0)
-      Seq((1L, "a", 2.0)).toDF("k", "s", "x").write.mode("overwrite").parquet(out)
-      val again = Tables.table(spark, d.toString, "t")
-      assert(again.columns.toSeq == Seq("k", "s", "x"))
-      assert(again.as[(Long, String, Double)].collect().toSeq == Seq((1L, "a", 2.0)))
-    } finally deleteTree(d)
+    Seq((1L, "a")).toDF("k", "s").write.parquet(out)
+    assert(Tables.table(spark, d.toString, "t").columns.toSeq == Seq("k", "s"))
+    assert(jobsDuring(Tables.table(spark, d.toString, "t")) == 0)
+    Seq((1L, "a", 2.0)).toDF("k", "s", "x").write.mode("overwrite").parquet(out)
+    val again = Tables.table(spark, d.toString, "t")
+    assert(again.columns.toSeq == Seq("k", "s", "x"))
+    assert(again.as[(Long, String, Double)].collect().toSeq == Seq((1L, "a", 2.0)))
   }
 
   test("events read with and without nanosAsLong gets its own cache entry") {
     // its own copy: the first test has cached the shared one under
     // whatever setting the session had then
-    val own = Files.createTempDirectory("tables-spec-events")
+    val own = tempDir("tables-spec-events")
     Files.copy(dir.resolve("events.parquet"), own.resolve("events.parquet"))
     val d = own.toString
     val before = spark.conf.getOption(NanosAsLong)
@@ -77,14 +66,11 @@ class TablesSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
       // back to the first setting: its entry is still there
       spark.conf.set(NanosAsLong, "false")
       assert(jobsDuring(Tables.table(spark, d, "events")) == 0)
-    } finally {
-      setOrUnset(NanosAsLong, before)
-      deleteTree(own)
-    }
+    } finally setOrUnset(NanosAsLong, before)
   }
 
   test("an events read leaves the session conf alone, so no table is inferred twice") {
-    val own = Files.createTempDirectory("tables-spec-conf")
+    val own = tempDir("tables-spec-conf")
     Seq("orders", "events").foreach(t =>
       Files.copy(dir.resolve(s"$t.parquet"), own.resolve(s"$t.parquet")))
     val d = own.toString
@@ -99,10 +85,7 @@ class TablesSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
       assert(changed.isEmpty, s"the events read changed the session conf: $changed")
       assert(jobsDuring(Tables.table(spark, d, "orders")) == 0,
         "orders was inferred again after the events read")
-    } finally {
-      setOrUnset(NanosAsLong, before)
-      deleteTree(own)
-    }
+    } finally setOrUnset(NanosAsLong, before)
   }
 
   test("an events file storing ts as TIMESTAMP(NANOS) is read as microseconds through nanosAsLong") {
@@ -111,7 +94,7 @@ class TablesSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
     import org.apache.parquet.schema.MessageTypeParser
     import spark.implicits._
     // Spark cannot write nanosecond timestamps; parquet's own writer can
-    val own = Files.createTempDirectory("tables-spec-nanos")
+    val own = tempDir("tables-spec-nanos")
     val schema = MessageTypeParser.parseMessageType(
       "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,false)); }")
     val w = ExampleParquetWriter.builder(
@@ -125,10 +108,7 @@ class TablesSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
       val micros = Tables.events(spark, own.toString).selectExpr("unix_micros(ts)").as[Long].head()
       assert(micros == ns / 1000)
       assert(spark.conf.getOption(NanosAsLong).contains("true"))
-    } finally {
-      setOrUnset(NanosAsLong, before)
-      deleteTree(own)
-    }
+    } finally setOrUnset(NanosAsLong, before)
   }
 
   private def setOrUnset(key: String, value: Option[String]): Unit =
