@@ -236,8 +236,17 @@ object Bench {
         else (perBatch(perBatch.length / 2 - 1) + perBatch(perBatch.length / 2)) / 2
       (rows, procSec, medianEps)
     }
+    // every directory the stream runs write into: made through tempDir,
+    // deleted (with everything written into it) once the per-processor
+    // runs are done, also when a stream step throws
+    val tempDirs = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+    def tempDir(prefix: String): java.nio.file.Path = {
+      val d = java.nio.file.Files.createTempDirectory(prefix)
+      tempDirs += d
+      d
+    }
     val (streamRows, streamSec, streamMedianEps, stagedIn) = try {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_bench_ckpt").toString
+      val ckpt = tempDir("graft_bench_ckpt").toString
       // Stage the events table as 8 TIME-SLICED files arriving in event-
       // time order (8 files × maxFilesPerTrigger=1 = 8 micro-batches).
       // Slicing by time matters: replaying the SAME rows per batch would
@@ -254,8 +263,8 @@ object Bench {
         org.apache.spark.sql.functions.max(unix_micros(col("ts")))).head()
       val (tsMin, tsMax) = (bounds.getLong(0), bounds.getLong(1))
       val width = (tsMax - tsMin) / 8 + 1
-      val in = java.nio.file.Files.createTempDirectory("graft_bench_in")
-      val stage = java.nio.file.Files.createTempDirectory("graft_bench_stage")
+      val in = tempDir("graft_bench_in")
+      val stage = tempDir("graft_bench_stage")
       (0 until 8).foreach { i =>
         val lo = tsMin + i * width
         // compare the ts COLUMN against timestamp literals (pushable into
@@ -303,7 +312,7 @@ object Bench {
     // rows/s is meaningless, and the doc-driven processors (topK,
     // inverted index) read a different corpus — all are
     // equivalence-spec'd in ScaleSmokeSpec instead.
-    val perProcessor: Seq[(String, Long)] =
+    val perProcessor: Seq[(String, Long)] = try
       stagedIn.map { in =>
         import spark.implicits._
         import org.apache.spark.sql.functions.{col, lit, pmod}
@@ -346,8 +355,7 @@ object Bench {
               .as[StreamingJobs.RfmInput]).toDF))
         jobs.flatMap { case (name, mode, build) =>
           try {
-            val ckpt = java.nio.file.Files
-              .createTempDirectory(s"graft_bench_proc_$name").toString
+            val ckpt = tempDir(s"graft_bench_proc_$name").toString
             val q = build().writeStream.format("noop").outputMode(mode)
               .option("checkpointLocation", ckpt)
               .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -365,6 +373,12 @@ object Bench {
           }
         }
       }.getOrElse(Seq.empty)
+    finally tempDirs.foreach { d =>
+      try java.nio.file.Files.walk(d).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.delete(p))
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] temp dir $d not deleted: $e") }
+    }
     // Ambient-noise calibration (r14 verdict: the driver's sealed run
     // overstated the suite ~24% under sandbox contention and had to be
     // adjudicated by hand). A fixed deterministic probe — the

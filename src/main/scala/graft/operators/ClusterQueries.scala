@@ -1,18 +1,22 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import graft.{QueryDef, QueryModule, Tables}
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CheckpointBridge._
 
 /** Near-dup clustering (the step after candidate detection): connected
   * components over the candidate-pair graph, so each duplicate group gets
-  * a canonical representative (min doc_id). Spark side is iterative
-  * min-label propagation accelerated with pointer jumping (O(log d)
-  * rounds, d = component diameter) — each round one neighbor-min join
-  * plus two label-chase joins, the standard large-graph CC shape
-  * (GraphX-free). Oracle is a recursive-CTE transitive closure (fine at
-  * oracle scale; the iterative form is the one that scales).
+  * a canonical representative (min doc_id). The Spark side contracts each
+  * partition of the edge list with a union-find in one pass, then loops
+  * only over what crosses partitions: min-label propagation with pointer
+  * jumping (O(log d) rounds, d = the residual diameter), each round one
+  * neighbor-min join plus three label-chase joins (GraphX-free). At every
+  * scale this repo runs, the candidate graph fits in one partition and no
+  * round runs. Oracle is a recursive-CTE transitive closure (fine at
+  * oracle scale; the partitioned form is the one that scales).
   */
 object ClusterQueries extends QueryModule {
 
@@ -115,10 +119,68 @@ object ClusterQueries extends QueryModule {
     cur
   }
 
-  /** Connected components over an undirected adjacency list `adj(a, b)`
-    * (both directions present). TWO rounds run per eager job (the second
-    * rides a lazy mid-round localCheckpoint — see the loop body), and
-    * each round's plan fuses:
+  /** Union-find over one partition's edges: `(id, root)` for every
+    * endpoint, `root` the minimum id of the id's component among this
+    * partition's edges. Primitive arrays only (the edges' endpoints,
+    * sorted distinct ids, int-indexed parents): at most 40 bytes per
+    * edge, bounded by the partition. A union hangs the larger index under
+    * the smaller, so every root is its component's minimum.
+    */
+  private def contract(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val ends = mutable.ArrayBuilder.make[Long]
+    edges.foreach { case (a, b) => ends += a; ends += b }
+    val e = ends.result()
+    val ids = e.clone()
+    java.util.Arrays.sort(ids)
+    var n = 0
+    for (x <- ids) if (n == 0 || ids(n - 1) != x) { ids(n) = x; n += 1 }
+    val parent = Array.range(0, n)
+    def find(i0: Int): Int = {
+      var i = i0
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    var k = 0
+    while (k < e.length) {
+      val ra = find(index(e(k)))
+      val rb = find(index(e(k + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      k += 2
+    }
+    Iterator.range(0, n).map(i => (ids(i), ids(find(i))))
+  }
+
+  private def observed(obs: Observation, name: String): Long =
+    obs.get(name) match {
+      case null => 0L
+      case n: Number => n.longValue()
+    }
+
+  /** Connected components over an undirected edge list `adj(a, b)` (one
+    * direction suffices; both are fine). Returns (labels(id, lbl), rounds)
+    * with `lbl` the minimum id of `id`'s component.
+    *
+    * Contraction: one union-find per partition ([[contract]]) gives every
+    * endpoint its root there, the minimum id of its component among that
+    * partition's edges. The union-find output is truncated once, so the
+    * labels and the fallback below read the same run. The labels are each
+    * id's minimum root, written as one checkpoint whose `observe` counts
+    * the ids whose roots disagree (an id in several partitions, with a
+    * different root in each).
+    *
+    * No disagreement means the labels are exact and `rounds` is 0. Every
+    * edge lies in one partition, where its endpoints share a root; with
+    * no disagreement that root is both endpoints' label. So the label is
+    * constant on each component and is an id in that component, and the
+    * component minimum m has a label ≤ m, so the label is m (NOTES fact
+    * #29).
+    *
+    * Otherwise the min-label loop runs over the contraction's star graph
+    * (`id—root` edges, both directions: the same components as `adj`),
+    * starting from those labels. TWO rounds run per eager job (the second
+    * rides a lazy mid-round truncation — see the loop body), and each
+    * round's plan fuses:
     *
     *   1. neighbor-min: `cand(v) = min(lbl(v), min over neighbors)` —
     *      label information travels one hop;
@@ -126,9 +188,10 @@ object ClusterQueries extends QueryModule {
     *      label table: `lbl(v) = min(lbl(v), prevLbl(lbl(v)))`, chained —
     *      label information also travels along the label-forest edges, so
     *      per-round reach grows geometrically (~4×) and a diameter-d
-    *      component converges in O(log d) rounds instead of O(d) (a
-    *      chain-shaped duplicate cluster — paginated boilerplate — at
-    *      corpus scale would blow a plain min-label loop's round budget).
+    *      residual converges in O(log d) rounds instead of O(d) (a
+    *      chain-shaped duplicate cluster — paginated boilerplate — spread
+    *      over many partitions would blow a plain min-label loop's round
+    *      budget).
     *      Jumping through the stale table instead of the current
     *      candidates trades a little per-round reach for not
     *      materializing a mid-round frame — at the per-job floor that
@@ -136,38 +199,50 @@ object ClusterQueries extends QueryModule {
     *
     * The convergence count rides the same materialization as an `observe`
     * metric (CollectMetrics is map-side, zero extra shuffle and zero
-    * extra job). Eager localCheckpoints truncate lineage each round or
+    * extra job). Eager checkpoints truncate lineage each round or
     * Catalyst re-analyzes the whole accumulated plan every iteration
     * (superlinear planning blowup).
     *
-    * Returns (labels(id, lbl), rounds) where `rounds` includes the final
-    * no-change fixpoint check. The only stable point is the true
-    * component-minimum labeling (labels only decrease, stay within the
-    * component, and a stable label m must satisfy lbl(m)=m, which forces
-    * m = component min), so the loop cannot terminate on a wrong answer;
-    * past maxRounds it fails loudly rather than emit unconverged (wrong)
-    * components.
+    * `rounds` counts loop rounds, including the final no-change fixpoint
+    * check. The loop's only stable point is the true component-minimum
+    * labeling (labels only decrease, stay within the component, and a
+    * stable label m must satisfy lbl(m)=m, which forces m = component
+    * min), so it cannot terminate on a wrong answer; past maxRounds it
+    * fails loudly rather than emit unconverged (wrong) components.
     */
   def connectedComponents(adj: DataFrame, maxRounds: Int = 50): (DataFrame, Int) = scope {
-    var labels = adj.select(col("a").as("id")).distinct()
-      .withColumn("lbl", col("id"))
+    val pair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+    val roots = adj.select(col("a"), col("b")).as(pair)
+      .mapPartitions(contract)(pair).toDF("id", "root")
+      .truncated
+    val disagree = Observation()
+    var labels = roots.groupBy("id")
+      .agg(min(col("root")).as("lbl"), max(col("root")).as("hi"))
+      .observe(disagree, sum(when(col("lbl") =!= col("hi"), 1L)
+        .otherwise(0L)).as("n"))
+      .select("id", "lbl")
       .checkpointed
-    var changed = 1L
+    var changed = observed(disagree, "n")
     var rounds = 0
-    def step(prev: DataFrame): DataFrame = ccRound(adj, prev)
+    val star = {
+      val s = roots.filter(col("id") =!= col("root"))
+      s.select(col("id").as("a"), col("root").as("b"))
+        .unionByName(s.select(col("root").as("a"), col("id").as("b")))
+    }
+    def step(prev: DataFrame): DataFrame = ccRound(star, prev)
     while (changed > 0 && rounds < maxRounds) {
-      // TWO rounds per eager job (r18): the candidate graph is orders of
+      // TWO rounds per eager job (r18): the residual graph is orders of
       // magnitude below corpus size, so the loop's wall time is dominated
       // by the per-job scheduling floor, not the data — halving the
-      // barrier count halves that floor. The mid-round frame is a LAZY
-      // localCheckpoint: lineage is truncated at plan level immediately
-      // (each job's Catalyst plan stays one-round-sized, the NOTES #13
-      // constraint) while materialization rides INSIDE the eager job —
-      // the five mid consumers (neighbor-min + left base + 3 chases)
-      // read its persisted blocks instead of re-evaluating the subtree.
-      // Label values are identical to the one-round-per-job loop: the
-      // round operator is deterministic and each sub-round chases through
-      // the immediately preceding label table, exactly as before.
+      // barrier count halves that floor. The mid-round frame is a lazy
+      // truncation: lineage is cut at plan level immediately (each job's
+      // Catalyst plan stays one-round-sized, the NOTES #13 constraint)
+      // while materialization rides INSIDE the eager job — the five mid
+      // consumers (neighbor-min + left base + 3 chases) read its
+      // persisted blocks instead of re-evaluating the subtree. Label
+      // values are identical to a one-round-per-job loop: the round
+      // operator is deterministic and each sub-round chases through the
+      // immediately preceding label table.
       val mid = truncate(step(labels).select("id", "lbl"))
       // convergence = sub-round 2 changed nothing (old = mid's label).
       // A single no-change round pins the fixpoint: labels only decrease,
@@ -177,10 +252,7 @@ object ClusterQueries extends QueryModule {
         .observe(obs, sum(when(col("lbl") =!= col("old"), 1L)
           .otherwise(0L)).as("changed"))
         .checkpointed
-      changed = obs.get("changed") match {
-        case null => 0L
-        case n: Number => n.longValue()
-      }
+      changed = observed(obs, "changed")
       labels = next.select("id", "lbl")
       rounds += 2
     }
@@ -191,18 +263,20 @@ object ClusterQueries extends QueryModule {
   }
 
   /** `labels(id, lbl)` over the candidate-edge graph — the ONE
-    * edges → adjacency → [[connectedComponents]] scaffold all three
-    * cluster queries run, factored so partition sizing and block
-    * hygiene cannot drift between them. Shuffles are sized to the
-    * CANDIDATE GRAPH, not the corpus default: the edge set after
-    * blocking is orders of magnitude smaller than the documents table,
-    * so corpus-sized partition counts just multiply per-round scheduler
-    * overhead (one partition per ~500k edges; the count is a cheap
-    * action on the truncated frame). The body is one materialization
-    * scope: the final labels are a checkpoint (lineage cut), so the
-    * truncated inputs and every round's blocks are unreachable from them
-    * and are released when this returns, instead of taxing every later
-    * query in a bench/verify session.
+    * edges → [[connectedComponents]] scaffold all three cluster queries
+    * run, factored so partition sizing and block hygiene cannot drift
+    * between them. The edge list is partitioned to the CANDIDATE GRAPH,
+    * not the corpus default: one partition per ~500k edges (the count is
+    * a cheap action on the truncated edges), which also bounds the
+    * memory of each partition's union-find. Below 500k edges that is one
+    * partition, the contraction finishes the components and no label
+    * round runs. One direction per edge is enough (the union-find is
+    * undirected, and the fallback loop builds its own adjacency). The
+    * body is one materialization scope: the final labels are a
+    * checkpoint (lineage cut), so the truncated edges and the
+    * contraction's blocks are unreachable from them and are released
+    * when this returns, instead of taxing every later query in a
+    * bench/verify session.
     */
   private def clusterLabels(spark: SparkSession, sfDir: String): DataFrame =
     clusterLabelsOf(edges(spark, sfDir))
@@ -215,11 +289,8 @@ object ClusterQueries extends QueryModule {
   private[operators] def clusterLabelsOf(e0: DataFrame): DataFrame = scope {
     val e = e0.truncated
     val parts = math.max(1, (e.count() / 500000L).toInt)
-    val adj = e.select(col("d1").as("a"), col("d2").as("b"))
-      .unionByName(e.select(col("d2").as("a"), col("d1").as("b")))
-      .repartition(parts)
-      .truncated
-    connectedComponents(adj)._1
+    connectedComponents(
+      e.select(col("d1").as("a"), col("d2").as("b")).repartition(parts))._1
   }
 
   /** Oracle twin of [[clusterLabels]]: recursive-CTE transitive closure

@@ -92,7 +92,7 @@ object CheckpointBridge {
   /** Eager local checkpoint: the frame is computed now and its lineage
     * cut, so later plans over it stay one leaf deep (NOTES #13). */
   def checkpoint[T](ds: Dataset[T]): Dataset[T] = {
-    val ck = ds.localCheckpoint(true)
+    val ck = capped(ds.localCheckpoint(true))
     val rdd = leafRdd(ck)
     record(new Pin(Set(rdd.id), unpersisting(rdd)))
     ck
@@ -164,8 +164,31 @@ object CheckpointBridge {
     val rdd = cds.queryExecution.toRdd.map(_.copy())
     rdd.persist(StorageLevel.MEMORY_AND_DISK)
     record(new Pin(Set(rdd.id), unpersisting(rdd)))
-    new classic.Dataset[T](cds.sparkSession,
-      LogicalRDD.fromDataset(rdd, cds, isStreaming = false), cds.encoder)
+    capped(new classic.Dataset[T](cds.sparkSession,
+      LogicalRDD.fromDataset(rdd, cds, isStreaming = false), cds.encoder))
+  }
+
+  /** `ds` with its `LogicalRDD` leaf's size estimate capped at
+    * `Long.MaxValue`. A checkpoint or truncation leaf keeps the estimate
+    * of the plan it was made from, and without CBO a join's estimate is
+    * the product of its sides'. A loop that pins a join over its previous
+    * pin therefore multiplies the estimate's digit count every round:
+    * twelve rounds of the connected-components loop made it a
+    * 250-million-bit BigInt and spent three minutes in Catalyst's size
+    * estimation. An estimate above `Long.MaxValue` (Spark's size for
+    * "unknown") already means too big for any size threshold, so the cap
+    * changes no plan choice; it only bounds the arithmetic. (NOTES fact
+    * #30.)
+    */
+  private def capped[T](ds: Dataset[T]): Dataset[T] = {
+    val cds = ds.asInstanceOf[classic.Dataset[T]]
+    cds.queryExecution.analyzed match {
+      case l: LogicalRDD if l.stats.sizeInBytes > Long.MaxValue =>
+        val leaf = l.copy()(cds.sparkSession,
+          Some(l.stats.copy(sizeInBytes = Long.MaxValue)), Some(l.constraints))
+        new classic.Dataset[T](cds.sparkSession, leaf, cds.encoder)
+      case _ => ds
+    }
   }
 
   /** Postfix forms of the three materializations, for method chains. */

@@ -198,16 +198,64 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
     // needs ~99 rounds; pointer jumping must collapse it in O(log d).
     // 8 is the budget incl. the final no-change fixpoint round — the
     // chain shape is exactly the paginated-boilerplate duplicate cluster
-    // that at corpus scale would blow a 50-round O(d) loop.
+    // that at corpus scale would blow a 50-round O(d) loop. Spread
+    // round-robin over 50 partitions, each partition's union-find sees
+    // about four scattered edges, so a long residual chain is left for
+    // the loop (contiguous slices would contract to almost nothing).
     import spark.implicits._
     val edges = (1L until 100L).map(i => (i, i + 1)).toDF("d1", "d2")
     val adj = edges.select(col("d1").as("a"), col("d2").as("b"))
       .unionByName(edges.select(col("d2").as("a"), col("d1").as("b")))
+      .repartition(50)
     val (labels, rounds) = operators.ClusterQueries.connectedComponents(adj)
+    assert(rounds > 0, "the round-robin layout must leave a residual for the loop")
     assert(rounds <= 8, s"expected O(log d) convergence, took $rounds rounds")
     val got = labels.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.length == 100 && got.forall(_._2 == 1L),
       "every node of the single component must carry the min id label")
+  }
+
+  test("CC labels equal a driver-side union-find on 1, 3 and 7 partitions") {
+    // the labels must not depend on how the edges are spread. Seeded
+    // graphs of chains, stars and isolated pairs over shuffled ids, the
+    // edges in random order and direction, dealt round-robin over 1, 3
+    // and 7 partitions. One partition contracts everything, so no label
+    // round runs; over 7 the chains' edges land in different partitions,
+    // their roots disagree and the fallback loop must finish the job.
+    import spark.implicits._
+    def graph(seed: Int): Seq[(Long, Long)] = {
+      val rnd = new scala.util.Random(seed)
+      val ids = rnd.shuffle((1L to 400L).toVector)
+      var used = 0
+      def take(k: Int) = { used += k; ids.slice(used - k, used) }
+      def chain(k: Int) = take(k).sliding(2).map(p => (p(0), p(1))).toVector
+      def star(k: Int) = { val v = take(k + 1); v.tail.map(l => (v.head, l)) }
+      val es = (1 to 6).flatMap(_ => chain(2 + rnd.nextInt(29))) ++
+        (1 to 6).flatMap(_ => star(2 + rnd.nextInt(9))) ++
+        (1 to 6).flatMap(_ => chain(2))
+      rnd.shuffle(es.map { case (a, b) => if (rnd.nextBoolean()) (a, b) else (b, a) })
+    }
+    def reference(es: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      es.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      parent.keys.map(x => x -> find(x)).toMap
+    }
+    for (seed <- 1 to 3; parts <- Seq(1, 3, 7)) {
+      val es = graph(seed)
+      val adj = es.toDF("a", "b").repartition(parts)
+      val (labels, rounds) = operators.ClusterQueries.connectedComponents(adj)
+      val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == reference(es), s"seed $seed over $parts partitions")
+      if (parts == 1) assert(rounds == 0, s"one partition must contract fully, ran $rounds")
+      if (parts == 7) assert(rounds > 0, s"seed $seed: 7 partitions must leave a residual")
+    }
   }
 
   test("pagerank conserves probability mass and is uniform on regular graphs") {
