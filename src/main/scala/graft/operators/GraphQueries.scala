@@ -1,16 +1,26 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import graft.{QueryDef, QueryModule, Tables}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CheckpointBridge._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Iterative graph analytics over a derived co-purchase graph (parts that
   * appear in the same order are linked). PageRank (Page et al. 1999,
   * public) is the second iterative operator family next to the
-  * connected-components loop: per-round co-partitioned join + keyed sum,
-  * lineage truncated by eager localCheckpoint each round — the shape that
-  * holds on a 1000-executor cluster, where the rank table shuffles on the
-  * same key every round and the edge table is checkpointed once.
+  * connected-components loop. Its rounds run as a kernel over a CSR
+  * adjacency partitioned by src and built once: each round ships only
+  * node-sized contribution blocks to the partitions that own their dsts,
+  * and a fixed round count runs as one Spark job (group scheduling, as in
+  * Drizzle), with no Catalyst plan per round. The other loops here
+  * (k-core, SSSP, HITS, k-truss) stay DataFrame rounds with their inputs
+  * checkpointed.
   */
 object GraphQueries extends QueryModule {
 
@@ -47,134 +57,229 @@ object GraphQueries extends QueryModule {
          ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey
        GROUP BY 1, 2"""
 
-  /** What every PageRank round reads, built once per call: the edge
-    * table and the out-degree table as declared src-partitioned
-    * checkpoints, the node count, and the uniform starting ranks. One
-    * definition for [[pageRank]] and [[pageRankConverged]], so the two
-    * cannot drift apart (PropertySpec asserts they agree byte for byte).
+  /** One partition of the PageRank adjacency in compressed sparse rows,
+    * built once per call and read by every round. Partition `part` holds
+    * the out-edges of exactly the srcs `keyPartitioner` puts in it.
     *
-    * The edge table is checkpointed pre-partitioned by src with the
-    * partitioning declared on the flat leaf (CheckpointBridge): a plain
-    * localCheckpoint under AQE reports unknown partitioning and every
-    * round re-shuffles the full edge table, while a cache keeps the
-    * partitioning but not the lineage truncation (the per-round Catalyst
-    * re-analysis over the un-truncated subtree tripled the loop, measured
-    * 5.5 → 15.4 s, NOTES #13). With the declared leaf every round's
-    * src-keyed join streams the edges in place and only the small weight
-    * side moves (guide §2.4; at 100 TB: rounds × |nodes| instead of
-    * rounds × |edges| shuffled bytes). deg feeds every round, so it is
-    * materialized once; its aggregation inherits the declared src
-    * partitioning (no exchange) and is re-declared on its own checkpoint.
-    *
-    * The node count is one driver-side `count()` of the degree table (one
-    * row per src, so it equals countDistinct(src) over the edges), used
-    * as a literal: no round joins a broadcast of it. The starting ranks
-    * stay lazy: a projection of the declared deg leaf, they keep deg's src
-    * partitioning, so round 1's rank-to-degree join needs no exchange on
-    * either side.
+    * @param srcs the partition's distinct srcs, ascending
+    * @param off src k's edges are `tgt(off(k) until off(k + 1))`; its
+    *   out-degree is that run's length, parallel edges included
+    * @param tgt each edge's dst, as an index into `dsts`
+    * @param dsts the distinct dsts those edges reach, grouped by the
+    *   partition that owns each, ascending within a group
+    * @param cut the dsts partition p owns are `dsts(cut(p) until cut(p + 1))`
     */
-  private def pageRankInputs(edgesIn: org.apache.spark.sql.DataFrame): (
-      org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, Double,
-      org.apache.spark.sql.DataFrame) = {
-    val edges = edgesIn.checkpointedBy("src")
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-      .checkpointedBy("src")
-    val n = deg.count().toDouble
-    (edges, deg, n, deg.select(col("src").as("node"), lit(1.0 / n).as("pr")))
+  private final class Adjacency(val part: Int, val srcs: Array[Long], val off: Array[Int],
+      val tgt: Array[Int], val dsts: Array[Long], val cut: Array[Int]) extends Serializable
+
+  /** One partition's ranks: node `nodes(k)` has rank `pr(k)`; nodes ascending. */
+  private final class Ranks(val nodes: Array[Long], val pr: Array[Double]) extends Serializable
+
+  /** What map partition `from` sends one reduce partition: the summed
+    * contributions `s(k)` to node `dst(k)`, nodes ascending. */
+  private final class Block(val from: Int, val dst: Array[Long], val s: Array[Double])
+      extends Serializable
+
+  private def distinctSorted(xs: Array[Long]): Array[Long] = {
+    val s = xs.clone()
+    java.util.Arrays.sort(s)
+    var m = 0
+    for (x <- s) if (m == 0 || s(m - 1) != x) { s(m) = x; m += 1 }
+    java.util.Arrays.copyOf(s, m)
   }
 
-  /** One PageRank round: weight each node's outgoing contribution once,
-    * then fan out along edges and sum per destination. There is no
-    * dangling-node redistribution term because every src is also a dst.
-    * SHUFFLE_HASH hints keep the joins sort-free: SMJ would re-sort the
-    * checkpointed edges every round, and a broadcast would rebuild and
-    * ship the weight table per round.
-    */
-  private def pageRankStep(edges: org.apache.spark.sql.DataFrame,
-      deg: org.apache.spark.sql.DataFrame, n: Double,
-      ranks: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val wt = ranks.join(deg.hint("shuffle_hash"), ranks("node") === deg("src"))
-      .select(col("src"), (col("pr") / col("d")).as("w"))
-    edges.join(wt.hint("shuffle_hash"), "src")
-      .groupBy(col("dst"))
-      .agg(sum(col("w")).as("s"))
-      .select(col("dst").as("node"),
-        Ql.r(lit(1 - damping) / lit(n) + lit(damping) * col("s"), 7).as("pr"))
+  /** Partition `part`'s adjacency from its `(src, dst)` rows. Fails if a
+    * src is not one `keyPartitioner` puts in `part`: every round relies
+    * on that alignment. */
+  private def adjacency(part: Int, rows: Iterator[InternalRow], parts: Int): Adjacency = {
+    val (sb, db) = (new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofLong)
+    rows.foreach { r => sb += r.getLong(0); db += r.getLong(1) }
+    val (es, ed) = (sb.result(), db.result())
+    val owner = keyPartitioner(parts)
+    val srcs = distinctSorted(es)
+    srcs.foreach(s => require(owner(s) == part, s"src $s in partition $part, owned by ${owner(s)}"))
+    // distinct dsts, regrouped by owner with a stable counting sort
+    val byValue = distinctSorted(ed)
+    val owners = byValue.map(owner)
+    val cut = new Array[Int](parts + 1)
+    owners.foreach(p => cut(p + 1) += 1)
+    for (p <- 0 until parts) cut(p + 1) += cut(p)
+    val next = cut.clone()
+    val at = new Array[Int](byValue.length)
+    val dsts = new Array[Long](byValue.length)
+    for (j <- byValue.indices) {
+      val p = owners(j)
+      at(j) = next(p); dsts(next(p)) = byValue(j); next(p) += 1
+    }
+    // each src's edges as one run, in input order
+    val srcOf = es.map(java.util.Arrays.binarySearch(srcs, _))
+    val off = new Array[Int](srcs.length + 1)
+    srcOf.foreach(k => off(k + 1) += 1)
+    for (k <- srcs.indices) off(k + 1) += off(k)
+    val fill = off.clone()
+    val tgt = new Array[Int](es.length)
+    for (e <- es.indices) {
+      val k = srcOf(e)
+      tgt(fill(k)) = at(java.util.Arrays.binarySearch(byValue, ed(e))); fill(k) += 1
+    }
+    new Adjacency(part, srcs, off, tgt, dsts, cut)
   }
 
-  /** The PageRank loop over a directed edge list `edges(src, dst)` (may
-    * be a multigraph — parallel edge rows weight the flow; every node
-    * must appear as both src and dst, which symmetric graphs guarantee).
-    * Per-round ranks are rounded to 7 decimals via [[Ql.r]] so summation
-    * order cannot leak into the result. Checkpoints every fourth round:
-    * lineage must be truncated periodically (unbounded plans re-analyze
-    * superlinearly — see [[ClusterQueries.connectedComponents]]) but a
-    * per-round barrier costs a full job each, and letting AQE fuse the
-    * rounds in between more than halves wall time. With the cadence
-    * dividing the round count, the post-loop materialization that anchors
-    * the block release IS the last scheduled checkpoint — no extra
-    * full-table pass beyond the loop's own barriers.
+  /** A round's map side: every src of `a` that has a rank sends
+    * `w = pr / deg` along each of its edges, summed per dst, and the sums
+    * leave as one block per partition that owns a dst reached. A src
+    * with no rank sends nothing. */
+  private def contribute(a: Adjacency, r: Ranks): Iterator[(Int, Block)] = {
+    val acc = new Array[Double](a.dsts.length)
+    val hit = new Array[Boolean](a.dsts.length)
+    var (k, j) = (0, 0)
+    while (k < a.srcs.length && j < r.nodes.length) { // both ascending
+      if (a.srcs(k) < r.nodes(j)) k += 1
+      else if (a.srcs(k) > r.nodes(j)) j += 1
+      else {
+        val w = r.pr(j) / (a.off(k + 1) - a.off(k))
+        var e = a.off(k)
+        while (e < a.off(k + 1)) { acc(a.tgt(e)) += w; hit(a.tgt(e)) = true; e += 1 }
+        k += 1; j += 1
+      }
+    }
+    (0 until a.cut.length - 1).iterator.flatMap { p =>
+      val ix = (a.cut(p) until a.cut(p + 1)).filter(hit(_))
+      if (ix.isEmpty) None
+      else Some(p -> new Block(a.part, ix.map(a.dsts(_)).toArray, ix.map(acc(_)).toArray))
+    }
+  }
+
+  /** A round's reduce side: the blocks sent to one partition, summed per
+    * node in map-partition order, then the damped update. The node set is
+    * every node that received a contribution. */
+  private def absorb(blocks: Iterator[Block], n: Double): Ranks = {
+    val bs = blocks.toArray.sortBy(_.from)
+    val nodes = distinctSorted(Array.concat(bs.map(_.dst): _*))
+    val s = new Array[Double](nodes.length)
+    for (b <- bs; k <- b.dst.indices) s(java.util.Arrays.binarySearch(nodes, b.dst(k))) += b.s(k)
+    new Ranks(nodes, s.map(x => Ql.rd((1 - damping) / n + damping * x, 7)))
+  }
+
+  /** Σ|pr − pr0| over the nodes ranked in both. */
+  private def l1(r: Ranks, r0: Ranks): Double = {
+    var (k, j, d) = (0, 0, 0.0)
+    while (k < r.nodes.length && j < r0.nodes.length) {
+      if (r.nodes(k) < r0.nodes(j)) k += 1
+      else if (r.nodes(k) > r0.nodes(j)) j += 1
+      else { d += math.abs(r.pr(k) - r0.pr(j)); k += 1; j += 1 }
+    }
+    d
+  }
+
+  /** What every round reads, built once per call: the CSR adjacency,
+    * pinned as an RDD truncation; the node count n (distinct srcs), summed
+    * over the partitions by the job that materializes the adjacency; and
+    * the uniform starting ranks 1/n of every src.
+    *
+    * The edges are hash-repartitioned by src into the session's
+    * shuffle-partition count by Spark's own exchange (a Tungsten shuffle
+    * by `HashPartitioning`, which AQE never coalesces when the count is
+    * given), so partition i holds the srcs `keyPartitioner` puts in i.
+    * A round ships each dst's contribution to the partition
+    * `keyPartitioner` puts the dst in, so the partition that receives a
+    * node's rank is the one holding its out-edges (NOTES fact #31).
+    */
+  private def csrInputs(edgesIn: DataFrame): (RDD[Adjacency], Double, RDD[Ranks]) = {
+    val parts = shufflePartitions(edgesIn.sparkSession)
+    val rows = internalRows(edgesIn.select(col("src").cast("long"), col("dst").cast("long"))
+      .repartition(parts, col("src")))
+    require(rows.getNumPartitions == parts,
+      s"edges have ${rows.getNumPartitions} partitions, want $parts")
+    val adj = truncate(rows.mapPartitionsWithIndex((i, it) => Iterator.single(adjacency(i, it, parts))))
+    val n = adj.map(_.srcs.length.toLong).fold(0L)(_ + _).toDouble
+    (adj, n, adj.map(a => new Ranks(a.srcs, Array.fill(a.srcs.length)(1.0 / n))))
+  }
+
+  /** One PageRank round: each node's rank, divided by its out-degree,
+    * flows along its out-edges and is summed per dst; the new rank is
+    * `Ql.rd((1 − damping)/n + damping·s, 7)`. One shuffle of one primitive
+    * block per (map, reduce) partition pair; no Dataset, plan or SQL
+    * execution. There is no dangling-node redistribution term. */
+  private def csrRound(adj: RDD[Adjacency], n: Double, ranks: RDD[Ranks]): RDD[Ranks] =
+    adj.zipPartitions(ranks)((a, r) => contribute(a.next(), r.next()))
+      // a block's key is the partition that owns it, and an Int's hash is
+      // itself, so the HashPartitioner sends block p to partition p
+      .partitionBy(new HashPartitioner(adj.getNumPartitions))
+      .mapPartitions(bs => Iterator.single(absorb(bs.map(_._2), n)), preservesPartitioning = true)
+
+  /** The `(node: bigint, pr: double)` frame of `ranks`. */
+  private def rankFrame(spark: SparkSession, ranks: RDD[Ranks]): DataFrame =
+    spark.createDataFrame(
+      ranks.flatMap(r => r.nodes.indices.iterator.map(k => Row(r.nodes(k), r.pr(k)))),
+      StructType(Seq(StructField("node", LongType), StructField("pr", DoubleType))))
+
+  /** The PageRank loop over a directed edge list `edges(src, dst)` of
+    * integral node ids. It may be a multigraph: parallel edge rows weight
+    * the flow. The starting ranks are 1/n for each of the n distinct srcs;
+    * a round's node set is every node that received a contribution, and a
+    * node with no rank (a src no edge reaches, after round 1) sends
+    * nothing. Per-round ranks are rounded to 7 decimals (`Ql.rd`, the JVM
+    * twin of [[Ql.r]]) so summation order cannot leak into the result.
+    *
+    * The rounds are a CSR kernel over RDDs: the adjacency is built and
+    * pinned once, each round is one shuffle stage, and nothing is
+    * persisted per round, so all rounds and the final materialization run
+    * as ONE Spark job, with no Catalyst planning per round (q_pagerank
+    * 18 → 5 jobs at sf0.001).
     *
     * Exposed (not query-private) so PropertySpec can assert the algebra
-    * — mass conservation, uniformity on regular graphs — on synthetic
-    * graphs.
+    * (mass conservation, uniformity on regular graphs, byte-equality with
+    * the DataFrame round it replaced) on synthetic graphs.
     *
     * Block hygiene: the body is one materialization scope
-    * (CheckpointBridge.scope). The final ranks frame (node-count-sized)
-    * is checkpointed, so its lineage no longer reaches the loop's
-    * checkpoints, and the scope releases those when the call returns or
-    * throws; only the final ranks' blocks pass to the caller's scope.
-    * Unreleased checkpoints pile up in a long driver session (r6
-    * measured rerun-slower-than-first + 324 MB heap growth from exactly
-    * this).
+    * (CheckpointBridge.scope). The final ranks frame (node-count-sized) is
+    * checkpointed, so its lineage no longer reaches the adjacency, and the
+    * scope releases that when the call returns or throws; only the final
+    * ranks' blocks pass to the caller's scope.
     */
-  def pageRank(edgesIn: org.apache.spark.sql.DataFrame, rounds: Int,
-      cadence: Int = 4): org.apache.spark.sql.DataFrame = scope {
-    val (edges, deg, n, ranks0) = pageRankInputs(edgesIn)
+  def pageRank(edgesIn: DataFrame, rounds: Int): DataFrame = scope {
+    val (adj, n, ranks0) = csrInputs(edgesIn)
     var ranks = ranks0
-    for (i <- 1 to rounds) {
-      ranks = pageRankStep(edges, deg, n, ranks)
-      if (i % cadence == 0 && i < rounds) ranks = ranks.checkpointed
-    }
-    // materialize the final frame so it no longer depends on the loop's
-    // pinned blocks; the scope then releases those
-    ranks.checkpointed
+    for (_ <- 1 to rounds) ranks = csrRound(adj, n, ranks)
+    rankFrame(edgesIn.sparkSession, ranks).checkpointed
   }
 
-  /** Run-to-convergence PageRank: the [[pageRank]] update loop with an
-    * L1-delta stop instead of a fixed round count — iterate until
-    * Σ|prₜ − prₜ₋₁| < tol (or fail past maxRounds, the
-    * [[kcoreConverged]] contract). The per-round step is IDENTICAL to
-    * [[pageRank]]'s (same joins, same 7-dp [[Ql.r]] rounding), so after
-    * k rounds the two produce byte-equal ranks — PropertySpec proves
-    * loop == fixed-round where the fixed count suffices, and that on a
-    * slow-mixing graph the loop runs past the fixed count and lands
-    * within tol of the fixpoint where the fixed variant does not. The
-    * delta is a 1-row aggregate fetched per round (the convergence
-    * decision is driver-side by necessity, as in [[kcoreConverged]]);
-    * each round localCheckpoints — the delta's action materializes the
-    * new ranks anyway, so the barrier is free and lineage stays flat.
-    * The oracled q_pagerank keeps the fixed-round contract (a shared
-    * round constant is what makes the DuckDB twin exact); this variant
-    * is for production runs where the mixing time is unknown.
+  /** Run-to-convergence PageRank: the [[pageRank]] round with an L1-delta
+    * stop instead of a fixed round count. It iterates until
+    * Σ|prₜ − prₜ₋₁| < tol over the nodes ranked in both rounds, or fails
+    * past maxRounds (the [[kcoreConverged]] contract). The round is
+    * IDENTICAL to [[pageRank]]'s, so after k rounds the two produce
+    * byte-equal ranks. PropertySpec proves loop == fixed-round where the
+    * fixed count suffices, and that on a slow-mixing graph the loop runs
+    * past the fixed count and lands within tol of the fixpoint where the
+    * fixed variant does not.
+    *
+    * The delta is summed on the reduce side, each partition against its
+    * own previous ranks (a node's ranks live in the same partition every
+    * round), and the driver adds the per-partition sums: the stop is a
+    * driver decision, so each round is one job, but no round plans a
+    * query. The oracled q_pagerank keeps the fixed-round contract (a
+    * shared round constant is what makes the DuckDB twin exact); this
+    * variant is for production runs where the mixing time is unknown.
     */
-  def pageRankConverged(edgesIn: org.apache.spark.sql.DataFrame, tol: Double,
-      maxRounds: Int = 100): (org.apache.spark.sql.DataFrame, Int) = scope {
-    val (edges, deg, n, ranks0) = pageRankInputs(edgesIn)
+  def pageRankConverged(edgesIn: DataFrame, tol: Double,
+      maxRounds: Int = 100): (DataFrame, Int) = scope {
+    val (adj, n, ranks0) = csrInputs(edgesIn)
     var ranks = ranks0
     var rounds = 0
     var delta = Double.MaxValue
     while (delta >= tol && rounds < maxRounds) {
-      val next = pageRankStep(edges, deg, n, ranks).checkpointed
-      delta = next.join(ranks.select(col("node"), col("pr").as("pr0")), "node")
-        .agg(sum(abs(col("pr") - col("pr0"))).as("d")).head().getDouble(0)
+      val next = csrRound(adj, n, ranks)
+      delta = next.zipPartitions(ranks)((r, r0) => Iterator.single(l1(r.next(), r0.next())))
+        .collect().sum
       ranks = next
       rounds += 1
     }
     if (delta >= tol)
       throw new IllegalStateException(
         s"PageRank did not converge to $tol in $maxRounds rounds (delta=$delta)")
-    (ranks.checkpointed, rounds)
+    (rankFrame(edgesIn.sparkSession, ranks).checkpointed, rounds)
   }
 
   /** Fixed-iteration PageRank, not run-to-convergence: a fixed round
@@ -190,8 +295,8 @@ object GraphQueries extends QueryModule {
     *
     * Scale notes: the co-purchase self-join fans out at most
     * order_size² per order (TPC-H order size is bounded by 7); the edge
-    * list is localCheckpointed ONCE, then each round is one src-keyed
-    * join + one dst-keyed aggregation; the final top-20 is
+    * list is shuffled by src ONCE into the CSR adjacency, then each round
+    * moves only node-sized contribution blocks; the final top-20 is
     * TakeOrderedAndProject, never a global sort.
     */
   private val pagerank = QueryDef(
@@ -529,12 +634,11 @@ object GraphQueries extends QueryModule {
     * summed hub weight of its buyers, a customer's hub weight the summed
     * authority of their basket — 3 mutually-recursive rounds, L1
     * normalization (no sqrt — keeps the cross-engine arithmetic to
-    * +,/,round). Same iterative discipline as [[pageRank]]: the edge
-    * list materializes ONCE, each round is two keyed join+agg passes
-    * with the normalizer as a 1-row broadcast (never a collect), scores
-    * are rounded to 7 dp per round in BOTH engines so summation order
-    * can't drift, and every block this query pins is released once the
-    * final authority frame materializes. The oracle unrolls the same 3
+    * +,/,round). The edge list materializes ONCE, each round is two
+    * keyed join+agg passes with the normalizer as a 1-row broadcast
+    * (never a collect), scores are rounded to 7 dp per round in BOTH
+    * engines so summation order can't drift, and every block this query
+    * pins is released once the final authority frame materializes. The oracle unrolls the same 3
     * rounds as chained CTEs.
     */
   private val hits = QueryDef(
@@ -737,9 +841,8 @@ object GraphQueries extends QueryModule {
     * explains PageRank/HITS mass concentration. Each round is one keyed
     * degree aggregation plus two semi-joins (both shuffle on the node
     * key); the edge list is localCheckpointed per round so round r+1
-    * scans materialized edges instead of replaying r joins — the same
-    * iterate-then-pin discipline as pageRank. All outputs are exact
-    * integer counts: zero cross-engine float risk.
+    * scans materialized edges instead of replaying r joins. All outputs
+    * are exact integer counts: zero cross-engine float risk.
     */
   private val kcore = QueryDef(
     "q_kcore",
@@ -780,7 +883,7 @@ object GraphQueries extends QueryModule {
         e = next
       }
       // 3-row result: materialize it off the pinned edge lists; the scope
-      // then releases those (pageRank's contract)
+      // then releases those
       stats.orderBy("round").checkpointed
     },
     Some(s"""
@@ -883,8 +986,7 @@ object GraphQueries extends QueryModule {
     * edge cost = 100 div s_ab (stronger co-purchase support ⇒ cheaper
     * hop; INTEGER division so distances stay exact 64-bit sums — no
     * float accumulation to diverge). Each round is one keyed join
-    * (frontier × adjacency) + a min-aggregation union — the same
-    * co-partitioned iterative-join family as [[pageRank]], with per-round
+    * (frontier × adjacency) + a min-aggregation union, with per-round
     * localCheckpoint lineage truncation and block release on exit.
     * Bounded rounds = the k-hop neighborhood semantics a 100 TB graph
     * query actually ships (full convergence is a driver loop over the

@@ -3,10 +3,13 @@ package org.apache.spark.sql.graftbridge
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.storage.StorageLevel
 
 /** The one place an intermediate is materialized, and the one rule that
@@ -16,9 +19,9 @@ import org.apache.spark.storage.StorageLevel
   * checkpoint, lineage cut), `checkpoint(df, keys)` (the same, with a
   * declared hash partitioning) and [[truncate]] (plan-level cut, lazily
   * persisted: the one way to let several consumers read a frame that is
-  * computed once). Each records what it pins in the calling thread's
-  * innermost [[scope]]; outside any scope nothing is recorded and the
-  * caller owns the blocks.
+  * computed once; its RDD form pins an RDD that several jobs read). Each
+  * records what it pins in the calling thread's innermost [[scope]];
+  * outside any scope nothing is recorded and the caller owns the blocks.
   *
   * The rule: when a scope exits, normally or by a throw, it releases
   * every pin it recorded except those REACHABLE from the frames it
@@ -120,7 +123,7 @@ object CheckpointBridge {
     */
   def checkpoint(df: DataFrame, keys: Seq[String]): DataFrame = {
     val session = df.sparkSession.asInstanceOf[classic.SparkSession]
-    val n = session.sessionState.conf.numShufflePartitions
+    val n = shufflePartitions(session)
     val ck = df.repartition(n, keys.map(df.col): _*).localCheckpoint(true)
       .asInstanceOf[classic.DataFrame]
     val pinned = leafRdd(ck)
@@ -134,6 +137,27 @@ object CheckpointBridge {
     classic.Dataset.ofRows(session,
       LogicalRDD(attrs, rdd, HashPartitioning(keyAttrs, n), Nil, isStreaming = false, None)(
         session, None, None))
+  }
+
+  /** The partition count `checkpoint(df, keys)` declares: the session's
+    * `numShufflePartitions` (under AQE the
+    * `coalescePartitions.initialPartitionNum` when that is set). */
+  def shufflePartitions(spark: SparkSession): Int =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf.numShufflePartitions
+
+  /** The partition, of `n`, that `checkpoint(df, Seq(k))` and
+    * `df.repartition(n, col(k))` put a row with bigint key `k` in: Spark's
+    * own `HashPartitioning(k, n).partitionIdExpression`,
+    * pmod(murmur3(k, seed 42), n), evaluated on the JVM. Code that routes
+    * values by hand to the partition such a frame keeps them in (the
+    * PageRank kernel) routes through this, so the declaration and the
+    * routing share one definition. The function reuses one row: one per
+    * thread. */
+  def keyPartitioner(n: Int): Long => Int = {
+    val pid = HashPartitioning(Seq(BoundReference(0, LongType, nullable = false)), n)
+      .partitionIdExpression
+    val row = new GenericInternalRow(1)
+    k => { row.setLong(0, k); pid.eval(row).asInstanceOf[Int] }
   }
 
   /** Plan-level lineage truncation with LAZY, deadlock-free
@@ -161,11 +185,28 @@ object CheckpointBridge {
     */
   def truncate[T](ds: Dataset[T]): Dataset[T] = {
     val cds = ds.asInstanceOf[classic.Dataset[T]]
-    val rdd = cds.queryExecution.toRdd.map(_.copy())
-    rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    record(new Pin(Set(rdd.id), unpersisting(rdd)))
+    val rdd = truncate(cds.queryExecution.toRdd.map(_.copy()))
     capped(new classic.Dataset[T](cds.sparkSession,
       LogicalRDD.fromDataset(rdd, cds, isStreaming = false), cds.encoder))
+  }
+
+  /** The RDD `df`'s physical plan computes, planned inside a SQL
+    * execution of its own (under AQE its shuffle stages run there), so
+    * listeners such as the plan ledger see its exchanges and joins as they
+    * see an action's. Its iterators reuse one row: read it or copy it. */
+  def internalRows(df: DataFrame): RDD[InternalRow] = {
+    val q = qe(df)
+    SQLExecution.withNewExecutionId(q, Some("internalRows"))(q.toRdd)
+  }
+
+  /** The RDD form of [[truncate]]: `rdd` persisted (MEMORY_AND_DISK), so
+    * every job that reads it computes each partition once, and pinned in
+    * the current scope. A frame built over it reaches it through RDD
+    * dependencies, so the release rule needs nothing new. */
+  def truncate[T](rdd: RDD[T]): RDD[T] = {
+    rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    record(new Pin(Set(rdd.id), unpersisting(rdd)))
+    rdd
   }
 
   /** `ds` with its `LogicalRDD` leaf's size estimate capped at

@@ -21,7 +21,9 @@ import org.scalatest.time.{Seconds, Span}
   * `checkpoint(df, keys)`, and what it buys an iterative loop: the
   * frame's leaf declares HashPartitioning(keys, n) with n the session's
   * shuffle-partition count, every row really sits in that partition, and
-  * a consuming plan adds no exchange over the declared leaf. And the
+  * a consuming plan adds no exchange over the declared leaf; and
+  * `keyPartitioner` names the partition Spark's hash repartition puts a
+  * key in, the alignment the PageRank kernel's routing relies on. And the
   * release rule of `scope`: on exit, normal or thrown, a scope releases
   * the pins it recorded that its result cannot reach, and hands the rest
   * to the enclosing scope.
@@ -72,6 +74,21 @@ class CheckpointBridgeSpec extends AnyFunSuite with SparkFixture
       }
   }
 
+  test("keyPartitioner names the partition repartition(n, col(k)) puts each bigint key in") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(31)
+    val keys = (Seq(0L, -1L, Long.MinValue, Long.MaxValue) ++ (1L to 200L) ++
+      Seq.fill(400)(rnd.nextLong())).toDF("k")
+    for (n <- Seq(1, 4, 7); aqe <- Seq("true", "false")) withConf(Aqe -> Some(aqe)) {
+      val owner = CheckpointBridge.keyPartitioner(n)
+      val placed = keys.repartition(n, col("k")).select(spark_partition_id(), col("k")).collect()
+      assert(placed.length == 604)
+      val off = placed.filter(r => owner(r.getLong(1)) != r.getInt(0))
+      assert(off.isEmpty, s"n=$n aqe=$aqe: ${off.length} keys outside the named partition, " +
+        off.take(5).mkString(", "))
+    }
+  }
+
   /** Exchanges that repartition a declared checkpoint leaf directly: the
     * leaf is reached from the exchange through single-child operators
     * only (a join or union in between means the exchange moves something
@@ -103,7 +120,11 @@ class CheckpointBridgeSpec extends AnyFunSuite with SparkFixture
     withConf(Aqe -> Some("true"), InitialNum -> None) {
       spark.listenerManager.register(listener)
       val loop = try {
-        val ranks = operators.GraphQueries.pageRank(edges, 2)
+        val ranks = CheckpointBridge.scope {
+          val (declared, deg, n, ranks0) = DataFramePageRank.inputs(edges)
+          val step = DataFramePageRank.step(declared, deg, n, _: org.apache.spark.sql.DataFrame)
+          CheckpointBridge.checkpoint(step(step(ranks0)))
+        }
         assert(ranks.count() == nodes)
         // the only execution with joins is the final checkpoint, which
         // runs both rounds; listener calls arrive on the listener bus

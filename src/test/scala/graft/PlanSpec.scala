@@ -147,10 +147,10 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // q_bpe_merges: 1-row invariant stats × 1-row alien-char count;
     // q_funnel: three single-row stage counts crossed into one report row
     // q_semantic_dedup: assignment pass crosses the scan with the 10-row
-    // centroid broadcast; q_pagerank: 1-row node-count broadcast per round
+    // centroid broadcast
     val tinyBroadcastOk = cartesianOk ++
       Set("q_similar_topk", "q_knn_vote", "q_ann_ivf", "q_kmeans", "q_tfidf",
-        "q_bpe_merges", "q_funnel", "q_semantic_dedup", "q_pagerank",
+        "q_bpe_merges", "q_funnel", "q_semantic_dedup",
         "q_market_basket", // 1-row order-count broadcast
         "q_triangle_count", // 1-row wedge/triangle totals crossed into the report row
         "q_chi2_terms", "q_kl_divergence", // 1-row corpus token count broadcast

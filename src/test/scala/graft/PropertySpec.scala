@@ -279,6 +279,39 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
     assert(math.abs(s.values.sum - 1.0) < 1e-4)
   }
 
+  test("the PageRank kernel equals the DataFrame round byte for byte on random multigraphs") {
+    import spark.implicits._
+    // 40 nodes with random 64-bit ids: 5 only ever a src, 5 only ever a
+    // dst, 30 both; 120 random edges plus 20 repeats of them (parallel
+    // edges) and whatever self-loops the draw makes
+    def graph(seed: Int): Seq[(Long, Long)] = {
+      val rnd = new scala.util.Random(seed)
+      val ids = Iterator.continually(rnd.nextLong()).distinct.take(40).toVector
+      val (from, to) = (ids.take(5) ++ ids.drop(10), ids.slice(5, 40))
+      val es = Seq.fill(120)((from(rnd.nextInt(from.size)), to(rnd.nextInt(to.size))))
+      es ++ Seq.fill(20)(es(rnd.nextInt(es.size)))
+    }
+    def bits(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> java.lang.Double.doubleToRawLongBits(r.getDouble(1))).toMap
+    val key = "spark.sql.shuffle.partitions"
+    val old = spark.conf.get(key)
+    try for (seed <- 1 to 2; parts <- Seq(1, 3, 7)) {
+      spark.conf.set(key, parts.toString)
+      val es = graph(seed).toDF("src", "dst")
+      val got = bits(operators.GraphQueries.pageRank(es, 8))
+      assert(got.nonEmpty)
+      assert(got == bits(DataFramePageRank.pageRank(es, 8)), s"pageRank: seed $seed over $parts partitions")
+      val (prC, k) = operators.GraphQueries.pageRankConverged(es, 1e-3)
+      val (refC, refK) = DataFramePageRank.pageRankConverged(es, 1e-3)
+      assert(k == refK && bits(prC) == bits(refC),
+        s"pageRankConverged: seed $seed over $parts partitions, $k rounds vs $refK")
+    } finally spark.conf.set(key, old)
+    // every fixed round runs inside the one job that materializes the ranks
+    val es = graph(3).toDF("src", "dst")
+    assert(jobsDuring(operators.GraphQueries.pageRank(es, 8)) ==
+      jobsDuring(operators.GraphQueries.pageRank(es, 1)))
+  }
+
   test("convergence-loop k-core equals brute-force peeling and outruns 3 fixed rounds") {
     import spark.implicits._
     // triangle (nodes 1-3, all degree 2) + an 8-node pendant chain off
